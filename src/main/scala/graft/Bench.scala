@@ -78,7 +78,8 @@ object Bench {
         s"""{"sf":"$sfDir","total":${String.format(java.util.Locale.ROOT,
           "%.3f", Double.box(total))},"queries":$full}""" + "\n")
     val sfShort = new java.io.File(sfDir).getName
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"ms","queries":$qs$failedField,"sf":"$sfShort"}""")
+    // after spark.stop(): the contract line is the process's last output
     spark.stop()
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"ms","queries":$qs$failedField,"sf":"$sfShort"}""")
   }
 }

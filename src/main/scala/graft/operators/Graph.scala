@@ -68,6 +68,11 @@ object Graph {
   private[graft] val DefaultMaxDriverRankEdges: Long =
     graft.core.Env.long("SPARK_GRAFT_RANK_DRIVER_MAX", 1L << 20)
 
+  /** Both rank routes reject a prior with several rows for one graph
+    * node: which row should win is not defined. */
+  private def duplicatePriorMsg(label: String): String =
+    s"$label: prior has several rows for one node — priors must be node-unique"
+
   /** DRIVER REPLAY of the rank fixpoint (r13): every update is exact
     * integer arithmetic over the aggregated edge list, so once that
     * list is materialized and small (the gate above), replaying the
@@ -85,8 +90,10 @@ object Graph {
     * prior or seed table exceeds the gate, when an edge endpoint is
     * null (the distributed join silently drops those contributions;
     * replaying that faithfully is not worth the code), or when the
-    * src/dst types differ (driver Any-equality cannot mirror the
-    * union's type coercion).
+    * src/dst, seed or prior node types differ from each other (driver
+    * Any-equality cannot mirror the join's type coercion). A prior with
+    * several rows for one graph node fails here as on the distributed
+    * route ([[duplicatePriorMsg]]).
     *
     * `seedsOpt` = Some(distinct seed ids) selects the trustRank update
     * rule; None the pageRank one. */
@@ -105,6 +112,8 @@ object Graph {
     if (eAgg.schema("dst").dataType != nodeType) return None
     if (seedsOpt.exists(_.schema.fields.head.dataType != nodeType))
       return None
+    if (prior.exists(_.select(col("node")).schema.head.dataType != nodeType))
+      return None
     def bounded(df: DataFrame): Option[Array[Row]] = {
       val cap = math.min(maxRows, Int.MaxValue.toLong - 2).toInt
       val rows = df.limit(cap + 1).collect()
@@ -114,14 +123,17 @@ object Graph {
     // edges (bounded by a limit, not a count — one job each); an
     // oversized one routes the whole call distributed
     var priorMap: mutable.HashMap[Any, Long] = null
+    val priorDups = mutable.HashSet.empty[Any]
     if (prior.isDefined) bounded(prior.get
         .select(col("node"), col("rank_fp").cast("long"))) match {
       case None => return None
       case Some(rows) =>
         priorMap = mutable.HashMap.empty
-        rows.foreach(r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1))
-            priorMap.update(r.get(0), r.getLong(1)))
+        val seen = mutable.HashSet.empty[Any]
+        rows.foreach(r => if (!r.isNullAt(0)) {
+          if (!seen.add(r.get(0))) priorDups += r.get(0)
+          if (!r.isNullAt(1)) priorMap.update(r.get(0), r.getLong(1))
+        })
     }
     var seedSet: mutable.HashSet[Any] = null
     seedsOpt.foreach(s => bounded(s) match {
@@ -145,6 +157,7 @@ object Graph {
     val trust = seedSet != null
     val n = nodeSet.size.toLong
     require(n > 0, s"$label: empty graph")
+    require(!priorDups.exists(nodeSet.contains), duplicatePriorMsg(label))
     val nSeeds = if (trust) nodeSet.iterator.count(seedSet.contains).toLong else 0L
     if (trust) require(nSeeds > 0,
       "trustRank: no seed is a graph node — trust cannot enter")
@@ -442,8 +455,11 @@ object Graph {
       coalesce(sum(when(!col("has_out"), c)), lit(0L))
     var (ranks, prevIds) = checkpoint.lazyMark(init)
     // bounded control read: materializes init and returns its dangling
-    // mass in one job
-    var dangling = ranks.agg(danglingOf(col("rank_fp"))).first().getLong(0)
+    // mass and row count in one job — a prior with several rows for one
+    // node would duplicate that node
+    val init0 = ranks.agg(danglingOf(col("rank_fp")), count(lit(1))).first()
+    require(init0.getLong(1) == n, duplicatePriorMsg("pageRank"))
+    var dangling = init0.getLong(0)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
@@ -704,7 +720,9 @@ object Graph {
     def danglingOf(c: Column): Column =
       coalesce(sum(when(!col("has_out"), c)), lit(0L))
     var (ranks, prevIds) = checkpoint.lazyMark(init)
-    var dangling = ranks.agg(danglingOf(col("rank_fp"))).first().getLong(0)
+    val init0 = ranks.agg(danglingOf(col("rank_fp")), count(lit(1))).first()
+    require(init0.getLong(1) == n, duplicatePriorMsg("trustRank"))
+    var dangling = init0.getLong(0)
     var it = 0
     var converged = false
     while (it < iters && !converged) {

@@ -303,57 +303,55 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
   /** Operation pagespeed: audit-threshold checks over the raw staged
     * bodies (operation/pagespeed.py:148-524); config shape
     * checks: { fcp_score: { desktop: 0.49, mobile: 0.3 }, ... }. */
-  private def runPagespeedChecks(mc: ModuleConfig): Unit = {
-    if (!staging.exists("pagespeed")) return
-    val batch = staging.readUnprocessed("pagespeed", "pagespeed")
-    if (batch.isEmpty) return
-    val staged = batch
-      .withColumn("urlset", col("cluster"))
-      .withColumn("url", graft.core.Url.parse(col("url")))
-      .withColumn("date", col("date").cast("timestamp"))
-    val auditOf = Map(
-      "fcp_score" -> "first-contentful-paint",
-      "tti_score" -> "interactive",
-      "ttfb_score" -> "server-response-time",
-      "performance_score" -> "performance")
-    val parts = mc.checks.toSeq.sortBy(_._1).flatMap {
-      case (checkKey, byStrategy: Map[String @unchecked, Any @unchecked]) =>
-        byStrategy.toSeq.sortBy(_._1).flatMap { case (strategy, threshold) =>
-          auditOf.get(checkKey).map { audit =>
-            CheckCatalog.pagespeedThreshold(staged, checkKey + "_", audit,
-              strategy, threshold.toString.toDouble)
+  private def runPagespeedChecks(mc: ModuleConfig): Unit =
+    withStagedBatch("pagespeed", "pagespeed") { (batch, _) =>
+      val staged = batch
+        .withColumn("urlset", col("cluster"))
+        .withColumn("url", graft.core.Url.parse(col("url")))
+        .withColumn("date", col("date").cast("timestamp"))
+      val auditOf = Map(
+        "fcp_score" -> "first-contentful-paint",
+        "tti_score" -> "interactive",
+        "ttfb_score" -> "server-response-time",
+        "performance_score" -> "performance")
+      mc.checks.toSeq.sortBy(_._1).flatMap {
+        case (checkKey, byStrategy: Map[String @unchecked, Any @unchecked]) =>
+          byStrategy.toSeq.sortBy(_._1).flatMap { case (strategy, threshold) =>
+            auditOf.get(checkKey).map { audit =>
+              CheckCatalog.pagespeedThreshold(staged, checkKey + "_", audit,
+                strategy, threshold.toString.toDouble)
+            }
           }
-        }
-      case _ => Nil
+        case _ => Nil
+      }
     }
-    if (parts.nonEmpty)
-      warehouse.append(ChecksTable,
-        parts.reduce(_.unionByName(_))
-          .withColumn("date", to_date(col("created"))))
-    staging.advanceWatermark("pagespeed", "pagespeed", batch)
-  }
 
   // ---------------------------------------------------------- operations
 
   /** Incremental read + check computation + append + watermark advance —
-    * the staging pipeline of SURVEY §3.3, one lazily-planned DAG per op. */
+    * the staging pipeline of SURVEY §3.3, one pass over one materialized
+    * batch per op: the unprocessed rows are cached by a single
+    * count/max job that also yields the emptiness test and the next
+    * watermark, every check reads the cache, the history is the same
+    * file listing on the other side of the watermark, and the unioned
+    * check rows are coalesced (no shuffle) to the batch's partition
+    * count — one run writes at most that many files, not one per
+    * (check, partition). */
   private def withStagedBatch(collection: String, op: String)
                              (f: (DataFrame, DataFrame) => Seq[DataFrame]): Unit = {
     if (!staging.exists(collection)) return
-    val batch = staging.readUnprocessed(collection, op)
-    if (batch.isEmpty) return
-    val history = staging.watermark(collection, op) match {
-      case Some(wm) => staging.readAll(collection)
-        .filter(col("__ingested_at") <= lit(wm))
-      case None => batch.limit(0)
-    }
-    val parts = f(batch, history)
-    if (parts.nonEmpty) {
-      val rows = parts.reduce(_.unionByName(_))
-        .withColumn("date", to_date(col("created")))
-      warehouse.append(ChecksTable, rows)
-    }
-    staging.advanceWatermark(collection, op, batch)
+    val (unprocessed, history) = staging.readSplit(collection, op)
+    val batch = unprocessed.persist()
+    try {
+      val stats = batch.agg(count(lit(1)), max(col("__ingested_at"))).head()
+      if (stats.getLong(0) == 0) return
+      val parts = f(batch, history)
+      if (parts.nonEmpty)
+        warehouse.append(ChecksTable, parts.reduce(_.unionByName(_))
+          .withColumn("date", to_date(col("created")))
+          .coalesce(batch.rdd.getNumPartitions))
+      staging.advanceWatermarkTo(collection, op, stats.getTimestamp(1))
+    } finally batch.unpersist()
   }
 
   private def bool(m: Map[String, Any], key: String): Option[Boolean] =

@@ -19,15 +19,20 @@ import graft.operators.Relational
   *    sink slice before writing (google_search_console.py:516-549).
   *
   * Scale notes: every store is a directory of parquet partitioned by a
-  * date-derived column; Catalyst prunes partitions on read. Watermarks are
-  * tiny single-row tables per (module, operation). Nothing here collects
-  * to the driver except the watermark scalar.
+  * date-derived column; Catalyst prunes partitions on read. A watermark
+  * is one small file per (module, operation) holding an ISO-8601
+  * instant, read and replaced with plain file I/O — it starts no Spark
+  * job, and the replace is an atomic rename. Nothing here collects to
+  * the driver except the watermark scalar.
   */
 final class StagingStore(spark: SparkSession, root: String) {
 
   private def path(collection: String) = s"$root/staging/$collection"
-  private def wmPath(collection: String, op: String) =
-    s"$root/watermarks/${collection}__$op"
+  private def wmFile(collection: String, op: String) =
+    new java.io.File(s"$root/watermarks", s"${collection}__$op.instant")
+  /** Where earlier versions kept the watermark: a one-row parquet table. */
+  private def legacyWmDir(collection: String, op: String) =
+    new java.io.File(s"$root/watermarks", s"${collection}__$op")
 
   /** Append a batch, stamping the ingest time used by incremental reads. */
   def append(collection: String, df: DataFrame): Unit =
@@ -42,34 +47,52 @@ final class StagingStore(spark: SparkSession, root: String) {
   def readAll(collection: String): DataFrame =
     spark.read.parquet(path(collection))
 
-  /** Rows not yet processed by `op`: ingest time strictly greater than the
-    * op's watermark. The filter lands on the parquet scan (pushdown). */
-  def readUnprocessed(collection: String, op: String): DataFrame = {
+  /** The staged rows split at `op`'s watermark into (unprocessed,
+    * history): ingest time strictly after it, and at or before it. Both
+    * halves come from ONE file listing, and each filter lands on the
+    * parquet scan (pushdown). With no watermark, everything is
+    * unprocessed and the history is empty. */
+  def readSplit(collection: String, op: String): (DataFrame, DataFrame) = {
     val all = readAll(collection)
     watermark(collection, op) match {
-      case Some(wm) => all.filter(col("__ingested_at") > lit(wm))
-      case None     => all
+      case Some(wm) => (all.filter(col("__ingested_at") > lit(wm)),
+        all.filter(col("__ingested_at") <= lit(wm)))
+      case None => (all, all.limit(0))
     }
   }
 
-  /** Advance the op watermark to the max ingest time of `processed`.
+  /** Rows not yet processed by `op`. */
+  def readUnprocessed(collection: String, op: String): DataFrame =
+    readSplit(collection, op)._1
+
+  /** Advance the op watermark to the max ingest time of `processed` (one
+    * Spark job; [[advanceWatermarkTo]] takes a known instant instead).
     * Call AFTER the downstream write succeeded — crash before this point
     * re-processes the batch (at-least-once), and the warehouse's
     * idempotent append turns that into exactly-once. */
-  def advanceWatermark(collection: String, op: String, processed: DataFrame): Unit = {
-    val mx = processed.agg(max(col("__ingested_at"))).collect().head
-    if (!mx.isNullAt(0)) {
-      import spark.implicits._
-      Seq(mx.getTimestamp(0)).toDF("wm")
-        .write.mode(SaveMode.Overwrite).parquet(wmPath(collection, op))
-    }
-  }
+  def advanceWatermark(collection: String, op: String, processed: DataFrame): Unit =
+    Option(processed.agg(max(col("__ingested_at"))).head().getTimestamp(0))
+      .foreach(advanceWatermarkTo(collection, op, _))
 
-  def watermark(collection: String, op: String): Option[java.sql.Timestamp] =
-    try {
-      val rows = spark.read.parquet(wmPath(collection, op)).collect()
-      rows.headOption.map(_.getTimestamp(0))
-    } catch { case _: Exception => None }
+  /** Set the op watermark to `ts`: write a temp file, then rename it over
+    * the marker, so a crash leaves either the old or the new instant. */
+  def advanceWatermarkTo(collection: String, op: String,
+                         ts: java.sql.Timestamp): Unit =
+    StoreTxn.writeAtomic(wmFile(collection, op), ts.toInstant.toString)
+
+  /** The op watermark, exact to the nanosecond; None before the first
+    * advance. A leftover temp file from a crashed write is never read. A
+    * root written by an earlier version keeps its marker: the parquet
+    * table is read until the first advance writes the file. */
+  def watermark(collection: String, op: String): Option[java.sql.Timestamp] = {
+    val f = wmFile(collection, op)
+    val legacy = legacyWmDir(collection, op)
+    if (f.isFile) Some(java.sql.Timestamp.from(
+      java.time.Instant.parse(java.nio.file.Files.readString(f.toPath).trim)))
+    else if (legacy.isDirectory)
+      spark.read.parquet(legacy.getPath).collect().headOption.map(_.getTimestamp(0))
+    else None
+  }
 
   def exists(collection: String): Boolean =
     new java.io.File(path(collection)).exists()

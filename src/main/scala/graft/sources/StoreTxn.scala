@@ -332,7 +332,7 @@ object StoreTxn {
 
   // ----------------------------------------------------- persistence
 
-  private def writeAtomic(f: File, content: String): Unit = {
+  private[sources] def writeAtomic(f: File, content: String): Unit = {
     f.getParentFile.mkdirs()
     val tmp = new File(f.getParentFile, f.getName + ".tmp")
     Files.writeString(tmp.toPath, content)

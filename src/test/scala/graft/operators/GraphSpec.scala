@@ -568,4 +568,54 @@ class GraphSpec extends SparkSpec {
         prior = Some(Seq((1L, -5L)).toDF("node", "rank_fp"))).collect()
     }
   }
+
+  test("rank routes agree on a prior whose node type differs from the edge keys") {
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("node").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val cold4 = ranks(Graph.pageRank(edges, "src", "dst", 4, Some("w")))
+    val seeds = Seq(1L, 3L).toDF("node")
+    val tcold3 = ranks(Graph.trustRank(edges, "src", "dst", 3, seeds, "node", Some("w")))
+    // long edges; the distributed join coerces the prior's key. An int
+    // key also meets the driver's boxed numeric equality, a decimal or
+    // string key does not — the driver route must not cold-start on it
+    for (t <- Seq("int", "decimal(20,0)", "string")) {
+      def typed(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("node").cast(t).as("node"), col("rank_fp")).localCheckpoint(true)
+      val prior = typed(Graph.pageRank(edges, "src", "dst", 2, Some("w")))
+      val warm = ranks(Graph.pageRank(edges, "src", "dst", 2, Some("w"),
+        prior = Some(prior)))
+      assert(warm === ranks(Graph.pageRank(edges, "src", "dst", 2, Some("w"),
+        prior = Some(prior), maxDriverEdges = 0)), t)
+      // the prior is honored, not cold-started: 2 warm ≡ 4 cold rounds
+      assert(warm === cold4, t)
+      val tprior = typed(Graph.trustRank(edges, "src", "dst", 2, seeds, "node", Some("w")))
+      assert(ranks(Graph.trustRank(edges, "src", "dst", 1, seeds, "node",
+        Some("w"), prior = Some(tprior))) === tcold3, t)
+    }
+  }
+
+  test("both rank routes reject a prior with several rows for one node") {
+    val prior = Graph.pageRank(edges, "src", "dst", 2, Some("w"))
+      .select("node", "rank_fp").localCheckpoint(true)
+    val doubled = prior.union(prior.filter(col("node") === 2L))
+    for (gate <- Seq(Graph.DefaultMaxDriverRankEdges, 0L)) {
+      val e = intercept[IllegalArgumentException] {
+        Graph.pageRank(edges, "src", "dst", 1, Some("w"), prior = Some(doubled),
+          maxDriverEdges = gate).collect()
+      }
+      assert(e.getMessage.contains("node-unique"), s"gate $gate")
+      val t = intercept[IllegalArgumentException] {
+        Graph.trustRank(edges, "src", "dst", 1, Seq(1L).toDF("node"), "node",
+          Some("w"), prior = Some(doubled), maxDriverEdges = gate).collect()
+      }
+      assert(t.getMessage.contains("node-unique"), s"gate $gate")
+    }
+    // duplicate rows for a node the graph no longer has are dropped alike
+    val stale = prior.union(Seq((99L, 5L), (99L, 6L)).toDF("node", "rank_fp"))
+    assert(Graph.pageRank(edges, "src", "dst", 1, Some("w"), prior = Some(stale))
+        .orderBy("node").collect().toSeq ===
+      Graph.pageRank(edges, "src", "dst", 1, Some("w"), prior = Some(stale),
+        maxDriverEdges = 0).orderBy("node").collect().toSeq)
+  }
 }

@@ -125,11 +125,26 @@ class RunnerSpec extends SparkSpec {
 
   test("two cron cycles land exactly the expected check rows; replay adds none") {
     val root = Files.createTempDirectory("graft_runner").toString
+    val checksDir = new java.io.File(root, "warehouse/checks")
+    def checkFiles(): Int =
+      if (!checksDir.exists()) 0
+      else Files.walk(checksDir.toPath).filter(p =>
+        p.getFileName.toString.endsWith(".parquet")).count().toInt
     def cycle(c: Int): Unit = {
       val r = runner(root, c)
       r.runAggregation("html_parser")
       r.runAggregation("robotstxt")
-      Operations.foreach(r.runOperation)
+      Operations.foreach { op =>
+        val collection = if (op == "robotstxt") "robotstxt" else "html_parser"
+        val partitions =
+          r.staging.readUnprocessed(collection, op).rdd.getNumPartitions
+        val before = checkFiles()
+        r.runOperation(op)
+        // one file set per append: at most one file per batch partition,
+        // however many checks the operation computes
+        assert(checkFiles() - before <= partitions,
+          s"$op wrote ${checkFiles() - before} files for $partitions partitions")
+      }
     }
 
     cycle(1)

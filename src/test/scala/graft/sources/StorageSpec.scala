@@ -30,6 +30,62 @@ class StorageSpec extends SparkSpec {
     assert(st.readUnprocessed("docs", "op2").count() === 3)
   }
 
+  test("staging watermark: microsecond instants round-trip; the boundary row is read once") {
+    val root = tmpRoot()
+    val st = new StagingStore(spark, root)
+    assert(st.watermark("docs", "op") === None, "absent watermark reads as None")
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123456")
+    st.appendAt("docs", Seq(1).toDF("id"), t0)
+    st.advanceWatermark("docs", "op", st.readUnprocessed("docs", "op"))
+    assert(st.watermark("docs", "op") === Some(t0))
+    assert(st.watermark("docs", "op").get.getNanos === 123456000)
+    // the row at exactly the watermark is history: not re-read
+    val (fresh, history) = st.readSplit("docs", "op")
+    assert(fresh.count() === 0)
+    assert(history.select("id").as[Int].collect().toSeq === Seq(1))
+    // one microsecond later is unprocessed: not skipped
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123457")
+    st.appendAt("docs", Seq(2).toDF("id"), t1)
+    assert(st.readUnprocessed("docs", "op").select("id").as[Int].collect().toSeq
+      === Seq(2))
+    st.advanceWatermarkTo("docs", "op", t1)
+    assert(st.watermark("docs", "op") === Some(t1))
+    assert(st.readUnprocessed("docs", "op").count() === 0)
+  }
+
+  test("staging watermark: a temp file left by a crashed write is ignored") {
+    val root = tmpRoot()
+    val st = new StagingStore(spark, root)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    st.appendAt("docs", Seq(1).toDF("id"), t0)
+    val dir = new java.io.File(root, "watermarks")
+    dir.mkdirs()
+    val tmp = new java.io.File(dir, "docs__op.instant.tmp").toPath
+    // crash between the temp write and the rename of the first advance
+    Files.writeString(tmp, "2099-01-01T00:00:00Z")
+    assert(st.watermark("docs", "op") === None)
+    assert(st.readUnprocessed("docs", "op").count() === 1)
+    st.advanceWatermarkTo("docs", "op", t0)
+    // crash in a later advance: the committed marker still holds
+    Files.writeString(tmp, "2099-01-01T00:00:00Z")
+    assert(st.watermark("docs", "op") === Some(t0))
+    assert(st.readUnprocessed("docs", "op").count() === 0)
+  }
+
+  test("staging watermark: a root with the one-row parquet marker keeps it") {
+    val root = tmpRoot()
+    val st = new StagingStore(spark, root)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-02 10:00:00")
+    st.appendAt("docs", Seq(1).toDF("id"), t0)
+    st.appendAt("docs", Seq(2).toDF("id"), t1)
+    Seq(t0).toDF("wm").write.parquet(s"$root/watermarks/docs__op")
+    assert(st.readUnprocessed("docs", "op").select("id").as[Int].collect().toSeq
+      === Seq(2))
+    st.advanceWatermarkTo("docs", "op", t1)
+    assert(st.watermark("docs", "op") === Some(t1))
+  }
+
   test("warehouse: idempotent append is exactly-once under replay") {
     val root = tmpRoot()
     val wh = new Warehouse(spark, root)
