@@ -128,8 +128,8 @@ class RunnerSpec extends SparkSpec {
     val checksDir = new java.io.File(root, "warehouse/checks")
     def checkFiles(): Int =
       if (!checksDir.exists()) 0
-      else Files.walk(checksDir.toPath).filter(p =>
-        p.getFileName.toString.endsWith(".parquet")).count().toInt
+      else scala.util.Using.resource(Files.walk(checksDir.toPath))(
+        _.filter(_.getFileName.toString.endsWith(".parquet")).count().toInt)
     def cycle(c: Int): Unit = {
       val r = runner(root, c)
       r.runAggregation("html_parser")
@@ -167,5 +167,64 @@ class RunnerSpec extends SparkSpec {
     val replay = runner(root, 2)
     Operations.foreach(replay.runOperation)
     assert(spark.read.parquet(s"$root/warehouse/checks").count() === before)
+  }
+
+  test("pagespeed operation checks each staged Lighthouse result once") {
+    val root = Files.createTempDirectory("graft_runner_psi").toString
+    val psiYaml =
+      s"""urlsets:
+         |  pages:
+         |    - url: '$One'
+         |aggregations:
+         |  google_pagespeed:
+         |    cron: '0 */3 * * *'
+         |    settings:
+         |      apiKey: 'k'
+         |      configurations:
+         |        - cluster:
+         |            home: ['$One', '$Two']
+         |          strategy: 'mobile'
+         |operations:
+         |  pagespeed:
+         |    cron: '*/5 * * * *'
+         |    checks:
+         |      fcp_score:
+         |        mobile: 0.5
+         |      performance_score:
+         |        mobile: 0.5
+         |""".stripMargin
+    def lighthouse(url: String, score: Double) = {
+      val api = "https://www.googleapis.com/pagespeedonline/v5/runPagespeed" +
+        s"?url=$url&strategy=mobile&key=k"
+      api -> FetchResult(api, 200, Map("content-type" -> "application/json"),
+        s"""{"lighthouseResult":{"categories":{"performance":{"score":$score}},""" +
+          s""""audits":{"first-contentful-paint":{"score":$score}}}}""")
+    }
+    def runner(cycle: Int) = {
+      val ts = cycleTs(cycle)
+      new Runner(spark, ConfigLoader.load(psiYaml), root,
+        new FixtureFetcher(Map(lighthouse(One, 0.9), lighthouse(Two, 0.2))),
+        now = () => ts)
+    }
+    def checks() = spark.read.parquet(s"$root/warehouse/checks")
+      .select(col("check"), col("url.path"), col("valid"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
+      .toSeq.sorted
+    val once = Seq(
+      ("pagespeed-fcp_score_mobile", "/one.html", true),
+      ("pagespeed-fcp_score_mobile", "/two.html", false),
+      ("pagespeed-performance_score_mobile", "/one.html", true),
+      ("pagespeed-performance_score_mobile", "/two.html", false))
+
+    val r1 = runner(1)
+    r1.runAggregation("google_pagespeed")
+    r1.runOperation("pagespeed")
+    assert(checks() === once)
+    r1.runOperation("pagespeed")
+    assert(checks() === once, "no new staged results: no new rows")
+    val r2 = runner(2)
+    r2.runAggregation("google_pagespeed")
+    r2.runOperation("pagespeed")
+    assert(checks() === (once ++ once).sorted)
   }
 }
