@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // floor scan parallelism at the session's core count — derived
-      // from the SAME env knob as the master, so it scales with the
-      // harness instead of being tuned to any one box; at warehouse
-      // scale splits already outnumber cores and the floor is a no-op,
-      // while a small parquet input stops serializing its whole scan
-      // through one task (guide: input split sizing)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // scan splits need no floor: in a local[cpus] session Spark's
+    // default minimum split count is already the core count
+    val spark = Sessions.local(Sessions.cpus, "WARN")
     // JIT/codegen warmup so the first measured query doesn't absorb JVM
     // startup; deterministic name order for run-to-run comparability
     spark.range(2000000).selectExpr("sum(id * 2)").collect()

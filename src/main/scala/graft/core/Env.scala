@@ -1,6 +1,6 @@
 package graft.core
 
-/** Env-var parsing for the operator gates. A malformed value must fail
+/** Env-var parsing for [[Sessions]]. A malformed value must fail
   * with a message NAMING the variable — `sys.env.get(x).map(_.toLong)`
   * at object-init time surfaces as an opaque
   * ExceptionInInitializerError on the whole enclosing object instead. */

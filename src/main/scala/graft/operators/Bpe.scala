@@ -49,10 +49,8 @@ object Bpe {
   /** [[learnMerges]]' small-vocabulary gate: max word-TYPE rows replayed
     * on the driver (the [[Dedup.connectedComponents]] small-graph
     * discipline — a driver-memory bound, not a data-scale bound; ~25 MB
-    * collected at the default). Env `SPARK_GRAFT_BPE_DRIVER_MAX`
-    * overrides; 0 forces the distributed rounds. */
-  private[graft] val DefaultMaxDriverTypes: Long =
-    graft.core.Env.long("SPARK_GRAFT_BPE_DRIVER_MAX", 1L << 19)
+    * collected at the default). */
+  private[graft] val DefaultMaxDriverTypes: Long = 1L << 19
 
   /** Hard cap on merge-table size — bounds [[learnMerges]]' driver
     * rounds and [[encode]]'s collected table (the native ApplyMerges
@@ -132,8 +130,8 @@ object Bpe {
     // table, whose size follows Heaps' law — a fraction of the corpus at
     // any scale — and each distributed round costs an argmax job plus a
     // checkpoint job. When the materialized type table is at most
-    // `DefaultMaxDriverTypes` rows (env SPARK_GRAFT_BPE_DRIVER_MAX; the
-    // count reads the just-checkpointed blocks), collect it and replay
+    // `DefaultMaxDriverTypes` rows (the count reads the
+    // just-checkpointed blocks), collect it and replay
     // the identical rounds in memory: same pair counting (each adjacent
     // occurrence, freq-weighted), same argmax tie-break (count desc,
     // then lhs/rhs in UTF-8 BYTE order — java.lang.String order would

@@ -17,11 +17,8 @@ object Dedup {
 
   /** [[connectedComponents]]' small-graph gate: max symmetric edge rows
     * folded on the driver (≈ 8 MB collected at the default — a broadcast
-    * build side's size class). Env `SPARK_GRAFT_CC_DRIVER_MAX` overrides
-    * (0 forces the distributed fold; larger values trade driver memory
-    * for fewer distributed rounds). */
-  private[graft] val DefaultMaxDriverEdges: Long =
-    graft.core.Env.long("SPARK_GRAFT_CC_DRIVER_MAX", 1L << 20)
+    * build side's size class). */
+  private[graft] val DefaultMaxDriverEdges: Long = 1L << 20
 
   /** Exact dedup: keep the first row (min id) per identical value.
     * Grouping key is a 128-bit hash pair — two independently seeded
@@ -906,9 +903,8 @@ object Dedup {
     * columns — a silent cast of string/UUID ids to long would collapse
     * every edge to (null, null), so non-integral ids are rejected.
     *
-    * `maxDriverEdges` (env override `SPARK_GRAFT_CC_DRIVER_MAX`, 0 to
-    * force the distributed fold) is deliberately a driver-MEMORY bound,
-    * not a data-scale bound — it needs no retuning per corpus size.
+    * `maxDriverEdges` (0 forces the distributed fold) is deliberately a
+    * driver-MEMORY bound, not a data-scale bound — it needs no retuning per corpus size.
     *
     * SMALL-GRAPH ROUTE (r12): once the symmetric-deduped edge list is
     * materialized, its row count is a free control read off the cached
@@ -985,9 +981,6 @@ object Dedup {
         }
       }
       checkpoint.releasePinned()
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-        System.err.println(
-          s"[cc] driver union-find: ${half.length} pairs, ${nodes.size} nodes")
       val rows = nodes.keys.toSeq.map(id => (id, find(id)))
       // LocalRelation below ~200k rows (accurate stats → downstream
       // joins auto-broadcast); parallelized above (a multi-MB
@@ -1038,8 +1031,6 @@ object Dedup {
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds")
-    if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      System.err.println(s"[cc] converged in $iter rounds")
     // labels are checkpointed (lineage-free) — free the run-scoped edge
     // pin so looped callers don't accumulate cached edge lists
     checkpoint.releasePinned()

@@ -62,11 +62,8 @@ object Graph {
     * rows replayed on the driver (≈ 24 MB collected at the default — a
     * broadcast build side's size class; the
     * [[Dedup.connectedComponents]] discipline: a driver-MEMORY bound on
-    * an already-materialized count, not a data-scale tuning). Env
-    * `SPARK_GRAFT_RANK_DRIVER_MAX` overrides; 0 forces the distributed
-    * rounds. */
-  private[graft] val DefaultMaxDriverRankEdges: Long =
-    graft.core.Env.long("SPARK_GRAFT_RANK_DRIVER_MAX", 1L << 20)
+    * an already-materialized count, not a data-scale tuning). */
+  private[graft] val DefaultMaxDriverRankEdges: Long = 1L << 20
 
   /** Both rank routes reject a prior with several rows for one graph
     * node: which row should win is not defined. */

@@ -722,14 +722,8 @@ object Pipeline {
         // compact's commit and its sweep leaves the stale directory
         // behind with survivorsLoc already pointing at the version, and
         // a this-run-only condition would never reclaim it
-        if (survivorsLoc._1 != survivorsPath &&
-            new java.io.File(survivorsPath).exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).toSeq.flatten.foreach(rm)
-            f.delete(); ()
-          }
-          rm(new java.io.File(survivorsPath))
-        }
+        if (survivorsLoc._1 != survivorsPath)
+          graft.sources.StoreTxn.rmrf(new java.io.File(survivorsPath))
       }
     }
 

@@ -466,10 +466,8 @@ object QualityModels {
     * dense weight array indexed by feature bucket. */
   /** [[trainHashedPerceptron]]'s small-trainset gate: max feature-
     * occurrence rows replayed on the driver (a driver-memory bound, the
-    * [[Dedup.connectedComponents]] discipline). Env
-    * `SPARK_GRAFT_TRAIN_DRIVER_MAX`; 0 forces distributed iterations. */
-  private[graft] val MaxDriverOcc: Long =
-    graft.core.Env.long("SPARK_GRAFT_TRAIN_DRIVER_MAX", 1L << 20)
+    * [[Dedup.connectedComponents]] discipline). */
+  private[graft] val MaxDriverOcc: Long = 1L << 20
 
   def trainHashedPerceptron(train: DataFrame, idCol: String,
                             textCol: String, labelCol: String,

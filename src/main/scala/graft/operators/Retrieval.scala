@@ -284,12 +284,7 @@ object Retrieval {
           (f.getName == statsBaseName ||
             f.getName.startsWith(statsBaseName + "__c")) &&
           f.getName != asName)
-        .foreach { f =>
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-          }
-          rm(f)
-        }
+        .foreach(graft.sources.StoreTxn.rmrf)
       // a fresh handle on this root must reload its completed-key cache
       // from the active stats generation
       seenKeys = null

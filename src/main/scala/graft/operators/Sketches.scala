@@ -329,12 +329,8 @@ object Sketches {
       val upto = graft.sources.StoreTxn.getKv(root, compactKey)
         .map(_.toLong).getOrElse(-1L)
       (folded ++ deltaDirs(liveOnly = false)
-        .filter(_._1 <= upto).map(_._2)).distinct.foreach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(p))
-      }
+        .filter(_._1 <= upto).map(_._2)).distinct
+        .foreach(p => graft.sources.StoreTxn.rmrf(new java.io.File(p)))
     }
   }
 }

@@ -181,11 +181,7 @@ final class Warehouse(spark: SparkSession, root0: String) {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
-    val fs = new java.io.File(tmp)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
-    rm(fs)
+    StoreTxn.rmrf(new java.io.File(tmp))
   }
 
   /** Bucketed append: co-locates future joins/aggregations on
@@ -298,13 +294,9 @@ final class Warehouse(spark: SparkSession, root0: String) {
     val name = bucketedName(table)
     if (!spark.catalog.tableExists(name)) {
       val dir = new java.io.File(path(table))
-      // sidecar spec (current layout), with fallback to the legacy
-      // in-dir location for stores written by earlier versions
-      val spec = Seq(bucketSpecFile(table),
-          new java.io.File(dir, "_graft_bucket_spec"))
-        .find(_.exists())
-        .getOrElse(throw new IllegalArgumentException(
-          s"bucketed table $table not found at ${dir.getPath} (no bucket spec)"))
+      val spec = bucketSpecFile(table)
+      require(spec.exists(),
+        s"bucketed table $table not found at ${dir.getPath} (no bucket spec)")
       // spec with no data files = a write that crashed before any data
       // landed (spec is written first) — report it as such, not as a
       // schema-inference failure from an empty directory. Partitioned
@@ -392,10 +384,7 @@ final class Warehouse(spark: SparkSession, root0: String) {
     * physical generations) — not a user data-management API; callers
     * must only target tables a committed alias has already replaced. */
   private[graft] def dropTable(table: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(path(table)))
+    StoreTxn.rmrf(new java.io.File(path(table)))
     bucketSpecFile(table).delete()
     new java.io.File(s"$root/warehouse", s"_graft_params_$table").delete()
     Warehouse.dropCatalogEntry(spark, root, table)
@@ -441,16 +430,7 @@ final class QueueStore(spark: SparkSession, root: String) {
     rows
   }
 
-  def clear(queue: String): Unit = {
-    val dir = new java.io.File(path(queue))
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir)
-    }
-  }
+  def clear(queue: String): Unit = StoreTxn.rmrf(new java.io.File(path(queue)))
 
   def exists(queue: String): Boolean = new java.io.File(path(queue)).exists()
 }

@@ -417,7 +417,8 @@ object StoreTxn {
     intent.states.foreach { case (s, e) => rmrf(new File(key, s"state/$s/v$e")) }
   }
 
-  private def rmrf(f: File): Unit = {
+  /** Delete a file or directory tree; a delete that fails throws. */
+  private[graft] def rmrf(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmrf))
     Files.deleteIfExists(f.toPath)
     ()

@@ -1,6 +1,7 @@
 package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{SaveMode, SparkSession, functions => F}
+import org.apache.spark.sql.{SaveMode, functions => F}
+import graft.core.Sessions
 
 /** Where does a bucketed append's wall go? Splits each write call into
   * driver-side time BEFORE the first Spark job, the job span itself,
@@ -9,15 +10,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession, functions => F}
   * for the small-delta regime. */
 object CommitProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, "WARN")
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     @volatile var firstStart = 0L
     @volatile var lastEnd = 0L

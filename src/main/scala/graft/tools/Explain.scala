@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 /** Dump `.explain("formatted")` for named queries. With -o <dir>, write
   * each plan to <dir>/<query>.txt instead of stdout (the round's
   * plans/rNN/ evidence files). */
@@ -9,11 +9,7 @@ object Explain {
       case "-o" +: dir +: rest => (Some(dir), rest)
       case rest                => (None, rest)
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus, "ERROR")
     val dir = "/root/testdata/sf0.01"
     outDir.foreach(d => new java.io.File(d).mkdirs())
     for (name <- names) {

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.core.ConfigLoader
+import graft.core.{ConfigLoader, Sessions}
 import graft.plans.Runner
 import graft.sources.{FetchResult, Fetcher}
 
@@ -82,14 +81,7 @@ object ModuleDebugger {
     val configPath = pos.headOption.getOrElse("config/demo.yaml")
     val root = pos.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_debug").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, "WARN")
 
     val config = ConfigLoader.loadFile(configPath)
     println(s"config hash: ${config.hash}")

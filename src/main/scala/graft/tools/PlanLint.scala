@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Automated scale-anti-pattern sweep over EVERY declared query's
   * physical plan: cartesian products, single-partition exchanges, and
@@ -170,12 +170,7 @@ object PlanLint {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus, "ERROR")
 
     var unallowed = 0
     var errs = 0

@@ -1,13 +1,13 @@
 package graft.tools
 import org.apache.spark.scheduler.SparkListener
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import scala.collection.mutable
 
 /** Per-SQL-execution wall-clock profile of one declared query: runs the
-  * query with the bench's session shape (local[$SPARK_GRAFT_CPUS], noop
-  * sink) and prints every SQL execution (action) it triggers with its
-  * duration and callsite — composed stores/maintains inside a query are
+  * query with the bench's session shape ([[Sessions]], noop sink) and
+  * prints every SQL execution (action) it triggers with its duration
+  * and callsite — composed stores/maintains inside a query are
   * invisible to a single `explain`, but each action registers its own
   * execution. Usage:  Prof <sfDir> <queryName> [reps]
   */
@@ -16,16 +16,7 @@ object Prof {
     require(args.length >= 2, "usage: Prof <sfDir> <queryName> [reps]")
     val (sfDir, name) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus) // mirror Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, "WARN")
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
     final case class E(id: Long, desc: String, start: Long, var end: Long)
     val execs = mutable.LinkedHashMap.empty[Long, E]

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Sessions
 import graft.operators.{EmbeddingLshConfig, EmbeddingLshStore, MinhashConfig, MinhashStore, SimhashConfig, SimhashStore, Similarity}
 
 /** Scale probe for the dedup/similarity family: measures wall time,
@@ -18,9 +19,7 @@ import graft.operators.{EmbeddingLshConfig, EmbeddingLshStore, MinhashConfig, Mi
   *  - `ivf <embPath> <whRoot>` — end-to-end IVF split: train + assign +
   *    bucketed warehouse write (build), then [[graft.operators
   *    .Similarity.ivfTopKAssigned]] over the bucketed table (serve),
-  *    with recall@10 against the brute-force oracle;
-  *  - legacy: `<docsPath> [<embPath>]` — the original adversarial-corpus
-  *    probe (kept for comparability with earlier rounds).
+  *    with recall@10 against the brute-force oracle.
   */
 object ScaleProbe {
 
@@ -948,12 +947,13 @@ object ScaleProbe {
           .orderBy(col("cnt").desc, col("tok").asc).limit(1000)
         println(s"[diag] full rows = " + time("full")(v.count()))
       case "part256" =>
+        val prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "256")
         val v = pairs.groupBy("tok")
           .agg(sum(col("__c")).as("cnt"), count(lit(1)).as("df"))
           .orderBy(col("cnt").desc, col("tok").asc).limit(1000)
         println(s"[diag] part256 rows = " + time("part256")(v.count()))
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
   }
 
@@ -1455,50 +1455,6 @@ object ScaleProbe {
     val hit = served.join(brute, Seq("query_id", "nbr_id")).count()
     println(f"[probe] ivf recall@10 = ${hit.toDouble / brute.count()}%.3f " +
       s"(probing 8/256 cells)")
-  }
-
-  private def legacyProbe(spark: SparkSession, docsPath: String,
-                          embPath: Option[String]): Unit = {
-    val docs = spark.read.parquet(docsPath)
-    println(s"[probe] docs = ${docs.count()}")
-    timedCount("exact_dedup") {
-      graft.operators.Dedup.exact(docs, "doc_id", "text")
-    }
-    timedCount("minhash_pairs") {
-      graft.operators.Dedup.minhashPortablePairs(docs, "doc_id", "text",
-        shingleN = 3, bands = 8, rowsPerBand = 2, threshold = 0.5, seed = 7L)
-    }
-    timedCount("simhash_pairs") {
-      graft.operators.Dedup.simhashPortablePairs(docs, "doc_id", "text",
-        maxDist = 3, seed = 7L)
-    }
-    if (sys.env.contains("PROBE_JACCARD")) timedCount("jaccard_pairs") {
-      graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        n = 3, threshold = 0.5, maxDocFreq = 1000)
-    }
-    embPath.foreach { p =>
-      val emb = spark.read.parquet(p)
-      println(s"[probe] vectors = ${emb.count()}")
-      val queries = emb.filter(col("vec_id") < 64)
-      timedCount("ivf_topk (trained)") {
-        val cents = graft.operators.Similarity.centroidsDF(spark,
-          graft.operators.Similarity.trainCentroids(emb, "embedding",
-            kCells = 64, sampleN = 5000))
-        graft.operators.Similarity.ivfTopK(emb, queries,
-          "vec_id", "embedding", 10, cents, nProbes = 4)
-      }
-      timedCount("lsh_topk (lattice)") {
-        val planes = (0 until 4).map(t =>
-          graft.functions.VectorFunctions.latticePlanes(12, 64, 42L + t))
-        graft.operators.Similarity.lshTopK(emb, queries, "vec_id",
-          "embedding", k = 10, dim = 64, tables = 4, bitsPerTable = 12,
-          planes = Some(planes))
-      }
-      timedCount("brute_topk") {
-        graft.operators.Similarity.bruteForceTopK(emb, queries,
-          "vec_id", "embedding", 10)
-      }
-    }
   }
 
   /** K-means training cost at corpus scale: per-iteration wall (one
@@ -2273,12 +2229,9 @@ object ScaleProbe {
     // "local-cluster[4,8,8192]" runs REAL executor JVMs (4 × 8 cores ×
     // 8 GB) so per-executor memory pressure and WideScan's cluster
     // branch are exercised, not just local-mode's one shared heap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val cpus = Sessions.cpus
+    val spark = Sessions.builder(cpus)
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       // the probe box runs 32 executor threads in ONE 8g JVM —
       // 0.25 GB/core, far below any real executor sizing. With the
       // default memory.fraction (0.6) a billion-key aggregate's
@@ -2409,15 +2362,6 @@ object ScaleProbe {
         warcProbe(spark, root, nArch.toInt, recs.toInt)
       case "bq" :: root :: nRows :: Nil =>
         bqProbe(spark, root, nRows.toLong)
-      case docsPath :: rest
-          if !Set("gen", "pairs", "ivf", "cc", "incr", "stream", "embincr",
-            "seq", "spans", "vocab", "vocabdiag", "bpe", "bm25", "gram",
-            "ccgiant", "kmeans", "srcstats", "range", "shard", "hh",
-            "distincr", "ppairs", "compact", "quant", "img", "hamm",
-            "autoc", "pquery", "e2e", "clf", "cont", "graph", "edgestore", "auth", "trust",
-            "epoch", "trustmaint", "anchor", "sitelevel", "warc", "bq")
-            .contains(docsPath) =>
-        legacyProbe(spark, docsPath, rest.headOption)
       case _ =>
         println("usage: gen <docs> <n> <dupRate> [<emb> <nVecs>] | " +
           "pairs <docs> <dupRate> | ivf <emb> <whRoot> | cc <docs> | " +
@@ -2430,8 +2374,7 @@ object ScaleProbe {
           "ppairs <docs> | compact <docs> <root> [nAppends] | " +
           "quant <emb> <root> [all|base|planted|plantedfast] | " +
           "img <n> <root> | hamm <n> <root> | bq <root> <nRows> | " +
-          "cont <docs> <whRoot> | graph <n> <e> | sitelevel <docs> | " +
-          "<docs> [<emb>]")
+          "cont <docs> <whRoot> | graph <n> <e> | sitelevel <docs>")
     }
     spark.stop()
   }

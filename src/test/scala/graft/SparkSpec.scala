@@ -5,22 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs — one JVM-wide session (Spark
-  * getOrCreate dedupes), ANSI off + UTC to match the engine's sessions. */
+  * getOrCreate dedupes), built by the engine's own session factory. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the shared session alive
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Sessions.local(4, "ERROR")
 }

@@ -145,4 +145,15 @@ class WideScanSpec extends SparkSpec {
       math.max(1, spark.sparkContext.defaultParallelism)
     assert(perSlot === expected)
   }
+
+  test("the shared spec session has the Sessions shape the oracle needs") {
+    assert(Sessions.local(4, "ERROR") eq spark,
+      "the factory hands back the one JVM-wide spec session")
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "false")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    // DuckDB semantics: an out-of-bounds element_at is null, not an error
+    assert(spark.sql("SELECT element_at(array(1), 5) AS x").head().isNullAt(0))
+  }
 }

@@ -465,6 +465,61 @@ class PipelineSpec extends SparkSpec {
     assert(auditInc === audit)
   }
 
+  test("crawl chain: WARC -> hostEdges -> EdgeStore -> trustRank -> " +
+      "gated curate sheds the spam host") {
+    // a 3-page mini-crawl of distinct prose: trusted.test and
+    // linked.test link to each other; spam.test links only to itself,
+    // so no trust flows to it
+    def page(host: String, n: Int, hrefHost: String, body: String) = {
+      val html = s"<html><body><a href=\"http://$hrefHost/x\">l</a>" +
+        s"<p>$body</p></body></html>"
+      val content = s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n$html"
+        .getBytes("UTF-8")
+      (s"WARC/1.0\r\nWARC-Type: response\r\n" +
+        s"WARC-Target-URI: http://$host/p$n\r\n" +
+        "WARC-Date: 2024-01-01T00:00:00Z\r\n" +
+        s"WARC-Record-ID: <urn:uuid:chain-$host-$n>\r\n" +
+        "Content-Type: application/http; msgtype=response\r\n" +
+        s"Content-Length: ${content.length}\r\n\r\n").getBytes("UTF-8") ++
+        content ++ "\r\n\r\n".getBytes("UTF-8")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_crawl_chain_")
+    java.nio.file.Files.write(dir.resolve("crawl.warc"),
+      page("trusted.test", 1, "linked.test", good1) ++
+        page("linked.test", 2, "trusted.test", exact56) ++
+        page("spam.test", 3, "spam.test", evalText))
+    val pages = graft.sources.WarcSource.readResponses(spark, dir.toString)
+      .select(col("url"), col("text").as("html"))
+      .localCheckpoint(true)
+    val hostEdges = Graph.hostEdges(pages, "url", "html")
+    val store = new EdgeStore(
+      new graft.sources.Warehouse(spark, freshRoot()), "crawl",
+      EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
+    // long-keyed store: hash the host strings, keep the dimension
+    store.append(hostEdges.select(xxhash64(col("src")).as("src"),
+      xxhash64(col("dst")).as("dst"), col("w")), "src", "dst")
+    assert(store.edges(spark).count() === hostEdges.count(),
+      "the edge store holds every crawled host edge")
+    val ranks = Graph.trustRank(hostEdges, "src", "dst", iters = 3,
+      Seq("trusted.test").toDF("node"), "node", Some("w"))
+    val hosted = pages.select(
+      xxhash64(col("url")).as("doc_id"),
+      graft.functions.HtmlFunctions.urlHost(col("url")).as("host"),
+      graft.functions.TextFunctions.mainContent(col("html")).as("text"))
+    val r = Pipeline.curate(hosted, "doc_id", "text",
+      cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0),
+      withAudit = true,
+      authority = Some(Pipeline.AuthorityGate(ranks, "host", minRankFp = 0L)))
+    val hostOf = hosted.select("doc_id", "host").as[(Long, String)]
+      .collect().toMap
+    val audit = r.audit.get.collect()
+      .map(x => hostOf(x.getLong(0)) -> x.getString(1)).toMap
+    assert(audit === Map("spam.test" -> "authority"),
+      s"only the spam host drops, at the gate: $audit")
+    assert(r.kept.select("id").as[Long].collect().map(hostOf).toSet ===
+      Set("trusted.test", "linked.test"))
+  }
+
   test("preFilter's widening gate skips few-partition inputs whose size " +
       "estimate is large") {
     // few partitions + a LARGE optimizer size estimate: a non-splittable

@@ -230,10 +230,9 @@ class StorageSpec extends SparkSpec {
     // inference on an empty directory
     val root = tmpRoot()
     val wh = new Warehouse(spark, root)
-    val dir = new java.io.File(s"$root/warehouse/shell_t")
-    dir.mkdirs()
-    Files.writeString(
-      new java.io.File(dir, "_graft_bucket_spec").toPath, "4\nk\n")
+    new java.io.File(s"$root/warehouse/shell_t").mkdirs()
+    Files.writeString(new java.io.File(
+      s"$root/warehouse/_graft_bucket_spec_shell_t").toPath, "4\nk\n")
     val e = intercept[IllegalArgumentException] {
       wh.readBucketed("shell_t")
     }
