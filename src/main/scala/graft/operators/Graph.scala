@@ -258,11 +258,18 @@ object Graph {
       sc: org.apache.spark.SparkContext, reliableDir: Option[String]) {
     reliableDir.foreach(sc.setCheckpointDir)
     def apply(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
       val mat = if (reliableDir.isDefined) df.checkpoint(true)
                 else df.localCheckpoint(true)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
+      (mat, pinnedBy(mat))
     }
+    /** The persisted RDDs under the checkpointed plan's `LogicalRDD`: read
+      * from the frame itself, not from a diff of the context's persistent
+      * RDDs, which under `Par.both` also holds the other leg's checkpoint
+      * (whose release would then break that leg's reads). */
+    private def pinnedBy(mat: DataFrame): Set[Int] =
+      mat.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.filter(sc.getPersistentRDDs.contains).toSet
     /** Mark for checkpoint WITHOUT forcing a materialization job: the
       * caller's next action on the frame computes it, persists the
       * blocks, and truncates lineage in that ONE job — the rank loops
@@ -276,9 +283,8 @@ object Graph {
       * the job it saves. */
     def lazyMark(df: DataFrame): (DataFrame, Set[Int]) = {
       if (reliableDir.isDefined) return apply(df)
-      val before = sc.getPersistentRDDs.keySet.toSet
       val mat = df.localCheckpoint(false)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
+      (mat, pinnedBy(mat))
     }
     /** The one-shot form for frames that live for the whole run (edge
       * list, node table): tracked so [[releasePinned]] can free them

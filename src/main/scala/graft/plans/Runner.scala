@@ -1,8 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{ModuleConfig, ProjectConfig}
+import graft.functions.HtmlFunctions
 import graft.sources._
 
 /** Module registry + dispatch — the rebuild of the reference's runner
@@ -61,11 +64,16 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
   def runOperation(name: String): Unit = {
     val mc = config.operation(name)
     name match {
-      case "metatags" => runMetatags(mc)
-      case "responseheader" => runResponseheader(mc)
-      case "htmlheadings" => runHtmlheadings(mc)
-      case "robotstxt" => runRobotstxtChecks(mc)
-      case "pagespeed" => runPagespeedChecks(mc)
+      case "metatags" => withStagedBatch("html_parser", "metatags")(
+        Runner.metatags(mc.urlsetChecks, _, fetcher))
+      case "responseheader" => withStagedBatch("html_parser", "responseheader")(
+        Runner.fused(_, mc.urlsetChecks)(Runner.responseheader))
+      case "htmlheadings" => withStagedBatch("html_parser", "htmlheadings")(
+        Runner.fused(_, mc.urlsetChecks)(Runner.htmlheadings))
+      case "robotstxt" => withStagedBatch("robotstxt", "robotstxt")(
+        Runner.robotstxt(mc.urlsetChecks, _, fetcher))
+      case "pagespeed" => withStagedBatch("pagespeed", "pagespeed")(
+        Runner.pagespeed(mc.checks, _))
       case "google_search_console" => runGscMatching(mc)
       case other =>
         throw new IllegalArgumentException(s"unknown operation module '$other'")
@@ -300,154 +308,34 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
       today = today())
   }
 
-  /** Operation pagespeed: audit-threshold checks over the raw staged
-    * bodies (operation/pagespeed.py:148-524); config shape
-    * checks: { fcp_score: { desktop: 0.49, mobile: 0.3 }, ... }. */
-  private def runPagespeedChecks(mc: ModuleConfig): Unit =
-    withStagedBatch("pagespeed", "pagespeed") { (batch, _) =>
-      val staged = batch
-        .withColumn("urlset", col("cluster"))
-        .withColumn("url", graft.core.Url.parse(col("url")))
-        .withColumn("date", col("date").cast("timestamp"))
-      val auditOf = Map(
-        "fcp_score" -> "first-contentful-paint",
-        "tti_score" -> "interactive",
-        "ttfb_score" -> "server-response-time",
-        "performance_score" -> "performance")
-      mc.checks.toSeq.sortBy(_._1).flatMap {
-        case (checkKey, byStrategy: Map[String @unchecked, Any @unchecked]) =>
-          byStrategy.toSeq.sortBy(_._1).flatMap { case (strategy, threshold) =>
-            auditOf.get(checkKey).map { audit =>
-              CheckCatalog.pagespeedThreshold(staged, checkKey + "_", audit,
-                strategy, threshold.toString.toDouble)
-            }
-          }
-        case _ => Nil
-      }
-    }
-
   // ---------------------------------------------------------- operations
 
   /** Incremental read + check computation + append + watermark advance —
-    * the staging pipeline of SURVEY §3.3, one pass over one materialized
-    * batch per op: the unprocessed rows are cached by a single
-    * count/max job that also yields the emptiness test and the next
-    * watermark, every check reads the cache, the history is the same
-    * file listing on the other side of the watermark, and the unioned
-    * check rows are coalesced (no shuffle) to the batch's partition
-    * count — one run writes at most that many files, not one per
-    * (check, partition). */
+    * the staging pipeline of SURVEY §3.3, one job per operation: the
+    * checks are one select over the unprocessed rows, appended as one
+    * file set coalesced (no shuffle) to the batch's partition count, and
+    * that append job also observes the batch's row count and max ingest
+    * time. The watermark moves after the append, and only past a
+    * non-empty batch. Metrics can be missing — AQE replaces an empty
+    * input under a shuffle with an empty relation, the observing node
+    * goes with it, and the observation completes with no fields — and
+    * then one count/max job stands in: missing never reads as zero. */
   private def withStagedBatch(collection: String, op: String)
-                             (f: (DataFrame, DataFrame) => Seq[DataFrame]): Unit = {
+                             (checks: Runner.Batch => Option[DataFrame]): Unit = {
     if (!staging.exists(collection)) return
     val (unprocessed, history) = staging.readSplit(collection, op)
-    val batch = unprocessed.persist()
-    try {
-      val stats = batch.agg(count(lit(1)), max(col("__ingested_at"))).head()
-      if (stats.getLong(0) == 0) return
-      val parts = f(batch, history)
-      if (parts.nonEmpty)
-        warehouse.append(ChecksTable, parts.reduce(_.unionByName(_))
-          .withColumn("date", to_date(col("created")))
-          .coalesce(batch.rdd.getNumPartitions))
+    val batch = Runner.Batch(unprocessed, history, Observation())
+    val observed = checks(batch).flatMap { rows =>
+      warehouse.append(ChecksTable, rows.withColumn("date", to_date(col("created")))
+        .coalesce(unprocessed.queryExecution.toRdd.getNumPartitions))
+      scala.util.Try(Await.result(batch.stats.future, 1.minute)).toOption
+        .filter(_.length == 2)
+    }
+    val stats = observed.getOrElse(
+      unprocessed.agg(count(lit(1)), max(col("__ingested_at"))).head())
+    if (stats.getLong(0) > 0)
       staging.advanceWatermarkTo(collection, op, stats.getTimestamp(1))
-    } finally batch.unpersist()
   }
-
-  private def bool(m: Map[String, Any], key: String): Option[Boolean] =
-    m.get(key).map(v => v == true || v == "true")
-
-  // (companion helpers below the class)
-
-  private def runMetatags(mc: ModuleConfig): Unit =
-    withStagedBatch("html_parser", "metatags") { (batch, history) =>
-      mc.urlsetChecks.toSeq.sortBy(_._1).flatMap { case (set, checks) =>
-        val staged = batch.filter(col("urlset") === set)
-        val hist = history.filter(col("urlset") === set)
-        val title = checks.get("title").collect { case m: Map[String @unchecked, Any @unchecked] => m }.getOrElse(Map.empty)
-        val desc = checks.get("description").collect { case m: Map[String @unchecked, Any @unchecked] => m }.getOrElse(Map.empty)
-        val canon = checks.get("canonical").collect { case m: Map[String @unchecked, Any @unchecked] => m }.getOrElse(Map.empty)
-        Seq(
-          bool(title, "has_title").map(a => CheckCatalog.hasTitle(staged, a)),
-          bool(title, "has_title").map(_ => CheckCatalog.hasMultipleTitles(staged)),
-          bool(title, "is_title_empty").map(a => CheckCatalog.isTitleEmpty(staged, a)),
-          bool(title, "has_title_changed").map(a => CheckCatalog.hasTitleChanged(staged, hist, a)),
-          bool(title, "has_title_duplicates").map(a => CheckCatalog.hasTitleDuplicates(staged, a)),
-          bool(desc, "has_description").map(a => CheckCatalog.hasDescription(staged, a)),
-          bool(desc, "has_description").map(_ => CheckCatalog.hasMultipleDescriptions(staged)),
-          bool(desc, "is_description_empty").map(a => CheckCatalog.isDescriptionEmpty(staged, a)),
-          bool(desc, "has_description_changed").map(a => CheckCatalog.hasDescriptionChanged(staged, hist, a)),
-          bool(desc, "has_description_duplicates").map(a => CheckCatalog.hasDescriptionDuplicates(staged, a)),
-          bool(canon, "has_canonical").map(a => CheckCatalog.hasCanonical(staged, a)),
-          bool(canon, "canonical_is_self_referencing")
-            .filter(identity).map(_ => CheckCatalog.canonicalSelfReferencing(staged)),
-          bool(canon, "canonical_href_200").filter(identity).map { _ =>
-            // the live re-fetch of each canonical href becomes a prior
-            // fetch stage whose statuses join in as data (SURVEY §7.4)
-            val hrefs = staged
-              .select(graft.functions.HtmlFunctions.canonical(col("body")).as("href"))
-              .filter(col("href") =!= "").distinct()
-              .collect().map(_.getString(0)).toSeq
-            CheckCatalog.canonicalHref200(staged, fetchStatuses(hrefs))
-          }
-        ).flatten
-      }
-    }
-
-  /** Fetch a small URL list (canonical hrefs, sitemap URLs — urlset
-    * scale) and return (url, status) for the live-fetch checks. */
-  private def fetchStatuses(urls: Seq[String]): DataFrame = {
-    import spark.implicits._
-    if (urls.isEmpty) return Seq.empty[(String, Int)].toDF("url", "status")
-    val f = fetcher // local copy — the lambda must not capture the Runner
-    spark.createDataset(urls)
-      .repartition(math.min(urls.size, 8))
-      .map { u =>
-        val r = f.fetch(u, HtmlParserSource.DefaultUserAgent)
-        (u, if (r.error.nonEmpty) 0 else r.status_code)
-      }
-      .toDF("url", "status")
-  }
-
-  private def runResponseheader(mc: ModuleConfig): Unit =
-    withStagedBatch("html_parser", "responseheader") { (batch, _) =>
-      mc.urlsetChecks.toSeq.sortBy(_._1).map { case (set, checks) =>
-        val asserts = checks.collect {
-          case (k, m: Map[String @unchecked, Any @unchecked]) if m.contains("assert") =>
-            k -> m("assert").toString
-        }
-        CheckCatalog.responseHeaders(batch.filter(col("urlset") === set), asserts)
-      }
-    }
-
-  private def runHtmlheadings(mc: ModuleConfig): Unit =
-    withStagedBatch("html_parser", "htmlheadings") { (batch, _) =>
-      mc.urlsetChecks.toSeq.sortBy(_._1).flatMap { case (set, checks) =>
-        checks.get("count_headline_h1").map(v =>
-          CheckCatalog.countHeadlineH1(batch.filter(col("urlset") === set),
-            v.toString.toInt))
-      }
-    }
-
-  private def runRobotstxtChecks(mc: ModuleConfig): Unit =
-    withStagedBatch("robotstxt", "robotstxt") { (batch, _) =>
-      mc.urlsetChecks.toSeq.sortBy(_._1).flatMap { case (set, checks) =>
-        val staged = batch.filter(col("urlset") === set)
-        Seq(
-          checks.get("status_code").map(v =>
-            CheckCatalog.robotsStatusCode(staged, v.toString.toInt)),
-          bool(checks, "has_sitemap_xml").map(a =>
-            CheckCatalog.robotsHasSitemap(staged, a)),
-          bool(checks, "sitemap_access").filter(identity).map { _ =>
-            val sitemaps = staged
-              .select(explode(graft.functions.HtmlFunctions
-                .robotsSitemaps(col("body"))).as("sm"))
-              .distinct().collect().map(_.getString(0)).toSeq
-            CheckCatalog.robotsSitemapAccess(staged, fetchStatuses(sitemaps))
-          }
-        ).flatten
-      }
-    }
 
   /** Operation google_search_console: the matching enrichment over the
     * imported GSC table (operation/google_search_console.py:327-405):
@@ -492,7 +380,120 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
 }
 
 object Runner {
-  import org.apache.spark.sql.DataFrame
+  import CheckCatalog.{Check, Checks, Tag}
+
+  /** One staged batch of a check operation: the unprocessed rows
+    * (`plain`, for the live-fetch collects that run first) and the
+    * processed `history`, both from one file listing. */
+  private[plans] final case class Batch(plain: DataFrame, history: DataFrame,
+                                        stats: Observation) {
+    /** The rows the append reads, observing their count and max ingest
+      * time in the append's own job. */
+    lazy val rows: DataFrame =
+      plain.observe(stats, count(lit(1)), max(col("__ingested_at")))
+  }
+
+  private def bool(m: Map[String, Any], key: String): Option[Boolean] =
+    m.get(key).map(v => v == true || v == "true")
+  private def on(m: Map[String, Any], key: String): Boolean = bool(m, key).contains(true)
+
+  /** The live re-fetch a check makes becomes a prior fetch stage whose
+    * statuses join in as data (SURVEY §7.4): one job fetches the distinct
+    * URLs `urls` yields over the batch rows of the URL-sets `configured`
+    * (urlset scale) into url → status, 0 for a failed fetch. */
+  private def statuses(b: Batch, urlsetChecks: Map[String, Map[String, Any]],
+                       configured: Map[String, Any] => Boolean, urls: Column,
+                       fetcher: Fetcher): Map[String, Int] = {
+    val sets = urlsetChecks.collect { case (set, c) if configured(c) => set }.toSeq
+    val distinct = b.plain.filter(col("urlset").isin(sets: _*)).select(urls).collect()
+      .map(_.getString(0)).filter(_.nonEmpty).distinct.toSeq
+    if (distinct.isEmpty) Map.empty
+    else b.plain.sparkSession.sparkContext.parallelize(distinct, math.min(distinct.size, 8))
+      .map { u =>
+        val r = fetcher.fetch(u, HtmlParserSource.DefaultUserAgent)
+        u -> (if (r.error.nonEmpty) 0 else r.status_code)
+      }.collect().toMap
+  }
+
+  /** The checks `perSet` makes of every URL-set's config, as one select
+    * over the batch rows of those sets: one `urlset IN` filter, each
+    * set's checks guarded by its name. None when no set has a check. */
+  private[plans] def fused(b: Batch, urlsetChecks: Map[String, Map[String, Any]])
+                          (perSet: Map[String, Any] => Seq[Check]): Option[DataFrame] = {
+    val bySet = urlsetChecks.toSeq.sortBy(_._1).map { case (set, c) => set -> perSet(c) }
+    val checked = bySet.collect { case (set, checks) if checks.nonEmpty => set }
+    Option.when(checked.nonEmpty)(CheckCatalog.compile(
+      b.rows.filter(col("urlset").isin(checked: _*)),
+      bySet.flatMap { case (set, checks) => checks.map(_.in(set)) },
+      Some(b.history.filter(col("urlset").isin(checked: _*)))))
+  }
+
+  /** Operation metatags: the title, description and canonical families. */
+  private[plans] def metatags(urlsetChecks: Map[String, Map[String, Any]], b: Batch,
+                              fetcher: Fetcher): Option[DataFrame] = {
+    def family(checks: Map[String, Any], name: String): Map[String, Any] =
+      checks.get(name).collect { case m: Map[String @unchecked, Any @unchecked] => m }
+        .getOrElse(Map.empty)
+    def tag(t: Tag, flags: Map[String, Any]): Seq[Check] =
+      bool(flags, s"has_${t.kind}").toSeq.flatMap(a => Seq(t.has(a), t.multiple)) ++
+        bool(flags, s"is_${t.kind}_empty").map(t.isEmpty) ++
+        bool(flags, s"has_${t.kind}_changed").map(t.changed) ++
+        bool(flags, s"has_${t.kind}_duplicates").map(t.duplicates)
+    lazy val hrefs = statuses(b, urlsetChecks, c => on(family(c, "canonical"),
+      "canonical_href_200"), HtmlFunctions.canonical(col("body")), fetcher)
+    fused(b, urlsetChecks) { checks =>
+      val canon = family(checks, "canonical")
+      tag(Checks.title, family(checks, "title")) ++
+        tag(Checks.description, family(checks, "description")) ++
+        bool(canon, "has_canonical").map(Checks.hasCanonical) ++
+        Option.when(on(canon, "canonical_is_self_referencing"))(
+          Checks.canonicalSelfReferencing) ++
+        Option.when(on(canon, "canonical_href_200"))(Checks.canonicalHref200(hrefs))
+    }
+  }
+
+  private[plans] def responseheader(checks: Map[String, Any]): Seq[Check] =
+    checks.toSeq.sortBy(_._1).collect {
+      case (k, m: Map[String @unchecked, Any @unchecked]) if m.contains("assert") =>
+        Checks.responseHeader(k, m("assert").toString)
+    }
+
+  private[plans] def htmlheadings(checks: Map[String, Any]): Seq[Check] =
+    checks.get("count_headline_h1").map(v => Checks.countHeadlineH1(v.toString.toInt)).toSeq
+
+  private[plans] def robotstxt(urlsetChecks: Map[String, Map[String, Any]], b: Batch,
+                               fetcher: Fetcher): Option[DataFrame] = {
+    lazy val sitemaps = statuses(b, urlsetChecks, on(_, "sitemap_access"),
+      explode(HtmlFunctions.robotsSitemaps(col("body"))), fetcher)
+    fused(b, urlsetChecks) { checks =>
+      (checks.get("status_code").map(v => Checks.robotsStatusCode(v.toString.toInt)) ++
+        bool(checks, "has_sitemap_xml").map(Checks.robotsHasSitemap) ++
+        Option.when(on(checks, "sitemap_access"))(Checks.robotsSitemapAccess(sitemaps))).toSeq
+    }
+  }
+
+  /** Operation pagespeed: audit-threshold checks over the raw staged
+    * bodies (operation/pagespeed.py:148-524); config shape
+    * checks: { fcp_score: { desktop: 0.49, mobile: 0.3 }, ... }. */
+  private[plans] def pagespeed(checks: Map[String, Any], b: Batch): Option[DataFrame] = {
+    val auditOf = Map(
+      "fcp_score" -> "first-contentful-paint",
+      "tti_score" -> "interactive",
+      "ttfb_score" -> "server-response-time",
+      "performance_score" -> "performance")
+    val thresholds = checks.toSeq.sortBy(_._1).flatMap {
+      case (checkKey, byStrategy: Map[String @unchecked, Any @unchecked]) =>
+        byStrategy.toSeq.sortBy(_._1).flatMap { case (strategy, threshold) =>
+          auditOf.get(checkKey).map(audit => Checks.pagespeedThreshold(checkKey + "_",
+            audit, strategy, threshold.toString.toDouble, displayMode = false))
+        }
+      case _ => Nil
+    }
+    Option.when(thresholds.nonEmpty)(CheckCatalog.compile(b.rows
+      .withColumn("urlset", col("cluster"))
+      .withColumn("url", graft.core.Url.parse(col("url")))
+      .withColumn("date", col("date").cast("timestamp")), thresholds))
+  }
 
   /** The S9 time-partitioning grain (HOUR/DAY/MONTH/YEAR,
     * bigquery_queries.py:19-24): derive the partition value from the

@@ -3,6 +3,7 @@ package graft.sources
 import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.functions.DateFunctions
 
 /** Outcome of one import run — the reference signals these with exceptions
@@ -162,22 +163,28 @@ object GscSource {
       Seq("property", "date")))
   }
 
+  /** The retry queue's columns: one config per row, lists comma-joined. */
+  val RetrySchema: StructType = StructType(Seq("property", "tableName",
+    "requestDate", "dimensions", "searchTypes", "previousData").map(StructField(_, StringType)))
+
   /** Run specs + drained retries; API failures re-enqueue the spec with
     * its ORIGINAL request date (reference :53-61,165-190). */
   def run(spark: SparkSession, api: SearchAnalyticsApi, specs: Seq[GscConfig],
           warehouse: Warehouse, queues: QueueStore,
           retryQueue: String = "gsc_retry"): Map[String, ImportOutcome] = {
     import spark.implicits._
-    val retrySchema = Seq(("", "", "", "", "", ""))
-      .toDF("property", "tableName", "requestDate", "dimensions",
-        "searchTypes", "previousData").schema
-    val retries = queues.drain(retryQueue, retrySchema).map { r =>
+    val retries = queues.drain(retryQueue, RetrySchema).map { r =>
       GscConfig(r.getString(0), r.getString(1),
         LocalDate.parse(r.getString(2)),
         r.getString(3).split(',').toSeq.filter(_.nonEmpty),
         r.getString(4).split(',').toSeq.filter(_.nonEmpty),
         r.getString(5).split(',').toSeq.filter(_.nonEmpty))
     }
+    def retry(cfg: GscConfig): Unit =
+      queues.enqueue(retryQueue, Seq((cfg.property, cfg.tableName,
+        cfg.requestDate.toString, cfg.dimensions.mkString(","),
+        cfg.searchTypes.mkString(","), cfg.previousData.mkString(",")))
+        .toDF(RetrySchema.fieldNames.toIndexedSeq: _*))
     // work-list merge with equality dedup (reference :128-129)
     val work = (retries ++ specs).distinct
     work.map { cfg =>
@@ -185,20 +192,11 @@ object GscSource {
         try importProperty(spark, api, cfg, warehouse)
         catch {
           case _: Exception =>
-            queues.enqueue(retryQueue, Seq((cfg.property, cfg.tableName,
-              cfg.requestDate.toString, cfg.dimensions.mkString(","),
-              cfg.searchTypes.mkString(","), cfg.previousData.mkString(",")))
-              .toDF("property", "tableName", "requestDate", "dimensions",
-                "searchTypes", "previousData"))
+            retry(cfg)
             NotAvailableYet
         }
       // NotAvailableYet also retries later (watermark not advanced)
-      if (outcome == NotAvailableYet)
-        queues.enqueue(retryQueue, Seq((cfg.property, cfg.tableName,
-          cfg.requestDate.toString, cfg.dimensions.mkString(","),
-          cfg.searchTypes.mkString(","), cfg.previousData.mkString(",")))
-          .toDF("property", "tableName", "requestDate", "dimensions",
-            "searchTypes", "previousData"))
+      if (outcome == NotAvailableYet) retry(cfg)
       cfg.property -> outcome
     }.toMap
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** S3/S4 PageSpeed sources.
   *
@@ -79,6 +80,11 @@ object PageSpeedSource {
       .select(col("cluster"), col("url"), col("strategy"),
         (col("retries") - 1).as("retries"))
 
+  /** The retry queue's columns, as [[retryRows]] writes them. */
+  val RetrySchema: StructType = StructType(
+    Seq("cluster", "url", "strategy").map(StructField(_, StringType)) :+
+      StructField("retries", IntegerType, nullable = false))
+
   /** One full run: fetch (configured requests + drained retries), write
     * labdata + logs, re-enqueue failures. */
   def run(spark: SparkSession, requests: Seq[Request], fetcher: Fetcher,
@@ -88,10 +94,7 @@ object PageSpeedSource {
           retryQueue: String = "pagespeed_retry",
           now: () => java.sql.Timestamp =
             () => new java.sql.Timestamp(System.currentTimeMillis())): DataFrame = {
-    import spark.implicits._
-    val retrySchema = Seq(("", "", "", 0))
-      .toDF("cluster", "url", "strategy", "retries").schema
-    val retries = queues.drain(retryQueue, retrySchema)
+    val retries = queues.drain(retryQueue, RetrySchema)
       .map(r => Request(r.getString(0), r.getString(1), r.getString(2), r.getInt(3)))
     val work = (retries ++ requests)
       .groupBy(r => (r.cluster, r.url, r.strategy)).map(_._2.head).toSeq

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.Relational
 
 /** The engine's storage layer (SURVEY §7.1 step 4): parquet-backed staging
@@ -34,18 +35,48 @@ final class StagingStore(spark: SparkSession, root: String) {
   private def legacyWmDir(collection: String, op: String) =
     new java.io.File(s"$root/watermarks", s"${collection}__$op")
 
+  /** The collection's recorded schema, next to its files; the leading
+    * `_` hides it from the parquet reader. */
+  private def schemaFile(collection: String) =
+    new java.io.File(path(collection), "_graft_schema.json")
+
   /** Append a batch, stamping the ingest time used by incremental reads. */
   def append(collection: String, df: DataFrame): Unit =
-    df.withColumn("__ingested_at", current_timestamp())
-      .write.mode(SaveMode.Append).parquet(path(collection))
+    write(collection, df.withColumn("__ingested_at", current_timestamp()))
 
   /** Append with a caller-supplied ingest timestamp (deterministic tests). */
   def appendAt(collection: String, df: DataFrame, at: java.sql.Timestamp): Unit =
-    df.withColumn("__ingested_at", lit(at))
-      .write.mode(SaveMode.Append).parquet(path(collection))
+    write(collection, df.withColumn("__ingested_at", lit(at)))
 
-  def readAll(collection: String): DataFrame =
-    spark.read.parquet(path(collection))
+  /** An append must carry the recorded columns: a parquet directory
+    * whose files disagree is read with one file's footer, whichever
+    * Spark picks. The append that creates the collection records the
+    * schema Spark infers for it, once. */
+  private def write(collection: String, df: DataFrame): Unit = {
+    val f = schemaFile(collection)
+    if (f.isFile) {
+      val recorded = StagingStore.parse(f)
+      require(StagingStore.nullable(df.schema) == StagingStore.nullable(recorded),
+        s"staging collection '$collection' holds ${recorded.simpleString}; " +
+          s"the append has ${df.schema.simpleString}")
+    }
+    df.write.mode(SaveMode.Append).parquet(path(collection))
+    if (!f.isFile) record(collection)
+  }
+
+  private def record(collection: String): StructType = {
+    val inferred = spark.read.parquet(path(collection)).schema
+    StoreTxn.writeAtomic(schemaFile(collection), inferred.json)
+    inferred
+  }
+
+  /** Read with the recorded schema: no inference job. A collection
+    * written before the schema was recorded infers once and records it. */
+  def readAll(collection: String): DataFrame = {
+    val f = schemaFile(collection)
+    val schema = if (f.isFile) StagingStore.parse(f) else record(collection)
+    spark.read.schema(schema).parquet(path(collection))
+  }
 
   /** The staged rows split at `op`'s watermark into (unprocessed,
     * history): ingest time strictly after it, and at or before it. Both
@@ -96,6 +127,21 @@ final class StagingStore(spark: SparkSession, root: String) {
 
   def exists(collection: String): Boolean =
     new java.io.File(path(collection)).exists()
+}
+
+object StagingStore {
+  private def parse(f: java.io.File): StructType =
+    DataType.fromJson(java.nio.file.Files.readString(f.toPath)).asInstanceOf[StructType]
+
+  /** `t` with every field, element and value nullable, as the parquet
+    * reader reports them whatever the writing frame declared. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      StructField(f.name, nullable(f.dataType))))
+    case a: ArrayType => ArrayType(nullable(a.elementType))
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
+    case other => other
+  }
 }
 
 final class Warehouse(spark: SparkSession, root0: String) {
@@ -417,14 +463,15 @@ final class QueueStore(spark: SparkSession, root: String) {
   def enqueue(queue: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path(queue))
 
-  /** Read the whole queue; empty DataFrame with `schema` when absent. */
-  def peek(queue: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(queue)) spark.read.parquet(path(queue))
+  /** Read the whole queue with the caller's `schema` (no inference job);
+    * an empty DataFrame when absent. */
+  def peek(queue: String, schema: StructType): DataFrame =
+    if (exists(queue)) spark.read.schema(schema).parquet(path(queue))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Delete-on-read: atomically replace the queue with `remaining`.
     * Returns the drained rows (materialized before the overwrite). */
-  def drain(queue: String, schema: org.apache.spark.sql.types.StructType): Seq[org.apache.spark.sql.Row] = {
+  def drain(queue: String, schema: StructType): Seq[org.apache.spark.sql.Row] = {
     val rows = peek(queue, schema).collect().toSeq
     clear(queue)
     rows

@@ -618,4 +618,25 @@ class GraphSpec extends SparkSpec {
       Graph.pageRank(edges, "src", "dst", 1, Some("w"), prior = Some(stale),
         maxDriverEdges = 0).orderBy("node").collect().toSeq)
   }
+
+  test("a round checkpoint claims only its own RDD while a neighbour checkpoints") {
+    val rc = new Graph.RoundCheckpoint(spark.sparkContext, None)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the other leg of a Par.both: checkpoints of its own, on another thread
+    val neighbour = new Thread(() =>
+      while (!stop.get()) spark.range(8).toDF("id").localCheckpoint(true).count())
+    neighbour.start()
+    try (1 to 40).foreach { i =>
+      Seq(rc.apply _, rc.lazyMark _).foreach { mark =>
+        val (mat, ids) = mark(spark.range(16).toDF("id").withColumn("r", lit(i)))
+        val under = mat.queryExecution.analyzed.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        }.toSet
+        assert(ids.nonEmpty && ids.subsetOf(under),
+          s"round $i claimed $ids, its plan holds $under")
+        ids.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
+          .foreach(_.unpersist(false)))
+      }
+    } finally { stop.set(true); neighbour.join() }
+  }
 }

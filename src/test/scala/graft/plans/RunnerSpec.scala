@@ -2,8 +2,9 @@ package graft.plans
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{Jobs, SparkSpec}
 import graft.core.{ConfigLoader, Url}
 import graft.sources._
 
@@ -167,6 +168,90 @@ class RunnerSpec extends SparkSpec {
     val replay = runner(root, 2)
     Operations.foreach(replay.runOperation)
     assert(spark.read.parquet(s"$root/warehouse/checks").count() === before)
+  }
+
+  private def dataFiles(dir: java.io.File): Set[String] =
+    if (!dir.exists()) Set.empty
+    else scala.util.Using.resource(Files.walk(dir.toPath))(_.iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSet)
+
+  private def watermarkBytes(root: String): Map[String, Seq[Byte]] =
+    Option(new java.io.File(root, "watermarks").listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".instant"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  private def twoCycles(root: String): Unit = (1 to 2).foreach { c =>
+    val r = runner(root, c)
+    r.runAggregation("html_parser")
+    r.runAggregation("robotstxt")
+    Operations.foreach(r.runOperation)
+  }
+
+  test("a replay with nothing new staged writes no data file and keeps every watermark") {
+    val root = Files.createTempDirectory("graft_runner_replay").toString
+    val checksDir = new java.io.File(root, "warehouse/checks")
+    twoCycles(root)
+    val files = dataFiles(checksDir)
+    val marks = watermarkBytes(root)
+    assert(files.nonEmpty && marks.size === Operations.size)
+    Operations.foreach(runner(root, 2).runOperation)
+    assert(dataFiles(checksDir) === files)
+    assert(watermarkBytes(root) === marks)
+  }
+
+  /** A query started by `withStagedBatch` itself is its stats fallback:
+    * the append starts in the warehouse, the live fetches in the op. */
+  private def statsQuery(callSite: String): Boolean =
+    callSite.linesIterator.find(_.startsWith("graft.")).exists(_.contains("withStagedBatch"))
+
+  test("missing observed metrics fall back to one stats job; the watermark stays") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val root = Files.createTempDirectory("graft_runner_stats").toString
+    val dupsOnly =
+      s"""urlsets:
+         |  pages:
+         |    - url: '$One'
+         |    - url: '$Two'
+         |aggregations:
+         |  html_parser:
+         |    cron: '*/5 * * * *'
+         |    urlsets: ['pages']
+         |operations:
+         |  metatags:
+         |    cron: '*/5 * * * *'
+         |    urlsets:
+         |      - url: 'pages'
+         |        checks:
+         |          title:
+         |            has_title_duplicates: false
+         |""".stripMargin
+    def cycle(c: Int) = {
+      val ts = cycleTs(c)
+      new Runner(spark, ConfigLoader.load(dupsOnly), root, new FixtureFetcher(site(c)),
+        now = () => ts)
+    }
+    val first = cycle(1)
+    first.runAggregation("html_parser")
+    val (_, staged) = Jobs.during(spark)(first.runOperation("metatags"))
+    assert(staged.queries.count(statsQuery) === 0, "the append job observes a staged batch")
+    val marks = watermarkBytes(root)
+    // nothing new staged: AQE replaces the empty input of the duplicates
+    // window with an empty relation, and the observing node goes with it
+    val (_, replay) = Jobs.during(spark)(cycle(1).runOperation("metatags"))
+    assert(replay.queries.count(statsQuery) === 1, replay.queries.mkString("\n---\n"))
+    assert(watermarkBytes(root) === marks)
+  }
+
+  test("a row-local check operation is one Spark job") {
+    val root = Files.createTempDirectory("graft_runner_jobs").toString
+    twoCycles(root)
+    val r = runner(root, 3)
+    r.runAggregation("html_parser")
+    r.runAggregation("robotstxt")
+    Seq("responseheader", "htmlheadings", "robotstxt").foreach { op =>
+      val (_, ran) = Jobs.during(spark)(r.runOperation(op))
+      assert(ran.jobs.size === 1, s"$op ran:\n" + ran.jobs.mkString("\n---\n"))
+    }
   }
 
   test("pagespeed operation checks each staged Lighthouse result once") {

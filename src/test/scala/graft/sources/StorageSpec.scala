@@ -252,4 +252,84 @@ class StorageSpec extends SparkSpec {
       spark.sparkContext.parallelize(drained.take(1)), schema))
     assert(q.peek("retry", schema).count() === 1)
   }
+
+  private val Page = "https://ex.com/a"
+
+  /** Each staging collection's frame, as its source stages it. */
+  private val stagedBy: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "html_parser" -> (() => HtmlParserSource.stage(spark, Seq(ConfigUrl("s", Page)),
+      FixtureFetcher.html(Map(Page -> "<html><head><title>A</title></head></html>")))),
+    "robotstxt" -> (() => RobotstxtSource.stage(spark, Seq(ConfigUrl("s", "https://ex.com/")),
+      new FixtureFetcher(Map("https://ex.com/robots.txt" -> FetchResult(
+        "https://ex.com/robots.txt", 200, Map("content-type" -> "text/plain"),
+        "Sitemap: https://ex.com/sitemap.xml\n"))))),
+    "pagespeed" -> (() => PageSpeedSource.fetchRaw(spark,
+      Seq(PageSpeedSource.Request("home", Page, "mobile")),
+      new FixtureFetcher(Map(Page -> FetchResult(Page, 200,
+        Map("content-type" -> "application/json"), """{"lighthouseResult":{}}"""))),
+      (url, _) => url).drop("retries")))
+
+  stagedBy.foreach { case (c, staged) =>
+    test(s"staging $c: the creating append pins the schema; reads start no job") {
+      val root = tmpRoot()
+      val st = new StagingStore(spark, root)
+      val dir = s"$root/staging/$c"
+      val sidecar = new java.io.File(dir, "_graft_schema.json")
+      def recorded = org.apache.spark.sql.types.DataType.fromJson(
+        Files.readString(sidecar.toPath))
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+      st.appendAt(c, staged(), t0)
+      assert(recorded === spark.read.parquet(dir).schema)
+      st.appendAt(c, staged(), java.sql.Timestamp.valueOf("2024-01-02 10:00:00"))
+      st.advanceWatermarkTo(c, "op", t0)
+      val ((fresh, history), ran) = graft.Jobs.during(spark)(st.readSplit(c, "op"))
+      assert(ran.jobs.isEmpty && ran.queries.isEmpty, ran)
+      assert(fresh.count() === 1 && history.count() === 1)
+      // a root written before schemas were recorded infers once, then has one
+      assert(sidecar.delete())
+      assert(st.readAll(c).count() === 2)
+      assert(sidecar.isFile && recorded === spark.read.parquet(dir).schema)
+      val e = intercept[IllegalArgumentException](st.appendAt(c,
+        staged().withColumn("extra", lit(1)), java.sql.Timestamp.valueOf("2024-01-03 10:00:00")))
+      assert(e.getMessage.contains(s"'$c'"))
+      assert(st.readAll(c).count() === 2, "the rejected append wrote nothing")
+    }
+  }
+
+  test("queue: peek and drain return every stored column with the caller's schema") {
+    val root = tmpRoot()
+    val q = new QueueStore(spark, root)
+    val now = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    // the alert queue after a failed dispatch rewrote what remains
+    q.enqueue("alerts", graft.plans.Alerting.runCheck(spark,
+      graft.plans.Alerting.CheckConfig(query = "SELECT 1 AS id", message = "m {id}"),
+      now).alerts)
+    graft.plans.Alerting.dispatch(spark, q, "alerts", Seq("default"),
+      new graft.plans.Alerting.FailingNotifier)
+    q.enqueue("pagespeed_retry", PageSpeedSource.retryRows(PageSpeedSource.fetchRaw(spark,
+      Seq(PageSpeedSource.Request("home", Page, "mobile")), new FixtureFetcher(Map.empty),
+      (url, _) => url)))
+    val down = new SearchAnalyticsApi {
+      override def query(property: String, searchType: String,
+                         start: java.time.LocalDate, end: java.time.LocalDate,
+                         dimensions: Seq[String], startRow: Int,
+                         rowLimit: Int): Seq[GscRow] = throw new RuntimeException("down")
+    }
+    GscSource.run(spark, down, Seq(GscConfig("https://ex.com/", "gsc",
+      requestDate = java.time.LocalDate.of(2024, 1, 1))), new Warehouse(spark, root), q)
+    Seq("alerts" -> graft.plans.Alerting.alertSchema,
+        "pagespeed_retry" -> PageSpeedSource.RetrySchema,
+        "gsc_retry" -> GscSource.RetrySchema).foreach { case (queue, schema) =>
+      val stored = spark.read.parquet(s"$root/queues/$queue")
+      def rows(r: Seq[org.apache.spark.sql.Row]) = r.map(_.toSeq.mkString("|")).sorted
+      val expected = rows(stored.collect().toSeq)
+      assert(expected.nonEmpty, queue)
+      val (peeked, ran) = graft.Jobs.during(spark)(q.peek(queue, schema))
+      assert(ran.jobs.isEmpty, s"$queue: peek ran $ran")
+      assert(peeked.columns.toSeq === stored.columns.toSeq, queue)
+      assert(rows(peeked.collect().toSeq) === expected, queue)
+      assert(rows(q.drain(queue, schema)) === expected, queue)
+      assert(!q.exists(queue), queue)
+    }
+  }
 }
