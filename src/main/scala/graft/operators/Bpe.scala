@@ -104,13 +104,9 @@ object Bpe {
       s"minPairCount must be >= 1, got $minPairCount")
     val spark = docs.sparkSession
     val sc = spark.sparkContext
-    // set-diff of context-global persistent RDD ids — assumes no
-    // OTHER thread caches on this session mid-round (the same
-    // single-driver contract as connectedComponents' loop)
     def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
       val mat = df.localCheckpoint(true)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
+      (mat, Graph.pinnedBy(mat))
     }
 
     // the word-type aggregate goes through the row-local TokenCounts
@@ -130,8 +126,8 @@ object Bpe {
     // table, whose size follows Heaps' law — a fraction of the corpus at
     // any scale — and each distributed round costs an argmax job plus a
     // checkpoint job. When the materialized type table is at most
-    // `DefaultMaxDriverTypes` rows (the count reads the
-    // just-checkpointed blocks), collect it and replay
+    // `DefaultMaxDriverTypes` rows (one bounded collect of the
+    // just-checkpointed blocks), replay
     // the identical rounds in memory: same pair counting (each adjacent
     // occurrence, freq-weighted), same argmax tie-break (count desc,
     // then lhs/rhs in UTF-8 BYTE order — java.lang.String order would
@@ -140,9 +136,9 @@ object Bpe {
     // tokenizer trainers are single-node for exactly this reason; a
     // web-garbage vocabulary past the gate takes the distributed rounds
     // unchanged. Equivalence spec-pinned in BpeSpec.
-    if (maxDriverTypes > 0 && cur.count() <= maxDriverTypes) {
-      var words = cur.select(col("wstr"), col("freq")).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
+    graft.core.DriverRoute.collect(cur.select(col("wstr"), col("freq")),
+        maxDriverTypes).foreach { rows =>
+      var words = rows.map(r => (r.getString(0), r.getLong(1)))
       prevIds.foreach(i =>
         sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
       def ltUtf8(a: String, b: String): Boolean = {

@@ -15,9 +15,9 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** [[connectedComponents]]' small-graph gate: max symmetric edge rows
-    * folded on the driver (≈ 8 MB collected at the default — a broadcast
-    * build side's size class). */
+  /** [[connectedComponents]]' small-graph gate: max edge rows collected
+    * for the driver fold (≈ 16 MB at the default — a broadcast build
+    * side's size class). */
   private[graft] val DefaultMaxDriverEdges: Long = 1L << 20
 
   /** Exact dedup: keep the first row (min id) per identical value.
@@ -214,7 +214,7 @@ object Dedup {
       .select("id", "shingle")
     val sizes = bounded.groupBy("id").agg(count(lit(1)).as("sz"))
     val groups = bounded.groupBy("shingle")
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .agg(sort_array(collect_list(col("id").cast("long"))).as("ids"))
     // all (i < j) pairs within the sorted id list — native kernel
     // (the composed slice form copies O(n) per element; see IdPairs)
     val pairExpr = idPairs(col("ids"))
@@ -341,7 +341,7 @@ object Dedup {
         explode(slice(col("__ord"), lit(1), col("__p"))).as("pe"))
       .select(col("id"), col("pe.h1").as("h1"), col("pe.h2").as("h2"))
     val cands = pref.groupBy("h1", "h2")
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .agg(sort_array(collect_list(col("id").cast("long"))).as("ids"))
       .select(explode(idPairs(col("ids"))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .distinct()
@@ -907,33 +907,28 @@ object Dedup {
     * driver-MEMORY bound, not a data-scale bound — it needs no retuning per corpus size.
     *
     * SMALL-GRAPH ROUTE (r12): once the symmetric-deduped edge list is
-    * materialized, its row count is a free control read off the cached
-    * blocks — and when it is at most `maxDriverEdges` rows (default 2^20
-    * sym rows = 2^19 pairs ≈ 8 MB collected, the same size class as a
-    * broadcast build side or the ContainmentStore's 4 MB gate), the
-    * component fold runs as a driver union-find instead of the
-    * distributed rounds. Near-dup pair graphs are tiny relative to their
-    * corpus (pairs ≈ dup rate × corpus, and every generator caps
-    * degenerate buckets), so at ANY corpus scale most CC calls take this
-    * route; a pair explosion past the gate routes to the distributed
-    * fold unchanged. Measured motivation: the distributed fold spent 16
-    * rounds × 3 driver-side plan/actions ≈ 6.5 s on a 1,983-pair graph
-    * (q96 at sf0.1) that union-find folds in milliseconds. The labels
-    * come back as a LocalRelation (accurate stats), so downstream
-    * keep-joins auto-broadcast instead of shuffling the corpus side.
-    * Result is BIT-IDENTICAL: comp = min id of the component, schedule-
-    * independent (union-by-min root; property-pinned in DedupSpec). */
+    * materialized, one direction of it is collected through
+    * [[graft.core.DriverRoute]] when it has at most `maxDriverEdges` rows
+    * (default 2^20 edges ≈ 16 MB collected, the same size class as a
+    * broadcast build side), and the component fold runs as a driver
+    * union-find instead of the distributed rounds. Near-dup pair graphs
+    * are tiny relative to their corpus (pairs ≈ dup rate × corpus, and
+    * every generator caps degenerate buckets), so at ANY corpus scale
+    * most CC calls take this route; a pair explosion past the gate
+    * routes to the distributed fold unchanged. Measured motivation: the
+    * distributed fold spent 16 rounds × 3 driver-side plan/actions ≈
+    * 6.5 s on a 1,983-pair graph (q96 at sf0.1) that union-find folds in
+    * milliseconds. The labels come back as a local relation (accurate
+    * stats), so downstream keep-joins auto-broadcast instead of
+    * shuffling the corpus side. Result is BIT-IDENTICAL: comp = min id of
+    * the component, schedule-independent (union-by-min root;
+    * property-pinned in DedupSpec). */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50,
                           checkpointDir: Option[String] = None,
                           maxDriverEdges: Long = DefaultMaxDriverEdges)
       : DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    Seq(aCol, bCol).foreach { c =>
-      val dt = pairs.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"connectedComponents id column '$c' must be integral, got $dt")
-    }
+    requireIntegralIds(pairs, aCol, bCol)
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
     // per-round lineage cut + track the pinned RDD ids so superseded
@@ -947,49 +942,15 @@ object Dedup {
       .union(pairs
         .select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .distinct())
-    // the count reads the just-pinned blocks, not the pair-generation
-    // plan — a bounded control read in the repo's established sense
-    // strict guard on the gate itself: 0 must force the distributed
-    // fold as documented, including for an EMPTY edge list (count 0)
-    if (maxDriverEdges > 0 && edges.count() <= maxDriverEdges) {
-      // one direction suffices for connectivity — halve the collect.
-      // <= keeps SELF-edges: the incremental fold's star contraction
-      // encodes untouched singletons as (id, id), and dropping them
-      // would erase those ids from the labeling
-      val half = edges.filter(col("src") <= col("dst"))
-        .select("src", "dst").collect()
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
+    // one direction suffices for connectivity — halve the collect.
+    // <= keeps SELF-edges: a star contraction encodes singletons as
+    // (id, id), and dropping them would erase those ids from the labeling
+    graft.core.DriverRoute.collect(
+        edges.filter(col("src") <= col("dst")), maxDriverEdges)
+      .foreach { half =>
+        checkpoint.releasePinned()
+        return componentLabels(spark, half)
       }
-      // union-by-min-root: the component's min id can never acquire a
-      // parent (only a smaller root could become one), so every final
-      // root IS the component minimum — the distributed fold's fixpoint
-      val nodes = new scala.collection.mutable.LongMap[Unit]()
-      half.foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        nodes.update(a, ()); nodes.update(b, ())
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      checkpoint.releasePinned()
-      val rows = nodes.keys.toSeq.map(id => (id, find(id)))
-      // LocalRelation below ~200k rows (accurate stats → downstream
-      // joins auto-broadcast); parallelized above (a multi-MB
-      // LocalRelation would be copied into every consumer plan)
-      import spark.implicits._
-      return if (rows.size <= 200000) rows.toDF("id", "comp")
-      else sc.parallelize(rows, math.max(1, rows.size / 100000))
-        .toDF("id", "comp")
-    }
     var (labels, prevIds) = checkpoint(
       edges.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
     var iter = 0
@@ -1050,23 +1011,81 @@ object Dedup {
     * how many old components the NEW pairs chain together, not with the
     * historical graph (property-tested equal to the full recompute).
     *
-    * An EMPTY pair set short-circuits to the labels untouched (one
-    * cheap emptiness probe) — the common case for a near-dup-free
-    * micro-batch in a long-lived maintenance stream, which otherwise
-    * pays the full fold's rounds for nothing. (A finer delta scope —
-    * anti-joining out untouched components — was measured 3× WORSE on
-    * the dense-fold board query: the extra full-label joins cost more
-    * than the contraction rounds they save.) */
+    * SMALL-DELTA ROUTE: when the new pairs and the labels together
+    * have at most `maxDriverEdges` rows, both are collected (the pairs
+    * first: a local relation costs no job) and folded by the same
+    * driver union-find as [[connectedComponents]]' small-graph route —
+    * no pin, no distinct shuffle, no count. Larger inputs take the
+    * contraction through [[connectedComponents]] unchanged.
+    *
+    * An EMPTY pair set short-circuits to the labels untouched — the
+    * common case for a near-dup-free micro-batch in a long-lived
+    * maintenance stream, which otherwise pays the full fold's rounds for
+    * nothing. (A finer delta scope — anti-joining out untouched
+    * components — was measured 3× WORSE on the dense-fold board query:
+    * the extra full-label joins cost more than the contraction rounds
+    * they save.) */
   def connectedComponentsIncremental(prevLabels: DataFrame, pairs: DataFrame,
                                      aCol: String, bCol: String,
                                      maxIter: Int = 50,
-                                     checkpointDir: Option[String] = None)
+                                     checkpointDir: Option[String] = None,
+                                     maxDriverEdges: Long = DefaultMaxDriverEdges)
       : DataFrame = {
-    if (pairs.isEmpty) return prevLabels.select(col("id"), col("comp"))
-    connectedComponents(
-      prevLabels.select(col("id").as("__src"), col("comp").as("__dst"))
-        .unionByName(pairs.select(col(aCol).as("__src"), col(bCol).as("__dst"))),
-      "__src", "__dst", maxIter, checkpointDir)
+    val star = prevLabels.select(col("id").as("__src"), col("comp").as("__dst"))
+      .unionByName(pairs.select(col(aCol).as("__src"), col(bCol).as("__dst")))
+    requireIntegralIds(star, "__src", "__dst")
+    val newEdges = graft.core.DriverRoute.collect(
+      pairs.select(col(aCol).cast("long"), col(bCol).cast("long")),
+      maxDriverEdges)
+    if (newEdges.exists(_.isEmpty) || (newEdges.isEmpty && pairs.isEmpty))
+      return prevLabels.select(col("id"), col("comp"))
+    newEdges.flatMap(p => graft.core.DriverRoute.collect(
+        prevLabels.select(col("id").cast("long"), col("comp").cast("long")),
+        maxDriverEdges - p.length).map(_ ++ p)) match {
+      case Some(all) => componentLabels(pairs.sparkSession, all)
+      case None => connectedComponents(star, "__src", "__dst", maxIter,
+        checkpointDir, maxDriverEdges)
+    }
+  }
+
+  private def requireIntegralIds(pairs: DataFrame, cols: String*): Unit =
+    cols.foreach(Pipeline.requireIntegralId(pairs.schema, _, "connectedComponents"))
+
+  /** The driver fold of both CC routes: (id, comp) for every endpoint of
+    * `edges` (long pairs; a null endpoint adds nothing), comp = the
+    * component's min id. Union-by-min-root: the component's min id can
+    * never acquire a parent (only a smaller root could become one), so
+    * every final root IS the component minimum — the distributed fold's
+    * fixpoint. */
+  private def componentLabels(spark: org.apache.spark.sql.SparkSession,
+                              edges: Array[org.apache.spark.sql.Row])
+      : DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
+      }
+      r
+    }
+    val nodes = new scala.collection.mutable.LongMap[Unit]()
+    edges.foreach { row =>
+      if (!row.isNullAt(0) && !row.isNullAt(1)) {
+        val (a, b) = (row.getLong(0), row.getLong(1))
+        nodes.update(a, ()); nodes.update(b, ())
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) {
+          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+    }
+    graft.core.DriverRoute.local(spark,
+      nodes.keys.toSeq.map(id => org.apache.spark.sql.Row(id, find(id))),
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("comp", LongType, nullable = false))))
   }
 
   /** In-bucket candidate pairs from an (id, bucket-key…) index frame:
@@ -1077,7 +1096,7 @@ object Dedup {
   private[operators] def bucketCandidates(index: DataFrame,
       keyCols: Seq[String], maxBucket: Int): DataFrame =
     index.groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
+      .agg(sort_array(collect_list(col("id").cast("long"))).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
       .select(explode(idPairs(col("ids"))).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
@@ -1089,7 +1108,8 @@ object Dedup {
   private[operators] def hammingCandidates(index: DataFrame,
       keyCols: Seq[String], maxBucket: Int, maxDist: Int): DataFrame = {
     val groups = index.groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("ms"))
+      .agg(sort_array(collect_list(
+        struct(col("id").cast("long").as("id"), col("sig")))).as("ms"))
       .filter(size(col("ms")) >= 2 && size(col("ms")) <= maxBucket)
     val pairExpr = graft.functions.expressions.ColumnBridge.column(
       graft.functions.expressions.HammingPairs(

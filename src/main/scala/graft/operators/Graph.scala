@@ -72,8 +72,8 @@ object Graph {
 
   /** DRIVER REPLAY of the rank fixpoint (r13): every update is exact
     * integer arithmetic over the aggregated edge list, so once that
-    * list is materialized and small (the gate above), replaying the
-    * rounds in memory is bit-identical to the distributed loop — same
+    * list is materialized and small (at most `maxRows` rows), replaying
+    * the rounds in memory is bit-identical to the distributed loop — same
     * long multiply / truncating divide / wrapping sum, same
     * driver-side dshare / BigInt-dtel scalars — while saving 2 pinned
     * materializations plus ~2 jobs per iteration (the per-round
@@ -84,11 +84,12 @@ object Graph {
     * weighted/dangling/warm/tol, both operators).
     *
     * Returns None — fall through to the distributed loop — when the
-    * prior or seed table exceeds the gate, when an edge endpoint is
-    * null (the distributed join silently drops those contributions;
-    * replaying that faithfully is not worth the code), or when the
-    * src/dst, seed or prior node types differ from each other (driver
-    * Any-equality cannot mirror the join's type coercion). A prior with
+    * edge list, prior or seed table exceeds the gate (0 always does;
+    * each is one bounded [[graft.core.DriverRoute]] collect), when an
+    * edge endpoint is null (the distributed join silently drops those
+    * contributions; replaying that faithfully is not worth the code), or
+    * when the src/dst, seed or prior node types differ from each other
+    * (driver Any-equality cannot mirror the join's type coercion). A prior with
     * several rows for one graph node fails here as on the distributed
     * route ([[duplicatePriorMsg]]).
     *
@@ -103,22 +104,15 @@ object Graph {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
     val spark = eAgg.sparkSession
     val nodeType = eAgg.schema("src").dataType
-    if (eAgg.schema("dst").dataType != nodeType) return None
-    if (seedsOpt.exists(_.schema.fields.head.dataType != nodeType))
+    if (!graft.core.DriverRoute.sameKeyTypes(Seq(eAgg -> "src", eAgg -> "dst") ++
+        seedsOpt.map(s => s -> s.columns.head) ++ prior.map(_ -> "node"): _*))
       return None
-    if (prior.exists(_.select(col("node")).schema.head.dataType != nodeType))
-      return None
-    def bounded(df: DataFrame): Option[Array[Row]] = {
-      val cap = math.min(maxRows, Int.MaxValue.toLong - 2).toInt
-      val rows = df.limit(cap + 1).collect()
-      if (rows.length > cap) None else Some(rows)
-    }
+    def bounded(df: DataFrame) = graft.core.DriverRoute.collect(df, maxRows)
+    val eRows = bounded(eAgg.select("src", "dst", "w")).getOrElse(return None)
     // prior/seeds collect under the same driver-memory bound as the
-    // edges (bounded by a limit, not a count — one job each); an
-    // oversized one routes the whole call distributed
+    // edges; an oversized one routes the whole call distributed
     var priorMap: mutable.HashMap[Any, Long] = null
     val priorDups = mutable.HashSet.empty[Any]
     if (prior.isDefined) bounded(prior.get
@@ -139,7 +133,6 @@ object Graph {
         seedSet = mutable.HashSet.empty
         rows.foreach(r => if (!r.isNullAt(0)) seedSet += r.get(0))
     })
-    val eRows = eAgg.select("src", "dst", "w").collect()
     val wtot = mutable.HashMap.empty[Any, Long]
     val nodeSet = mutable.LinkedHashSet.empty[Any]
     var i = 0
@@ -224,15 +217,19 @@ object Graph {
     checkpoint.releasePinned()
     val schema = StructType(Seq(StructField("node", nodeType),
       StructField("rank_fp", LongType), StructField("rank", DoubleType)))
-    val out = nodeSet.iterator.map(nd =>
-      Row(nd, rank(nd), rank(nd).toDouble / scale.toDouble)).toVector
-    // LocalRelation below ~200k rows (accurate stats → downstream gate
-    // joins auto-broadcast); parallelized above — the CC convention
-    Some(
-      if (out.size <= 200000) spark.createDataFrame(out.asJava, schema)
-      else spark.createDataFrame(
-        spark.sparkContext.parallelize(out, math.max(1, out.size / 100000)),
-        schema))
+    Some(graft.core.DriverRoute.local(spark, nodeSet.iterator.map(nd =>
+      Row(nd, rank(nd), rank(nd).toDouble / scale.toDouble)).toVector, schema))
+  }
+
+  /** The persisted RDDs under a checkpointed frame's `LogicalRDD`s: read
+    * from the frame itself, not from a diff of the context's persistent
+    * RDDs, which under `Par.both` also holds the other leg's checkpoints
+    * (whose release would then break that leg's reads). */
+  private[operators] def pinnedBy(df: DataFrame): Set[Int] = {
+    val persisted = df.sparkSession.sparkContext.getPersistentRDDs
+    df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.filter(persisted.contains).toSet
   }
 
   /** Per-round materialization for the iterative operators (pageRank
@@ -262,14 +259,6 @@ object Graph {
                 else df.localCheckpoint(true)
       (mat, pinnedBy(mat))
     }
-    /** The persisted RDDs under the checkpointed plan's `LogicalRDD`: read
-      * from the frame itself, not from a diff of the context's persistent
-      * RDDs, which under `Par.both` also holds the other leg's checkpoint
-      * (whose release would then break that leg's reads). */
-    private def pinnedBy(mat: DataFrame): Set[Int] =
-      mat.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }.filter(sc.getPersistentRDDs.contains).toSet
     /** Mark for checkpoint WITHOUT forcing a materialization job: the
       * caller's next action on the frame computes it, persists the
       * blocks, and truncates lineage in that ONE job — the rank loops
@@ -386,16 +375,10 @@ object Graph {
         lit("pageRank: negative edge weight")).isNull)
       .groupBy("src", "dst").agg(sum(col("w")).as("w"))
       .filter(col("w") > 0))
-    // SMALL-GRAPH ROUTE (r13): the count reads the just-pinned blocks
-    // (a bounded control read); at or under the gate the whole
-    // fixpoint replays on the driver, bit-identically — see
-    // [[rankReplay]]. Strict gate guard: 0 forces distributed as
-    // documented, including for an empty edge list.
-    if (maxDriverEdges > 0 && eAgg.count() <= maxDriverEdges) {
-      rankReplay(checkpoint, eAgg, None, prior, iters, dampNum, dampDen,
-        scale, tol, maxDriverEdges, "pageRank")
-        .foreach(df => return df)
-    }
+    // SMALL-GRAPH ROUTE (r13): at or under the gate the whole fixpoint
+    // replays on the driver, bit-identically — see [[rankReplay]]
+    rankReplay(checkpoint, eAgg, None, prior, iters, dampNum, dampDen,
+      scale, tol, maxDriverEdges, "pageRank").foreach(df => return df)
     val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
     // the big, per-iteration-reused side: fixed src layout, lineage cut
     val contribE = checkpoint.pin(eAgg.join(outW, "src")
@@ -648,12 +631,9 @@ object Graph {
       .filter(col("w") > 0))
     // SMALL-GRAPH ROUTE (r13) — the pageRank gate verbatim, with the
     // distinct seed set collected under the same driver-memory bound
-    if (maxDriverEdges > 0 && eAgg.count() <= maxDriverEdges) {
-      rankReplay(checkpoint, eAgg,
-        Some(seeds.select(col(seedCol)).distinct()), prior, iters,
-        dampNum, dampDen, scale, tol, maxDriverEdges, "trustRank")
-        .foreach(df => return df)
-    }
+    rankReplay(checkpoint, eAgg, Some(seeds.select(col(seedCol)).distinct()),
+      prior, iters, dampNum, dampDen, scale, tol, maxDriverEdges, "trustRank")
+      .foreach(df => return df)
     val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
     val contribE = checkpoint.pin(eAgg.join(outW, "src")
       .repartition(col("src")))

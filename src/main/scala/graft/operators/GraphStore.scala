@@ -254,11 +254,14 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     * FileNotFoundException on its next action once a later maintenance
     * commits. Callers holding ranks across epochs must materialize
     * them first — collect / localCheckpoint / write), then serve the result
-    * FROM the committed files and unpersist every checkpoint pin the
+    * FROM the committed files and unpersist the checkpoint pin the
     * computation left behind — the rank operators return their final
     * round's localCheckpoint pinned, and a per-epoch maintenance loop
     * would otherwise accumulate one cached rank table per call (the
     * looped-pin OOM class `RoundCheckpoint.releasePinned` exists for).
+    * The pin is read off the ranks frame ([[Graph.pinnedBy]]), never as
+    * a diff of the context's persistent RDDs: under `Par.both` that diff
+    * holds the other leg's checkpoints too (q173's block-not-found).
     * The served frame is bit-identical: rank_fp round-trips parquet
     * exactly and `rank` is a pure scalar function of it. */
   private def maintainCommit(spark: SparkSession, state: String,
@@ -266,7 +269,6 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
       compute: Option[DataFrame] => DataFrame): DataFrame = {
     val prior = storedState(spark, state)
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val ranks = compute(prior)
     graft.sources.StoreTxn.transact(spark, wh.root) {
       val txn = graft.sources.StoreTxn.current(wh.root)
@@ -274,7 +276,7 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
         .write.parquet(txn.stateVersionDir(state))
       kvs.foreach { case (k, v) => txn.putKv(k, v) }
     }
-    (sc.getPersistentRDDs.keySet.toSet -- before).foreach(i =>
+    Graph.pinnedBy(ranks).foreach(i =>
       sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
     val committed = spark.read.parquet(
       graft.sources.StoreTxn.stateDir(wh.root, state).get)

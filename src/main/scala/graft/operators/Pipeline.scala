@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.TextFunctions
 
 /** The composed end-to-end curation pipeline for training text — the
@@ -35,6 +36,10 @@ import graft.functions.TextFunctions
   * re-readable frame).
   */
 object Pipeline {
+
+  /** The (id, comp) labels [[CurationStore]] keeps as versioned state. */
+  private val LabelsSchema = StructType(Seq(
+    StructField("id", LongType), StructField("comp", LongType)))
 
   /** Shared guard: curation ids must be integral (connected components
     * needs integral labels, and a string id would make min-casts read
@@ -464,7 +469,18 @@ object Pipeline {
     def ingest(batch: DataFrame, idCol: String, textCol: String,
                beforeCommit: CurateDelta => Unit = _ => (),
                withAudit: Boolean = false)
-        : CurateDelta = {
+        : CurateDelta =
+      ingestGated(batch, idCol, textCol, beforeCommit, withAudit,
+        MinhashStore.MaxDriverDocs, Dedup.DefaultMaxDriverEdges)
+
+    /** [[ingest]] with the driver-route gates of its near-dup algebra
+      * ([[MinhashStore.ingestParts]], [[Dedup.connectedComponentsIncremental]]);
+      * 0 forces the Spark routes. */
+    private[graft] def ingestGated(batch: DataFrame, idCol: String,
+                                   textCol: String,
+                                   beforeCommit: CurateDelta => Unit,
+                                   withAudit: Boolean, maxDriverDocs: Long,
+                                   maxDriverEdges: Long): CurateDelta = {
       import spark.implicits._
       Pipeline.requireIntegralId(batch.schema, idCol, "CurationStore")
       // roll back any crashed prior ingest BEFORE the orphan scan below:
@@ -564,23 +580,17 @@ object Pipeline {
       // FORKED thread under the label/delta work and join before
       // commit; the failure path joins too (a rollback must never race
       // a still-running append — the Par.fork contract)
-      val (pairs, mhAppend) = mh.ingestParts(survivors, "id", "text")
+      val (pairs, mhAppend) =
+        mh.ingestParts(survivors, "id", "text", maxDriverDocs)
       val joinMhAppend = graft.core.Par.fork(mhAppend())
       try {
-      val prevLabels =
-        graft.sources.StoreTxn.stateDir(root, labelsState) match {
-          case Some(p) => spark.read.parquet(p)
-          case None    => spark.emptyDataset[(Long, Long)].toDF("id", "comp")
-        }
+      val (prevLabels, oldSurvivors) = readState(survivors.schema("id"))
+      // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
-        "id_a", "id_b") // internally checkpointed — safe to version below
+        "id_a", "id_b", maxDriverEdges = maxDriverEdges)
       val nowDropped = labels.filter(col("comp") < col("id")).select("id")
       val prevDropped = prevLabels.filter(col("comp") < col("id")).select("id")
       val (survDir, survRel) = survivorsLoc
-      val oldSurvivors =
-        if (new java.io.File(survDir).exists())
-          spark.read.parquet(survDir)
-        else spark.emptyDataset[Long].toDF("id")
       // deltas materialized BEFORE the state writes below — their plans
       // read the state paths this ingest is about to replace/extend
       val keptPlan = survivors
@@ -685,6 +695,22 @@ object Pipeline {
       }
       }
       }
+    }
+
+    /** The committed (id, comp) labels and survivor ids, read with known
+      * schemas — no schema-inference job per read. Labels are always
+      * long pairs; survivors carry the batch's id type, `survivorId`
+      * (the field the ingest appends). */
+    private[graft] def readState(survivorId: StructField)
+        : (DataFrame, DataFrame) = {
+      def read(dir: Option[String], schema: StructType) = dir match {
+        case Some(p) => spark.read.schema(schema).parquet(p)
+        case None => spark.createDataFrame(
+          java.util.Collections.emptyList[Row](), schema)
+      }
+      val survDir = Some(survivorsLoc._1).filter(new java.io.File(_).exists())
+      (read(graft.sources.StoreTxn.stateDir(root, labelsState), LabelsSchema),
+        read(survDir, StructType(Seq(survivorId))))
     }
 
     /** Rewrite every fragmented layout of this store into fresh compact

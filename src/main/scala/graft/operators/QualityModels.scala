@@ -411,15 +411,13 @@ object QualityModels {
     w.zip(shifts).map { case (wj, s) => wj << s }.toArray
   }
 
-  /** localCheckpoint with its new RDD ids tracked, so training can
+  /** localCheckpoint with its RDD ids tracked, so training can
     * unpersist its blocks deterministically instead of leaking one
     * materialized stream per call until ContextCleaner GC (see
     * [[Dedup.connectedComponents]], where the idiom comes from). */
   private def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val mat = df.localCheckpoint(true)
-    (mat, sc.getPersistentRDDs.keySet.toSet -- before)
+    (mat, Graph.pinnedBy(mat))
   }
 
   private def release(spark: org.apache.spark.sql.SparkSession,
@@ -487,27 +485,27 @@ object QualityModels {
     val (fs, ckptIds) = trackedCheckpoint(
       featStream(train, idCol, textCol, numFeatures).join(labels, Seq("id")))
     try {
+    // SMALL-TRAINSET ROUTE (r12): each distributed iteration costs a
+    // broadcast-join margin pass plus an update collect over the staged
+    // occurrence stream. When the stream is at most `MaxDriverOcc` rows
+    // (~24 MB collected at the default), collect (id, f, y) once and
+    // replay the identical iterations in memory — same margin sums, same
+    // y·m ≤ 0 update filter, same all-zero-update early stop. Exact
+    // integer arithmetic is order-independent, so the weights are
+    // bit-identical (spec-pinned in QualityModelsSpec).
+    val small = graft.core.DriverRoute.collect(
+      fs.select(col("id"), col("__f"), col("__y")), maxDriverOcc)
     // occurrence total bounds every intermediate: |w_f| ≤ iters·occ and
     // |margin| ≤ occ·max|w| — demand the same 4× headroom as the dense
     // trainer (a count over the materialized blocks, not a re-scan)
-    val occ = fs.count()
+    val occ = small.fold(fs.count())(_.length.toLong)
     require(occ > 0, "training set has no token features")
     require(BigInt(occ) * occ * iters < BigInt(Long.MaxValue / 4),
       s"training set too large for exact integer training ($occ feature " +
         "occurrences): train on a sample")
     val w = Array.fill(numFeatures)(0L)
-    // SMALL-TRAINSET ROUTE (r12): each distributed iteration costs a
-    // broadcast-join margin pass plus an update collect over the staged
-    // occurrence stream. When the stream is at most `MaxDriverOcc` rows
-    // (the count above reads the staged blocks; ~24 MB collected at the
-    // default), collect (id, f, y) once and replay the identical
-    // iterations in memory — same margin sums, same y·m ≤ 0 update
-    // filter, same all-zero-update early stop. Exact integer arithmetic
-    // is order-independent, so the weights are bit-identical
-    // (spec-pinned in QualityModelsSpec).
-    if (maxDriverOcc > 0 && occ <= maxDriverOcc) {
-      val rows = fs.select(col("id"), col("__f"), col("__y")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    small.foreach { collected =>
+      val rows = collected.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       var it = 0
       while (it < iters) {
         val m = new scala.collection.mutable.LongMap[Long]()

@@ -280,9 +280,9 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
 
   /** Near-dup pairs of `batch` against itself AND the store, then the
     * batch's signatures are appended to the store. The returned frame
-    * is materialized (localCheckpoint) BEFORE the append — it must be:
-    * a lazy plan would re-read the store post-append and pair the
-    * batch against its own signatures. */
+    * is materialized (a local relation or a localCheckpoint) BEFORE the
+    * append — it must be: a lazy plan would re-read the store post-append
+    * and pair the batch against its own signatures. */
   protected def ingestBody(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     val (pairs, append) = ingestParts(batch, idCol, textCol)
@@ -291,13 +291,19 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
   }
 
   /** [[ingestBody]] split into (materialized pairs, deferred appends):
-    * the pairs frame is localCheckpointed against the PRE-append store
-    * state, after which the two table appends touch nothing the caller
-    * reads — an embedding caller inside the same transaction
+    * the pairs are computed against the PRE-append store state, after
+    * which the two table appends touch nothing the caller reads — an
+    * embedding caller inside the same transaction
     * ([[Pipeline.CurationStore.ingest]]) can run them on a forked
-    * thread under its own downstream work and join before commit. */
+    * thread under its own downstream work and join before commit.
+    *
+    * A batch of at most `maxDriverDocs` documents takes the driver
+    * route ([[driverPairs]]) unless one of its store reads exceeds the
+    * bound; everything else takes the Spark route ([[sparkPairs]]).
+    * Both return the same rows (property-pinned in SmallDeltaSpec). */
   private[graft] def ingestParts(batch: DataFrame, idCol: String,
-                                 textCol: String)
+                                 textCol: String,
+                                 maxDriverDocs: Long = MinhashStore.MaxDriverDocs)
       : (DataFrame, () => Unit) = {
     // signature-space identity: stored (band, bucket) rows are only
     // comparable to batches hashed under the same geometry/seed and
@@ -308,15 +314,110 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     // frame — the expensive tokenize→shingle→hash pass runs a single
     // time (the old per-product checkpoints each re-ran it); banding is
     // a cheap struct explode over the staged minima and the sets a
-    // column select, so every downstream consumer (candidate
-    // generation, newness filter, verification, both store appends)
-    // reads the one checkpoint. Batch-sized, ids+hashes.
+    // column select, so every downstream consumer (either pair route,
+    // both store appends) reads the one checkpoint. The mark is lazy:
+    // the driver route's bounded collect is the job that fills it (it
+    // computes every partition whole, whatever it returns), and on the
+    // Spark route the candidate checkpoint is. Batch-sized, ids+hashes.
     val combined = Dedup.minhashCombined(batch, idCol, textCol,
       cfg.shingleN, cfg.bands, cfg.rowsPerBand, cfg.seed)
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val banded = Dedup.bandedFromCombined(combined, cfg.bands,
       cfg.rowsPerBand)
     val sets = combined.select(col("id"), col("hset"))
+    val pairs = graft.core.DriverRoute.collect(combined, maxDriverDocs)
+      .flatMap(driverPairs(batch.sparkSession, _, maxDriverDocs))
+      .getOrElse(sparkPairs(banded, sets))
+    (pairs, () => {
+      graft.core.Par.both(
+        wh.appendBucketed(sigTable, banded, Seq("band", "bucket"),
+          cfg.nStoreBuckets),
+        wh.appendBucketed(setTable, sets, Seq("id"), cfg.nStoreBuckets))
+      ()
+    })
+  }
+
+  /** The pairs of [[sparkPairs]] computed in plain Scala from the
+    * collected (id, mins, hset) batch rows and two bounded store reads:
+    * the store rows of the batch's (band, bucket) keys (at most
+    * `maxDocs` × bands) and the sets of the old candidate ids (at most
+    * `maxDocs`). None — take the Spark route — when either read is over
+    * its bound. Banding, the bucket cap, the (i < j) pairs of each sorted
+    * bucket list (duplicates kept, like `sort_array(collect_list)`), the
+    * newness filter and the Jaccard over distinct hashes all mirror the
+    * Spark plan; ids are unique across batches (the store contract), so
+    * a batch id's set comes from the batch alone. */
+  private def driverPairs(spark: org.apache.spark.sql.SparkSession,
+                          batch: Array[org.apache.spark.sql.Row],
+                          maxDocs: Long): Option[DataFrame] = {
+    import scala.collection.mutable
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    def id(r: Row): Long = r.getAs[Number](0).longValue
+    val docs = batch.filter(!_.isNullAt(0))
+    val newIds = docs.iterator.map(id).toSet
+    val members = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Long]]
+    docs.foreach { d =>
+      val mins = d.getSeq[Long](1)
+      (0 until cfg.bands).foreach { b =>
+        val bucket = (b * cfg.rowsPerBand until (b + 1) * cfg.rowsPerBand)
+          .map(mins(_).toString).mkString("_")
+        members.getOrElseUpdate((b, bucket), mutable.ArrayBuffer.empty) += id(d)
+      }
+    }
+    if (members.nonEmpty && wh.exists(sigTable)) {
+      // `bucket IN (…)` pushes down to the scan; the band half of the key
+      // is matched here
+      val buckets = members.keysIterator.map(_._2).toSet.toSeq
+      graft.core.DriverRoute.collect(wh.readBucketed(sigTable)
+          .filter(col("bucket").isin(buckets: _*))
+          .select("id", "band", "bucket"), maxDocs * cfg.bands)
+        .getOrElse(return None)
+        .foreach(t => if (!t.isNullAt(0) && !t.isNullAt(1))
+          members.get((t.getInt(1), t.getString(2))).foreach(_ += id(t)))
+    }
+    val candidates = mutable.LinkedHashSet.empty[(Long, Long)]
+    members.valuesIterator
+      .filter(m => m.size >= 2 && m.size <= cfg.maxBucket)
+      .foreach { m =>
+        val ids = m.sorted
+        for (i <- ids.indices; j <- i + 1 until ids.size
+             if newIds(ids(i)) || newIds(ids(j)))
+          candidates += ((ids(i), ids(j)))
+      }
+    val sets = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Seq[Long]]]
+    def addSet(id: Long, hset: Seq[Long]): Unit =
+      sets.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += hset
+    docs.foreach(d => addSet(id(d), d.getSeq[Long](2)))
+    val oldIds = candidates.iterator.flatMap(p => Iterator(p._1, p._2))
+      .filterNot(newIds).toSet
+    if (oldIds.nonEmpty && wh.exists(setTable)) {
+      val store = wh.readBucketed(setTable)
+      // literals of the column's own type keep the bucket pruning
+      val idType = store.schema("id").dataType
+      graft.core.DriverRoute.collect(store
+          .filter(col("id").isin(oldIds.toSeq.map(lit(_).cast(idType)): _*))
+          .select("id", "hset"), maxDocs)
+        .getOrElse(return None)
+        .foreach(r => if (!r.isNullAt(0)) addSet(id(r), r.getSeq[Long](1)))
+    }
+    val rows = for {
+      (a, b) <- candidates.toSeq
+      sa <- sets.getOrElse(a, Nil)
+      sb <- sets.getOrElse(b, Nil)
+      jac = MinhashStore.jaccard(sa, sb)
+      if jac >= cfg.threshold
+    } yield Row(a, b, jac)
+    Some(graft.core.DriverRoute.local(spark, rows, StructType(Seq(
+      StructField("id_a", LongType, nullable = false),
+      StructField("id_b", LongType, nullable = false),
+      StructField("jaccard", DoubleType)))))
+  }
+
+  /** The distributed pair route: store rows of the touched buckets,
+    * bucket candidates, newness filter and verification as Spark plans,
+    * localCheckpointed against the pre-append store. */
+  private def sparkPairs(banded: DataFrame, sets: DataFrame): DataFrame = {
     // store rows for the buckets this batch touches. No broadcast HINT
     // on the batch's key set: a hard hint would OOM on a genuinely large
     // ingest; AQE converts the semi join to broadcast at runtime when
@@ -369,7 +470,7 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     val tagged = allSets
       .join(candIds, Seq("id"), "left_semi")
       .select(col("id").as("__tid"), col("hset").as("__sh"))
-    val pairs = candidates
+    candidates
       .join(tagged, col("id_a") === col("__tid"))
       .withColumnRenamed("__sh", "sh_a").drop("__tid")
       .join(tagged, col("id_b") === col("__tid"))
@@ -378,13 +479,22 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
       .filter(col("jaccard") >= cfg.threshold)
       .select("id_a", "id_b", "jaccard")
       .localCheckpoint(true) // BEFORE the append — see scaladoc
-    (pairs, () => {
-      graft.core.Par.both(
-        wh.appendBucketed(sigTable, banded, Seq("band", "bucket"),
-          cfg.nStoreBuckets),
-        wh.appendBucketed(setTable, sets, Seq("id"), cfg.nStoreBuckets))
-      ()
-    })
+  }
+}
+
+object MinhashStore {
+  /** [[MinhashStore.ingestParts]]' driver-route gate in batch documents:
+    * the collected (id, mins, hset) rows are ~KB each, so the default
+    * keeps the route's collects in the tens of MB. */
+  private[graft] val MaxDriverDocs: Long = 1L << 14
+
+  /** Jaccard of two distinct-hash sets, as [[Dedup.exactJaccardFromSets]]
+    * computes it: |A ∩ B| / |A ∪ B|, 0.0 for an empty union. */
+  private[operators] def jaccard(a: Seq[Long], b: Seq[Long]): Double = {
+    val (x, y) = (a.toSet, b.toSet)
+    val inter = x.count(y)
+    val union = x.size + y.size - inter
+    if (union == 0) 0.0 else inter.toDouble / union
   }
 }
 

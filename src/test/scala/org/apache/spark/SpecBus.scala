@@ -5,4 +5,7 @@ package org.apache.spark
   * earlier or a still-queued job is miscounted. */
 object SpecBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+  /** Whether a stage writes a shuffle. */
+  def shuffleMap(s: org.apache.spark.scheduler.StageInfo): Boolean =
+    s.shuffleDepId.isDefined
 }
