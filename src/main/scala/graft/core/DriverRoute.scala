@@ -1,6 +1,7 @@
 package graft.core
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -23,11 +24,14 @@ private[graft] object DriverRoute {
 
   /** `df`'s rows when `maxRows > 0` and it has at most `maxRows` rows,
     * else None. One Spark job (none for a local relation) over every
-    * partition at once; each partition ships at most `maxRows + 1` rows,
-    * and the driver keeps them only while the running total stays under
-    * the bound — at most `maxRows` rows plus the one partition result in
-    * hand. The job runs as a SQL execution of `df`'s own plan, so AQE
-    * stages and listeners see it like any action. */
+    * partition at once; each task ships at most `maxRows + 1` rows, and
+    * the driver keeps them only while the running total stays within the
+    * bound. The first result that takes the total over it cancels the
+    * job, so an input over the bound ships only the results of the tasks
+    * already running — not every partition's — before the caller falls
+    * back, and never counts more than those against
+    * `spark.driver.maxResultSize`. The job runs as a SQL execution of
+    * `df`'s own plan, so AQE stages and listeners see it like any action. */
   def collect(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
     if (maxRows <= 0) return None
     val cap = math.min(maxRows, Int.MaxValue - 16L).toInt
@@ -38,15 +42,22 @@ private[graft] object DriverRoute {
     }
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
     SQLExecution.withNewExecutionId(qe, Some("DriverRoute.collect")) {
+      val sc = df.sparkSession.sparkContext
       val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      var over = false
-      df.sparkSession.sparkContext.runJob(qe.executedPlan.execute(),
-        (it: Iterator[InternalRow]) => it.take(cap + 1).map(_.copy()).toArray,
-        (_: Int, part: Array[InternalRow]) =>
-          if (!over) {
-            if (kept.length + part.length > cap) { over = true; kept.clear() }
-            else kept ++= part
-          })
+      @volatile var over = false
+      // the handler runs on the scheduler's event loop, one result at a
+      // time; the first result past the bound cancels the job by its tag
+      val tag = s"graft-driver-route-${java.util.UUID.randomUUID}"
+      sc.addJobTag(tag)
+      try sc.runJob(qe.executedPlan.execute(),
+          (it: Iterator[InternalRow]) => it.take(cap + 1).map(_.copy()).toArray,
+          (_: Int, part: Array[InternalRow]) =>
+            if (!over) {
+              if (kept.length + part.length <= cap) kept ++= part
+              else { over = true; kept.clear(); sc.cancelJobsWithTag(tag) }
+            })
+      catch { case _: SparkException if over => }
+      finally sc.removeJobTag(tag)
       if (over) None else Some(kept.iterator.map(toRow).toArray)
     }
   }

@@ -316,9 +316,9 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     // a cheap struct explode over the staged minima and the sets a
     // column select, so every downstream consumer (either pair route,
     // both store appends) reads the one checkpoint. The mark is lazy:
-    // the driver route's bounded collect is the job that fills it (it
-    // computes every partition whole, whatever it returns), and on the
-    // Spark route the candidate checkpoint is. Batch-sized, ids+hashes.
+    // the driver route's bounded collect is the job that fills it; over
+    // the bound that job is cancelled, and the Spark route's candidate
+    // checkpoint fills the partitions it left. Batch-sized, ids+hashes.
     val combined = Dedup.minhashCombined(batch, idCol, textCol,
       cfg.shingleN, cfg.bands, cfg.rowsPerBand, cfg.seed)
       .localCheckpoint(false)
@@ -366,11 +366,16 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
       }
     }
     if (members.nonEmpty && wh.exists(sigTable)) {
-      // `bucket IN (…)` pushes down to the scan; the band half of the key
-      // is matched here
-      val buckets = members.keysIterator.map(_._2).toSet.toSeq
+      // a full scan of the signature table under a key-set filter (the
+      // table's (band, bucket) bucketing cannot prune on a key set). A
+      // UDF over the set, not `bucket IN (…)`: a literal list of
+      // batch × bands strings made the route slower than the Spark
+      // route from ~4,000 documents (ScaleProbe `mhgate`: 4.7 vs 3.7 s;
+      // 17.8 vs 5.0 s at 16,000); the UDF plans as one expression
+      val keys = members.keySet.toSet
+      val touched = udf((band: Int, bucket: String) => keys((band, bucket)))
       graft.core.DriverRoute.collect(wh.readBucketed(sigTable)
-          .filter(col("bucket").isin(buckets: _*))
+          .filter(touched(col("band"), col("bucket")))
           .select("id", "band", "bucket"), maxDocs * cfg.bands)
         .getOrElse(return None)
         .foreach(t => if (!t.isNullAt(0) && !t.isNullAt(1))
@@ -483,10 +488,14 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
 }
 
 object MinhashStore {
-  /** [[MinhashStore.ingestParts]]' driver-route gate in batch documents:
-    * the collected (id, mins, hset) rows are ~KB each, so the default
-    * keeps the route's collects in the tens of MB. */
-  private[graft] val MaxDriverDocs: Long = 1L << 14
+  /** [[MinhashStore.ingestParts]]' driver-route gate in batch documents,
+    * set from where the driver route stops winning (ScaleProbe `mhgate`,
+    * 4 vCPU, 5%-near-dup corpus, median of 3 per route): it is faster up
+    * to 8,000 documents over a 400k-document store (4.4 vs 4.9 s) and
+    * slower from 12,000 (5.4 vs 5.0 s); over a 100k-document store the
+    * crossover is near 24,000. The collected (id, mins, hset) rows are
+    * ~1 KB each, so the route's collects stay near 10 MB. */
+  private[graft] val MaxDriverDocs: Long = 1L << 13
 
   /** Jaccard of two distinct-hash sets, as [[Dedup.exactJaccardFromSets]]
     * computes it: |A ∩ B| / |A ∪ B|, 0.0 for an empty union. */

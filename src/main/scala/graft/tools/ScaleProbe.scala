@@ -255,6 +255,47 @@ object ScaleProbe {
     }
   }
 
+  /** Where [[MinhashStore.ingestParts]]' driver route stops winning over
+    * its Spark route: build a store from docs `[0, storeDocs)`, then time
+    * the pairs of the next `b` docs for each batch size on both routes —
+    * driver (a gate far above any size here) and Spark (gate 0) —
+    * alternating which goes first, `reps` times each. A batch is a hash
+    * sample of the docs past the store, so it carries the corpus' share
+    * of near-duplicates (`gen` puts them at the top ids). The appends
+    * never run, so every timing sees the same store; the pair counts
+    * must agree. */
+  private def mhGateProbe(spark: SparkSession, docsPath: String,
+                          whRoot: String, storeDocs: Long,
+                          sizes: Seq[Long], reps: Int = 3): Unit = {
+    val docs = spark.read.parquet(docsPath)
+    val rest = docs.count() - storeDocs
+    val mh = new MinhashStore(
+      new graft.sources.Warehouse(spark, s"$whRoot/mhgate_${System.nanoTime()}"),
+      "probe", MinhashConfig(3, 8, 2, 0.5, 7L))
+    timedCount(s"minhash_store_build($storeDocs)") {
+      mh.ingest(docs.filter(col("doc_id") < storeDocs), "doc_id", "text")
+    }
+    val routes = Seq("driver" -> (1L << 24), "spark" -> 0L)
+    sizes.foreach { b =>
+      val batch = docs.filter(col("doc_id") >= storeDocs &&
+        pmod(xxhash64(col("doc_id")), lit(rest)) < b)
+      val walls = routes.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+      val counts = scala.collection.mutable.Set.empty[Long]
+      (0 until reps).foreach { r =>
+        (if (r % 2 == 0) routes else routes.reverse).foreach { case (route, gate) =>
+          val t0 = System.nanoTime()
+          counts += mh.ingestParts(batch, "doc_id", "text", gate)._1.count()
+          walls(route) += (System.nanoTime() - t0) / 1e9
+        }
+      }
+      def median(ws: Seq[Double]) = ws.sorted.apply(ws.size / 2)
+      println(f"[probe] mhgate batch=$b%6d driver ${median(walls("driver").toSeq)}%6.2f s" +
+        f"  spark ${median(walls("spark").toSeq)}%6.2f s  pairs=${counts.mkString("/")}" +
+        s"  (driver ${walls("driver").map(w => f"$w%.2f").mkString(" ")};" +
+        s" spark ${walls("spark").map(w => f"$w%.2f").mkString(" ")})")
+    }
+  }
+
   /** Containment dedup at 1M: plant token-prefix subset docs (each the
     * first half of a base doc's whitespace tokens, so its shingle set
     * is ≈ a strict subset of the base's and containment-in-base ≈ 1.0 —
@@ -2270,6 +2311,9 @@ object ScaleProbe {
         ccProbe(spark, docsPath)
       case "incr" :: docsPath :: whRoot :: Nil =>
         incrProbe(spark, docsPath, whRoot)
+      case "mhgate" :: docsPath :: whRoot :: storeDocs :: sizes =>
+        mhGateProbe(spark, docsPath, whRoot, storeDocs.toLong,
+          if (sizes.isEmpty) Seq(1000L, 4000L, 16000L) else sizes.map(_.toLong))
       case "stream" :: root :: nRows :: Nil =>
         streamProbe(spark, root, nRows.toLong)
       case "embincr" :: whRoot :: nVecs :: Nil =>
@@ -2366,6 +2410,7 @@ object ScaleProbe {
         println("usage: gen <docs> <n> <dupRate> [<emb> <nVecs>] | " +
           "pairs <docs> <dupRate> | ivf <emb> <whRoot> | cc <docs> | " +
           "incr <docs> <whRoot> | stream <root> <nRows> | " +
+          "mhgate <docs> <whRoot> <storeDocs> [sizes…] | " +
           "embincr <whRoot> <nVecs> | seq <docs> | spans <docs> | " +
           "vocab <docs> | vocabdiag <docs> <step> | bpe <docs> [k] | " +
           "bm25 <docs> <whRoot> | gram <docs> <whRoot> | ccgiant <n> " +

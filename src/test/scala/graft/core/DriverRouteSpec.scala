@@ -4,6 +4,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.{SpecBus, Success}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import graft.{Jobs, SparkSpec}
 
 class DriverRouteSpec extends SparkSpec {
@@ -31,6 +33,30 @@ class DriverRouteSpec extends SparkSpec {
     val (rows, ran) = Jobs.during(spark)(DriverRoute.collect(local, 2))
     assert(ran.jobs.isEmpty && rows.map(_.toSeq) === Some(Seq(Row(1L, "a"), Row(2L, "b"))))
     assert(DriverRoute.collect(local, 1).isEmpty)
+  }
+
+  test("an input over the bound ships about one wave of tasks, not every partition") {
+    // 64 partitions of 200 rows, each over the bound on its own: the first
+    // result cancels the job, so on local[4] the tasks that finish are the
+    // first wave (plus any that complete before the cancel lands) — not
+    // all 64, each shipping maxRows + 1 rows
+    val slow = spark.range(0, 64 * 200, 1, 64).toDF("id").as[Long]
+      .mapPartitions { it => Thread.sleep(100); it }.toDF("id")
+    val sc = spark.sparkContext
+    val shipped = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.reason == Success) shipped.incrementAndGet()
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(DriverRoute.collect(slow, 100).isEmpty)
+      SpecBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(shipped.get <= 8, s"${shipped.get} of 64 tasks shipped their rows")
+    // the cancelled job leaves the context usable
+    assert(ids(DriverRoute.collect(slow.limit(3), 3)).map(_.size) === Some(3))
   }
 
   test("local is a local relation of the given schema") {
