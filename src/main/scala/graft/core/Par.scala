@@ -10,30 +10,7 @@ package graft.core
   * worker before propagating (a transaction rollback must never race a
   * still-running append). */
 private[graft] object Par {
-  /** Start `a` on a dedicated worker thread NOW; the returned thunk
-    * joins and yields the result (rethrowing the worker's failure).
-    * Callers overlapping a forked store write with further driver work
-    * MUST join before any transaction rollback/commit can run — wrap
-    * the in-between work so the failure path joins too (the
-    * [[both]] discipline, spelled out because the join is no longer
-    * structural). Joining more than once is safe. */
-  def fork[A](a: => A): () => A = {
-    @volatile var ra: Either[Throwable, A] = null
-    val t = new Thread(() =>
-      ra = try Right(a) catch { case e: Throwable => Left(e) })
-    t.setDaemon(true)
-    t.start()
-    () => {
-      t.join()
-      ra match {
-        case Right(v) => v
-        case Left(e)  => throw e
-        case null => throw new IllegalStateException(
-          "Par.fork worker finished without publishing a result")
-      }
-    }
-  }
-
+  /** `a` on this thread, `b` on the worker; both results once both are done. */
   def both[A, B](a: => A, b: => B): (A, B) = {
     @volatile var rb: Either[Throwable, B] = null
     val t = new Thread(() =>

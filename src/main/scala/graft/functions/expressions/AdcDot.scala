@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * columns) built an expression tree too large for whole-stage codegen
   * at m=16 — the serve fell back to interpreted evaluation and measured
   * ~10× SLOWER than the full-precision dot it was supposed to beat
-  * (ScaleProbe `quant`). This kernel is one generated call per pair.
+  * (BENCH_NOTES "Round 8: compressed-vector serving probe"). This
+  * kernel is one generated call per pair.
   *
   * Fold order matches the composed chain bit-for-bit: 0.0 init,
   * ascending subspace (0.0 + t0 ≡ t0 exactly, so the oracle's

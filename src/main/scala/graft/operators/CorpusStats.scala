@@ -70,8 +70,8 @@ object CorpusStats {
     * (per-partition top-V heaps merged, never a global sort).
     *
     * Probed at 10M docs / 1.2B occurrences / 90M-token vocabulary
-    * (tools/ScaleProbe vocab). The earlier (tok, id) pre-aggregate
-    * form ran a 1.2B-distinct-key hash aggregate whose map-side
+    * (BENCH_NOTES "Round 6: corpus-stats at 10M docs"). The earlier
+    * (tok, id) pre-aggregate form ran a 1.2B-distinct-key hash aggregate whose map-side
     * partial combine recovers nothing on a near-unique key: two full
     * exchanges of the exploded stream and 37M-key per-task hash
     * states, which exhausted GC headroom under local[32]'s 0.25 GB/

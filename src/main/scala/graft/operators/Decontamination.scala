@@ -278,13 +278,13 @@ object Decontamination {
     protected def appendBody(docs: DataFrame, idCol: String,
                              textCol: String): Unit = {
       wh.paramsSpecValidated(gramTable, storeParams)
-      wh.appendPartitionedBucketed(gramTable,
+      wh.appendBucketed(gramTable,
         docs.select(col(idCol).as("id"), tokens(col(textCol)).as("__t"))
           .select(col("id"),
             explode(array_distinct(ngrams(col("__t"), n))).as("__g"))
           .select(col("id"), xxhash64(col("__g")).as("ghash"))
           .withColumn("gpfx", gpfx(col("ghash"))),
-        "gpfx", Seq("ghash"), nStoreBuckets)
+        Seq("ghash"), nStoreBuckets, partitionCol = Some("gpfx"))
     }
 
     /** Ids of indexed docs sharing ≥1 n-gram with `evalTexts` — the
@@ -326,11 +326,11 @@ object Decontamination {
         val cur = gramTable
         val newTable = s"${gramBase}__c${txn.epoch}"
         wh.paramsSpecValidated(newTable, storeParams)
-        // appendPartitionedBucketed aligns on (partition dir, bucket id)
-        // itself — a caller-side pre-repartition would add a second
-        // exchange per compaction
-        wh.appendPartitionedBucketed(newTable, wh.readBucketed(cur),
-          "gpfx", Seq("ghash"), nStoreBuckets)
+        // appendBucketed aligns on (partition dir, bucket id) itself —
+        // a caller-side pre-repartition would add a second exchange per
+        // compaction
+        wh.appendBucketed(newTable, wh.readBucketed(cur),
+          Seq("ghash"), nStoreBuckets, partitionCol = Some("gpfx"))
         txn.putKv(s"active:$name:gram", newTable)
       }
       // post-commit: drop every generation the alias no longer names

@@ -272,7 +272,8 @@ object Dedup {
     * volume is data-dependent — for a corpus where everything matches
     * everything the exact RESULT is quadratic and so is any exact
     * algorithm; on realistic near-dup profiles the prefixes bound the
-    * blow-up (measured in ScaleProbe `pairs`-style accounting). */
+    * blow-up (measured: BENCH_NOTES "Round 7: exact prefix-filter
+    * Jaccard vs capped vs LSH"). */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
     val sh = df

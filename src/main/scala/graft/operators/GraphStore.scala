@@ -293,8 +293,9 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     * store.pageRankMaintain(iters)` — on an unchanged store, k
     * maintained + j maintained iterations equal one k+j cold run
     * (spec-pinned); after appends, the stored prior reaches a given
-    * `tol` in fewer iterations than the uniform start (probe-measured:
-    * 0.23× the L1 distance at equal iterations at 10M nodes). The
+    * `tol` in fewer iterations than the uniform start (0.23× the L1
+    * distance at equal iterations at 10M nodes: BENCH_NOTES "Edge store
+    * at 10M nodes / 100M edges"). The
     * returned frame reads the COMMITTED parquet (nothing stays pinned
     * in executor storage across epochs). */
   def pageRankMaintain(spark: SparkSession, iters: Int,

@@ -576,14 +576,13 @@ object Pipeline {
       // near-dup pairs of the batch survivors vs everything curated —
       // the embedded store's ingest JOINS this transaction (same root).
       // Its two signature-table appends depend only on the staged batch
-      // frames and nothing below reads those tables, so they run on a
-      // FORKED thread under the label/delta work and join before
-      // commit; the failure path joins too (a rollback must never race
-      // a still-running append — the Par.fork contract)
+      // frames and nothing below reads those tables, so they run on
+      // Par.both's worker under the label/delta/state work of this
+      // thread; both legs join before the commit marker, and before a
+      // rollback when either leg throws
       val (pairs, mhAppend) =
         mh.ingestParts(survivors, "id", "text", maxDriverDocs)
-      val joinMhAppend = graft.core.Par.fork(mhAppend())
-      try {
+      val (delta, _) = graft.core.Par.both({
       val (prevLabels, oldSurvivors) = readState(survivors.schema("id"))
       // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
@@ -648,8 +647,8 @@ object Pipeline {
             .unionByName(nearDup))
         }
       // the three delta materializations read only pre-write state and
-      // staged frames — independent of each other (and of the forked
-      // signature appends), so they overlap (guide: fill idle capacity
+      // staged frames — independent of each other (and of the signature
+      // appends on the other leg), so they overlap (guide: fill idle capacity
       // with concurrent independent jobs)
       val ((kept, retracted), audit) = graft.core.Par.both(
         graft.core.Par.both(keptPlan.localCheckpoint(true),
@@ -681,18 +680,12 @@ object Pipeline {
           survivors.select("id").write.mode("append").parquet(survDir),
           wh.appendBucketed(exactTable, freshOut,
             Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets)))
-      // the forked signature appends must be durably done before the
-      // marker publishes (commit is all-or-nothing per table set)
-      joinMhAppend()
-      txn.putKv(maxIdKey, math.max(bounds.getLong(1), prevMax).toString)
       CurateDelta(kept, retracted, audit)
-      } catch { case e: Throwable =>
-        // a rollback must never race the forked appends: join (again —
-        // idempotent) before the transaction's failure path runs
-        try joinMhAppend()
-        catch { case w: Throwable => if (w ne e) e.addSuppressed(w) }
-        throw e
-      }
+      }, mhAppend())
+      // the signature appends are durably done here, before the marker
+      // publishes (commit is all-or-nothing per table set)
+      txn.putKv(maxIdKey, math.max(bounds.getLong(1), prevMax).toString)
+      delta
       }
       }
     }

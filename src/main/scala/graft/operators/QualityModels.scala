@@ -347,10 +347,10 @@ object QualityModels {
 
   /** [[trainPerceptron]] with per-feature POWER-OF-TWO up-scaling — the
     * conditioning fix for signals that live on small-magnitude features
-    * (ScaleProbe `clf` arm A: a ±10-token suffix delta on features whose
-    * shared per-doc base runs to ~10³; the batch update then swings
-    * along the large uninformative directions and the iterates
-    * oscillate). Each feature is shifted UP so its training-set max
+    * (BENCH_NOTES "Classifier quality story", arm A: a ±10-token
+    * suffix delta on features whose shared per-doc base runs to ~10³;
+    * the batch update then swings along the large uninformative
+    * directions and the iterates oscillate). Each feature is shifted UP so its training-set max
     * fills the feature cap — never down (a down-shift would quantize
     * away exactly the small deltas that carry the signal) — training
     * runs on the scaled integers, and the shifts fold back into the
@@ -567,8 +567,8 @@ object QualityModels {
     * Exists because a perceptron's raw 0-boundary is well-calibrated
     * only when the batch updates can balance the feature magnitudes;
     * on profile-shaped quality signals it can rank perfectly (AUC 1.0,
-    * ScaleProbe `clf` arm B) while every margin sits on ONE side of
-    * zero — the cure is the same as for any scorer: calibrate the gate
+    * BENCH_NOTES "Classifier quality story", arm B) while every margin
+    * sits on ONE side of zero — the cure is the same as for any scorer: calibrate the gate
     * on labels, then pass τ as [[Pipeline.CurateConfig]]'s minQuality
     * over the [[perceptronQuality]] score. */
   def calibrateThreshold(scored: DataFrame, scoreCol: String,

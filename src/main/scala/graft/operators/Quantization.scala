@@ -96,9 +96,10 @@ object Quantization {
     // integer-valued double sums stay exact below 2^53, so the scores
     // are bit-identical to pure integer arithmetic) — the pair loop
     // then runs the same native dot kernel as the float32 path with
-    // norms hoisted to once per row, not once per pair. The first
-    // probe measured the per-pair zip_with fold + per-pair norms at
-    // 12× the brute wall; this form matches it.
+    // norms hoisted to once per row, not once per pair. The per-pair
+    // zip_with fold + per-pair norms measured 12× the brute wall; this
+    // form matches it (BENCH_NOTES "Round 8: compressed-vector serving
+    // probe").
     val qc = codes
       .select(col("id").as("nbr_id"),
         col("qvec").cast("array<double>").as("__cq"))
@@ -122,7 +123,8 @@ object Quantization {
   /** [[int8TopKEncoded]] with the codes computed on the fly — the
     * convenience form for corpora not yet quantized. NOTE: this form
     * reads the full-precision corpus to quantize it, so it has NO IO
-    * advantage over brute force (the probe measured it at parity);
+    * advantage over brute force (measured at parity: BENCH_NOTES
+    * "Round 8: compressed-vector serving probe");
     * the 4× scan cut needs persisted codes and the encoded form. */
   def int8TopK(corpus: DataFrame, queries: DataFrame,
                idCol: String, vecCol: String, k: Int,

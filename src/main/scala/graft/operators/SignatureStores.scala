@@ -152,7 +152,7 @@ trait AppendStore {
   * [[Retrieval.Bm25Index.compact]] rewrites a non-bucketed one-row
   * stats sidecar alongside its bucketed tables, and
   * [[Decontamination.GramIndex.compact]] rewrites a gpfx-PARTITIONED
-  * bucketed layout via `appendPartitionedBucketed` with a compound
+  * bucketed layout via `appendBucketed`'s `partitionCol` with a compound
   * pre-partitioning — parameterizing this helper for both would cost
   * more surface than the two hand-written copies, each of which has
   * its own crash-mid-compact spec. A change to the alias/sweep
@@ -961,18 +961,6 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
     StoreCompaction.compact(spark, wh, s"ContainmentStore '$name'",
       Seq(postSpec.copy(params = postParams), sizeSpec), cfg.nStoreBuckets)
 
-  // phase timing for the ingest, printed only under GRAFT_TIMING=1 —
-  // the profiling hook the fusion work measures against
-  private def tphase[A](label: String)(body: => A): A =
-    if (!sys.env.contains("GRAFT_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val a = body
-      println(f"[timing] containment/$label%-18s ${
-        (System.nanoTime() - t0) / 1e9}%7.3f s")
-      a
-    }
-
   protected def ingestBody(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     // shingle-space identity: stored postings are only comparable to
@@ -981,9 +969,8 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
     wh.paramsSpecValidated(postTable, postParams)
     // batch staging materialized once — feeds candidate generation,
     // the size branch, and both appends. Batch-sized (ids + shingles).
-    val sh = tphase("shingleStage")(
-      Dedup.shingleStage(batch, idCol, textCol, cfg.shingleN)
-        .localCheckpoint(true))
+    val sh = Dedup.shingleStage(batch, idCol, textCol, cfg.shingleN)
+      .localCheckpoint(true)
     // an empty batch pairs with nothing and appends nothing — return
     // the empty result without paying the candidate pipeline, the
     // transaction's append jobs, or (in a maintenance stream) the
@@ -1089,8 +1076,7 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
           .join(szB.withColumnsRenamed(
             Map("id" -> "id_b", "sz" -> "sz_b")), "id_b")
       } else {
-        val candidatesMat =
-          tphase("candidates")(candidates.localCheckpoint(true))
+        val candidatesMat = candidates.localCheckpoint(true)
         val candIds = candidatesMat.select(col("id_a").as("id"))
           .union(candidatesMat.select(col("id_b").as("id"))).distinct()
         val szTagged = allSizes.join(candIds, Seq("id"), "left_semi")
@@ -1100,20 +1086,17 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
           .join(szTagged.withColumnsRenamed(
             Map("id" -> "id_b", "sz" -> "sz_b")), "id_b")
       }
-    val pairs = tphase("pairs")(pairs0
+    val pairs = pairs0
       .withColumn("cont_a",
         col("common").cast("double") / col("sz_a").cast("double"))
       .withColumn("cont_b",
         col("common").cast("double") / col("sz_b").cast("double"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= cfg.threshold)
       .select("id_a", "id_b", "cont_a", "cont_b")
-      .localCheckpoint(true)) // BEFORE the appends — see MinhashStore
+      .localCheckpoint(true) // BEFORE the appends — see MinhashStore
     graft.core.Par.both(
-      tphase("appendPost")(
-        wh.appendBucketed(postTable, sh, Seq("shingle"),
-          cfg.nStoreBuckets)),
-      tphase("appendSize")(
-        wh.appendBucketed(sizeTable, sizes, Seq("id"), cfg.nStoreBuckets)))
+      wh.appendBucketed(postTable, sh, Seq("shingle"), cfg.nStoreBuckets),
+      wh.appendBucketed(sizeTable, sizes, Seq("id"), cfg.nStoreBuckets))
     pairs
   }
 }

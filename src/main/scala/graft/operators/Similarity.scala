@@ -219,7 +219,8 @@ object Similarity {
     * its map-side-combine reasoning: array-typed aggregation buffers
     * force ObjectHashAggregate, whose sort-based fallback sorts the
     * exploded product with full vector payloads (measured at 1M×256:
-    * ~200 GB spill, disk-full abort — caught by tools/ScaleProbe ivf).
+    * ~200 GB spill, disk-full abort — BENCH_NOTES "1M-doc / 1M-vector
+    * scale probes").
     * Same distances (identical IEEE fold), same smallest-cell tie rule. */
   def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
                   centroids: DataFrame): DataFrame = {

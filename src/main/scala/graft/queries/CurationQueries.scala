@@ -282,7 +282,8 @@ private[queries] object CurationQueries {
     // union, each emitted at its later endpoint's ingest. maxDocFreq
     // 1000 > the sf0.01 corpus, so no shingle can cross the cap between
     // ingests and the equivalence contract is EXACT here (the cap
-    // caveat is probed separately at 1M, ScaleProbe `cont`) =====
+    // caveat is probed separately at 1M, BENCH_NOTES "Containment at
+    // 1M") =====
     QueryDef("q155_containment_incremental",
       (s, dir) => {
         val d = T.documents(s, dir)
@@ -420,7 +421,8 @@ private[queries] object CurationQueries {
         // append's cost contract scans its source twice, and an
         // unmaterialized hostEdges pipeline would pay the HTML regex
         // parse per scan — exactly the anti-pattern the EdgeStore
-        // scaladoc (and ScaleProbe.epochProbe) says to stage away
+        // scaladoc (and BENCH_NOTES "Round 11: crawl-epoch composition
+        // probe") says to stage away
         def epochEdges(df: org.apache.spark.sql.DataFrame) =
           Graph.hostEdges(pages(df), "url", "html")
             .select(hostNum(col("src")).as("src"),

@@ -230,6 +230,12 @@ final class Warehouse(spark: SparkSession, root0: String) {
     StoreTxn.rmrf(new java.io.File(tmp))
   }
 
+  /** Bucket-spec sidecar path — a SIBLING of the table directory, not a
+    * file inside it: the table-creation write clears a pre-existing
+    * location, so an in-dir spec could not be written before the data. */
+  private def bucketSpecFile(table: String) =
+    new java.io.File(s"$root/warehouse", s"_graft_bucket_spec_$table")
+
   /** Bucketed append: co-locates future joins/aggregations on
     * `bucketCols` — two tables bucketed the same way join with NO
     * exchange on either side (SortMergeJoin reads bucket-aligned files).
@@ -241,15 +247,18 @@ final class Warehouse(spark: SparkSession, root0: String) {
     * bucket spec is ALSO persisted next to the data (an `_`-prefixed
     * file, invisible to parquet readers) so [[readBucketed]] can
     * re-register the table in a fresh driver: a persisted store must
-    * survive the JVM that wrote it. */
-  /** Bucket-spec sidecar path — a SIBLING of the table directory, not a
-    * file inside it: the table-creation write clears a pre-existing
-    * location, so an in-dir spec could not be written before the data. */
-  private def bucketSpecFile(table: String) =
-    new java.io.File(s"$root/warehouse", s"_graft_bucket_spec_$table")
-
+    * survive the JVM that wrote it.
+    *
+    * `partitionCol` ALSO hash-partitions the directory layout: the
+    * catalog prunes whole partitions when a read filters on it (an IN
+    * over collected key prefixes), while the bucket files inside each
+    * partition keep the shuffle-free sort-merge property on
+    * `bucketCols` (Spark groups same-bucket files ACROSS partition
+    * directories into one scan partition). One append then writes up to
+    * partitions×buckets files — size `nBuckets` down when adding a
+    * partition column (the two multiply). */
   def appendBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
-                     nBuckets: Int): Unit = {
+                     nBuckets: Int, partitionCol: Option[String] = None): Unit = {
     // inside a store ingest, register the directory with the open
     // transaction BEFORE anything (spec included) changes — write-ahead
     StoreTxn.touchIfActive(root, s"warehouse/$table")
@@ -261,7 +270,8 @@ final class Warehouse(spark: SparkSession, root0: String) {
     // rewritten: overwriting it before a data write that then fails
     // (e.g. a caller drifting to a different bucket count) would leave
     // a sidecar describing a layout the files don't have.
-    writeSpecValidated(table, s"$nBuckets\n${bucketCols.mkString(",")}\n")
+    writeSpecValidated(table, s"$nBuckets\n${bucketCols.mkString(",")}\n" +
+      partitionCol.fold("")(p => s"$p\n"))
     // ALIGN the frame's partitioning with the bucket function before
     // writing: a bucketed write emits one file per (task, bucket) pair,
     // so an unaligned 32-task append of an 8-bucket table writes 256
@@ -281,52 +291,16 @@ final class Warehouse(spark: SparkSession, root0: String) {
     // exactly nBuckets files — while the murmur of the id values
     // spreads the buckets over more tasks than repartition(nBuckets)
     // would (id-value hash collisions serialized several buckets onto
-    // one writer at small bucket counts).
-    df.repartition(
+    // one writer at small bucket counts). With a partition column the
+    // key is (partition dir, bucket id): one file per populated combo.
+    val writer = df.repartition(
         math.max(nBuckets,
           df.sparkSession.sessionState.conf.numShufflePartitions),
-        pmod(hash(bucketCols.map(col): _*), lit(nBuckets)))
+        partitionCol.map(col).toSeq :+
+          pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
       .write.mode(SaveMode.Append)
       .option("path", path(table))
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(bucketedName(table))
-    ()
-  }
-
-  /** Bucketed append that ALSO hash-partitions the directory layout on
-    * `partitionCol`: the catalog prunes whole partitions when a read
-    * filters on it (an IN over collected key prefixes), while the
-    * bucket files inside each partition keep the shuffle-free
-    * sort-merge property on `bucketCols` (Spark groups same-bucket
-    * files ACROSS partition directories into one scan partition).
-    * File-count note for 100 TB: one append writes up to
-    * partitions×buckets files — size `nBuckets` down when adding a
-    * partition column (the two multiply). */
-  def appendPartitionedBucketed(table: String, df: DataFrame,
-                                partitionCol: String, bucketCols: Seq[String],
-                                nBuckets: Int): Unit = {
-    StoreTxn.touchIfActive(root, s"warehouse/$table")
-    writeSpecValidated(table,
-      s"$nBuckets\n${bucketCols.mkString(",")}\n$partitionCol\n")
-    // same alignment as appendBucketed, keyed on (partition dir, bucket
-    // id): each combo then lands wholly in one task, so the append
-    // writes exactly one file per populated (partition, bucket) combo
-    // instead of one per (task, combo). The partition count is EXPLICIT
-    // (session shuffle partitions): combos spread over that many tasks
-    // with the same file count, where the implicit form let AQE
-    // coalesce the small exchange to ONE task writing every file
-    // serially (measured 1 s/append on the GramIndex path).
-    // same math.max floor as appendBucketed: a session configured with
-    // fewer shuffle partitions than buckets would otherwise serialize
-    // several (partition, bucket) combos per writer task
-    val shufflePar = math.max(nBuckets,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    df.repartition(shufflePar, col(partitionCol),
-        pmod(hash(bucketCols.map(col): _*), lit(nBuckets)))
-      .write.mode(SaveMode.Append)
-      .option("path", path(table))
-      .partitionBy(partitionCol)
+    partitionCol.fold(writer)(writer.partitionBy(_))
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(bucketedName(table))

@@ -215,6 +215,21 @@ class PipelineSpec extends SparkSpec {
     // RETRY this batch instead of skipping it (deltas-before-marker is
     // the property its skip relies on)
     assert(store.maxIngestedId === maxBefore)
+    // the retry equals a clean store's second ingest: the failed
+    // attempt's MinHash appends were joined and rolled back, not doubled
+    val retry = store.ingest(docs.filter(col("doc_id") > 5), "doc_id", "text")
+    val clean = new Pipeline.CurationStore(spark, freshRoot(), "t", cfg)
+    clean.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
+    val expected = clean.ingest(docs.filter(col("doc_id") > 5), "doc_id", "text")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().sorted.toSeq
+    assert(ids(retry.kept) === ids(expected.kept))
+    assert(ids(retry.retracted) === ids(expected.retracted))
+    assert(store.maxIngestedId === clean.maxIngestedId)
+    val doubled = new graft.sources.Warehouse(spark, store.storeRoot)
+      .readBucketed("t_cur_mh_sig").groupBy("id", "band").count()
+      .filter(col("count") > 1).count()
+    assert(doubled === 0L, "no signature appended twice")
   }
 
   test("curation store: rejects non-increasing batch ids, skips empty batches") {
