@@ -241,7 +241,7 @@ object Decontamination {
     * (`gpfx = ghash mod prefixPartitions`) and bucketed by it inside
     * each partition. A check collects the eval set's prefix set
     * (bounded control read — ≤ prefixPartitions values) and filters the
-    * scan on it, so the catalog prunes whole partitions: a small eval
+    * scan on it, which prunes whole partitions: a small eval
     * set (a leaked-question spot check, one new benchmark task) reads a
     * fraction of the postings instead of all of them, and a gram-dense
     * suite degrades gracefully to the full bucket-aligned scan — never

@@ -661,9 +661,9 @@ object Pipeline {
       // the owner id rides with each hash pair so later ingests can
       // attribute a store-dup drop to the document that holds the text.
       // A store created before the owner column existed has a 2-column
-      // table — append with ITS schema (a 3-column append throws
-      // column-arity in the catalog); [[compact]] upgrades such a table
-      // in place, after which appends carry the owner again.
+      // table — append with ITS schema (a 3-column append throws against
+      // the recorded schema); [[compact]] upgrades such a table in
+      // place, after which appends carry the owner again.
       val freshOut =
         if (storeExact.exists(st => !st.columns.contains("id")))
           fresh.select("__h1", "__h2")

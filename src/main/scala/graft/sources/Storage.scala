@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Relational
@@ -48,35 +50,21 @@ final class StagingStore(spark: SparkSession, root: String) {
   def appendAt(collection: String, df: DataFrame, at: java.sql.Timestamp): Unit =
     write(collection, df.withColumn("__ingested_at", lit(at)))
 
-  /** An append must carry the recorded columns: a parquet directory
-    * whose files disagree is read with one file's footer, whichever
-    * Spark picks. The append that creates the collection records the
-    * schema Spark infers for it, once. */
+  /** An append must carry the recorded columns (see [[SchemaSidecar]]).
+    * The append that creates the collection records the schema Spark
+    * infers for it, once. */
   private def write(collection: String, df: DataFrame): Unit = {
     val f = schemaFile(collection)
-    if (f.isFile) {
-      val recorded = StagingStore.parse(f)
-      require(StagingStore.nullable(df.schema) == StagingStore.nullable(recorded),
-        s"staging collection '$collection' holds ${recorded.simpleString}; " +
-          s"the append has ${df.schema.simpleString}")
-    }
+    SchemaSidecar.check(f, df.schema, s"staging collection '$collection'")
     df.write.mode(SaveMode.Append).parquet(path(collection))
-    if (!f.isFile) record(collection)
-  }
-
-  private def record(collection: String): StructType = {
-    val inferred = spark.read.parquet(path(collection)).schema
-    StoreTxn.writeAtomic(schemaFile(collection), inferred.json)
-    inferred
+    if (!f.isFile) SchemaSidecar.readOrInfer(spark, f, path(collection))
   }
 
   /** Read with the recorded schema: no inference job. A collection
     * written before the schema was recorded infers once and records it. */
-  def readAll(collection: String): DataFrame = {
-    val f = schemaFile(collection)
-    val schema = if (f.isFile) StagingStore.parse(f) else record(collection)
-    spark.read.schema(schema).parquet(path(collection))
-  }
+  def readAll(collection: String): DataFrame =
+    spark.read.schema(SchemaSidecar.readOrInfer(spark, schemaFile(collection),
+      path(collection))).parquet(path(collection))
 
   /** The staged rows split at `op`'s watermark into (unprocessed,
     * history): ingest time strictly after it, and at or before it. Both
@@ -129,9 +117,39 @@ final class StagingStore(spark: SparkSession, root: String) {
     new java.io.File(path(collection)).exists()
 }
 
-object StagingStore {
-  private def parse(f: java.io.File): StructType =
+/** The recorded schema of a parquet store, as JSON in a `_`-prefixed
+  * file the parquet reader skips. Staging collections and bucketed
+  * warehouse tables both keep one: a read names its schema instead of
+  * starting an inference job, and an append whose columns differ
+  * throws, because a directory whose files disagree is read with one
+  * file's footer, whichever Spark picks. */
+private[sources] object SchemaSidecar {
+  def read(f: java.io.File): StructType =
     DataType.fromJson(java.nio.file.Files.readString(f.toPath)).asInstanceOf[StructType]
+
+  def record(f: java.io.File, schema: StructType): StructType = {
+    StoreTxn.writeAtomic(f, schema.json)
+    schema
+  }
+
+  /** The recorded schema; a store written before it was recorded infers
+    * it from the files in `dir` once and records it. */
+  def readOrInfer(spark: SparkSession, f: java.io.File, dir: String): StructType =
+    if (f.isFile) read(f) else record(f, spark.read.parquet(dir).schema)
+
+  /** Throws unless `schema` equals the recorded one, if any, with
+    * nullability ignored. */
+  def check(f: java.io.File, schema: StructType, what: String): Unit =
+    if (f.isFile) {
+      val recorded = read(f)
+      require(nullable(schema) == nullable(recorded),
+        s"$what holds ${recorded.simpleString}; the append has ${schema.simpleString}")
+    }
+
+  /** [[check]], or record `schema` as the reader will report it. */
+  def checkOrRecord(f: java.io.File, schema: StructType, what: String): Unit =
+    if (f.isFile) check(f, schema, what)
+    else record(f, nullable(schema).asInstanceOf[StructType])
 
   /** `t` with every field, element and value nullable, as the parquet
     * reader reports them whatever the writing frame declared. */
@@ -146,8 +164,8 @@ object StagingStore {
 
 final class Warehouse(spark: SparkSession, root0: String) {
 
-  /** Canonicalized so the catalog-name hash, the StoreTxn registry and
-    * the lease files all agree however the caller spelled the path. */
+  /** Canonicalized so the StoreTxn registry and the lease files agree
+    * however the caller spelled the path. */
   private[graft] val root: String = new java.io.File(root0).getCanonicalPath
 
   private def path(table: String) = s"$root/warehouse/$table"
@@ -230,122 +248,115 @@ final class Warehouse(spark: SparkSession, root0: String) {
     StoreTxn.rmrf(new java.io.File(tmp))
   }
 
-  /** Bucket-spec sidecar path — a SIBLING of the table directory, not a
-    * file inside it: the table-creation write clears a pre-existing
-    * location, so an in-dir spec could not be written before the data. */
-  private def bucketSpecFile(table: String) =
-    new java.io.File(s"$root/warehouse", s"_graft_bucket_spec_$table")
+  /** The bucket-spec sidecar: bucket count, bucket columns and, for a
+    * partitioned table, the partition column, one per line. */
+  private def bucketSpecFile(table: String) = Warehouse.sidecar(root, "bucket_spec", table)
+  private def schemaFile(table: String) = Warehouse.sidecar(root, "schema", table)
 
   /** Bucketed append: co-locates future joins/aggregations on
     * `bucketCols` — two tables bucketed the same way join with NO
     * exchange on either side (SortMergeJoin reads bucket-aligned files).
     * This is the 100 TB answer for fact-to-fact joins that repeat every
     * run (e.g. current-vs-previous-period), where re-shuffling both
-    * sides each time would dominate the job. Registered as an external
-    * table because bucket metadata lives in the catalog — and since the
-    * default catalog is SESSION-scoped (in-memory, no metastore), the
-    * bucket spec is ALSO persisted next to the data (an `_`-prefixed
-    * file, invisible to parquet readers) so [[readBucketed]] can
-    * re-register the table in a fresh driver: a persisted store must
-    * survive the JVM that wrote it.
+    * sides each time would dominate the job. The table is its directory
+    * plus two sidecars (`_`-prefixed siblings of the directory): the
+    * bucket spec and the schema ([[SchemaSidecar]]; the first append
+    * records it, later appends must match it). No catalog holds a copy,
+    * so every session and every driver reads the same table.
     *
-    * `partitionCol` ALSO hash-partitions the directory layout: the
-    * catalog prunes whole partitions when a read filters on it (an IN
-    * over collected key prefixes), while the bucket files inside each
-    * partition keep the shuffle-free sort-merge property on
-    * `bucketCols` (Spark groups same-bucket files ACROSS partition
-    * directories into one scan partition). One append then writes up to
-    * partitions×buckets files — size `nBuckets` down when adding a
-    * partition column (the two multiply). */
+    * `partitionCol` ALSO hash-partitions the directory layout: a read
+    * that filters on it (an IN over collected key prefixes) prunes
+    * whole partitions, while the bucket files inside each partition
+    * keep the shuffle-free sort-merge property on `bucketCols` (Spark
+    * groups same-bucket files ACROSS partition directories into one
+    * scan partition). One append then writes up to partitions×buckets
+    * files — size `nBuckets` down when adding a partition column (the
+    * two multiply). */
   def appendBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
                      nBuckets: Int, partitionCol: Option[String] = None): Unit = {
     // inside a store ingest, register the directory with the open
     // transaction BEFORE anything (spec included) changes — write-ahead
     StoreTxn.touchIfActive(root, s"warehouse/$table")
-    // spec BEFORE data: it is pure config, and the reverse order left a
-    // crash window where a store with data but no spec could never be
-    // reopened by a fresh driver. A crash after the spec but mid-data-
-    // write instead leaves a shell readBucketed reports accurately (see
-    // the data-file check there). An EXISTING spec is validated, never
-    // rewritten: overwriting it before a data write that then fails
-    // (e.g. a caller drifting to a different bucket count) would leave
-    // a sidecar describing a layout the files don't have.
-    writeSpecValidated(table, s"$nBuckets\n${bucketCols.mkString(",")}\n" +
-      partitionCol.fold("")(p => s"$p\n"))
-    // ALIGN the frame's partitioning with the bucket function before
-    // writing: a bucketed write emits one file per (task, bucket) pair,
-    // so an unaligned 32-task append of an 8-bucket table writes 256
-    // files per ingest (measured: 1.4-2.1 s vs 0.33 s, and ~2.5× slower
-    // read-back) where the aligned write emits exactly nBuckets.
-    // Partitioned on the writer's own bucket-id EXPRESSION —
-    // pmod(murmur3, nBuckets) — NOT the raw columns: a raw-column
-    // repartition over a bucketed scan of the same key is elided by
-    // EnsureRequirements (the scan already reports that partitioning),
-    // after which the auto-bucketed-scan rule may downgrade the read to
-    // raw file splits and the write runs unaligned (measured: the
-    // Bm25Index compaction path wrote 6 files for a 2-bucket table).
-    // The exchange this adds carries only the append delta. The task
-    // count is the session's shuffle parallelism (explicit, so AQE
-    // cannot coalesce it to one writer): partitioning is BY the
-    // bucket-id VALUE, so each bucket still lands wholly in one task —
-    // exactly nBuckets files — while the murmur of the id values
-    // spreads the buckets over more tasks than repartition(nBuckets)
-    // would (id-value hash collisions serialized several buckets onto
-    // one writer at small bucket counts). With a partition column the
-    // key is (partition dir, bucket id): one file per populated combo.
-    val writer = df.repartition(
-        math.max(nBuckets,
-          df.sparkSession.sessionState.conf.numShufflePartitions),
-        partitionCol.map(col).toSeq :+
-          pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
-      .write.mode(SaveMode.Append)
-      .option("path", path(table))
-    partitionCol.fold(writer)(writer.partitionBy(_))
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(bucketedName(table))
-    ()
+    // sidecars BEFORE data: data without a spec could never be
+    // reopened, while a crash mid-data-write leaves a shell readBucketed
+    // reports accurately (see the data-file check there). EXISTING
+    // sidecars are validated, never rewritten: a rewrite before a data
+    // write that then fails would describe a layout the files don't have.
+    val spec = s"$nBuckets\n${bucketCols.mkString(",")}\n" +
+      partitionCol.fold("")(p => s"$p\n")
+    writeOrValidate(bucketSpecFile(table), spec, write = true)(prev =>
+      s"bucket layout mismatch for $table: store has " +
+        s"'${prev.trim.replace("\n", " / ")}', append requested " +
+        s"'${spec.trim.replace("\n", " / ")}' — a bucketed table's " +
+        "layout is fixed at creation (re-bucket = new table)")
+    val dir = new java.io.File(path(table))
+    if (!schemaFile(table).isFile && hasData(dir)) // written before schemas were recorded
+      SchemaSidecar.readOrInfer(spark, schemaFile(table), dir.getPath)
+    SchemaSidecar.checkOrRecord(schemaFile(table), df.schema, s"bucketed table '$table'")
+    // ALIGN the frame's partitioning with the bucket function: a
+    // bucketed write emits one file per (task, bucket) pair, so an
+    // unaligned 32-task append of an 8-bucket table wrote 256 files per
+    // ingest (1.4-2.1 s vs 0.33 s, ~2.5× slower read-back) where the
+    // aligned write emits exactly nBuckets. The key is the writer's own
+    // bucket-id EXPRESSION, not the raw columns: EnsureRequirements
+    // elides a raw-column repartition over a bucketed scan of the same
+    // key, and the write then ran unaligned (Bm25Index compaction wrote
+    // 6 files for a 2-bucket table). The exchange carries only the
+    // delta; its task count is the shuffle parallelism (explicit, so
+    // AQE cannot coalesce it to one writer), and hashing the bucket-id
+    // VALUE keeps each bucket in one task while spreading the buckets
+    // over more tasks than repartition(nBuckets), whose id-value hash
+    // collisions put several buckets on one writer at small bucket
+    // counts. With a partition column the key is (partition dir, bucket id).
+    val session = df.sparkSession
+    val aligned = df.repartition(
+      math.max(nBuckets, session.sessionState.conf.numShufflePartitions),
+      partitionCol.map(col).toSeq :+
+        pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
+    // DataFrameWriter takes a bucket spec only for a catalog table, so
+    // the file-source write plan is built directly
+    session.sessionState.executePlan(
+      DataSource(session, "parquet", partitionColumns = partitionCol.toSeq,
+        bucketSpec = Some(BucketSpec(nBuckets, bucketCols, bucketCols)),
+        options = Map("path" -> dir.getPath))
+        .planForWriting(SaveMode.Append, aligned.queryExecution.analyzed))
+      .assertCommandExecuted()
   }
 
-  /** Read a bucketed table, re-registering it in the session catalog
-    * from the on-disk bucket spec when this session didn't write it
-    * (new driver, same warehouse root). */
+  /** Read a bucketed table: a parquet relation over its directory with
+    * the sidecars' bucket spec and schema, built on every call, so it
+    * sees the files on disk now — another session's append included, a
+    * rolled-back one not. A partitioned table lists every partition
+    * directory and prunes after listing (Spark lists in a job above 32
+    * directories). */
   def readBucketed(table: String): DataFrame = {
-    val name = bucketedName(table)
-    if (!spark.catalog.tableExists(name)) {
-      val dir = new java.io.File(path(table))
-      val spec = bucketSpecFile(table)
-      require(spec.exists(),
-        s"bucketed table $table not found at ${dir.getPath} (no bucket spec)")
-      // spec with no data files = a write that crashed before any data
-      // landed (spec is written first) — report it as such, not as a
-      // schema-inference failure from an empty directory. Partitioned
-      // tables keep their data one level down, so look recursively.
-      def hasData(f: java.io.File): Boolean =
-        if (f.isDirectory) Option(f.listFiles()).exists(_.exists(hasData))
-        else !f.getName.startsWith("_") && !f.getName.startsWith(".")
-      require(hasData(dir),
-        s"bucketed table $table at ${dir.getPath} has a bucket spec but " +
-          "no data files (interrupted first write?) — restore from " +
-          "snapshot or delete the directory")
-      val lines =
-        java.nio.file.Files.readString(spec.toPath).trim.split("\n")
-      val (n, cols, partCol) =
-        (lines(0), lines(1), if (lines.length > 2) Some(lines(2)) else None)
-      val schema = spark.read.parquet(dir.getPath).schema.toDDL
-      val bucketCols = cols.split(",").mkString(", ")
-      val partClause = partCol.fold("")(p => s"PARTITIONED BY ($p)\n")
-      spark.sql(
-        s"""CREATE TABLE $name ($schema) USING parquet
-           |${partClause}CLUSTERED BY ($bucketCols) SORTED BY ($bucketCols)
-           |INTO ${n.toInt} BUCKETS
-           |LOCATION '${dir.getAbsolutePath}'""".stripMargin)
-      // a freshly registered PARTITIONED table has an empty partition
-      // list in the catalog — discover the on-disk partitions
-      partCol.foreach(_ => spark.sql(s"MSCK REPAIR TABLE $name"))
-    }
-    spark.table(bucketedName(table))
+    val dir = new java.io.File(path(table))
+    val spec = bucketSpecFile(table)
+    require(spec.exists(),
+      s"bucketed table $table not found at ${dir.getPath} (no bucket spec)")
+    // spec with no data files = a write that crashed before any data
+    // landed (the sidecars are written first) — report it as such, not
+    // as a schema-inference failure from an empty directory
+    require(hasData(dir),
+      s"bucketed table $table at ${dir.getPath} has a bucket spec but " +
+        "no data files (interrupted first write?) — restore from " +
+        "snapshot or delete the directory")
+    val lines = java.nio.file.Files.readString(spec.toPath).trim.split("\n")
+    val cols = lines(1).split(",").toSeq
+    spark.baseRelationToDataFrame(DataSource(spark, "parquet",
+      paths = Seq(dir.getPath),
+      userSpecifiedSchema = Some(
+        SchemaSidecar.readOrInfer(spark, schemaFile(table), dir.getPath)),
+      partitionColumns = lines.drop(2).toSeq,
+      bucketSpec = Some(BucketSpec(lines(0).toInt, cols, cols)))
+      .resolveRelation(checkFilesExist = false))
   }
+
+  /** A data file anywhere under `f`; partitioned tables keep theirs one
+    * level down. */
+  private def hasData(f: java.io.File): Boolean =
+    if (f.isDirectory) Option(f.listFiles()).exists(_.exists(hasData))
+    else f.exists() && !f.getName.startsWith("_") && !f.getName.startsWith(".")
 
   /** Write-or-validate a store-PARAMETERS sidecar. The bucket spec
     * guards the physical layout; this guards the semantic one — values
@@ -362,69 +373,45 @@ final class Warehouse(spark: SparkSession, root0: String) {
                           writeIfAbsent: Boolean = true): Unit = {
     val content =
       params.map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-    val spec = new java.io.File(s"$root/warehouse", s"_graft_params_$table")
-    if (spec.exists()) {
-      val prev = java.nio.file.Files.readString(spec.toPath)
-      require(prev == content,
-        s"store parameter mismatch for $table: store was written with " +
-          s"'${prev.trim.replace("\n", ", ")}', this handle has " +
-          s"'${content.trim.replace("\n", ", ")}' — these parameters are " +
-          "fixed at store creation (changing them = new store + rebuild)")
-    } else if (writeIfAbsent) {
-      spec.getParentFile.mkdirs()
-      java.nio.file.Files.writeString(spec.toPath, content)
-      ()
-    }
+    writeOrValidate(Warehouse.sidecar(root, "params", table), content,
+      writeIfAbsent)(prev =>
+      s"store parameter mismatch for $table: store was written with " +
+        s"'${prev.trim.replace("\n", ", ")}', this handle has " +
+        s"'${content.trim.replace("\n", ", ")}' — these parameters are " +
+        "fixed at store creation (changing them = new store + rebuild)")
   }
 
-  /** Write the bucket-spec sidecar, or validate an existing one —
-    * never rewrite it (see [[appendBucketed]]'s ordering comment). */
-  private def writeSpecValidated(table: String, content: String): Unit = {
-    val spec = bucketSpecFile(table)
-    if (spec.exists()) {
-      val prev = java.nio.file.Files.readString(spec.toPath)
-      require(prev == content,
-        s"bucket layout mismatch for $table: store has " +
-          s"'${prev.trim.replace("\n", " / ")}', append requested " +
-          s"'${content.trim.replace("\n", " / ")}' — a bucketed table's " +
-          "layout is fixed at creation (re-bucket = new table)")
-    } else {
-      spec.getParentFile.mkdirs()
-      java.nio.file.Files.writeString(spec.toPath, content)
-      ()
-    }
-  }
+  /** Require an existing sidecar to hold `content`, or write it when
+    * `write` — never rewrite it (see [[appendBucketed]]'s ordering
+    * comment). */
+  private def writeOrValidate(f: java.io.File, content: String, write: Boolean)(
+      mismatch: String => String): Unit =
+    if (f.exists()) {
+      val prev = java.nio.file.Files.readString(f.toPath)
+      require(prev == content, mismatch(prev))
+    } else if (write) StoreTxn.writeAtomic(f, content)
 
-  private def bucketedName(table: String): String =
-    Warehouse.bucketedName(root, table)
-
-  /** Physically remove a table this warehouse owns: data directory,
-    * bucket-spec/params sidecars, and any session-catalog registration.
-    * STORE-INTERNAL maintenance (compaction sweeps of superseded
-    * physical generations) — not a user data-management API; callers
-    * must only target tables a committed alias has already replaced. */
+  /** Physically remove a table this warehouse owns, directory and
+    * sidecars. STORE-INTERNAL maintenance (compaction sweeps of
+    * superseded physical generations) — not a user data-management API;
+    * callers must only target tables a committed alias has already
+    * replaced. */
   private[graft] def dropTable(table: String): Unit = {
     StoreTxn.rmrf(new java.io.File(path(table)))
-    bucketSpecFile(table).delete()
-    new java.io.File(s"$root/warehouse", s"_graft_params_$table").delete()
-    Warehouse.dropCatalogEntry(spark, root, table)
+    Warehouse.sidecars(root, table).foreach(_.delete())
   }
 }
 
 object Warehouse {
-  private[sources] def bucketedName(root: String, table: String): String =
-    "graft_" + java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(root).toLong & 0xffffffffL) +
-      "_" + table
+  /** A table's `kind` sidecar: a sibling of its directory, where stores
+    * already on disk keep their bucket spec and parameters. */
+  private def sidecar(root: String, kind: String, table: String) =
+    new java.io.File(s"$root/warehouse", s"_graft_${kind}_$table")
 
-  /** Drop the session-catalog registration of a bucketed table whose
-    * files a [[StoreTxn]] undo removed — a registration pointing at a
-    * vanished location must not survive the rollback. */
-  private[sources] def dropCatalogEntry(spark: SparkSession, root: String,
-                                        table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${bucketedName(root, table)}")
-    ()
-  }
+  /** Every sidecar a table may have — what a drop or an undo of the
+    * table's creation removes with its directory. */
+  private[sources] def sidecars(root: String, table: String): Seq[java.io.File] =
+    Seq("bucket_spec", "params", "schema").map(sidecar(root, _, table))
 }
 
 /** Small state tables with queue semantics: the reference's retry queues

@@ -120,7 +120,7 @@ object StoreTxn {
   def transact[T](spark: SparkSession, root: String)(body: => T): T = {
     val key = canon(root)
     if (active.containsKey(key)) return body // join the open transaction
-    recover(spark, key, failOnLiveForeignWriter = true)
+    recover(key, failOnLiveForeignWriter = true)
     val lease =
       if (jvmSinkLeases.containsKey(key)) None // sink lease covers us
       else Some(Lease.acquire(leaseFile(key), leaseTtlMs))
@@ -138,7 +138,7 @@ object StoreTxn {
       case c: SimulatedCrash =>
         crashed = true; throw c
       case scala.util.control.NonFatal(e) =>
-        txn.rollback(spark); throw e
+        txn.rollback(); throw e
     } finally {
       active.remove(key)
       lease.foreach(l => if (crashed) l.abandon() else l.release())
@@ -163,8 +163,7 @@ object StoreTxn {
     * lease, stale lease, or our own sink lease). With
     * `failOnLiveForeignWriter` (write paths) a fresh foreign lease
     * raises; read paths pass false and just read the live state. */
-  private def recover(spark: SparkSession, key: String,
-                      failOnLiveForeignWriter: Boolean): Unit = {
+  private def recover(key: String, failOnLiveForeignWriter: Boolean): Unit = {
     val intent = intentFile(key)
     if (!intent.exists()) return
     val lease = leaseFile(key)
@@ -184,7 +183,7 @@ object StoreTxn {
     // delete) — roll FORWARD by clearing the intent; undoing here would
     // delete committed data out from under the published record
     if (rec.epoch > readCommit(commitFile(key)).epoch)
-      undo(spark, key, rec)
+      undo(key, rec)
     Files.deleteIfExists(intent.toPath)
     if (!jvmSinkLeases.containsKey(key)) Files.deleteIfExists(lease.toPath)
     ()
@@ -196,7 +195,7 @@ object StoreTxn {
   def recoverIfIdle(spark: SparkSession, root: String): Unit = {
     val key = canon(root)
     if (active.containsKey(key)) return // our own open transaction
-    recover(spark, key, failOnLiveForeignWriter = false)
+    recover(key, failOnLiveForeignWriter = false)
   }
 
   /** Committed scalar state (e.g. the curation max-id marker). Only
@@ -323,8 +322,8 @@ object StoreTxn {
         .filter(_ != epoch).foreach(v => rmrf(new File(key, s"state/$s/v$v"))))
     }
 
-    private[sources] def rollback(spark: SparkSession): Unit = synchronized {
-      undo(spark, key, Intent(epoch, touched.values.toVector, stateWrites.toVector))
+    private[sources] def rollback(): Unit = synchronized {
+      undo(key, Intent(epoch, touched.values.toVector, stateWrites.toVector))
       Files.deleteIfExists(intentFile(key).toPath)
       ()
     }
@@ -392,19 +391,15 @@ object StoreTxn {
   /** Physical undo: restore every snapshotted directory to its
     * recursive snapshot (delete entries the snapshot doesn't know,
     * whole subtrees at a time), drop directories — and their
-    * bucket-spec sidecar + catalog entry — that did not exist, and
-    * sweep this transaction's state versions. */
-  private def undo(spark: SparkSession, key: String, intent: Intent): Unit = {
+    * sidecars — that did not exist, and sweep this transaction's state
+    * versions. */
+  private def undo(key: String, intent: Intent): Unit = {
     intent.dirs.foreach { snap =>
       val dir = new File(key, snap.rel)
       if (!snap.existed) {
         rmrf(dir)
-        if (snap.rel.startsWith("warehouse/")) {
-          val table = snap.rel.stripPrefix("warehouse/")
-          rmrf(new File(key, s"warehouse/_graft_bucket_spec_$table"))
-          rmrf(new File(key, s"warehouse/_graft_params_$table"))
-          Warehouse.dropCatalogEntry(spark, key, table)
-        }
+        if (snap.rel.startsWith("warehouse/"))
+          Warehouse.sidecars(key, snap.rel.stripPrefix("warehouse/")).foreach(rmrf)
       } else if (dir.exists()) {
         def sweep(f: File, rel: String): Unit =
           if (!snap.names.contains(rel)) rmrf(f) // unknown subtree: all new

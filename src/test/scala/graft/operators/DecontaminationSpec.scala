@@ -95,7 +95,7 @@ class DecontaminationSpec extends SparkSpec {
         s"read $selectedPaths")
   }
 
-  test("gram index: a partitioned store reopens after catalog loss") {
+  test("gram index: a partitioned store reopens in a fresh session") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "totally different content in this one here")
@@ -107,13 +107,11 @@ class DecontaminationSpec extends SparkSpec {
       nStoreBuckets = 2, prefixPartitions = 8)
     idx.append(docs, "id", "text")
     assert(idx.check(ev, "text").as[Long].collect().toSeq === Seq(1L))
-    // fresh-driver simulation: drop the catalog entry; the reopen path
-    // must re-register the PARTITIONED layout and recover partitions
-    val name = spark.catalog.listTables()
-      .filter(col("name").contains("t_dc_gram")).head().name
-    spark.sql(s"DROP TABLE $name")
-    val idx2 = new Decontamination.GramIndex(spark, root, "t", n = 3,
-      nStoreBuckets = 2, prefixPartitions = 8)
+    // fresh-driver simulation: a handle on a new session has only the
+    // files and sidecars; the reopen must read the PARTITIONED layout
+    // with every partition
+    val idx2 = new Decontamination.GramIndex(spark.newSession(), root, "t",
+      n = 3, nStoreBuckets = 2, prefixPartitions = 8)
     assert(idx2.check(ev, "text").as[Long].collect().toSeq === Seq(1L),
       "reopened partitioned index must serve the same answers")
     // row-identity parameters are store identity: a handle with a

@@ -183,33 +183,70 @@ class StorageSpec extends SparkSpec {
     assert(joined.count() === 1000)
   }
 
-  test("bucketed tables reopen after the catalog registration is lost") {
+  test("bucketed tables reopen in a fresh session from their files and sidecars") {
     // a persisted signature store must survive the JVM that wrote it;
-    // simulate the fresh-driver case by dropping the session-catalog
-    // entry (the on-disk data + bucket spec are all a new session has)
+    // a handle on a new session shares nothing with the writer but the
+    // on-disk data and sidecars — all a fresh driver has
     val root = tmpRoot()
     val wh = new Warehouse(spark, root)
     wh.appendBucketed("reopen_b", (1 to 50).map(i => (i.toLong, i * 3.0))
       .toDF("k", "v"), Seq("k"), 4)
-    val name = spark.catalog.listTables()
-      .filter(col("name").contains("reopen_b")).head().name
-    spark.sql(s"DROP TABLE $name") // external: data stays on disk
-    assert(!spark.catalog.tableExists(name))
-    val reopened = wh.readBucketed("reopen_b")
+    val fresh = spark.newSession()
+    val wh2 = new Warehouse(fresh, root)
+    val reopened = wh2.readBucketed("reopen_b")
     assert(reopened.count() === 50)
-    // the re-registered table still carries the bucket layout: joining
-    // two reopened tables stays exchange-free
+    // the reopened table still carries the bucket layout: joining two
+    // reopened tables stays exchange-free
     wh.appendBucketed("reopen_c", (1 to 50).map(i => (i.toLong, s"d$i"))
       .toDF("k", "name"), Seq("k"), 4)
-    val plan = spark.sessionState.executePlan(
-      reopened.join(wh.readBucketed("reopen_c"), "k").hint("merge")
+    val plan = fresh.sessionState.executePlan(
+      reopened.join(wh2.readBucketed("reopen_c"), "k").hint("merge")
         .queryExecution.logical).executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"reopened bucketed join must not shuffle:\n$plan")
-    // appends keep working against the re-registered table
-    wh.appendBucketed("reopen_b", Seq((51L, 153.0)).toDF("k", "v"),
-      Seq("k"), 4)
-    assert(wh.readBucketed("reopen_b").count() === 51)
+    // appends keep working against the reopened table
+    wh2.appendBucketed("reopen_b",
+      fresh.range(51, 52).selectExpr("id AS k", "id * 3.0D AS v"), Seq("k"), 4)
+    assert(wh2.readBucketed("reopen_b").count() === 51)
+  }
+
+  test("a bucketed read sees another session's append") {
+    val root = tmpRoot()
+    val wh = new Warehouse(spark, root)
+    wh.appendBucketed("shared_b", (1 to 100).map(i => (i.toLong, i * 2.0))
+      .toDF("k", "v"), Seq("k"), 4)
+    assert(wh.readBucketed("shared_b").count() === 100)
+    val other = spark.newSession()
+    new Warehouse(other, root).appendBucketed("shared_b",
+      other.range(101, 201).selectExpr("id AS k", "id * 2.0D AS v"), Seq("k"), 4)
+    assert(wh.readBucketed("shared_b").count() === 200)
+  }
+
+  test("bucketed append rejects a drifted schema; a rolled-back first append leaves no sidecar") {
+    val root = tmpRoot()
+    val wh = new Warehouse(spark, root)
+    wh.appendBucketed("schema_t", Seq((1L, "a")).toDF("k", "v"), Seq("k"), 4)
+    val e = intercept[IllegalArgumentException] {
+      wh.appendBucketed("schema_t", Seq((2L, "b", 3)).toDF("k", "v", "x"),
+        Seq("k"), 4)
+    }
+    assert(e.getMessage.contains("bucketed table 'schema_t'"))
+    assert(wh.readBucketed("schema_t").as[(Long, String)].collect().toSeq ===
+      Seq((1L, "a")))
+    // a first append whose transaction throws is undone with its sidecars
+    intercept[IllegalStateException] {
+      StoreTxn.transact(spark, root) {
+        wh.paramsSpecValidated("undo_t", Seq("n" -> "3"))
+        wh.appendBucketed("undo_t", Seq((1L, "a")).toDF("k", "v"), Seq("k"), 4)
+        throw new IllegalStateException("ingest failed after the append")
+      }
+    }
+    val left = new java.io.File(s"$root/warehouse").list().filter(_.contains("undo_t"))
+    assert(left.isEmpty, left.mkString(", "))
+    wh.paramsSpecValidated("undo_t", Seq("n" -> "5"))
+    wh.appendBucketed("undo_t", Seq((1L, 2.0, 3)).toDF("k", "x", "y"), Seq("k"), 8)
+    assert(wh.readBucketed("undo_t").as[(Long, Double, Int)].collect().toSeq ===
+      Seq((1L, 2.0, 3)))
   }
 
   test("bucketed append rejects a drifted bucket layout instead of corrupting the spec") {
