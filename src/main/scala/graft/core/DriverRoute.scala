@@ -36,7 +36,7 @@ private[graft] object DriverRoute {
     if (maxRows <= 0) return None
     val cap = math.min(maxRows, Int.MaxValue - 16L).toInt
     val qe = df.queryExecution
-    if (qe.optimizedPlan.isInstanceOf[LocalRelation]) {
+    if (isLocal(df)) {
       val rows = df.collect()
       return if (rows.length <= cap) Some(rows) else None
     }
@@ -61,6 +61,11 @@ private[graft] object DriverRoute {
       if (over) None else Some(kept.iterator.map(toRow).toArray)
     }
   }
+
+  /** Whether `df` optimizes to a local relation: its rows are on the
+    * driver, and reading them starts no job. */
+  def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** `rows` as a frame of `schema` — see [[MaxLocalRows]]. */
   def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.DriverRoute
 import graft.functions.TextFunctions
 
 /** The composed end-to-end curation pipeline for training text — the
@@ -413,7 +414,14 @@ object Pipeline {
     * rides in the commit record itself, so "marker advanced" IS "ingest
     * committed". A crash anywhere mid-ingest rolls back on the next
     * open and a blind retry converges — no external snapshot-restore
-    * discipline, no duplicated signatures. */
+    * discipline, no duplicated signatures.
+    *
+    * SMALL DELTAS: `stage` materializes the ingest's re-read
+    * intermediates, but the exact-dedup survivors (`fresh`) of a batch
+    * within the MinHash driver gate ([[MinhashStore.MaxDriverDocs]]) are
+    * collected into a local relation instead and never go through
+    * `stage`; with the component labels local too, kept and retracted
+    * are driver set algebra and every state write is one task. */
   final class CurationStore(spark: org.apache.spark.sql.SparkSession,
                             root: String, name: String,
                             cfg: CurateConfig = CurateConfig(),
@@ -492,7 +500,11 @@ object Pipeline {
       // dedup winners (store membership means "first ingested", the
       // full-corpus semantics mean "min id"; the contract makes them agree)
       val bounds = batch.agg(min(col(idCol)).cast("long"),
-        max(col(idCol)).cast("long")).head()
+        max(col(idCol)).cast("long"), count(lit(1)) - count(col(idCol))).head()
+      // a null id has no place in the id order the contract rests on
+      require(bounds.getLong(2) == 0,
+        s"CurationStore '$name': ${bounds.getLong(2)} batch rows have a " +
+          s"null id ('$idCol') — every ingested document needs an id")
       if (bounds.isNullAt(0)) // empty batch: nothing to do, state untouched
         return CurateDelta(spark.emptyDataset[(Long, String)]
           .toDF("id", "text"), spark.emptyDataset[Long].toDF("id"),
@@ -567,11 +579,17 @@ object Pipeline {
       val storeExact =
         if (wh.exists(exactTable)) Some(wh.readBucketed(exactTable))
         else None
-      val fresh = stage(storeExact match {
+      val freshPlan = storeExact match {
         case Some(st) =>
           batchWinners.join(st, Seq("__h1", "__h2"), "left_anti")
         case None => batchWinners
-      })
+      }
+      // a delta within the MinHash driver gate is collected — the
+      // documents that route collects anyway, in one job like the
+      // checkpoint it replaces — and every later step reads it locally
+      val fresh = DriverRoute.collect(freshPlan, maxDriverDocs)
+        .map(DriverRoute.local(spark, _, freshPlan.schema))
+        .getOrElse(stage(freshPlan))
       val survivors = fresh.select("id", "text")
       // near-dup pairs of the batch survivors vs everything curated —
       // the embedded store's ingest JOINS this transaction (same root).
@@ -583,20 +601,42 @@ object Pipeline {
       val (pairs, mhAppend) =
         mh.ingestParts(survivors, "id", "text", maxDriverDocs)
       val (delta, _) = graft.core.Par.both({
-      val (prevLabels, oldSurvivors) = readState(survivors.schema("id"))
+      val (prevRead, oldSurvivors) = readState(survivors.schema("id"))
+      // the labels collect of the components' driver fold, made here so
+      // the delta algebra below reads the same local rows
+      val prevLabels = DriverRoute.collect(prevRead, maxDriverEdges)
+        .map(DriverRoute.local(spark, _, LabelsSchema)).getOrElse(prevRead)
       // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
         "id_a", "id_b", maxDriverEdges = maxDriverEdges)
-      val nowDropped = labels.filter(col("comp") < col("id")).select("id")
-      val prevDropped = prevLabels.filter(col("comp") < col("id")).select("id")
       val (survDir, survRel) = survivorsLoc
       // deltas materialized BEFORE the state writes below — their plans
-      // read the state paths this ingest is about to replace/extend
-      val keptPlan = survivors
-        .join(nowDropped, Seq("id"), "left_anti")
-      val retractedPlan = oldSurvivors
-        .join(nowDropped, Seq("id"), "left_semi")
-        .join(prevDropped, Seq("id"), "left_anti")
+      // read the state paths this ingest is about to replace/extend.
+      // With survivors and both labelings local, they are set algebra on
+      // the driver: the newly dropped ids (now − previously dropped) that
+      // are in the batch leave `kept` (a filtered local relation, no
+      // job); the old ones are the retractions, read off the survivors
+      // log only when there are any (one job). Otherwise the joins run
+      // and checkpoint, the two side by side.
+      def deltas: (DataFrame, DataFrame) =
+        if (Seq(survivors, labels, prevLabels).forall(DriverRoute.isLocal)) {
+          def dropped(l: DataFrame) =
+            l.filter(col("comp") < col("id")).select("id").as[Long].collect().toSet
+          val (old, inBatch) = (dropped(labels) -- dropped(prevLabels))
+            .partition(_ < bounds.getLong(0))
+          def in(ids: Set[Long]) =
+            coalesce(col("id").cast("long").isInCollection(ids), lit(false))
+          (survivors.filter(!in(inBatch)), DriverRoute.local(spark,
+            if (old.isEmpty) Nil else oldSurvivors.filter(in(old)).collect().toSeq,
+            oldSurvivors.schema))
+        } else {
+          val nowDropped = labels.filter(col("comp") < col("id")).select("id")
+          val prevDropped = prevLabels.filter(col("comp") < col("id")).select("id")
+          graft.core.Par.both(
+            survivors.join(nowDropped, Seq("id"), "left_anti").localCheckpoint(true),
+            oldSurvivors.join(nowDropped, Seq("id"), "left_semi")
+              .join(prevDropped, Seq("id"), "left_anti").localCheckpoint(true))
+        }
       // the ledger must materialize BEFORE the state writes too: the
       // store-dup arm reads the pre-append exact table, the near-dup arm
       // this ingest's labels — both replaced by the writes below
@@ -646,13 +686,11 @@ object Pipeline {
             .unionByName(inBatchDup).unionByName(storeDup)
             .unionByName(nearDup))
         }
-      // the three delta materializations read only pre-write state and
-      // staged frames — independent of each other (and of the signature
-      // appends on the other leg), so they overlap (guide: fill idle capacity
+      // the delta materializations read only pre-write state and staged
+      // frames — independent of each other (and of the signature appends
+      // on the other leg), so they overlap (guide: fill idle capacity
       // with concurrent independent jobs)
-      val ((kept, retracted), audit) = graft.core.Par.both(
-        graft.core.Par.both(keptPlan.localCheckpoint(true),
-          retractedPlan.localCheckpoint(true)),
+      val ((kept, retracted), audit) = graft.core.Par.both(deltas,
         auditPlan.map(_.localCheckpoint(true)))
       beforeCommit(CurateDelta(kept, retracted, audit))
       // labels are overwrite-shaped → a fresh versioned directory the
@@ -671,13 +709,17 @@ object Pipeline {
       // the three state writes target disjoint directories and read
       // staged frames — overlap them (Par rationale: each is a
       // sub-second fixed-cost write; txn registration happens on THIS
-      // thread before the writes start)
+      // thread before the writes start). A local frame is written by one
+      // task, as one file.
+      def oneFileIfLocal(df: DataFrame) =
+        if (DriverRoute.isLocal(df)) df.coalesce(1) else df
       val labelsDir = txn.stateVersionDir(labelsState)
       txn.touchPath(survRel)
       graft.core.Par.both(
-        labels.write.parquet(labelsDir),
+        oneFileIfLocal(labels).write.parquet(labelsDir),
         graft.core.Par.both(
-          survivors.select("id").write.mode("append").parquet(survDir),
+          oneFileIfLocal(survivors.select("id")).write.mode("append")
+            .parquet(survDir),
           wh.appendBucketed(exactTable, freshOut,
             Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets)))
       CurateDelta(kept, retracted, audit)

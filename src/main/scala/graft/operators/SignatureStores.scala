@@ -312,20 +312,24 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     wh.paramsSpecValidated(sigTable, sigParams)
     // batch staging materialized ONCE as the combined (id, mins, hset)
     // frame — the expensive tokenize→shingle→hash pass runs a single
-    // time (the old per-product checkpoints each re-ran it); banding is
-    // a cheap struct explode over the staged minima and the sets a
-    // column select, so every downstream consumer (either pair route,
-    // both store appends) reads the one checkpoint. The mark is lazy:
-    // the driver route's bounded collect is the job that fills it; over
-    // the bound that job is cancelled, and the Spark route's candidate
-    // checkpoint fills the partitions it left. Batch-sized, ids+hashes.
+    // time (the old per-product checkpoints each re-ran it). The mark is
+    // lazy: the driver route's bounded collect is the job that fills it,
+    // and its rows then ARE the banded and set frames — local relations
+    // the appends write from one task each, no exchange. Over the bound
+    // that job is cancelled; banding is a cheap struct explode over the
+    // staged minima and the sets a column select, so the Spark route's
+    // candidate checkpoint fills the partitions it left and both appends
+    // read the one checkpoint. Batch-sized, ids+hashes.
     val combined = Dedup.minhashCombined(batch, idCol, textCol,
       cfg.shingleN, cfg.bands, cfg.rowsPerBand, cfg.seed)
       .localCheckpoint(false)
-    val banded = Dedup.bandedFromCombined(combined, cfg.bands,
-      cfg.rowsPerBand)
-    val sets = combined.select(col("id"), col("hset"))
-    val pairs = graft.core.DriverRoute.collect(combined, maxDriverDocs)
+    val collected = graft.core.DriverRoute.collect(combined, maxDriverDocs)
+    val (banded, sets) = collected match {
+      case Some(rows) => localProducts(batch.sparkSession, rows, combined.schema)
+      case None => (Dedup.bandedFromCombined(combined, cfg.bands,
+        cfg.rowsPerBand), combined.select(col("id"), col("hset")))
+    }
+    val pairs = collected
       .flatMap(driverPairs(batch.sparkSession, _, maxDriverDocs))
       .getOrElse(sparkPairs(banded, sets))
     (pairs, () => {
@@ -335,6 +339,31 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
         wh.appendBucketed(setTable, sets, Seq("id"), cfg.nStoreBuckets))
       ()
     })
+  }
+
+  /** A document's (band, bucket) keys from its minima, as
+    * [[Dedup.bandedFromCombined]] bands them: band b's bucket is minima
+    * b·rowsPerBand until (b+1)·rowsPerBand joined by "_". */
+  private def bandKeys(mins: Seq[Long]): Iterator[(Int, String)] =
+    (0 until cfg.bands).iterator.map(b => (b,
+      (b * cfg.rowsPerBand until (b + 1) * cfg.rowsPerBand)
+        .map(mins(_).toString).mkString("_")))
+
+  /** The (id, band, bucket) and (id, hset) frames of collected
+    * (id, mins, hset) rows, typed like the Spark route's. */
+  private def localProducts(spark: org.apache.spark.sql.SparkSession,
+                            rows: Array[org.apache.spark.sql.Row],
+                            schema: org.apache.spark.sql.types.StructType)
+      : (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val banded = rows.toSeq.flatMap(r => bandKeys(r.getSeq[Long](1))
+      .map { case (b, bucket) => Row(r.get(0), b, bucket) })
+    (graft.core.DriverRoute.local(spark, banded, StructType(Seq(schema("id"),
+        StructField("band", IntegerType, nullable = false),
+        StructField("bucket", StringType, nullable = false)))),
+      graft.core.DriverRoute.local(spark, rows.toSeq.map(r => Row(r.get(0), r.get(2))),
+        StructType(Seq(schema("id"), schema("hset")))))
   }
 
   /** The pairs of [[sparkPairs]] computed in plain Scala from the
@@ -357,14 +386,8 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     val docs = batch.filter(!_.isNullAt(0))
     val newIds = docs.iterator.map(id).toSet
     val members = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Long]]
-    docs.foreach { d =>
-      val mins = d.getSeq[Long](1)
-      (0 until cfg.bands).foreach { b =>
-        val bucket = (b * cfg.rowsPerBand until (b + 1) * cfg.rowsPerBand)
-          .map(mins(_).toString).mkString("_")
-        members.getOrElseUpdate((b, bucket), mutable.ArrayBuffer.empty) += id(d)
-      }
-    }
+    docs.foreach(d => bandKeys(d.getSeq[Long](1)).foreach(k =>
+      members.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += id(d)))
     if (members.nonEmpty && wh.exists(sigTable)) {
       // a full scan of the signature table under a key-set filter (the
       // table's (band, bucket) bucketing cannot prune on a key set). A

@@ -308,11 +308,17 @@ final class Warehouse(spark: SparkSession, root0: String) {
     // over more tasks than repartition(nBuckets), whose id-value hash
     // collisions put several buckets on one writer at small bucket
     // counts. With a partition column the key is (partition dir, bucket id).
+    // A local relation (a small delta already on the driver) needs no
+    // exchange: ONE task writes it, and the writer's required ordering
+    // sorts that task's rows by (partition dir, bucket id), so it too
+    // emits at most nBuckets files per partition — one job, no shuffle.
     val session = df.sparkSession
-    val aligned = df.repartition(
-      math.max(nBuckets, session.sessionState.conf.numShufflePartitions),
-      partitionCol.map(col).toSeq :+
-        pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
+    val aligned =
+      if (graft.core.DriverRoute.isLocal(df)) df.coalesce(1)
+      else df.repartition(
+        math.max(nBuckets, session.sessionState.conf.numShufflePartitions),
+        partitionCol.map(col).toSeq :+
+          pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
     // DataFrameWriter takes a bucket spec only for a catalog table, so
     // the file-source write plan is built directly
     session.sessionState.executePlan(

@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class DecontaminationSpec extends SparkSpec {
+class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val evalSet = Seq("the quick brown fox jumps over").toDF("text")
@@ -77,22 +79,24 @@ class DecontaminationSpec extends SparkSpec {
     val checked = idx.check(ev, "text")
     assert(checked.as[Long].collect().toSeq === Seq(7L),
       "pruned check must still flag exactly the overlapping doc")
-    // the physical plan carries the partition filter, and the file
-    // index's selected-path count confirms whole partitions were
-    // skipped (scan nodes sit under AQE, so assert on the plan string)
+    // the physical plan carries the partition filter, and the postings
+    // scan's partitions-read metric confirms whole partitions were
+    // skipped
     checked.collect()
-    val plan = checked.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [gpfx"),
+    val plan = checked.queryExecution.executedPlan
+    assert(plan.toString.contains("PartitionFilters: [gpfx"),
       s"postings scan must filter on the gram-prefix partition column:\n$plan")
-    val selectedPaths =
-      "InMemoryFileIndex\\((\\d+) paths\\)".r.findAllMatchIn(plan)
-        .map(_.group(1).toInt).min
+    val partitionsRead = collect(plan) {
+      case scan: FileSourceScanExec if scan.relation.partitionSchema.nonEmpty =>
+        scan.metrics("numPartitions").value
+    }
     val totalPartitions = Option(
         new java.io.File(s"$root/warehouse/t_dc_gram").listFiles()).get
       .count(_.getName.startsWith("gpfx="))
-    assert(selectedPaths <= 4 && totalPartitions > 32,
+    assert(partitionsRead.nonEmpty && partitionsRead.forall(n => n >= 1 && n <= 4) &&
+      totalPartitions > 32,
       s"4-gram eval must read ≤4 of $totalPartitions partition dirs, " +
-        s"read $selectedPaths")
+        s"read $partitionsRead")
   }
 
   test("gram index: a partitioned store reopens in a fresh session") {

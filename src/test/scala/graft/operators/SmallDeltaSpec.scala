@@ -147,27 +147,50 @@ class SmallDeltaSpec extends SparkSpec {
       c.mkString(" "))
   }
 
+  /** The rows of a curation store's three bucketed tables (exact hashes,
+    * MinHash signatures, MinHash sets), each sorted. */
+  private def storeTables(st: Pipeline.CurationStore): Seq[Seq[String]] = {
+    val wh = new Warehouse(spark, st.storeRoot)
+    Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set").map(t =>
+      if (wh.exists(t)) wh.readBucketed(t).collect().map(_.toString).toSeq.sorted
+      else Nil)
+  }
+
   test("curation store: three ingests keep, retract and store alike on both routes") {
     for (longIds <- Seq(true, false)) {
       val gen = sample(genBatches, if (longIds) 21L else 22L).filter(_.nonEmpty)
       val batches = Seq(bridgeA +: bridgeB +: gen(0), gen(1), bridgeC +: gen(2))
       val stores = Seq(0L, 1L).map(_ => new Pipeline.CurationStore(spark,
         freshRoot(), "t", curateCfg))
+      def ingest(st: Pipeline.CurationStore, gate: Long, b: DataFrame) =
+        if (gate == 0) st.ingestGated(b, "id", "text", _ => (), false, 0, 0)
+        else st.ingest(b, "id", "text")
       var next = 0
       var retracted = 0
       batches.foreach { texts =>
         val b = batch(texts, next, longIds)
         next += texts.size
         val Seq(spark0, driver) = stores.zip(Seq(0L, 1L)).map { case (st, gate) =>
-          val d = if (gate == 0) st.ingestGated(b, "id", "text", _ => (), false, 0, 0)
-            else st.ingest(b, "id", "text")
+          val d = ingest(st, gate, b)
           (d.kept.select(col("id").cast("long")).as[Long].collect().sorted.toSeq,
             d.retracted.select(col("id").cast("long")).as[Long].collect().sorted.toSeq)
         }
         assert(driver === spark0, s"long ids $longIds, batch from $next")
+        val Seq(tables0, tables1) = stores.map(storeTables)
+        assert(tables0.forall(_.nonEmpty) && tables1 === tables0,
+          s"long ids $longIds, batch from $next")
         retracted += spark0._2.size
       }
       assert(retracted > 0, "the bridging document retracts a kept one")
+      // a null id is rejected up front on both routes, the store untouched
+      val withNull = Seq[(Option[Long], String)]((Some(next.toLong), bridgeA),
+        (None, bridgeB)).toDF("id", "text")
+        .select(col("id").cast(if (longIds) "long" else "int"), col("text"))
+      stores.zip(Seq(0L, 1L)).foreach { case (st, gate) =>
+        val e = intercept[IllegalArgumentException](ingest(st, gate, withNull))
+        assert(e.getMessage.contains("1 batch rows have a null id"), e.getMessage)
+        assert(st.maxIngestedId === Some(next - 1L))
+      }
       val idField = StructField("id", if (longIds) LongType else IntegerType)
       val Seq(s0, s1) = stores.map { st =>
         val (labels, survivors) = st.readState(idField)
@@ -191,6 +214,23 @@ class SmallDeltaSpec extends SparkSpec {
       assert(survivors.select(col("id").cast("long")).as[Long].collect().sorted.toSeq ===
         Seq(0L, 1L, 2L))
     }
+  }
+
+  test("a warm small curation delta with no retraction runs 14 jobs") {
+    val store = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
+    val texts = sample(genBatches, 5L).flatten
+    store.ingest(batch(texts, 0, longIds = true), "id", "text")
+    // near-dups of stored documents (dropped, not retracting), copies
+    // and two documents of new words
+    def delta(from: Int, word: String) = batch(texts.take(6).map(_ + s" $word") ++
+      texts.slice(6, 9) ++ Seq(1, 2).map(k => (0 until 8).map(j => s"$word$k$j").mkString(" ")),
+      from, longIds = true)
+    store.ingest(delta(texts.size, "hotel"), "id", "text")
+    val (d, ran) = Jobs.during(spark)(
+      store.ingest(delta(texts.size + 11, "india"), "id", "text"))
+    val kept = d.kept.select("id").as[Long].collect()
+    assert(kept.length >= 2 && kept.length < 11 && d.retracted.isEmpty)
+    assert(ran.jobs.size === 14, ran.jobs.mkString("\n---\n"))
   }
 
   test("a small delta's near-dup algebra runs in at most 3 + 2 jobs, no shuffle") {

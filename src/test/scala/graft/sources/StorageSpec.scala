@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{Jobs, SparkSpec}
 
 class StorageSpec extends SparkSpec {
   import spark.implicits._
@@ -181,6 +181,36 @@ class StorageSpec extends SparkSpec {
     assert(!plan.contains("Exchange hashpartitioning"),
       s"bucketed join must not shuffle:\n$plan")
     assert(joined.count() === 1000)
+  }
+
+  test("a local relation is appended by one task: no exchange, at most nBuckets files per partition") {
+    val root = tmpRoot()
+    val wh = new Warehouse(spark, root)
+    val local = (1 to 500).map(i => (i.toLong, i % 3, s"v$i")).toDF("k", "p", "v")
+    assert(graft.core.DriverRoute.isLocal(local))
+    wh.appendBucketed("dist_b", spark.range(1, 501).selectExpr("id AS k", "id * 2 AS w"),
+      Seq("k"), 8)
+    for ((table, part) <- Seq("local_b" -> None, "local_pb" -> Some("p"))) {
+      val (_, ran) = Jobs.during(spark)(
+        wh.appendBucketed(table, local, Seq("k"), 8, part))
+      assert(ran.jobs.size === 1 && ran.shuffleStages === 0,
+        s"$table:\n${ran.jobs.mkString("\n---\n")}")
+      val dir = new java.io.File(s"$root/warehouse/$table")
+      val partDirs = part.fold(Seq(dir))(_ => dir.listFiles().toSeq.filter(_.isDirectory))
+      assert(partDirs.size === part.fold(1)(_ => 3))
+      partDirs.foreach { d =>
+        val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files >= 1 && files <= 8, s"$table: $files files in ${d.getName}")
+      }
+      // every row sits in its bucket: the join against a table the
+      // exchange route wrote stays exchange-free and finds every key
+      val joined = wh.readBucketed(table).hint("merge")
+        .join(wh.readBucketed("dist_b"), "k")
+      val plan = spark.sessionState.executePlan(
+        joined.queryExecution.logical).executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$table join must not shuffle:\n$plan")
+      assert(joined.count() === 500)
+    }
   }
 
   test("bucketed tables reopen in a fresh session from their files and sidecars") {
