@@ -31,8 +31,10 @@ private[graft] object DriverRoute {
     * already running — not every partition's — before the caller falls
     * back, and never counts more than those against
     * `spark.driver.maxResultSize`. The job runs as a SQL execution of
-    * `df`'s own plan, so AQE stages and listeners see it like any action. */
-  def collect(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    * `df`'s own plan named `what`, so AQE stages and listeners see it
+    * like any action. */
+  def collect(df: DataFrame, maxRows: Long,
+              what: String = "DriverRoute.collect"): Option[Array[Row]] = {
     if (maxRows <= 0) return None
     val cap = math.min(maxRows, Int.MaxValue - 16L).toInt
     val qe = df.queryExecution
@@ -41,7 +43,7 @@ private[graft] object DriverRoute {
       return if (rows.length <= cap) Some(rows) else None
     }
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
-    SQLExecution.withNewExecutionId(qe, Some("DriverRoute.collect")) {
+    SQLExecution.withNewExecutionId(qe, Some(what)) {
       val sc = df.sparkSession.sparkContext
       val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       @volatile var over = false
@@ -66,6 +68,21 @@ private[graft] object DriverRoute {
     * driver, and reading them starts no job. */
   def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Whether `maxRows > 0` and `df` optimizes to a local relation of at
+    * most `maxRows` rows. */
+  def isLocal(df: DataFrame, maxRows: Long): Boolean = maxRows > 0 &&
+    (df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.length <= maxRows
+      case _ => false
+    })
+
+  /** A frame that [[isLocal]] as a local relation of its rows: plans over
+    * the result start from the rows instead of re-evaluating, on the
+    * driver, every projection the optimizer folded into them. The local
+    * counterpart of a checkpoint; it starts no job. */
+  def settle(df: DataFrame): DataFrame =
+    local(df.sparkSession, df.collect().toSeq, df.schema)
 
   /** `rows` as a frame of `schema` — see [[MaxLocalRows]]. */
   def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =

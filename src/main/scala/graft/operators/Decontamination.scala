@@ -38,6 +38,39 @@ object Decontamination {
         maxEvalGrams), Seq("__g"), "left_semi")
       .select(idCol).distinct()
 
+  /** (idCol, __g): each document's word n-gram array, by the tokens →
+    * ngrams projection of [[contaminatedIds]] — for the driver-side test
+    * a small curation delta makes against [[evalGramSet]].
+    * [[contaminatedIds]] keeps the array inside its explode: exploding
+    * this frame's `__g` attribute instead lets Catalyst infer a
+    * `size(__g) > 0` filter below the projections, with the tokenizer
+    * inlined into every gram slice (measured 4× slower at 8,000
+    * documents). */
+  private[operators] def docGrams(docs: DataFrame, idCol: String,
+                                  textCol: String, n: Int): DataFrame =
+    docs
+      .select(col(idCol), tokens(col(textCol)).as("__t"))
+      .select(col(idCol), ngrams(col("__t"), n).as("__g"))
+
+  /** The distinct eval n-grams on the driver, for a caller that tests
+    * documents against them in plain Scala. One bounded collect; an eval
+    * set over `maxEvalGrams` fails as the broadcast guard does. */
+  private[graft] def evalGramSet(evalTexts: DataFrame, evalTextCol: String,
+                                     n: Int,
+                                     maxEvalGrams: Int = DefaultMaxEvalGrams)
+      : Set[String] = {
+    val grams = graft.core.DriverRoute.collect(
+      evalGrams(evalTexts, evalTextCol, n), maxEvalGrams)
+    requireEvalGrams(grams.fold(maxEvalGrams + 1L)(_.length.toLong), maxEvalGrams)
+    grams.get.iterator.map(_.getString(0)).toSet
+  }
+
+  private def requireEvalGrams(c: Long, maxEvalGrams: Int): Unit =
+    require(c <= maxEvalGrams,
+      s"eval gram set ($c rows) exceeds maxEvalGrams=$maxEvalGrams — a " +
+        "broadcast decontamination is for benchmark-sized eval sets; " +
+        "route corpus-sized reference sets through GramIndex")
+
   /** Default ceiling for a broadcast eval-gram set: 5M grams ≈ 200 MB
     * of strings — comfortably broadcastable, far above any benchmark
     * suite. */
@@ -75,10 +108,7 @@ object Decontamination {
       guardMemo.put(key, n)
       n
     }
-    require(c <= maxEvalGrams,
-      s"eval gram set ($c rows) exceeds maxEvalGrams=$maxEvalGrams — a " +
-        "broadcast decontamination is for benchmark-sized eval sets; " +
-        "route corpus-sized reference sets through GramIndex")
+    requireEvalGrams(c, maxEvalGrams)
     broadcast(side)
   }
 

@@ -46,9 +46,9 @@ object Dedup {
   }
 
   /** The 128-bit grouping key [[exact]] dedups on — one definition so
-    * [[exact]] and [[exactLosers]] can never disagree on what "the same
-    * value" means. */
-  private def hashPair(df: DataFrame, valueCol: String): DataFrame = df
+    * [[exact]], [[exactLosers]] and the curation store's exact step (on
+    * either route) can never disagree on what "the same value" means. */
+  private[operators] def hashPair(df: DataFrame, valueCol: String): DataFrame = df
     .withColumn("__h1", xxhash64(col(valueCol)))
     .withColumn("__h2", xxhash64(lit(0x9e3779b9L), col(valueCol)))
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.core.DriverRoute
 import graft.functions.TextFunctions
 
@@ -67,6 +67,12 @@ object Pipeline {
   private def rPass(cfg: CurateConfig) =
     coalesce(col("__rep") <= cfg.maxRepetition, lit(false))
 
+  /** `stage` for a frame that is not local; a local one is settled
+    * instead ([[DriverRoute.settle]] — its rows, no job). */
+  private def stageOrSettle(stage: DataFrame => DataFrame)(df: DataFrame)
+      : DataFrame =
+    if (DriverRoute.isLocal(df)) DriverRoute.settle(df) else stage(df)
+
   /** Thresholds and sketch parameters for [[curate]]. Defaults match the
     * oracle-verified per-stage queries; tune per corpus. */
   final case class CurateConfig(
@@ -115,7 +121,7 @@ object Pipeline {
     * scored frame (pass-flag accounting), and the ids the
     * decontamination stage removed outright (lazy plans — they cost
     * nothing unless acted on). */
-  private[operators] final case class PreFiltered(decon: DataFrame,
+  private[graft] final case class PreFiltered(decon: DataFrame,
                                                   scored: DataFrame,
                                                   deconDropped: DataFrame)
 
@@ -133,11 +139,25 @@ object Pipeline {
     * staged scored frame also serves the redaction input and the
     * survivor accounting, so the expensive per-row scoring runs exactly
     * once per audited run. Unaudited runs skip both stagings (the arms
-    * are never acted on — staging would be pure cost). */
-  private[operators] def preFilter(docs: DataFrame, idCol: String,
+    * are never acted on — staging would be pure cost).
+    *
+    * A LOCAL input of at most `maxDriverDocs` rows (a small curation
+    * delta's collected batch; 0 forces the Spark plans) is already
+    * on the driver: the same Column program folds into local relations
+    * (Catalyst's ConvertToLocalRelation evaluates Project/Filter over a
+    * LocalRelation on the driver), so there is no widening and no
+    * staging — each frame the Spark route would stage is settled
+    * ([[DriverRoute.settle]]) and nothing starts a job. With
+    * `evalGrams` (the eval n-grams on the driver, [[Decontamination.evalGramSet]])
+    * the drop-policy decontamination of a local input is a driver set
+    * test over the same `ngrams(tokens(text))` projection; surgical
+    * decontamination keeps its plans. */
+  private[graft] def preFilter(docs: DataFrame, idCol: String,
       textCol: String, evalTexts: Option[DataFrame], evalTextCol: String,
       cfg: CurateConfig, stage: DataFrame => DataFrame,
-      stageForAudit: Boolean = false)
+      stageForAudit: Boolean = false,
+      evalGrams: Option[() => Set[String]] = None,
+      maxDriverDocs: Long = MinhashStore.MaxDriverPreFilterDocs)
       : PreFiltered = {
     // the pipeline's per-row work (tokenize → score → redact → excise)
     // is the expensive part, and a SMALL corpus often arrives as one
@@ -160,13 +180,16 @@ object Pipeline {
     // materialize the lot to executor memory/disk where the stage
     // pipeline streams. Above the cap, keep the layout: the per-row
     // work is slower on few cores but never explodes storage.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val srcParts = docs.rdd.getNumPartitions
-    val estBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val widened = if (srcParts < math.min(par, 32) &&
-        estBytes <= BigInt(256L << 20))
-      docs.repartition(par).localCheckpoint(true)
-    else docs
+    val local = DriverRoute.isLocal(docs, maxDriverDocs)
+    val widened = if (local) docs else {
+      val par = docs.sparkSession.sparkContext.defaultParallelism
+      val srcParts = docs.rdd.getNumPartitions
+      val estBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (srcParts < math.min(par, 32) && estBytes <= BigInt(256L << 20))
+        docs.repartition(par).localCheckpoint(true)
+      else docs
+    }
+    val staged = if (local) stageOrSettle(stage) _ else stage
     val base = widened.select(col(idCol).as("id"), col(textCol).as("text"))
     // one tokenization feeds both scores (lambda-capture rule: tokens
     // bound to a column first, scores staged off it)
@@ -181,7 +204,7 @@ object Pipeline {
           .as("__q"),
         TextFunctions.duplicateNgramFraction(col("__toks"), cfg.repN)
           .as("__rep"))
-    val scored = if (stageForAudit) stage(scoredRaw) else scoredRaw
+    val scored = if (stageForAudit) staged(scoredRaw) else scoredRaw
     val redactedRaw = scored
       .filter(qPass(cfg) && rPass(cfg))
       .select(col("id"), TextFunctions.redactPii(col("text")).as("text"))
@@ -189,7 +212,7 @@ object Pipeline {
     // of the contamination join and the anti-join left side) — stage it
     // first or the tokenize→score→redact chain runs twice per action
     val redacted =
-      if (evalTexts.isDefined) stage(redactedRaw) else redactedRaw
+      if (evalTexts.isDefined || local) staged(redactedRaw) else redactedRaw
     val (decon, deconDropped) = evalTexts match {
       case Some(ev) if cfg.surgicalDecon =>
         // minSpan = n: every shared gram is excised, so the REMOVED text
@@ -200,7 +223,7 @@ object Pipeline {
         // island-merge window) is read three times below — spanIds'
         // semi-join, the excision span side, spanIds' anti-join — so
         // stage it like `redacted`, or it re-executes per reference
-        val spans = stage(Decontamination.contaminationSpans(redacted, "id",
+        val spans = staged(Decontamination.contaminationSpans(redacted, "id",
           "text", ev, evalTextCol, cfg.deconN, minSpan = cfg.deconN))
         val spanIds = spans.select("id").distinct()
         val excised = Dedup.exciseSpans(
@@ -214,6 +237,14 @@ object Pipeline {
         val dropped = spanIds.join(excised.select("id"), Seq("id"), "left_anti")
         (redacted.join(spanIds, Seq("id"), "left_anti")
           .unionByName(excised), dropped)
+      case Some(_) if local && evalGrams.isDefined && DriverRoute.isLocal(redacted) =>
+        val grams = evalGrams.get()
+        val hit = Decontamination.docGrams(redacted, "id", "text", cfg.deconN)
+          .collect().collect {
+            case r if !r.isNullAt(1) && r.getSeq[String](1).exists(grams) => r.get(0)
+          }
+        val flagged = coalesce(col("id").isInCollection(hit), lit(false))
+        (redacted.filter(!flagged), redacted.filter(flagged).select("id"))
       case Some(ev) =>
         // audited runs read the flagged ids TWICE (the anti-join here
         // and the ledger's decontaminate arm) — stage the ids-only
@@ -221,7 +252,7 @@ object Pipeline {
         val contaminatedRaw = Decontamination.contaminatedIds(redacted,
           "id", "text", ev, evalTextCol, cfg.deconN)
         val contaminated =
-          if (stageForAudit) stage(contaminatedRaw) else contaminatedRaw
+          if (stageForAudit) staged(contaminatedRaw) else contaminatedRaw
         (redacted.join(contaminated, Seq("id"), "left_anti"), contaminated)
       case None => (redacted, redactedRaw.select("id").limit(0))
     }
@@ -385,6 +416,10 @@ object Pipeline {
   final case class CurateDelta(kept: DataFrame, retracted: DataFrame,
                                audit: Option[DataFrame] = None)
 
+  /** [[CurationStore]]'s exact step on the driver — see its `exactOnDriver`. */
+  private final case class DriverExact(window: Option[DataFrame],
+                                       store: Option[DataFrame], fresh: DataFrame)
+
   /** Incremental curation — the production form of [[curate]]: per-batch
     * ingest against persisted state instead of a full-corpus recompute.
     * State under `root` (all ids + hashes + labels, never raw text
@@ -417,11 +452,22 @@ object Pipeline {
     * discipline, no duplicated signatures.
     *
     * SMALL DELTAS: `stage` materializes the ingest's re-read
-    * intermediates, but the exact-dedup survivors (`fresh`) of a batch
-    * within the MinHash driver gate ([[MinhashStore.MaxDriverDocs]]) are
-    * collected into a local relation instead and never go through
-    * `stage`; with the component labels local too, kept and retracted
-    * are driver set algebra and every state write is one task. */
+    * intermediates, but a batch within the pre-filter's driver gate
+    * ([[MinhashStore.MaxDriverPreFilterDocs]]) is one driver program. One bounded
+    * collect brings the batch's (id, text) rows to the driver; the id
+    * bounds come from those rows; the pre-filter's Column program folds
+    * over them with no job; decontamination tests each document's
+    * n-grams against the eval n-grams this store collects once; the
+    * in-batch exact winner is a driver group-by on the hash pair, and
+    * store membership one bounded read of the exact table's rows whose
+    * `__h1` is in the batch. The survivors are then local, so the
+    * MinHash staging folds too. With the component labels local as
+    * well, kept and retracted are driver set algebra and every state
+    * write is one task. Nothing local goes through `stage`. Over that
+    * gate the collect cancels itself, at gate 0 it is not made, and
+    * either way the Spark plans run as before up to the exact-dedup
+    * survivors, which a batch within [[MinhashStore.MaxDriverDocs]]
+    * collects. */
   final class CurationStore(spark: org.apache.spark.sql.SparkSession,
                             root: String, name: String,
                             cfg: CurateConfig = CurateConfig(),
@@ -456,6 +502,10 @@ object Pipeline {
         case None => (survivorsPath, s"state/${name}_survivors")
       }
     private val maxIdKey = s"${name}_maxid"
+    // the eval n-grams on the driver for a local delta's decontamination,
+    // collected once per store: eval texts are static input
+    private lazy val evalGramSet: Set[String] =
+      Decontamination.evalGramSet(evalTexts.get, evalTextCol, cfg.deconN)
 
     /** Highest id any COMMITTED ingest has seen (None before the first).
       * The marker lives in the transaction's commit record, so it is
@@ -496,16 +546,37 @@ object Pipeline {
       // orphans, and must not trip the no-commit-record check on a
       // blind retry
       graft.sources.StoreTxn.recoverIfIdle(spark, root)
+      // a batch within the pre-filter's driver gate is collected once —
+      // the columns the ingest reads — and every step up to the MinHash
+      // store reads works on that local relation; over the gate the
+      // collect cancels itself and the Spark plans below run unchanged
+      val needed = batch.select(
+        (Seq(idCol, textCol) ++ authority.map(_.keyCol)).distinct.map(col): _*)
+      val batchRows = DriverRoute.collect(needed,
+        math.min(maxDriverDocs, MinhashStore.MaxDriverPreFilterDocs),
+        "curation.ingest/batch")
+      val onDriver = batchRows.isDefined
+      val input = batchRows.map(DriverRoute.local(spark, _, needed.schema))
+        .getOrElse(batch)
       // id-monotonicity guard — a violation would silently flip exact-
       // dedup winners (store membership means "first ingested", the
       // full-corpus semantics mean "min id"; the contract makes them agree)
-      val bounds = batch.agg(min(col(idCol)).cast("long"),
-        max(col(idCol)).cast("long"), count(lit(1)) - count(col(idCol))).head()
+      val (minId, maxId, nullIds) = batchRows match {
+        case Some(rows) =>
+          val ids = rows.iterator.filterNot(_.isNullAt(0))
+            .map(_.getAs[Number](0).longValue).toSeq
+          (ids.minOption, ids.maxOption, rows.count(_.isNullAt(0)).toLong)
+        case None =>
+          val b = batch.agg(min(col(idCol)).cast("long"),
+            max(col(idCol)).cast("long"), count(lit(1)) - count(col(idCol))).head()
+          (Option.when(!b.isNullAt(0))(b.getLong(0)),
+            Option.when(!b.isNullAt(1))(b.getLong(1)), b.getLong(2))
+      }
       // a null id has no place in the id order the contract rests on
-      require(bounds.getLong(2) == 0,
-        s"CurationStore '$name': ${bounds.getLong(2)} batch rows have a " +
+      require(nullIds == 0,
+        s"CurationStore '$name': $nullIds batch rows have a " +
           s"null id ('$idCol') — every ingested document needs an id")
-      if (bounds.isNullAt(0)) // empty batch: nothing to do, state untouched
+      if (minId.isEmpty) // empty batch: nothing to do, state untouched
         return CurateDelta(spark.emptyDataset[(Long, String)]
           .toDF("id", "text"), spark.emptyDataset[Long].toDF("id"),
           if (withAudit) Some(spark.emptyDataset[(Long, String, Option[Long])]
@@ -532,26 +603,36 @@ object Pipeline {
             "under a fresh root (or restore this one from snapshot)")
         Long.MinValue
       }
-      require(bounds.getLong(0) > prevMax,
+      require(minId.get > prevMax,
         s"batch ids must exceed all previously ingested ids " +
-          s"(batch min ${bounds.getLong(0)} <= store max $prevMax)")
+          s"(batch min ${minId.get} <= store max $prevMax)")
 
       // wide-string scans all execute inside the transaction's staged
       // materializations — tighten scan sizing for the call, restore after
       graft.core.WideScan.withScanSizing(spark) {
       graft.sources.StoreTxn.transact(spark, root) {
       val txn = graft.sources.StoreTxn.current(root)
+      // a local frame is settled where the Spark route stages (no job)
+      val staged = if (onDriver) stageOrSettle(stage) _ else stage
       // host-reputation gate first (the curate ordering): the ranks are
       // static input like evalTexts, so the batch ≡ full-corpus
       // equivalence survives — every batch is gated by the same
-      // predicate the one-shot run applies
-      val gatedBatch = authority.map(_.keep(batch)).getOrElse(batch)
+      // predicate the one-shot run applies. On the driver route the
+      // gated rows are collected (one job) so the chain stays local.
+      val gatedBatch = authority.fold(input) { a =>
+        val kept = a.keep(input)
+        if (!onDriver) kept
+        else DriverRoute.collect(kept, maxDriverDocs, "curation.ingest/authority")
+          .map(DriverRoute.local(spark, _, kept.schema)).getOrElse(kept)
+      }
       val pf =
         preFilter(gatedBatch, idCol, textCol, evalTexts, evalTextCol, cfg,
-          stage, stageForAudit = withAudit)
+          stage, stageForAudit = withAudit,
+          evalGrams = evalTexts.map(_ => () => evalGramSet),
+          maxDriverDocs = if (onDriver) maxDriverDocs else 0L)
       // the audit's exact-loser pass re-reads the decontaminated frame —
       // materialize it once rather than re-running the redaction chain
-      val decon = if (withAudit) stage(pf.decon) else pf.decon
+      val decon = if (withAudit) staged(pf.decon) else pf.decon
       // exact dedup vs the hash store: in-batch winner per 128-bit text
       // hash, then membership anti-join (bucketed on the hash pair, so
       // the store side never shuffles). Hash-only membership carries the
@@ -560,36 +641,45 @@ object Pipeline {
       // ([[Dedup.exactIdWindow]]) that serves the batch winners, the
       // in-batch loser arm AND the store-dup arm — the old shape re-ran
       // the hash+window (with the text column in the window shuffle)
-      // once per consumer.
-      val exactHashed =
-        if (withAudit) Some(stage(Dedup.exactIdWindow(decon, "id", "text")))
-        else None
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("__h1", "__h2").orderBy(col("id"))
-      val batchWinners = exactHashed match {
-        case Some(h) => decon.join(
-          h.filter(col("__rn") === 1).select("id", "__h1", "__h2"),
-          Seq("id"))
-        case None => decon
-          .withColumn("__h1", xxhash64(col("text")))
-          .withColumn("__h2", xxhash64(lit(0x9e3779b9L), col("text")))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      }
-      val storeExact =
+      // once per consumer. A local batch takes [[exactOnDriver]].
+      val hashed = Dedup.hashPair(decon, "text")
+      val tableExact =
         if (wh.exists(exactTable)) Some(wh.readBucketed(exactTable))
         else None
-      val freshPlan = storeExact match {
-        case Some(st) =>
-          batchWinners.join(st, Seq("__h1", "__h2"), "left_anti")
-        case None => batchWinners
+      val driverExact =
+        if (onDriver && DriverRoute.isLocal(hashed))
+          exactOnDriver(hashed, tableExact, withAudit, maxDriverDocs)
+        else None
+      val exactHashed = driverExact match {
+        case Some(d) => d.window
+        case None if withAudit =>
+          Some(staged(Dedup.exactIdWindow(decon, "id", "text")))
+        case None => None
       }
-      // a delta within the MinHash driver gate is collected — the
-      // documents that route collects anyway, in one job like the
-      // checkpoint it replaces — and every later step reads it locally
-      val fresh = DriverRoute.collect(freshPlan, maxDriverDocs)
-        .map(DriverRoute.local(spark, _, freshPlan.schema))
-        .getOrElse(stage(freshPlan))
+      val storeExact = driverExact.fold(tableExact)(_.store)
+      val fresh = driverExact.map(_.fresh).getOrElse {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("__h1", "__h2").orderBy(col("id"))
+        val batchWinners = exactHashed match {
+          case Some(h) => decon.join(
+            h.filter(col("__rn") === 1).select("id", "__h1", "__h2"),
+            Seq("id"))
+          case None => hashed
+            .withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn")
+        }
+        val freshPlan = storeExact match {
+          case Some(st) =>
+            batchWinners.join(st, Seq("__h1", "__h2"), "left_anti")
+          case None => batchWinners
+        }
+        // a delta within the MinHash driver gate is collected — the
+        // documents that route collects anyway, in one job like the
+        // checkpoint it replaces — and every later step reads it locally
+        DriverRoute.collect(freshPlan, maxDriverDocs, "curation.ingest/exact")
+          .map(DriverRoute.local(spark, _, freshPlan.schema))
+          .getOrElse(stage(freshPlan))
+      }
       val survivors = fresh.select("id", "text")
       // near-dup pairs of the batch survivors vs everything curated —
       // the embedded store's ingest JOINS this transaction (same root).
@@ -604,7 +694,8 @@ object Pipeline {
       val (prevRead, oldSurvivors) = readState(survivors.schema("id"))
       // the labels collect of the components' driver fold, made here so
       // the delta algebra below reads the same local rows
-      val prevLabels = DriverRoute.collect(prevRead, maxDriverEdges)
+      val prevLabels = DriverRoute.collect(prevRead, maxDriverEdges,
+          "curation.ingest/labels")
         .map(DriverRoute.local(spark, _, LabelsSchema)).getOrElse(prevRead)
       // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
@@ -623,7 +714,7 @@ object Pipeline {
           def dropped(l: DataFrame) =
             l.filter(col("comp") < col("id")).select("id").as[Long].collect().toSet
           val (old, inBatch) = (dropped(labels) -- dropped(prevLabels))
-            .partition(_ < bounds.getLong(0))
+            .partition(_ < minId.get)
           def in(ids: Set[Long]) =
             coalesce(col("id").cast("long").isInCollection(ids), lit(false))
           (survivors.filter(!in(inBatch)), DriverRoute.local(spark,
@@ -674,7 +765,7 @@ object Pipeline {
               lit("near_dup").as("stage"),
               col("comp").cast("long").as("kept_id"))
           val authorityRows = authority match {
-            case Some(a) => ledger(a.droppedIds(batch, idCol), "authority")
+            case Some(a) => ledger(a.droppedIds(input, idCol), "authority")
             case None => ledger(pf.scored.select("id").limit(0), "authority")
           }
           Some(authorityRows
@@ -726,10 +817,46 @@ object Pipeline {
       }, mhAppend())
       // the signature appends are durably done here, before the marker
       // publishes (commit is all-or-nothing per table set)
-      txn.putKv(maxIdKey, math.max(bounds.getLong(1), prevMax).toString)
+      txn.putKv(maxIdKey, math.max(maxId.get, prevMax).toString)
       delta
       }
       }
+    }
+
+    /** [[ingestGated]]'s exact step for a local `hashed` batch
+      * (id, text, __h1, __h2) on the driver: the in-batch winner of each
+      * hash pair is its minimum id, and store membership reads the rows
+      * of `table` whose __h1 is a winner's — one bounded collect, None
+      * when it is over `maxRows`. `window` (with `withWindow`) is the
+      * batch in [[Dedup.exactIdWindow]]'s shape and `store` the rows read,
+      * local relations of the Spark route's schemas for its audit arms;
+      * `fresh` is the winners the store does not hold. */
+    private def exactOnDriver(hashed: DataFrame, table: Option[DataFrame],
+                              withWindow: Boolean, maxRows: Long)
+        : Option[DriverExact] = {
+      def id(r: Row): Long = r.getAs[Number](0).longValue
+      val groups = hashed.collect().toSeq
+        .groupBy(r => (r.getLong(2), r.getLong(3))).values.map(_.sortBy(id)).toSeq
+      val winners = groups.map(_.head)
+      val h1s = winners.map(_.getLong(2)).distinct
+      val stored = table match {
+        case Some(st) if h1s.nonEmpty => DriverRoute.collect(
+            st.filter(col("__h1").isInCollection(h1s)), maxRows,
+            "curation.ingest/exact").getOrElse(return None).toSeq
+        case _ => Nil
+      }
+      val held = stored.map(r => (r.getAs[Long]("__h1"), r.getAs[Long]("__h2"))).toSet
+      val idField = hashed.schema("id")
+      val window = Option.when(withWindow)(DriverRoute.local(spark,
+        groups.flatMap(g => g.zipWithIndex.map { case (r, i) =>
+          Row(r.get(0), r.getLong(2), r.getLong(3), i + 1, g.head.get(0)) }),
+        StructType(Seq(idField, hashed.schema("__h1"), hashed.schema("__h2"),
+          StructField("__rn", IntegerType, nullable = false),
+          StructField("__win", idField.dataType)))))
+      val fresh = winners.filterNot(r => held((r.getLong(2), r.getLong(3))))
+      Some(DriverExact(window,
+        table.map(st => DriverRoute.local(spark, stored, st.schema)),
+        DriverRoute.local(spark, fresh, hashed.schema)))
     }
 
     /** The committed (id, comp) labels and survivor ids, read with known

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Sessions
-import graft.operators.{MinhashConfig, MinhashStore, SimhashConfig, SimhashStore}
+import graft.operators.{MinhashConfig, MinhashStore, Pipeline, SimhashConfig, SimhashStore}
 
 /** Scale probe for the curation stores: measures wall time and result
   * counts on synthetic corpora whose size and near-dup profile are
@@ -15,8 +15,9 @@ import graft.operators.{MinhashConfig, MinhashStore, SimhashConfig, SimhashStore
   *  - `gen <docsPath> <nDocs> <dupRate>` — synthesize a deterministic
   *    corpus (see [[synthDocs]]) for the other three modes;
   *  - `mhgate <docsPath> <whRoot> <storeDocs> [sizes…]` — MinHash store
-  *    driver route vs Spark route per batch size, the source of
-  *    [[graft.operators.MinhashStore.MaxDriverDocs]];
+  *    and curation pre-filter, driver route vs Spark route per batch
+  *    size, the source of [[graft.operators.MinhashStore.MaxDriverDocs]]
+  *    and [[graft.operators.MinhashStore.MaxDriverPreFilterDocs]];
   *  - `incr <docsPath> <whRoot>` — MinHash and SimHash store ingests
   *    (Spark route, above the gate) vs the full-corpus recompute;
   *  - `e2e <docsPath> <root>` — curate → mixture → BPE → pack → shards
@@ -132,7 +133,12 @@ object ScaleProbe {
     * sample of the docs past the store, so it carries the corpus' share
     * of near-duplicates (`gen` puts them at the top ids). The appends
     * never run, so every timing sees the same store; the pair counts
-    * must agree. */
+    * must agree. Each batch then times the curation ingest's pre-filter
+    * the same way (eval set: every 997th stored document; thresholds
+    * that keep every document, so all of them reach redaction and
+    * decontamination), the source of
+    * [[graft.operators.MinhashStore.MaxDriverPreFilterDocs]]; the
+    * survivor counts must agree. */
   private def mhGateProbe(spark: SparkSession, docsPath: String,
                           whRoot: String, storeDocs: Long,
                           sizes: Seq[Long], reps: Int = 3): Unit = {
@@ -144,24 +150,45 @@ object ScaleProbe {
     timedCount(s"minhash_store_build($storeDocs)") {
       mh.ingest(docs.filter(col("doc_id") < storeDocs), "doc_id", "text")
     }
+    // the pre-filter's eval set: every 997th stored document
+    val eval = docs.filter(col("doc_id") < storeDocs &&
+      pmod(col("doc_id"), lit(997)) === 0).select("text")
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0)
+    val grams = graft.operators.Decontamination.evalGramSet(eval, "text", cfg.deconN)
     val routes = Seq("driver" -> (1L << 24), "spark" -> 0L)
     sizes.foreach { b =>
       val batch = docs.filter(col("doc_id") >= storeDocs &&
         pmod(xxhash64(col("doc_id")), lit(rest)) < b)
-      val walls = routes.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-      val counts = scala.collection.mutable.Set.empty[Long]
-      (0 until reps).foreach { r =>
-        (if (r % 2 == 0) routes else routes.reverse).foreach { case (route, gate) =>
-          val t0 = System.nanoTime()
-          counts += mh.ingestParts(batch, "doc_id", "text", gate)._1.count()
-          walls(route) += (System.nanoTime() - t0) / 1e9
+      def race(what: String)(run: Long => Long): Unit = {
+        val walls = routes.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+        val counts = scala.collection.mutable.Set.empty[Long]
+        (0 until reps).foreach { r =>
+          (if (r % 2 == 0) routes else routes.reverse).foreach { case (route, gate) =>
+            val t0 = System.nanoTime()
+            counts += run(gate)
+            walls(route) += (System.nanoTime() - t0) / 1e9
+          }
         }
+        def median(ws: Seq[Double]) = ws.sorted.apply(ws.size / 2)
+        println(f"[probe] $what batch=$b%6d driver ${median(walls("driver").toSeq)}%6.2f s" +
+          f"  spark ${median(walls("spark").toSeq)}%6.2f s  rows=${counts.mkString("/")}" +
+          s"  (driver ${walls("driver").map(w => f"$w%.2f").mkString(" ")};" +
+          s" spark ${walls("spark").map(w => f"$w%.2f").mkString(" ")})")
       }
-      def median(ws: Seq[Double]) = ws.sorted.apply(ws.size / 2)
-      println(f"[probe] mhgate batch=$b%6d driver ${median(walls("driver").toSeq)}%6.2f s" +
-        f"  spark ${median(walls("spark").toSeq)}%6.2f s  pairs=${counts.mkString("/")}" +
-        s"  (driver ${walls("driver").map(w => f"$w%.2f").mkString(" ")};" +
-        s" spark ${walls("spark").map(w => f"$w%.2f").mkString(" ")})")
+      race("mhgate")(gate => mh.ingestParts(batch, "doc_id", "text", gate)._1.count())
+      // the curation ingest's pre-filter (tokenize → score → redact →
+      // decontaminate) on each route: the driver route collects the
+      // batch and folds the program on the driver, the Spark route runs
+      // it as plans and stages the survivors
+      race("prefilter") { gate =>
+        val input = graft.core.DriverRoute.collect(batch, gate)
+          .map(graft.core.DriverRoute.local(spark, _, batch.schema)).getOrElse(batch)
+        val decon = Pipeline.preFilter(input, "doc_id", "text", Some(eval), "text",
+          cfg, _.localCheckpoint(true), evalGrams = Some(() => grams),
+          maxDriverDocs = gate).decon
+        if (gate > 0) decon.collect().length.toLong
+        else decon.localCheckpoint(true).count()
+      }
     }
   }
 

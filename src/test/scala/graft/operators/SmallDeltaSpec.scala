@@ -156,36 +156,74 @@ class SmallDeltaSpec extends SparkSpec {
       else Nil)
   }
 
-  test("curation store: three ingests keep, retract and store alike on both routes") {
+  /** A span of the eval text below: a document quoting it mid-text
+    * (excised by the surgical policy, dropped by the other) and one that
+    * is only the span (dropped by both). */
+  private val evalSpan = "zulu yankee xray whiskey victor"
+  private val quoting = s"alpha bravo $evalSpan charlie delta echo"
+
+  /** One set of curation options both routes must agree under. */
+  private final case class Options(cfg: Pipeline.CurateConfig,
+                                   eval: Boolean = false,
+                                   audit: Boolean = false,
+                                   authority: Boolean = false)
+
+  /** Host h2 is below the gate; the bridging and quoting texts all sit
+    * on h0. */
+  private def hosted(b: DataFrame): DataFrame = b.withColumn("host",
+    when(col("text").startsWith("t01") || col("text").contains("zulu"), lit("h0"))
+      .otherwise(concat(lit("h"), pmod(col("id"), lit(3)).cast("string"))))
+
+  private def authorityGate = Pipeline.AuthorityGate(
+    Seq(("h0", 10L), ("h1", 10L), ("h2", 1L)).toDF("node", "rank_fp"),
+    "host", minRankFp = 5L)
+
+  /** Three ingests of generated batches (plus the bridging documents and,
+    * with eval texts, the planted quotes) into two stores under `o`, one
+    * at gate 0 and one at the default gates: kept, retracted, audit rows
+    * and store tables equal per ingest, then a batch with a null id
+    * rejected on both routes with the store untouched, and equal state.
+    * Returns the audit stages seen. */
+  private def routesAgree(o: Options): Set[String] = {
+    var stagesSeen = Set.empty[String]
     for (longIds <- Seq(true, false)) {
       val gen = sample(genBatches, if (longIds) 21L else 22L).filter(_.nonEmpty)
-      val batches = Seq(bridgeA +: bridgeB +: gen(0), gen(1), bridgeC +: gen(2))
+      val planted = if (o.eval) Seq(quoting, evalSpan) else Nil
+      val batches = Seq(bridgeA +: bridgeB +: (planted.take(1) ++ gen(0)), gen(1),
+        bridgeC +: (planted.drop(1) ++ gen(2)))
       val stores = Seq(0L, 1L).map(_ => new Pipeline.CurationStore(spark,
-        freshRoot(), "t", curateCfg))
+        freshRoot(), "t", o.cfg,
+        evalTexts = Option.when(o.eval)(Seq(s"quoted: $evalSpan").toDF("text")),
+        authority = Option.when(o.authority)(authorityGate)))
+      def input(b: DataFrame) = if (o.authority) hosted(b) else b
       def ingest(st: Pipeline.CurationStore, gate: Long, b: DataFrame) =
-        if (gate == 0) st.ingestGated(b, "id", "text", _ => (), false, 0, 0)
-        else st.ingest(b, "id", "text")
+        if (gate == 0) st.ingestGated(b, "id", "text", _ => (), o.audit, 0, 0)
+        else st.ingest(b, "id", "text", withAudit = o.audit)
+      def ids(df: DataFrame) =
+        df.select(col("id").cast("long")).as[Long].collect().sorted.toSeq
       var next = 0
       var retracted = 0
       batches.foreach { texts =>
-        val b = batch(texts, next, longIds)
+        val b = input(batch(texts, next, longIds))
         next += texts.size
         val Seq(spark0, driver) = stores.zip(Seq(0L, 1L)).map { case (st, gate) =>
           val d = ingest(st, gate, b)
-          (d.kept.select(col("id").cast("long")).as[Long].collect().sorted.toSeq,
-            d.retracted.select(col("id").cast("long")).as[Long].collect().sorted.toSeq)
+          (ids(d.kept), ids(d.retracted),
+            d.audit.map(_.collect().map(_.toString).sorted.toSeq))
         }
-        assert(driver === spark0, s"long ids $longIds, batch from $next")
+        assert(driver === spark0, s"$o, long ids $longIds, batch from $next")
+        assert(spark0._3.isDefined === o.audit)
+        stagesSeen ++= spark0._3.toSeq.flatten.map(_.split(",")(1))
         val Seq(tables0, tables1) = stores.map(storeTables)
         assert(tables0.forall(_.nonEmpty) && tables1 === tables0,
-          s"long ids $longIds, batch from $next")
+          s"$o, long ids $longIds, batch from $next")
         retracted += spark0._2.size
       }
       assert(retracted > 0, "the bridging document retracts a kept one")
       // a null id is rejected up front on both routes, the store untouched
-      val withNull = Seq[(Option[Long], String)]((Some(next.toLong), bridgeA),
-        (None, bridgeB)).toDF("id", "text")
-        .select(col("id").cast(if (longIds) "long" else "int"), col("text"))
+      val withNull = input(Seq[(Option[Long], String)]((Some(next.toLong), bridgeA),
+          (None, bridgeB)).toDF("id", "text")
+        .select(col("id").cast(if (longIds) "long" else "int"), col("text")))
       stores.zip(Seq(0L, 1L)).foreach { case (st, gate) =>
         val e = intercept[IllegalArgumentException](ingest(st, gate, withNull))
         assert(e.getMessage.contains("1 batch rows have a null id"), e.getMessage)
@@ -197,8 +235,27 @@ class SmallDeltaSpec extends SparkSpec {
         (labels.as[(Long, Long)].collect().sorted.toSeq,
           survivors.select(col("id").cast("long")).as[Long].collect().sorted.toSeq)
       }
-      assert(s1 === s0, s"long ids $longIds")
+      assert(s1 === s0, s"$o, long ids $longIds")
     }
+    stagesSeen
+  }
+
+  test("curation store: three ingests keep, retract and store alike on both routes") {
+    routesAgree(Options(curateCfg))
+  }
+
+  test("curation store with eval texts and audit: both routes agree") {
+    val stages = routesAgree(Options(curateCfg.copy(maxRepetition = 0.3),
+      eval = true, audit = true))
+    assert(Set("decontaminate", "exact_dup", "near_dup").subsetOf(stages), stages)
+  }
+
+  test("curation store with surgical decontamination, an authority gate " +
+      "and audit: both routes agree") {
+    val stages = routesAgree(Options(curateCfg.copy(surgicalDecon = true),
+      eval = true, audit = true, authority = true))
+    assert(Set("authority", "decontaminate", "exact_dup", "near_dup")
+      .subsetOf(stages), stages)
   }
 
   test("curation state reads infer no schema") {
@@ -216,12 +273,12 @@ class SmallDeltaSpec extends SparkSpec {
     }
   }
 
-  test("a warm small curation delta with no retraction runs 14 jobs") {
-    val store = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
+  /** The jobs of a warm small delta (after a bulk ingest and one delta):
+    * near-dups of stored documents (dropped, not retracting), copies and
+    * two documents of new words. */
+  private def warmDelta(store: Pipeline.CurationStore): Jobs = {
     val texts = sample(genBatches, 5L).flatten
     store.ingest(batch(texts, 0, longIds = true), "id", "text")
-    // near-dups of stored documents (dropped, not retracting), copies
-    // and two documents of new words
     def delta(from: Int, word: String) = batch(texts.take(6).map(_ + s" $word") ++
       texts.slice(6, 9) ++ Seq(1, 2).map(k => (0 until 8).map(j => s"$word$k$j").mkString(" ")),
       from, longIds = true)
@@ -230,7 +287,45 @@ class SmallDeltaSpec extends SparkSpec {
       store.ingest(delta(texts.size + 11, "india"), "id", "text"))
     val kept = d.kept.select("id").as[Long].collect()
     assert(kept.length >= 2 && kept.length < 11 && d.retracted.isEmpty)
-    assert(ran.jobs.size === 14, ran.jobs.mkString("\n---\n"))
+    ran
+  }
+
+  // the batch collect, the exact-table read, the signature-table read,
+  // the labels read and the five state writes
+  test("a warm small curation delta with no retraction runs 9 jobs") {
+    val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg))
+    assert(ran.jobs.size === 9, ran.jobs.mkString("\n---\n"))
+  }
+
+  test("a warm small curation delta with eval texts runs 9 jobs") {
+    val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg,
+      evalTexts = Some(Seq(s"quoted: $evalSpan").toDF("text"))))
+    assert(ran.jobs.size === 9, ran.jobs.mkString("\n---\n"))
+  }
+
+  test("preFilter over a local relation starts no job and matches a parquet copy") {
+    val texts = sample(genBatches, 7L).flatten ++ Seq(quoting, evalSpan,
+      "call 555-123-4567 or mail a@b.example about kilo lima echo golf hotel",
+      Seq.fill(6)("echo golf").mkString(" "))
+    val local = batch(texts, 0, longIds = true)
+    val path = s"${freshRoot()}/docs"
+    local.write.parquet(path)
+    val parquet = spark.read.parquet(path)
+    val cfg = Pipeline.CurateConfig(minQuality = 0.1, maxRepetition = 0.3)
+    val eval = Seq(s"quoted: $evalSpan").toDF("text")
+    val grams = Decontamination.evalGramSet(eval, "text", cfg.deconN)
+    def rows(pf: Pipeline.PreFiltered) = Seq(pf.decon, pf.scored, pf.deconDropped)
+      .map(_.collect().map(_.toString).sorted.toSeq)
+    val (onDriver, ran) = Jobs.during(spark)(rows(Pipeline.preFilter(local, "id",
+      "text", Some(eval), "text", cfg, _.localCheckpoint(true), stageForAudit = true,
+      evalGrams = Some(() => grams))))
+    assert(ran.jobs.isEmpty, ran.jobs.mkString("\n---\n"))
+    val viaSpark = rows(Pipeline.preFilter(parquet, "id", "text", Some(eval), "text",
+      cfg, _.localCheckpoint(true), stageForAudit = true))
+    assert(onDriver === viaSpark)
+    // every arm holds rows: survivors, filtered documents, both planted quotes
+    assert(viaSpark(0).nonEmpty && viaSpark(1).size > viaSpark(0).size + 2 &&
+      viaSpark(2).size === 2)
   }
 
   test("a small delta's near-dup algebra runs in at most 3 + 2 jobs, no shuffle") {
