@@ -402,8 +402,9 @@ object Pipeline {
     * lost their component-minimum status because the batch's pairs
     * merged their component with a lower-id one. The curated corpus
     * after n ingests is ∪ keptᵢ − ∪ retractedᵢ (retraction is monotone:
-    * component minima only decrease). */
-  /** `audit` (present iff the ingest requested it): the batch's drop
+    * component minima only decrease).
+    *
+    * `audit` (present iff the ingest requested it): the batch's drop
     * ledger — one row (id, stage, kept_id) per batch document the ingest
     * did NOT keep, same stage vocabulary as [[CurateResult.audit]].
     * `kept_id` is the PROXIMATE winner at drop time: for an in-batch
@@ -429,8 +430,15 @@ object Pipeline {
     *    membership = "an identical doc was already kept";
     *  - a [[MinhashStore]] over the exact survivors — near-dup pairs of
     *    each batch against everything curated so far;
-    *  - the current (id, comp) component labels and the survivor id
-    *    list, updated by [[Dedup.connectedComponentsIncremental]].
+    *  - the current (id, comp) component labels, updated by
+    *    [[Dedup.connectedComponentsIncremental]].
+    *
+    * Every id in the labels is an earlier exact-dedup survivor: a label
+    * id is an earlier label or an endpoint of a MinHash pair, and a pair
+    * endpoint is a batch survivor or an id of the MinHash store, which
+    * holds exactly the earlier survivors. So the ingest's retractions
+    * follow from the two labelings alone — the previously kept ids that
+    * the new labels drop and the previous ones did not.
     *
     * CONTRACT: batch ids strictly increase across ingests (enforced) —
     * that makes "first ingested" and "min id" agree, so the kept set
@@ -441,7 +449,7 @@ object Pipeline {
     * of the delta.
     *
     * CRASH SEMANTICS: one ingest performs several state writes (hash
-    * store, signature store, labels, survivors, max-id marker) — all of
+    * store, signature store, labels, max-id marker) — all of
     * them inside ONE [[graft.sources.StoreTxn]] transaction, including
     * the embedded [[MinhashStore.ingest]] (which joins the enclosing
     * transaction rather than committing its own). The component labels
@@ -451,7 +459,7 @@ object Pipeline {
     * open and a blind retry converges — no external snapshot-restore
     * discipline, no duplicated signatures.
     *
-    * SMALL DELTAS: `stage` materializes the ingest's re-read
+    * SMALL DELTAS: a local checkpoint materializes the ingest's re-read
     * intermediates, but a batch within the pre-filter's driver gate
     * ([[MinhashStore.MaxDriverPreFilterDocs]]) is one driver program. One bounded
     * collect brings the batch's (id, text) rows to the driver; the id
@@ -463,7 +471,7 @@ object Pipeline {
     * `__h1` is in the batch. The survivors are then local, so the
     * MinHash staging folds too. With the component labels local as
     * well, kept and retracted are driver set algebra and every state
-    * write is one task. Nothing local goes through `stage`. Over that
+    * write is one task. Nothing local is checkpointed. Over that
     * gate the collect cancels itself, at gate 0 it is not made, and
     * either way the Spark plans run as before up to the exact-dedup
     * survivors, which a batch within [[MinhashStore.MaxDriverDocs]]
@@ -473,9 +481,7 @@ object Pipeline {
                             cfg: CurateConfig = CurateConfig(),
                             evalTexts: Option[DataFrame] = None,
                             evalTextCol: String = "text",
-                            authority: Option[AuthorityGate] = None,
-                            stage: DataFrame => DataFrame =
-                              _.localCheckpoint(true)) {
+                            authority: Option[AuthorityGate] = None) {
     private val wh = new graft.sources.Warehouse(spark, root)
     private[graft] def storeRoot: String = root
     private val mh = new MinhashStore(wh, s"${name}_cur", cfg.minhash)
@@ -489,18 +495,6 @@ object Pipeline {
         else df.withColumn("id", lit(null).cast("long")))
     private def exactTable = StoreCompaction.active(root, exactSpec)
     private val labelsState = s"${name}_labels"
-    private val survivorsPath = s"$root/state/${name}_survivors"
-    // survivors fold lives as VERSIONED state once compacted (a fixed
-    // append path cannot be rewritten transactionally); reads and
-    // appends resolve the committed version, falling back to the
-    // original append path before the first compact
-    private val survivorsState = s"${name}_survivors_fold"
-    private def survivorsLoc: (String, String) = // (path, root-relative)
-      graft.sources.StoreTxn.stateVersion(root, survivorsState) match {
-        case Some(v) =>
-          (s"$root/state/$survivorsState/v$v", s"state/$survivorsState/v$v")
-        case None => (survivorsPath, s"state/${name}_survivors")
-      }
     private val maxIdKey = s"${name}_maxid"
     // the eval n-grams on the driver for a local delta's decontamination,
     // collected once per store: eval texts are static input
@@ -590,7 +584,6 @@ object Pipeline {
         // marker exists to prevent) and reset every component label,
         // so refuse instead of silently starting over on top of it.
         val orphans = Seq(
-          survivorsPath,
           s"$root/state/${name}_maxid",
           s"$root/state/$labelsState",
           s"$root/warehouse/${exactSpec.base}",
@@ -612,6 +605,7 @@ object Pipeline {
       graft.core.WideScan.withScanSizing(spark) {
       graft.sources.StoreTxn.transact(spark, root) {
       val txn = graft.sources.StoreTxn.current(root)
+      val stage: DataFrame => DataFrame = _.localCheckpoint(true)
       // a local frame is settled where the Spark route stages (no job)
       val staged = if (onDriver) stageOrSettle(stage) _ else stage
       // host-reputation gate first (the curate ordering): the ranks are
@@ -691,7 +685,7 @@ object Pipeline {
       val (pairs, mhAppend) =
         mh.ingestParts(survivors, "id", "text", maxDriverDocs)
       val (delta, _) = graft.core.Par.both({
-      val (prevRead, oldSurvivors) = readState(survivors.schema("id"))
+      val prevRead = readLabels
       // the labels collect of the components' driver fold, made here so
       // the delta algebra below reads the same local rows
       val prevLabels = DriverRoute.collect(prevRead, maxDriverEdges,
@@ -700,33 +694,32 @@ object Pipeline {
       // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
         "id_a", "id_b", maxDriverEdges = maxDriverEdges)
-      val (survDir, survRel) = survivorsLoc
+      // the retractions in the batch's id type (labels are long pairs)
+      val idType = survivors.schema("id").dataType
+      def retractions(ids: DataFrame) = ids.select(col("id").cast(idType).as("id"))
       // deltas materialized BEFORE the state writes below — their plans
-      // read the state paths this ingest is about to replace/extend.
-      // With survivors and both labelings local, they are set algebra on
-      // the driver: the newly dropped ids (now − previously dropped) that
-      // are in the batch leave `kept` (a filtered local relation, no
-      // job); the old ones are the retractions, read off the survivors
-      // log only when there are any (one job). Otherwise the joins run
-      // and checkpoint, the two side by side.
+      // read the labels this ingest is about to replace. The newly
+      // dropped ids (now − previously dropped) that are in the batch
+      // leave `kept`; the older ones are the retractions (every label id
+      // is an earlier survivor — see the class doc). With survivors and
+      // both labelings local that is set algebra on the driver (no job);
+      // otherwise the two plans run and checkpoint side by side.
       def deltas: (DataFrame, DataFrame) =
         if (Seq(survivors, labels, prevLabels).forall(DriverRoute.isLocal)) {
           def dropped(l: DataFrame) =
             l.filter(col("comp") < col("id")).select("id").as[Long].collect().toSet
           val (old, inBatch) = (dropped(labels) -- dropped(prevLabels))
             .partition(_ < minId.get)
-          def in(ids: Set[Long]) =
-            coalesce(col("id").cast("long").isInCollection(ids), lit(false))
-          (survivors.filter(!in(inBatch)), DriverRoute.local(spark,
-            if (old.isEmpty) Nil else oldSurvivors.filter(in(old)).collect().toSeq,
-            oldSurvivors.schema))
+          (survivors.filter(!coalesce(col("id").cast("long")
+              .isInCollection(inBatch), lit(false))),
+            retractions(old.toSeq.sorted.toDF("id")))
         } else {
           val nowDropped = labels.filter(col("comp") < col("id")).select("id")
           val prevDropped = prevLabels.filter(col("comp") < col("id")).select("id")
           graft.core.Par.both(
             survivors.join(nowDropped, Seq("id"), "left_anti").localCheckpoint(true),
-            oldSurvivors.join(nowDropped, Seq("id"), "left_semi")
-              .join(prevDropped, Seq("id"), "left_anti").localCheckpoint(true))
+            retractions(nowDropped.filter(col("id") < minId.get)
+              .join(prevDropped, Seq("id"), "left_anti")).localCheckpoint(true))
         }
       // the ledger must materialize BEFORE the state writes too: the
       // store-dup arm reads the pre-append exact table, the near-dup arm
@@ -786,9 +779,9 @@ object Pipeline {
       beforeCommit(CurateDelta(kept, retracted, audit))
       // labels are overwrite-shaped → a fresh versioned directory the
       // commit record publishes (an in-place overwrite could not be
-      // rolled back); survivors append under the transaction's snapshot
-      // the owner id rides with each hash pair so later ingests can
-      // attribute a store-dup drop to the document that holds the text.
+      // rolled back). The owner id rides with each hash pair so later
+      // ingests can attribute a store-dup drop to the document that holds
+      // the text.
       // A store created before the owner column existed has a 2-column
       // table — append with ITS schema (a 3-column append throws against
       // the recorded schema); [[compact]] upgrades such a table in
@@ -797,22 +790,17 @@ object Pipeline {
         if (storeExact.exists(st => !st.columns.contains("id")))
           fresh.select("__h1", "__h2")
         else fresh.select("__h1", "__h2", "id")
-      // the three state writes target disjoint directories and read
+      // the two state writes target disjoint directories and read
       // staged frames — overlap them (Par rationale: each is a
       // sub-second fixed-cost write; txn registration happens on THIS
-      // thread before the writes start). A local frame is written by one
+      // thread before the writes start). Local labels are written by one
       // task, as one file.
-      def oneFileIfLocal(df: DataFrame) =
-        if (DriverRoute.isLocal(df)) df.coalesce(1) else df
       val labelsDir = txn.stateVersionDir(labelsState)
-      txn.touchPath(survRel)
       graft.core.Par.both(
-        oneFileIfLocal(labels).write.parquet(labelsDir),
-        graft.core.Par.both(
-          oneFileIfLocal(survivors.select("id")).write.mode("append")
-            .parquet(survDir),
-          wh.appendBucketed(exactTable, freshOut,
-            Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets)))
+        (if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels)
+          .write.parquet(labelsDir),
+        wh.appendBucketed(exactTable, freshOut,
+          Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets))
       CurateDelta(kept, retracted, audit)
       }, mhAppend())
       // the signature appends are durably done here, before the marker
@@ -859,29 +847,22 @@ object Pipeline {
         DriverRoute.local(spark, fresh, hashed.schema)))
     }
 
-    /** The committed (id, comp) labels and survivor ids, read with known
-      * schemas — no schema-inference job per read. Labels are always
-      * long pairs; survivors carry the batch's id type, `survivorId`
-      * (the field the ingest appends). */
-    private[graft] def readState(survivorId: StructField)
-        : (DataFrame, DataFrame) = {
-      def read(dir: Option[String], schema: StructType) = dir match {
-        case Some(p) => spark.read.schema(schema).parquet(p)
+    /** The committed (id, comp) labels, read with their known schema —
+      * no schema-inference job per read. */
+    private[graft] def readLabels: DataFrame =
+      graft.sources.StoreTxn.stateDir(root, labelsState) match {
+        case Some(p) => spark.read.schema(LabelsSchema).parquet(p)
         case None => spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), schema)
+          java.util.Collections.emptyList[Row](), LabelsSchema)
       }
-      val survDir = Some(survivorsLoc._1).filter(new java.io.File(_).exists())
-      (read(graft.sources.StoreTxn.stateDir(root, labelsState), LabelsSchema),
-        read(survDir, StructType(Seq(survivorId))))
-    }
 
     /** Rewrite every fragmented layout of this store into fresh compact
-      * generations — the embedded MinHash store's two tables, the
-      * exact-hash membership table, and the survivors id log (every
-      * ingest appends one file set to each; a long-lived maintenance
-      * sink otherwise pays per-file read overhead that grows with
-      * stream age). Rows identical everywhere. Three transactions, not
-      * one: each is idempotent maintenance, a crash between them leaves
+      * generations — the embedded MinHash store's two tables and the
+      * exact-hash membership table (every ingest appends one file set to
+      * each; a long-lived maintenance sink otherwise pays per-file read
+      * overhead that grows with stream age; the labels are one version
+      * per ingest already). Rows identical everywhere. Two transactions,
+      * not one: each is idempotent maintenance, a crash between them leaves
       * a partially-compacted-but-consistent store, and nesting them
       * would run [[StoreCompaction]]'s post-commit generation sweep
       * before the outer commit actually published. */
@@ -894,25 +875,6 @@ object Pipeline {
       if (wh.exists(exactTable))
         StoreCompaction.compact(spark, wh, s"CurationStore '$name'",
           Seq(exactSpec), cfg.minhash.nStoreBuckets)
-      val (survDir, _) = survivorsLoc
-      if (new java.io.File(survDir).exists()) {
-        graft.sources.StoreTxn.transact(spark, root) {
-          val txn = graft.sources.StoreTxn.current(root)
-          spark.read.parquet(survDir)
-            .repartition(math.max(1, cfg.minhash.nStoreBuckets / 4))
-            .write.parquet(txn.stateVersionDir(survivorsState))
-        }
-        // the commit above republished survivors under a fresh version
-        // (superseded versions GC'd by the commit); the original append
-        // path is now unreachable — sweep whatever remains of it.
-        // Resolved AFTER the commit and keyed on the PLAIN path (not
-        // "did this compact fold it"): a crash between a previous
-        // compact's commit and its sweep leaves the stale directory
-        // behind with survivorsLoc already pointing at the version, and
-        // a this-run-only condition would never reclaim it
-        if (survivorsLoc._1 != survivorsPath)
-          graft.sources.StoreTxn.rmrf(new java.io.File(survivorsPath))
-      }
     }
 
     /** Uniform signature for the maintenance-sink trigger. */

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * One store ingest appends to SEVERAL tables (postings + lengths +
   * stats; signatures + verification sets; hash store + labels +
-  * survivors + marker). Parquet's output committer makes each single
+  * marker). Parquet's output committer makes each single
   * WRITE atomic, but nothing spans the writes — a crash between them
   * used to leave partial multi-table state that only an external
   * snapshot-restore discipline could heal. This object closes that
@@ -211,13 +211,6 @@ object StoreTxn {
     readCommit(commitFile(key)).versions.get(state)
       .map(v => s"$key/state/$state/v$v")
   }
-
-  /** The committed version NUMBER of a versioned state — for callers
-    * that need the root-relative path (`state/<state>/v<n>`) to
-    * register with [[Txn.touchPath]] before appending into the
-    * current version. */
-  private[graft] def stateVersion(root: String, state: String): Option[Long] =
-    readCommit(commitFile(canon(root))).versions.get(state)
 
   /** Exclusive long-lived maintenance lease for an always-on sink: held
     * from stream start to termination, so a SECOND sink on the same

@@ -247,7 +247,7 @@ class PipelineSpec extends SparkSpec {
     // this: data files present, nothing in the commit record — trusting
     // "never ingested" would double-post its hashes and reset labels
     val root = freshRoot()
-    val stray = new java.io.File(s"$root/state/t_survivors")
+    val stray = new java.io.File(s"$root/state/t_labels")
     assert(stray.mkdirs())
     val store = new Pipeline.CurationStore(spark, root, "t", cfg)
     val e = intercept[IllegalArgumentException] {
@@ -263,8 +263,8 @@ class PipelineSpec extends SparkSpec {
   test("curation store: compaction between ingests changes nothing " +
       "(bridging retraction still fires over the folded layouts)") {
     // the bridging fixture exercises every compacted layout: the exact
-    // table (membership), the mh tables (cross-ingest pairing), and the
-    // survivors log (the retraction delta reads it)
+    // table (membership) and the mh tables (cross-ingest pairing, which
+    // the retraction follows from)
     val base = Vector("t01", "t02", "t03", "t04", "t05", "t06", "t07",
       "t08", "t09", "t10", "t11", "t12", "t13", "t14", "t15", "t16",
       "t17", "t18", "t19", "t20")
@@ -290,8 +290,7 @@ class PipelineSpec extends SparkSpec {
     assert(graft.streaming.Streaming.dataFileCount(root) < filesBefore,
       s"compaction must shrink the fragmented store (before $filesBefore)")
     // an exact dup of stored text `a` skips via the folded exact table;
-    // the bridging doc pairs against the folded mh tables and the
-    // retraction reads the folded survivors
+    // the bridging doc pairs against the folded mh tables
     val dup = store.ingest(Seq((20L, a)).toDF("doc_id", "text"),
       "doc_id", "text")
     assert(dup.kept.count() === 0 && dup.retracted.count() === 0)
@@ -406,32 +405,6 @@ class PipelineSpec extends SparkSpec {
       "doc_id", "text", withAudit = true)
     assert(r4.audit.get.as[(Long, String, Option[Long])].collect().toSeq
       .contains((31L, "exact_dup", Some(30L))))
-  }
-
-  test("curation store compact: sweeps a stale pre-compact survivors dir " +
-      "left by a crash between commit and sweep") {
-    val lax = cfg.copy(minQuality = 0.0, maxRepetition = 1.0)
-    val root = freshRoot()
-    val store = new Pipeline.CurationStore(spark, root, "t", lax)
-    store.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
-    store.compact()
-    val plain = new java.io.File(s"$root/state/t_survivors")
-    assert(!plain.exists(), "first compact sweeps the append path")
-    // simulate the crash window: the versioned fold is committed but
-    // the old append directory never got removed
-    assert(plain.mkdirs())
-    java.nio.file.Files.write(plain.toPath.resolve("stale-file"),
-      "junk".getBytes)
-    store.compact()
-    assert(!plain.exists(),
-      "recompaction must reclaim the orphaned pre-compact survivors dir")
-    // and the store still serves: an exact dup of stored text skips
-    val dup = store.ingest(
-      docs.filter(col("doc_id") === 5L)
-        .select(col("doc_id") + 15, col("text"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(dup.kept.count() === 0)
   }
 
   test("authority gate composes into curate: hosts below the rank bar " +

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.{Jobs, SparkSpec}
@@ -181,9 +181,9 @@ class SmallDeltaSpec extends SparkSpec {
   /** Three ingests of generated batches (plus the bridging documents and,
     * with eval texts, the planted quotes) into two stores under `o`, one
     * at gate 0 and one at the default gates: kept, retracted, audit rows
-    * and store tables equal per ingest, then a batch with a null id
-    * rejected on both routes with the store untouched, and equal state.
-    * Returns the audit stages seen. */
+    * and store tables equal per ingest and retractions typed like the
+    * batch ids, then a batch with a null id rejected on both routes with
+    * the store untouched, and equal labels. Returns the audit stages seen. */
   private def routesAgree(o: Options): Set[String] = {
     var stagesSeen = Set.empty[String]
     for (longIds <- Seq(true, false)) {
@@ -201,6 +201,7 @@ class SmallDeltaSpec extends SparkSpec {
         else st.ingest(b, "id", "text", withAudit = o.audit)
       def ids(df: DataFrame) =
         df.select(col("id").cast("long")).as[Long].collect().sorted.toSeq
+      val idType = if (longIds) LongType else IntegerType
       var next = 0
       var retracted = 0
       batches.foreach { texts =>
@@ -208,6 +209,7 @@ class SmallDeltaSpec extends SparkSpec {
         next += texts.size
         val Seq(spark0, driver) = stores.zip(Seq(0L, 1L)).map { case (st, gate) =>
           val d = ingest(st, gate, b)
+          assert(d.retracted.schema.map(_.dataType) === Seq(idType))
           (ids(d.kept), ids(d.retracted),
             d.audit.map(_.collect().map(_.toString).sorted.toSeq))
         }
@@ -229,13 +231,9 @@ class SmallDeltaSpec extends SparkSpec {
         assert(e.getMessage.contains("1 batch rows have a null id"), e.getMessage)
         assert(st.maxIngestedId === Some(next - 1L))
       }
-      val idField = StructField("id", if (longIds) LongType else IntegerType)
-      val Seq(s0, s1) = stores.map { st =>
-        val (labels, survivors) = st.readState(idField)
-        (labels.as[(Long, Long)].collect().sorted.toSeq,
-          survivors.select(col("id").cast("long")).as[Long].collect().sorted.toSeq)
-      }
-      assert(s1 === s0, s"$o, long ids $longIds")
+      val Seq(l0, l1) =
+        stores.map(_.readLabels.as[(Long, Long)].collect().sorted.toSeq)
+      assert(l1 === l0, s"$o, long ids $longIds")
     }
     stagesSeen
   }
@@ -261,46 +259,61 @@ class SmallDeltaSpec extends SparkSpec {
   test("curation state reads infer no schema") {
     for (longIds <- Seq(true, false)) {
       val store = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
-      store.ingest(batch(Seq(bridgeA, bridgeB, bridgeC), 0, longIds), "id", "text")
-      val idField = StructField("id", if (longIds) LongType else IntegerType)
-      val ((labels, survivors), ran) = Jobs.during(spark)(store.readState(idField))
+      store.ingest(batch(Seq(bridgeA, bridgeB), 0, longIds), "id", "text")
+      val d = store.ingest(batch(Seq(bridgeC), 2, longIds), "id", "text")
+      assert(d.retracted.schema.map(_.dataType) ===
+        Seq(if (longIds) LongType else IntegerType))
+      assert(d.retracted.select(col("id").cast("long")).as[Long].collect().toSeq ===
+        Seq(1L))
+      val (labels, ran) = Jobs.during(spark)(store.readLabels)
       assert(ran.jobs.isEmpty, ran.jobs.mkString("\n---\n"))
       assert(labels.as[(Long, Long)].collect().sorted.toSeq ===
         Seq((0L, 0L), (1L, 0L), (2L, 0L)))
-      assert(survivors.schema.head.dataType === idField.dataType)
-      assert(survivors.select(col("id").cast("long")).as[Long].collect().sorted.toSeq ===
-        Seq(0L, 1L, 2L))
     }
   }
 
   /** The jobs of a warm small delta (after a bulk ingest and one delta):
     * near-dups of stored documents (dropped, not retracting), copies and
-    * two documents of new words. */
-  private def warmDelta(store: Pipeline.CurationStore): Jobs = {
-    val texts = sample(genBatches, 5L).flatten
+    * two documents of new words. With `retract` the bulk also holds the
+    * bridged pair and the measured delta the bridging document, which
+    * retracts the pair's kept higher id. */
+  private def warmDelta(store: Pipeline.CurationStore,
+                        retract: Boolean = false): Jobs = {
+    val gen = sample(genBatches, 5L).flatten
+    val texts = gen ++ (if (retract) Seq(bridgeA, bridgeB) else Nil)
     store.ingest(batch(texts, 0, longIds = true), "id", "text")
-    def delta(from: Int, word: String) = batch(texts.take(6).map(_ + s" $word") ++
-      texts.slice(6, 9) ++ Seq(1, 2).map(k => (0 until 8).map(j => s"$word$k$j").mkString(" ")),
-      from, longIds = true)
+    def delta(from: Int, word: String, extra: Seq[String] = Nil) =
+      batch(texts.take(6).map(_ + s" $word") ++ texts.slice(6, 9) ++
+        Seq(1, 2).map(k => (0 until 8).map(j => s"$word$k$j").mkString(" ")) ++ extra,
+        from, longIds = true)
     store.ingest(delta(texts.size, "hotel"), "id", "text")
-    val (d, ran) = Jobs.during(spark)(
-      store.ingest(delta(texts.size + 11, "india"), "id", "text"))
+    val (d, ran) = Jobs.during(spark)(store.ingest(delta(texts.size + 11, "india",
+      if (retract) Seq(bridgeC) else Nil), "id", "text"))
     val kept = d.kept.select("id").as[Long].collect()
-    assert(kept.length >= 2 && kept.length < 11 && d.retracted.isEmpty)
+    assert(kept.length >= 2 && kept.length < 11)
+    assert(d.retracted.as[Long].collect().toSeq ===
+      (if (retract) Seq(gen.size + 1L) else Nil))
     ran
   }
 
   // the batch collect, the exact-table read, the signature-table read,
-  // the labels read and the five state writes
-  test("a warm small curation delta with no retraction runs 9 jobs") {
+  // the labels read and the four state writes
+  test("a warm small curation delta with no retraction runs 8 jobs") {
     val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg))
-    assert(ran.jobs.size === 9, ran.jobs.mkString("\n---\n"))
+    assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
   }
 
-  test("a warm small curation delta with eval texts runs 9 jobs") {
+  test("a warm small curation delta with eval texts runs 8 jobs") {
     val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg,
       evalTexts = Some(Seq(s"quoted: $evalSpan").toDF("text"))))
-    assert(ran.jobs.size === 9, ran.jobs.mkString("\n---\n"))
+    assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
+  }
+
+  // the retractions come from the labels the delta already holds
+  test("a warm small curation delta that retracts runs 8 jobs") {
+    val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg),
+      retract = true)
+    assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
   }
 
   test("preFilter over a local relation starts no job and matches a parquet copy") {

@@ -169,6 +169,71 @@ class StoreTxnSpec extends SparkSpec {
       "crash + blind retry must converge to the uncrashed corpus")
   }
 
+  test("curation store: a crash at every touch of a warm delta, or before " +
+      "its commit, then a blind retry equals a clean store on both routes") {
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
+      minhash = MinhashConfig(shingleN = 3, bands = 16, rowsPerBand = 1,
+        threshold = 0.5, seed = 7L))
+    // A and B (bulk ids 30, 31) differ in 4 of 20 tokens, so no pair; C
+    // in the delta is a near-dup of both and retracts B. The delta also
+    // holds a copy of a stored text and near-dups of its own documents.
+    val base = (1 to 20).map(i => f"t$i%02d").toVector
+    val c = base.updated(4, "c05").updated(11, "c12")
+    val docs = corpus(40, seed = 8L)
+    val bulk = (docs.take(30) ++ Seq((30L, base.mkString(" ")),
+      (31L, c.updated(7, "b08").updated(15, "b16").mkString(" "))))
+      .toDF("id", "text")
+    val delta = (docs.drop(30).map { case (i, t) => (i + 2, t) } ++
+      Seq((42L, c.mkString(" ")), (43L, docs.head._2))).toDF("id", "text")
+    def ingest(st: Pipeline.CurationStore, gate0: Boolean, b: DataFrame) =
+      if (gate0) st.ingestGated(b, "id", "text", _ => (), true, 0, 0)
+      else st.ingest(b, "id", "text", withAudit = true)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // kept, retracted, audit, the three tables and the labels
+    def observed(st: Pipeline.CurationStore, d: Pipeline.CurateDelta) = {
+      val wh = new Warehouse(spark, st.storeRoot)
+      Seq(d.kept, d.retracted, d.audit.get).map(rows) ++
+        Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set")
+          .map(t => rows(wh.readBucketed(t))) :+ rows(st.readLabels)
+    }
+    def store(root: String) = new Pipeline.CurationStore(spark, root, "t", cfg)
+    // the routes agree (SmallDeltaSpec), so one clean store is the reference
+    val clean = store(tmp("graft_txn_matrix_clean_"))
+    ingest(clean, gate0 = false, bulk)
+    val expected = observed(clean, ingest(clean, gate0 = false, delta))
+    assert(expected(1) === Seq("[31]"), "the bridging document retracts B")
+    assert(expected(2).exists(_.contains("exact_dup")) &&
+      expected(2).exists(_.contains("near_dup")), expected(2))
+    for (gate0 <- Seq(true, false)) {
+      // every crash starts from a copy of one store after the bulk
+      val warm = tmp("graft_txn_matrix_warm_")
+      ingest(store(warm), gate0, bulk)
+      // the delta registers three directories, so these are all its touches
+      for (crash <- Seq(Some(1), Some(2), Some(3), None)) {
+        val root = tmp("graft_txn_matrix_")
+        org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(warm),
+          new java.io.File(root))
+        crash match {
+          case Some(n) => StoreTxn.hooks.crashAfterTouches = n
+          case None => StoreTxn.hooks.crashBeforeCommit = true
+        }
+        crashAndExpire { ingest(store(root), gate0, delta); () }
+        if (crash.isEmpty) {
+          // the whole write set: three tables and one labels version
+          val intent = java.nio.file.Files.readString(new java.io.File(root,
+            "_txn/intent").toPath).split("\n").map(_.split("\t")).toSeq
+          assert(intent.filter(_(0) == "dir").map(_(1)).toSet === Set(
+            "warehouse/t_cur_exact", "warehouse/t_cur_mh_sig", "warehouse/t_cur_mh_set"))
+          assert(intent.filter(_(0) == "state").map(_(1)) === Seq("t_labels"))
+        }
+        val retry = store(root)
+        assert(observed(retry, ingest(retry, gate0, delta)) === expected,
+          s"gate 0 $gate0, crash $crash")
+        assert(retry.maxIngestedId === Some(43L))
+      }
+    }
+  }
+
   test("an ingest failing with an ordinary exception rolls back immediately") {
     val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
       minhash = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,
