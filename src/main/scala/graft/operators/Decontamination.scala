@@ -276,18 +276,18 @@ object Decontamination {
     * fraction of the postings instead of all of them, and a gram-dense
     * suite degrades gracefully to the full bucket-aligned scan — never
     * worse. Bucketing stays so an over-broadcast-size eval side still
-    * joins shuffle-free on the postings side. Appends are StoreTxn
-    * transactions (crash ⇒ rollback, blind retry converges). */
+    * joins shuffle-free on the postings side. An [[AppendStore]]:
+    * appends are StoreTxn transactions (crash ⇒ rollback, blind retry
+    * converges), keyed appends skip on redelivery, and compaction is
+    * [[StoreCompaction]]'s, which keeps the gpfx partitioning. */
   final class GramIndex(spark: org.apache.spark.sql.SparkSession,
                         root: String, name: String, n: Int,
                         nStoreBuckets: Int = 32,
                         prefixPartitions: Int = 64) extends AppendStore {
     private val wh = new graft.sources.Warehouse(spark, root)
-    // appends land in the ACTIVE physical generation; [[compact]]
-    // publishes a `__c<epoch>` successor through the commit-record alias
-    private val gramBase = s"${name}_dc_gram"
-    private def gramTable: String = graft.sources.StoreTxn
-      .getKv(wh.root, s"active:$name:gram").getOrElse(gramBase)
+    private val gramSpec = StoreCompaction.TableSpec(
+      s"active:$name:gram", s"${name}_dc_gram")
+    private def gramTable: String = StoreCompaction.active(wh.root, gramSpec)
     def storeRoot: String = wh.root
 
     // row-identity parameters: ghash is over n-grams, gpfx is mod
@@ -335,42 +335,11 @@ object Decontamination {
         .select("id").distinct()
     }
 
-    /** Rewrite the accumulated postings into one fresh physical
-      * generation — identical rows (ids are unique across appends),
-      * file count collapsed from #appends generations to one (one file
-      * per non-empty (gpfx, bucket) cell: the pre-partition below keys
-      * on exactly the writer's (partition, bucket-id) pair, so no task
-      * splits a cell). Same transactional shape as Bm25Index.compact:
-      * new `__c<epoch>` table written fresh (crash sweeps it), alias
-      * published atomically in the commit record, superseded
-      * generations dropped only after commit. The IngestKeys replay
-      * ledger lives in the commit record, untouched by the rename. */
+    /** Rewrite the accumulated postings into one fresh generation, one
+      * file per non-empty (gpfx, bucket) cell — see [[StoreCompaction]]
+      * (identical rows: ids are unique across appends). */
     def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-      compact() // AppendStore form
-    def compact(): Unit = {
-      graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      require(wh.exists(gramTable),
-        s"GramIndex '$name' at $root has no appends — nothing to compact")
-      graft.sources.StoreTxn.transact(spark, root) {
-        val txn = graft.sources.StoreTxn.current(wh.root)
-        val cur = gramTable
-        val newTable = s"${gramBase}__c${txn.epoch}"
-        wh.paramsSpecValidated(newTable, storeParams)
-        // appendBucketed aligns on (partition dir, bucket id) itself —
-        // a caller-side pre-repartition would add a second exchange per
-        // compaction
-        wh.appendBucketed(newTable, wh.readBucketed(cur),
-          Seq("ghash"), nStoreBuckets, partitionCol = Some("gpfx"))
-        txn.putKv(s"active:$name:gram", newTable)
-      }
-      // post-commit: drop every generation the alias no longer names
-      val live = gramTable
-      val whDir = new java.io.File(s"${wh.root}/warehouse")
-      Option(whDir.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory &&
-          (f.getName == gramBase || f.getName.startsWith(gramBase + "__c")) &&
-          f.getName != live)
-        .foreach(f => wh.dropTable(f.getName))
-    }
+      StoreCompaction.compact(spark, wh, s"GramIndex '$name'", Seq(gramSpec))
+    def compact(): Unit = compact(spark)
   }
 }

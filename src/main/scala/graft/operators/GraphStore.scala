@@ -68,9 +68,9 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
   private def edgeParams = Seq(
     "weighted" -> cfg.weightCol.isDefined.toString)
   private val edgeSpec = StoreCompaction.TableSpec(
-    s"active:$name:eg_edge", s"${name}_eg_edge", Seq("src"))
+    s"active:$name:eg_edge", s"${name}_eg_edge")
   private val wtotSpec = StoreCompaction.TableSpec(
-    s"active:$name:eg_wtot", s"${name}_eg_wtot", Seq("src"))
+    s"active:$name:eg_wtot", s"${name}_eg_wtot")
   private def edgeTable = StoreCompaction.active(wh.root, edgeSpec)
   private def wtotTable = StoreCompaction.active(wh.root, wtotSpec)
   def storeRoot: String = wh.root
@@ -84,12 +84,10 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     * re-aggregates by the same keys). */
   def compact(spark: SparkSession): Unit =
     StoreCompaction.compact(spark, wh, s"EdgeStore '$name'",
-      Seq(edgeSpec.copy(params = edgeParams,
-          transform = df => df.groupBy("src", "dst")
+      Seq(edgeSpec.copy(transform = df => df.groupBy("src", "dst")
             .agg(sum(col("w")).as("w"), sum(col("cnt")).as("cnt"))),
         wtotSpec.copy(transform = df => df.groupBy("src")
-          .agg(sum(col("wtot")).as("wtot")))),
-      cfg.nStoreBuckets)
+          .agg(sum(col("wtot")).as("wtot")))))
 
   protected def appendBody(batch: DataFrame, srcCol: String,
                            dstCol: String): Unit = {

@@ -486,13 +486,7 @@ object Pipeline {
     private[graft] def storeRoot: String = root
     private val mh = new MinhashStore(wh, s"${name}_cur", cfg.minhash)
     private val exactSpec = StoreCompaction.TableSpec(
-      s"active:$name:cur_exact", s"${name}_cur_exact", Seq("__h1", "__h2"),
-      // compaction doubles as the schema upgrade for stores created
-      // before the owner-id column: backfill a null owner so post-
-      // compact ingests append the full 3-column row again
-      transform = df =>
-        if (df.columns.contains("id")) df
-        else df.withColumn("id", lit(null).cast("long")))
+      s"active:$name:cur_exact", s"${name}_cur_exact")
     private def exactTable = StoreCompaction.active(root, exactSpec)
     private val labelsState = s"${name}_labels"
     private val maxIdKey = s"${name}_maxid"
@@ -637,9 +631,14 @@ object Pipeline {
       // the hash+window (with the text column in the window shuffle)
       // once per consumer. A local batch takes [[exactOnDriver]].
       val hashed = Dedup.hashPair(decon, "text")
-      val tableExact =
-        if (wh.exists(exactTable)) Some(wh.readBucketed(exactTable))
-        else None
+      val tableExact = Option.when(wh.exists(exactTable)) {
+        val st = wh.readBucketed(exactTable)
+        // the owner id attributes a store-dup drop to its kept document
+        require(st.columns.contains("id"),
+          s"CurationStore '$name': $exactTable has no owner id column — it " +
+            "was written by an earlier format; rebuild under a fresh root")
+        st
+      }
       val driverExact =
         if (onDriver && DriverRoute.isLocal(hashed))
           exactOnDriver(hashed, tableExact, withAudit, maxDriverDocs)
@@ -737,14 +736,9 @@ object Pipeline {
               col("__win").cast("long").as("kept_id"))
           val storeDup = storeExact match {
             case Some(st) =>
-              // pre-owner-column stores (no id recorded) audit with a
-              // null winner rather than failing the read
-              val owned =
-                if (st.columns.contains("id")) st
-                else st.withColumn("id", lit(null).cast("long"))
               exactHashed.get.filter(col("__rn") === 1)
                 .select(col("id"), col("__h1"), col("__h2"))
-                .join(owned.select(col("__h1"), col("__h2"),
+                .join(st.select(col("__h1"), col("__h2"),
                   col("id").as("__owner")), Seq("__h1", "__h2"))
                 .select(col("id").cast("long").as("id"),
                   lit("exact_dup").as("stage"),
@@ -781,16 +775,7 @@ object Pipeline {
       // commit record publishes (an in-place overwrite could not be
       // rolled back). The owner id rides with each hash pair so later
       // ingests can attribute a store-dup drop to the document that holds
-      // the text.
-      // A store created before the owner column existed has a 2-column
-      // table — append with ITS schema (a 3-column append throws against
-      // the recorded schema); [[compact]] upgrades such a table in
-      // place, after which appends carry the owner again.
-      val freshOut =
-        if (storeExact.exists(st => !st.columns.contains("id")))
-          fresh.select("__h1", "__h2")
-        else fresh.select("__h1", "__h2", "id")
-      // the two state writes target disjoint directories and read
+      // the text. The two state writes target disjoint directories and read
       // staged frames — overlap them (Par rationale: each is a
       // sub-second fixed-cost write; txn registration happens on THIS
       // thread before the writes start). Local labels are written by one
@@ -799,7 +784,7 @@ object Pipeline {
       graft.core.Par.both(
         (if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels)
           .write.parquet(labelsDir),
-        wh.appendBucketed(exactTable, freshOut,
+        wh.appendBucketed(exactTable, fresh.select("__h1", "__h2", "id"),
           Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets))
       CurateDelta(kept, retracted, audit)
       }, mhAppend())
@@ -874,7 +859,7 @@ object Pipeline {
         mh.compact(spark)
       if (wh.exists(exactTable))
         StoreCompaction.compact(spark, wh, s"CurationStore '$name'",
-          Seq(exactSpec), cfg.minhash.nStoreBuckets)
+          Seq(exactSpec))
     }
 
     /** Uniform signature for the maintenance-sink trigger. */

@@ -94,214 +94,105 @@ object Retrieval {
   }
 
   /** Persisted, APPENDABLE BM25 index — the retrieval member of the
-    * incremental-store family (MinhashStore / EmbeddingLshStore /
-    * IvfStore): a corpus is indexed batch by batch, and [[search]] over
-    * the accumulated index reproduces [[Retrieval.bm25TopK]] over the
-    * union BIT-FOR-BIT (oracle-verified, q85), because document
-    * frequencies, N and Σdl accumulate as exact integers and the score
-    * expression tree is shared.
+    * incremental-store family, an [[AppendStore]]: a corpus is indexed
+    * batch by batch, and [[search]] over the accumulated index
+    * reproduces [[Retrieval.bm25TopK]] over the union BIT-FOR-BIT
+    * (oracle-verified, q85), because document frequencies, N and Σdl
+    * accumulate as exact integers and the score expression tree is
+    * shared.
     *
-    * Tables under `root`:
+    * State under `root`:
     *  - `<name>_bm_post` (tok, id, tf), bucketed by tok — the postings;
     *    a query touches only its terms' buckets;
     *  - `<name>_bm_len` (id, dl), bucketed by id — length normalization;
-    *  - `state/<name>_bm_stats` — one (n, sumdl) row per append, summed
-    *    at serve (exact integer accumulation, no stored floats).
+    *  - N and Σdl, running totals in the root's commit record: each
+    *    append adds its batch's document count and token total, and a
+    *    search reads them with no job.
     *
     * Ids must be unique across appends (re-indexing a doc would
     * double-count its postings — delete-and-reindex needs a table
     * format with row-level deletes).
     *
     * CRASH SEMANTICS: each append runs as one [[graft.sources.StoreTxn]]
-    * transaction — the three writes (postings, lengths, stats) publish
+    * transaction — the two table writes and the new totals publish
     * atomically, and a crash anywhere mid-append rolls back on the next
     * open ([[search]] heals a dead writer's partial append before
     * reading), so a blind retry converges with no external snapshot.
-    * The stats row is still written last inside the transaction, so its
-    * count equals the number of committed appends. */
+    * Keyed appends ([[appendOnce]]) and compaction are the family's
+    * ([[AppendStore]], [[StoreCompaction]]). */
   final class Bm25Index(spark: org.apache.spark.sql.SparkSession,
                         root: String, name: String,
-                        nStoreBuckets: Int = 32) {
+                        nStoreBuckets: Int = 32) extends AppendStore {
     private val wh = new graft.sources.Warehouse(spark, root)
-    private[graft] def storeRoot: String = root
-    // physical generations: appends land in the ACTIVE tables, which
-    // start as the base names and move to `__c<epoch>` successors when
-    // [[compact]] publishes one. The alias lives in the commit record,
-    // so "active" always names a fully-published generation.
-    private val postBase = s"${name}_bm_post"
-    private val lenBase = s"${name}_bm_len"
-    private val statsBase = s"state/${name}_bm_stats"
-    private def activeAlias(kind: String, base: String): String =
-      graft.sources.StoreTxn.getKv(root, s"active:$name:$kind").getOrElse(base)
-    private def postTable = activeAlias("post", postBase)
-    private def lenTable = activeAlias("len", lenBase)
-    private def statsRel = activeAlias("stats", statsBase)
-    private def statsPath = s"$root/$statsRel"
+    def storeRoot: String = wh.root
+    private val postSpec = StoreCompaction.TableSpec(
+      s"active:$name:post", s"${name}_bm_post")
+    private val lenSpec = StoreCompaction.TableSpec(
+      s"active:$name:len", s"${name}_bm_len")
+    private def postTable = StoreCompaction.active(wh.root, postSpec)
+    private def lenTable = StoreCompaction.active(wh.root, lenSpec)
+    private val nKey = s"bm25:$name:n"
+    private val sumdlKey = s"bm25:$name:sumdl"
+    // postings are keyed on tokens — the tokenizer mode is store
+    // identity (rows written under one mode are invisible to searches
+    // tokenized under the other), so record and validate it
+    private def params = Seq("scriptAwareTokens" ->
+      TextFunctions.scriptAwareEnabled.toString)
 
-    def append(docs: DataFrame, idCol: String, textCol: String): Unit =
-      appendOnce(docs, idCol, textCol, appendKey = None)
-
-    /** Stats rows read with an EXPLICIT schema: rows written before the
-      * append_key marker existed (or by plain [[append]]) surface a
-      * null key instead of failing column resolution. */
-    private val statsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "n BIGINT, sumdl BIGINT, append_key STRING")
-    private def statsDf = spark.read.schema(statsSchema).parquet(statsPath)
-    // completed append keys, loaded ONCE per index handle then kept
-    // in-memory — an always-on sink appends one tiny stats file per
-    // micro-batch, and re-scanning all of them per batch would make the
-    // idempotence check grow with stream age. Single-writer assumption
-    // (one maintenance stream per index), same as the store family.
-    private var seenKeys: scala.collection.mutable.Set[String] = null
-
-    /** Replay-safe append keyed on `appendKey`: the stats row carries
-      * the key and is written LAST, so a redelivered append whose
-      * previous attempt COMPLETED is detected and skipped. The key must
-      * identify the batch GLOBALLY — the streaming sink uses
-      * (checkpoint path, batchId), so two streams feeding one index
-      * don't collide; resetting a checkpoint without resetting the
-      * index reuses old keys and will skip (not re-index) those
-      * batches. The stats row commits atomically with the postings
-      * (class scaladoc), so "key present" always means "batch fully
-      * indexed" — redelivery after a crash anywhere re-appends, after
-      * completion skips. */
-    def appendOnce(docs: DataFrame, idCol: String, textCol: String,
-                   appendKey: Option[String]): Unit = {
-      if (appendKey.isDefined) {
-        if (seenKeys == null) {
-          // heal a dead writer's partial append BEFORE trusting the
-          // stats rows as the completed-append record
-          graft.sources.StoreTxn.recoverIfIdle(spark, root)
-          val persisted: Seq[String] =
-            if (new java.io.File(statsPath).exists())
-              statsDf.select("append_key").filter(col("append_key").isNotNull)
-                .collect().map(_.getString(0)).toSeq
-            else Seq.empty
-          seenKeys = scala.collection.mutable.Set.empty[String] ++ persisted
-        }
-        if (seenKeys.contains(appendKey.get))
-          return // completed append redelivered
-      }
-      graft.sources.StoreTxn.transact(spark, root) {
-        // postings are keyed on tokens — the tokenizer mode is store
-        // identity (rows written under one mode are invisible to
-        // searches tokenized under the other), so record and validate
-        wh.paramsSpecValidated(postTable, Seq("scriptAwareTokens" ->
-          TextFunctions.scriptAwareEnabled.toString))
-        // one tokenization feeds postings, lengths and the stats row
-        val toksed = docs.select(col(idCol).as("id"),
-            TextFunctions.tokens(col(textCol)).as("__t"))
-          .localCheckpoint(true)
-        val postings = toksed
-          .select(col("id"), explode(col("__t")).as("tok"))
-          .groupBy("tok", "id").agg(count(lit(1)).as("tf"))
-        graft.core.Par.both(
-          wh.appendBucketed(postTable, postings, Seq("tok"),
-            nStoreBuckets),
-          wh.appendBucketed(lenTable,
-            toksed.select(col("id"),
-              size(col("__t")).cast("long").as("dl")),
-            Seq("id"), nStoreBuckets))
-        graft.sources.StoreTxn.current(root)
-          .touchPath(statsRel)
-        toksed.agg(count(lit(1)).as("n"),
-            coalesce(sum(size(col("__t")).cast("long")), lit(0L)).as("sumdl"))
-          .withColumn("append_key",
-            appendKey.map(lit(_)).getOrElse(lit(null)).cast("string"))
-          .write.mode("append").parquet(statsPath)
-      }
-      // only a COMMITTED append marks its key as seen
-      appendKey.foreach(k => if (seenKeys != null) seenKeys += k)
+    /** The committed (N, Σdl), None before the first append. A root
+      * whose postings predate the totals in the commit record is
+      * refused: counting from 0 over its postings would skew every
+      * idf. */
+    private def totals: Option[(Long, Long)] = {
+      val t = graft.sources.StoreTxn.getKv(wh.root, nKey)
+        .map(n => (n.toLong, graft.sources.StoreTxn.getKv(wh.root, sumdlKey).get.toLong))
+      require(t.isDefined || !wh.exists(postTable),
+        s"Bm25Index '$name' at $root has postings but no document count " +
+          "in its commit record — it was written by an earlier format; " +
+          "rebuild under a fresh root")
+      t
     }
 
-    /** Rewrite the accumulated index into one fresh physical generation
-      * — the maintenance pass for an always-on [[graft.streaming
-      * .Streaming.bm25IndexSink]], where every micro-batch append adds
-      * nStoreBuckets postings files + a stats file and a year of
-      * 5-minute batches is ~10⁵ append generations of small files.
-      * Contents are IDENTICAL (ids are unique across appends, so
-      * postings rows never merge; every stats row — including its
-      * append_key, the replay-idempotence ledger — is preserved);
-      * only the file layout consolidates to one write's worth.
-      *
-      * Runs as one transaction: the new `__c<epoch>` post/len tables
-      * and stats dir are written fresh (a crash sweeps them — the live
-      * generation is untouched), then the three active-aliases publish
-      * atomically in the commit record. Superseded generations are
-      * physically dropped only AFTER commit; a crash between commit
-      * and sweep leaves inert directories the next compact removes. */
+    protected def appendBody(docs: DataFrame, idCol: String,
+                             textCol: String): Unit = {
+      val (n0, sumdl0) = totals.getOrElse((0L, 0L))
+      wh.paramsSpecValidated(postTable, params)
+      // one tokenization feeds postings, lengths and the totals
+      val toksed = docs.select(col(idCol).as("id"),
+          TextFunctions.tokens(col(textCol)).as("__t"))
+        .localCheckpoint(true)
+      val postings = toksed
+        .select(col("id"), explode(col("__t")).as("tok"))
+        .groupBy("tok", "id").agg(count(lit(1)).as("tf"))
+      graft.core.Par.both(
+        wh.appendBucketed(postTable, postings, Seq("tok"), nStoreBuckets),
+        wh.appendBucketed(lenTable,
+          toksed.select(col("id"), size(col("__t")).cast("long").as("dl")),
+          Seq("id"), nStoreBuckets))
+      val batch = toksed.agg(count(lit(1)),
+        coalesce(sum(size(col("__t")).cast("long")), lit(0L))).head()
+      val txn = graft.sources.StoreTxn.current(wh.root)
+      txn.putKv(nKey, (n0 + batch.getLong(0)).toString)
+      txn.putKv(sumdlKey, (sumdl0 + batch.getLong(1)).toString)
+    }
+
+    /** Rewrite the postings and lengths into one fresh generation — see
+      * [[StoreCompaction]]. */
     def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-      compact() // uniform signature for the maintenance-sink trigger
-    def compact(): Unit = {
-      graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      require(new java.io.File(statsPath).exists(),
-        s"Bm25Index '$name' at $root has no appends — nothing to compact")
-      graft.sources.StoreTxn.transact(spark, root) {
-        val txn = graft.sources.StoreTxn.current(root)
-        val (curPost, curLen) = (postTable, lenTable)
-        val newPost = s"${postBase}__c${txn.epoch}"
-        val newLen = s"${lenBase}__c${txn.epoch}"
-        val newStatsRel = s"${statsBase}__c${txn.epoch}"
-        wh.paramsSpecValidated(newPost, Seq("scriptAwareTokens" ->
-          TextFunctions.scriptAwareEnabled.toString))
-        // appendBucketed itself aligns the frame on the writer's bucket
-        // id (pmod(murmur3, nBuckets)) — a caller-side pre-repartition
-        // on the same expression but a DIFFERENT partition count would
-        // not collapse with it and each compaction would pay a double
-        // shuffle (the r12 caller did; dropped in r13)
-        graft.core.Par.both(
-          wh.appendBucketed(newPost, wh.readBucketed(curPost),
-            Seq("tok"), nStoreBuckets),
-          wh.appendBucketed(newLen, wh.readBucketed(curLen),
-            Seq("id"), nStoreBuckets))
-        txn.touchPath(newStatsRel)
-        statsDf.coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/$newStatsRel")
-        txn.putKv(s"active:$name:post", newPost)
-        txn.putKv(s"active:$name:len", newLen)
-        txn.putKv(s"active:$name:stats", newStatsRel)
-      }
-      sweepStale()
-    }
-
-    /** Drop every physical generation the committed aliases no longer
-      * name — safe post-commit (they are unreachable the instant the
-      * alias publishes) and idempotent across crashes. */
-    private def sweepStale(): Unit = {
-      val (ap, al, as) = (postTable, lenTable, statsRel)
-      val whDir = new java.io.File(s"$root/warehouse")
-      def gens(base: String) = Option(whDir.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory &&
-          (f.getName == base || f.getName.startsWith(base + "__c")))
-        .map(_.getName)
-      (gens(postBase).filterNot(_ == ap) ++ gens(lenBase).filterNot(_ == al))
-        .foreach(wh.dropTable)
-      val stateDir = new java.io.File(s"$root/state")
-      val asName = as.stripPrefix("state/")
-      val statsBaseName = statsBase.stripPrefix("state/")
-      Option(stateDir.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory &&
-          (f.getName == statsBaseName ||
-            f.getName.startsWith(statsBaseName + "__c")) &&
-          f.getName != asName)
-        .foreach(graft.sources.StoreTxn.rmrf)
-      // a fresh handle on this root must reload its completed-key cache
-      // from the active stats generation
-      seenKeys = null
-    }
+      StoreCompaction.compact(spark, wh, s"Bm25Index '$name'",
+        Seq(postSpec, lenSpec))
+    def compact(): Unit = compact(spark)
 
     def search(queryTerms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75,
                logIdf: Boolean = false): DataFrame = {
       require(queryTerms.nonEmpty, "empty query")
       graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      wh.paramsSpecValidated(postTable, Seq("scriptAwareTokens" ->
-        TextFunctions.scriptAwareEnabled.toString), writeIfAbsent = false)
-      require(new java.io.File(statsPath).exists(),
-        s"Bm25Index '$name' at $root has no appends — index before searching")
-      val st = statsDf.agg(sum("n"), sum("sumdl")).head()
-      val n = st.getLong(0).toDouble
-      val avgdl = st.getLong(1).toDouble / n
+      val (nDocs, sumdl) = totals.getOrElse(throw new IllegalArgumentException(
+        s"Bm25Index '$name' at $root has no appends — index before searching"))
+      wh.paramsSpecValidated(postTable, params, writeIfAbsent = false)
+      val n = nDocs.toDouble
+      val avgdl = sumdl.toDouble / n
       // postings restricted to the query's terms: with the tok-bucketed
       // layout this reads the terms' buckets, not the corpus
       val posts = wh.readBucketed(postTable)

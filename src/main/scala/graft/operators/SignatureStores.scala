@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
 /** The shared ingest surface of the pair-emitting signature stores
   * (MinHash / SimHash / embedding-LSH) — one transactional `ingest`
   * plus the key-idempotent `ingestOnce` a streaming maintenance sink
-  * needs (the [[Retrieval.Bm25Index.appendOnce]] contract for pair
-  * stores):
+  * needs (the [[AppendStore.appendOnce]] contract for pair stores):
   *
   *  - a COMPLETED ingest key skips on redelivery — the key is buffered
   *    into the store's commit record, so "key visible" IS "ingest
@@ -85,7 +84,8 @@ trait PairStore {
 
 /** The key-once sibling of [[PairStore]] for stores whose write path
   * APPENDS without emitting a result ([[IvfStore]],
-  * [[Decontamination.GramIndex]]) — the same commit-record key ledger,
+  * [[Retrieval.Bm25Index]], [[Decontamination.GramIndex]]) — the same
+  * commit-record key ledger,
   * so each store in the family gets an always-on streaming maintenance
   * form with identical redelivery/crash semantics. */
 trait AppendStore {
@@ -126,52 +126,34 @@ trait AppendStore {
   }
 }
 
-/** Generation-rewrite compaction, shared by every store in the family.
+/** Generation-rewrite compaction, the one implementation every store
+  * in the family uses.
   *
   * An always-on maintenance sink appends one file set per micro-batch,
   * so a long-lived store accretes files and the serve/ingest read pays
   * per-file open/footer/schedule overhead that grows with stream age.
   * Compaction rewrites each table's ACTIVE physical generation into one
-  * fresh `<base>__c<epoch>` successor — rows identical, exactly
-  * `nStoreBuckets` files — and publishes ALL of a store's new
-  * generations through kv aliases in one StoreTxn commit, so readers
-  * switch atomically and a crash mid-compact rolls back to the old
-  * generations untouched. Superseded generation directories are swept
-  * post-commit (unreachable the instant the aliases publish; the sweep
-  * is idempotent across crashes).
-  *
-  * The rewrite pre-partitions each table on the WRITER'S OWN bucket id
-  * (`pmod(hash(bucketCols…), n)` — what the bucket writer computes per
-  * row) so every bucket's rows land wholly inside one task and the new
-  * generation totals exactly nStoreBuckets files; repartitioning on the
-  * raw columns instead spreads buckets across tasks (files = tasks ×
-  * buckets — measured 2× in the BM25 compaction spec).
-  *
-  * Two stores keep BESPOKE compactors with the same transactional
-  * shape rather than this helper, deliberately:
-  * [[Retrieval.Bm25Index.compact]] rewrites a non-bucketed one-row
-  * stats sidecar alongside its bucketed tables, and
-  * [[Decontamination.GramIndex.compact]] rewrites a gpfx-PARTITIONED
-  * bucketed layout via `appendBucketed`'s `partitionCol` with a compound
-  * pre-partitioning — parameterizing this helper for both would cost
-  * more surface than the two hand-written copies, each of which has
-  * its own crash-mid-compact spec. A change to the alias/sweep
-  * protocol must be applied in all three places. */
+  * fresh `<base>__c<epoch>` successor laid out exactly like it — the
+  * bucket count, bucket columns, partition column and parameters come
+  * from the live generation's sidecars ([[graft.sources.Warehouse
+  * .rewriteBucketed]]) — and publishes ALL of a store's new generations
+  * through kv aliases in one StoreTxn commit, so readers switch
+  * atomically and a crash mid-compact rolls back to the old generations
+  * untouched. The rewrite is aligned on the writer's own bucket id, so
+  * a new generation holds one file per non-empty (partition, bucket)
+  * cell. Superseded generation directories are swept post-commit
+  * (unreachable the instant the aliases publish; the sweep is
+  * idempotent across crashes). Scalar state in the commit record —
+  * the replay-key ledger, BM25's document count and length total —
+  * needs no rewrite. */
 private[operators] object StoreCompaction {
   /** One physical table of a store: resolved through `aliasKey` (the
-    * active-generation pointer in the commit record), rewritten with
-    * `bucketCols` bucketing and `params` as the generation's sidecar.
-    * `transform` is applied to the rows during the rewrite — the hook a
-    * store uses to fold a schema upgrade (e.g. backfilling a column
-    * added after the table was created) into the compaction it already
-    * pays for. Usually a row-local projection (identity on row count);
-    * a store whose EVERY reader re-aggregates by the bucket keys may
-    * also merge rows here ([[EdgeStore]] collapses cross-append
-    * duplicate edges) — any other row-count change silently corrupts
-    * the store. */
+    * active-generation pointer in the commit record), its rows passed
+    * through `transform` during the rewrite. Usually identity; a store
+    * whose EVERY reader re-aggregates by the bucket keys may merge rows
+    * here ([[EdgeStore]] collapses cross-append duplicate edges) — any
+    * other row-count change silently corrupts the store. */
   final case class TableSpec(aliasKey: String, base: String,
-                             bucketCols: Seq[String],
-                             params: Seq[(String, String)] = Nil,
                              transform: DataFrame => DataFrame = identity)
 
   def active(root: String, spec: TableSpec): String =
@@ -179,21 +161,15 @@ private[operators] object StoreCompaction {
 
   def compact(spark: org.apache.spark.sql.SparkSession,
               wh: graft.sources.Warehouse, storeLabel: String,
-              tables: Seq[TableSpec], nStoreBuckets: Int): Unit = {
+              tables: Seq[TableSpec]): Unit = {
     graft.sources.StoreTxn.recoverIfIdle(spark, wh.root)
     require(tables.exists(t => wh.exists(active(wh.root, t))),
       s"$storeLabel at ${wh.root} has no ingests — nothing to compact")
     graft.sources.StoreTxn.transact(spark, wh.root) {
       val txn = graft.sources.StoreTxn.current(wh.root)
       tables.filter(t => wh.exists(active(wh.root, t))).foreach { t =>
-        val cur = active(wh.root, t)
         val newTable = s"${t.base}__c${txn.epoch}"
-        if (t.params.nonEmpty) wh.paramsSpecValidated(newTable, t.params)
-        // appendBucketed aligns on the writer's bucket id itself — a
-        // caller-side pre-repartition (same expression, different
-        // count) would just add a second exchange per table
-        wh.appendBucketed(newTable, t.transform(wh.readBucketed(cur)),
-          t.bucketCols, nStoreBuckets)
+        wh.rewriteBucketed(active(wh.root, t), newTable, t.transform)
         txn.putKv(t.aliasKey, newTable)
       }
     }
@@ -265,9 +241,9 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
   private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:mh_sig", s"${name}_mh_sig", Seq("band", "bucket"))
+    s"active:$name:mh_sig", s"${name}_mh_sig")
   private val setSpec = StoreCompaction.TableSpec(
-    s"active:$name:mh_set", s"${name}_mh_set", Seq("id"))
+    s"active:$name:mh_set", s"${name}_mh_set")
   private def sigTable = StoreCompaction.active(wh.root, sigSpec)
   private def setTable = StoreCompaction.active(wh.root, setSpec)
   def storeRoot: String = wh.root
@@ -276,7 +252,7 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     * single-generation layouts — see [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
     StoreCompaction.compact(spark, wh, s"MinhashStore '$name'",
-      Seq(sigSpec.copy(params = sigParams), setSpec), cfg.nStoreBuckets)
+      Seq(sigSpec, setSpec))
 
   /** Near-dup pairs of `batch` against itself AND the store, then the
     * batch's signatures are appended to the store. The returned frame
@@ -562,7 +538,7 @@ final class IvfStore(wh: graft.sources.Warehouse, name: String,
   // appends land in the ACTIVE physical generation; [[compact]]
   // publishes a `__c<epoch>` successor through the commit-record alias
   private val tableSpec = StoreCompaction.TableSpec(
-    s"active:$name:ivf", s"${name}_ivf", Seq("cell"))
+    s"active:$name:ivf", s"${name}_ivf")
   private def table: String = StoreCompaction.active(wh.root, tableSpec)
 
   // the frozen-centroid contract, made self-enforcing: a fingerprint of
@@ -606,8 +582,7 @@ final class IvfStore(wh: graft.sources.Warehouse, name: String,
     * physical generation — see [[StoreCompaction]] (rows identical;
     * ids are unique across appends). */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"IvfStore '$name'",
-      Seq(tableSpec.copy(params = storeParams)), nStoreBuckets)
+    StoreCompaction.compact(spark, wh, s"IvfStore '$name'", Seq(tableSpec))
 }
 
 /** Parameters of a precomputed-signature hamming store — the chunk
@@ -636,15 +611,14 @@ final class HammingStore(wh: graft.sources.Warehouse, name: String,
   private def sigParams = Seq(
     "chunks" -> cfg.chunks.toString, "chunkBits" -> cfg.chunkBits.toString)
   private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:hm_sig", s"${name}_hm_sig", Seq("chunk", "cval"))
+    s"active:$name:hm_sig", s"${name}_hm_sig")
   private def sigTable = StoreCompaction.active(wh.root, sigSpec)
   def storeRoot: String = wh.root
 
   /** Rewrite the signature table into one fresh generation — see
     * [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"HammingStore '$name'",
-      Seq(sigSpec.copy(params = sigParams)), cfg.nStoreBuckets)
+    StoreCompaction.compact(spark, wh, s"HammingStore '$name'", Seq(sigSpec))
 
   protected def ingestBody(batch: DataFrame, idCol: String,
                            sigCol: String): DataFrame = {
@@ -701,7 +675,7 @@ final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
                         nStoreBuckets: Int = 64)
     extends AppendStore {
   private val tableSpec = StoreCompaction.TableSpec(
-    s"active:$name:adc", s"${name}_adc", Seq("cell"))
+    s"active:$name:adc", s"${name}_adc")
   private def table: String = StoreCompaction.active(wh.root, tableSpec)
 
   private lazy val centroidFp: Long = {
@@ -749,8 +723,7 @@ final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
 
   /** Rewrite into one fresh generation — see [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"IvfAdcStore '$name'",
-      Seq(tableSpec.copy(params = storeParams)), nStoreBuckets)
+    StoreCompaction.compact(spark, wh, s"IvfAdcStore '$name'", Seq(tableSpec))
 }
 
 /** Parameters of a hyperplane-LSH embedding store. `planes` pins the
@@ -781,9 +754,9 @@ final case class EmbeddingLshConfig(threshold: Double, dim: Int,
 final class EmbeddingLshStore(wh: graft.sources.Warehouse, name: String,
                               cfg: EmbeddingLshConfig) extends PairStore {
   private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:el_sig", s"${name}_el_sig", Seq("tbl", "sig"))
+    s"active:$name:el_sig", s"${name}_el_sig")
   private val vecSpec = StoreCompaction.TableSpec(
-    s"active:$name:el_vec", s"${name}_el_vec", Seq("id"))
+    s"active:$name:el_vec", s"${name}_el_vec")
   private def sigTable = StoreCompaction.active(wh.root, sigSpec)
   private def vecTable = StoreCompaction.active(wh.root, vecSpec)
   def storeRoot: String = wh.root
@@ -796,7 +769,7 @@ final class EmbeddingLshStore(wh: graft.sources.Warehouse, name: String,
     * single-generation layouts — see [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
     StoreCompaction.compact(spark, wh, s"EmbeddingLshStore '$name'",
-      Seq(sigSpec.copy(params = sigParams), vecSpec), cfg.nStoreBuckets)
+      Seq(sigSpec, vecSpec))
 
   // the planes ARE the signature space (explicitly pinned or derived
   // from dim/tables/bits/seed), so the sidecar records a fingerprint
@@ -891,15 +864,14 @@ final class SimhashStore(wh: graft.sources.Warehouse, name: String,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
   private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:sh_sig", s"${name}_sh_sig", Seq("chunk", "cval"))
+    s"active:$name:sh_sig", s"${name}_sh_sig")
   private def sigTable = StoreCompaction.active(wh.root, sigSpec)
   def storeRoot: String = wh.root
 
   /** Rewrite the signature table into one fresh generation — see
     * [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"SimhashStore '$name'",
-      Seq(sigSpec.copy(params = sigParams)), cfg.nStoreBuckets)
+    StoreCompaction.compact(spark, wh, s"SimhashStore '$name'", Seq(sigSpec))
 
   protected def ingestBody(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
@@ -985,9 +957,9 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
   private val postSpec = StoreCompaction.TableSpec(
-    s"active:$name:ct_post", s"${name}_ct_post", Seq("shingle"))
+    s"active:$name:ct_post", s"${name}_ct_post")
   private val sizeSpec = StoreCompaction.TableSpec(
-    s"active:$name:ct_size", s"${name}_ct_size", Seq("id"))
+    s"active:$name:ct_size", s"${name}_ct_size")
   private def postTable = StoreCompaction.active(wh.root, postSpec)
   private def sizeTable = StoreCompaction.active(wh.root, sizeSpec)
   def storeRoot: String = wh.root
@@ -996,7 +968,7 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
     * single-generation layouts — see [[StoreCompaction]]. */
   def compact(spark: org.apache.spark.sql.SparkSession): Unit =
     StoreCompaction.compact(spark, wh, s"ContainmentStore '$name'",
-      Seq(postSpec.copy(params = postParams), sizeSpec), cfg.nStoreBuckets)
+      Seq(postSpec, sizeSpec))
 
   protected def ingestBody(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {

@@ -33,9 +33,6 @@ final class StagingStore(spark: SparkSession, root: String) {
   private def path(collection: String) = s"$root/staging/$collection"
   private def wmFile(collection: String, op: String) =
     new java.io.File(s"$root/watermarks", s"${collection}__$op.instant")
-  /** Where earlier versions kept the watermark: a one-row parquet table. */
-  private def legacyWmDir(collection: String, op: String) =
-    new java.io.File(s"$root/watermarks", s"${collection}__$op")
 
   /** The collection's recorded schema, next to its files; the leading
     * `_` hides it from the parquet reader. */
@@ -50,21 +47,23 @@ final class StagingStore(spark: SparkSession, root: String) {
   def appendAt(collection: String, df: DataFrame, at: java.sql.Timestamp): Unit =
     write(collection, df.withColumn("__ingested_at", lit(at)))
 
-  /** An append must carry the recorded columns (see [[SchemaSidecar]]).
-    * The append that creates the collection records the schema Spark
-    * infers for it, once. */
+  /** An append must carry the recorded columns (see [[SchemaSidecar]]);
+    * the append that creates the collection records its frame's schema. */
   private def write(collection: String, df: DataFrame): Unit = {
-    val f = schemaFile(collection)
-    SchemaSidecar.check(f, df.schema, s"staging collection '$collection'")
+    val what = s"staging collection '$collection'"
+    SchemaSidecar.requireRecorded(schemaFile(collection), path(collection), what)
+    SchemaSidecar.checkOrRecord(schemaFile(collection), df.schema, what)
     df.write.mode(SaveMode.Append).parquet(path(collection))
-    if (!f.isFile) SchemaSidecar.readOrInfer(spark, f, path(collection))
   }
 
-  /** Read with the recorded schema: no inference job. A collection
-    * written before the schema was recorded infers once and records it. */
-  def readAll(collection: String): DataFrame =
-    spark.read.schema(SchemaSidecar.readOrInfer(spark, schemaFile(collection),
-      path(collection))).parquet(path(collection))
+  /** Read with the recorded schema: no inference job. */
+  def readAll(collection: String): DataFrame = {
+    val f = schemaFile(collection)
+    SchemaSidecar.requireRecorded(f, path(collection),
+      s"staging collection '$collection'")
+    require(f.isFile, s"staging collection '$collection' not found at ${path(collection)}")
+    spark.read.schema(SchemaSidecar.read(f)).parquet(path(collection))
+  }
 
   /** The staged rows split at `op`'s watermark into (unprocessed,
     * history): ingest time strictly after it, and at or before it. Both
@@ -100,17 +99,17 @@ final class StagingStore(spark: SparkSession, root: String) {
     StoreTxn.writeAtomic(wmFile(collection, op), ts.toInstant.toString)
 
   /** The op watermark, exact to the nanosecond; None before the first
-    * advance. A leftover temp file from a crashed write is never read. A
-    * root written by an earlier version keeps its marker: the parquet
-    * table is read until the first advance writes the file. */
+    * advance. A leftover temp file from a crashed write is never read.
+    * The one-row parquet table earlier versions kept instead is refused:
+    * ignoring it would reprocess every staged row. */
   def watermark(collection: String, op: String): Option[java.sql.Timestamp] = {
     val f = wmFile(collection, op)
-    val legacy = legacyWmDir(collection, op)
-    if (f.isFile) Some(java.sql.Timestamp.from(
+    val marker = new java.io.File(s"$root/watermarks", s"${collection}__$op")
+    require(!marker.exists(),
+      s"watermark '${collection}__$op' at ${marker.getPath} is a parquet " +
+        "marker from an earlier format — rebuild the staging root fresh")
+    Option.when(f.isFile)(java.sql.Timestamp.from(
       java.time.Instant.parse(java.nio.file.Files.readString(f.toPath).trim)))
-    else if (legacy.isDirectory)
-      spark.read.parquet(legacy.getPath).collect().headOption.map(_.getTimestamp(0))
-    else None
   }
 
   def exists(collection: String): Boolean =
@@ -132,10 +131,18 @@ private[sources] object SchemaSidecar {
     schema
   }
 
-  /** The recorded schema; a store written before it was recorded infers
-    * it from the files in `dir` once and records it. */
-  def readOrInfer(spark: SparkSession, f: java.io.File, dir: String): StructType =
-    if (f.isFile) read(f) else record(f, spark.read.parquet(dir).schema)
+  /** Throws when `dir` holds data files but no recorded schema: a store
+    * written before schemas were recorded is not read or appended to. */
+  def requireRecorded(f: java.io.File, dir: String, what: String): Unit =
+    require(f.isFile || !hasData(new java.io.File(dir)),
+      s"$what at $dir has data but no recorded schema (${f.getName}) — " +
+        "it was written by an earlier format; rebuild it under a fresh root")
+
+  /** A data file anywhere under `f`; partitioned tables keep theirs one
+    * level down. */
+  def hasData(f: java.io.File): Boolean =
+    if (f.isDirectory) Option(f.listFiles()).exists(_.exists(hasData))
+    else f.exists() && !f.getName.startsWith("_") && !f.getName.startsWith(".")
 
   /** Throws unless `schema` equals the recorded one, if any, with
     * nullability ignored. */
@@ -290,8 +297,7 @@ final class Warehouse(spark: SparkSession, root0: String) {
         s"'${spec.trim.replace("\n", " / ")}' — a bucketed table's " +
         "layout is fixed at creation (re-bucket = new table)")
     val dir = new java.io.File(path(table))
-    if (!schemaFile(table).isFile && hasData(dir)) // written before schemas were recorded
-      SchemaSidecar.readOrInfer(spark, schemaFile(table), dir.getPath)
+    SchemaSidecar.requireRecorded(schemaFile(table), dir.getPath, s"bucketed table '$table'")
     SchemaSidecar.checkOrRecord(schemaFile(table), df.schema, s"bucketed table '$table'")
     // ALIGN the frame's partitioning with the bucket function: a
     // bucketed write emits one file per (task, bucket) pair, so an
@@ -337,32 +343,47 @@ final class Warehouse(spark: SparkSession, root0: String) {
     * directories). */
   def readBucketed(table: String): DataFrame = {
     val dir = new java.io.File(path(table))
-    val spec = bucketSpecFile(table)
-    require(spec.exists(),
-      s"bucketed table $table not found at ${dir.getPath} (no bucket spec)")
+    val (nBuckets, cols, partitionCol) = bucketLayout(table)
     // spec with no data files = a write that crashed before any data
     // landed (the sidecars are written first) — report it as such, not
     // as a schema-inference failure from an empty directory
-    require(hasData(dir),
+    require(SchemaSidecar.hasData(dir),
       s"bucketed table $table at ${dir.getPath} has a bucket spec but " +
         "no data files (interrupted first write?) — restore from " +
         "snapshot or delete the directory")
-    val lines = java.nio.file.Files.readString(spec.toPath).trim.split("\n")
-    val cols = lines(1).split(",").toSeq
+    SchemaSidecar.requireRecorded(schemaFile(table), dir.getPath, s"bucketed table '$table'")
     spark.baseRelationToDataFrame(DataSource(spark, "parquet",
       paths = Seq(dir.getPath),
-      userSpecifiedSchema = Some(
-        SchemaSidecar.readOrInfer(spark, schemaFile(table), dir.getPath)),
-      partitionColumns = lines.drop(2).toSeq,
-      bucketSpec = Some(BucketSpec(lines(0).toInt, cols, cols)))
+      userSpecifiedSchema = Some(SchemaSidecar.read(schemaFile(table))),
+      partitionColumns = partitionCol.toSeq,
+      bucketSpec = Some(BucketSpec(nBuckets, cols, cols)))
       .resolveRelation(checkFilesExist = false))
   }
 
-  /** A data file anywhere under `f`; partitioned tables keep theirs one
-    * level down. */
-  private def hasData(f: java.io.File): Boolean =
-    if (f.isDirectory) Option(f.listFiles()).exists(_.exists(hasData))
-    else f.exists() && !f.getName.startsWith("_") && !f.getName.startsWith(".")
+  /** The bucket count, bucket columns and partition column the table's
+    * bucket-spec sidecar records. */
+  private def bucketLayout(table: String): (Int, Seq[String], Option[String]) = {
+    val spec = bucketSpecFile(table)
+    require(spec.exists(),
+      s"bucketed table $table not found at ${path(table)} (no bucket spec)")
+    val lines = java.nio.file.Files.readString(spec.toPath).trim.split("\n")
+    (lines(0).toInt, lines(1).split(",").toSeq, lines.lift(2))
+  }
+
+  /** Rewrite bucketed `table` into the fresh table `into` with the same
+    * layout — bucket count, bucket columns, partition column and
+    * parameters, all copied from `table`'s sidecars — its rows passed
+    * through `transform`. Store compaction's rewrite step: the
+    * generation it writes is laid out exactly like the one it replaces. */
+  private[graft] def rewriteBucketed(table: String, into: String,
+                                     transform: DataFrame => DataFrame): Unit = {
+    StoreTxn.touchIfActive(root, s"warehouse/$into")
+    val params = Warehouse.sidecar(root, "params", table)
+    if (params.isFile) StoreTxn.writeAtomic(Warehouse.sidecar(root, "params", into),
+      java.nio.file.Files.readString(params.toPath))
+    val (nBuckets, cols, partitionCol) = bucketLayout(table)
+    appendBucketed(into, transform(readBucketed(table)), cols, nBuckets, partitionCol)
+  }
 
   /** Write-or-validate a store-PARAMETERS sidecar. The bucket spec
     * guards the physical layout; this guards the semantic one — values

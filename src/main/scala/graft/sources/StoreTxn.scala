@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * (MinhashStore / SimhashStore / EmbeddingLshStore / IvfStore /
   * Bm25Index / GramIndex / CurationStore).
   *
-  * One store ingest appends to SEVERAL tables (postings + lengths +
-  * stats; signatures + verification sets; hash store + labels +
-  * marker). Parquet's output committer makes each single
+  * One store ingest appends to SEVERAL tables (BM25: postings +
+  * lengths, with N/Σdl in the commit record; signatures + verification
+  * sets; hash store + labels + marker). Parquet's output committer makes each single
   * WRITE atomic, but nothing spans the writes — a crash between them
   * used to leave partial multi-table state that only an external
   * snapshot-restore discipline could heal. This object closes that

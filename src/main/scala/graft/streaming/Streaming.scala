@@ -430,6 +430,7 @@ object Streaming {
 
   /** Always-on maintenance for the append-shaped stores
     * ([[graft.operators.IvfStore]],
+    * [[graft.operators.Retrieval.Bm25Index]],
     * [[graft.operators.Decontamination.GramIndex]],
     * [[graft.operators.Sketches.DistinctStore]] — anything
     * implementing [[graft.operators.AppendStore]]): each micro-batch is
@@ -462,52 +463,6 @@ object Streaming {
       withAutoCompact(store.storeRoot, autoCompact, store.compact) {
         (batch, batchId) =>
           store.appendOnce(batch, idCol, valueCol,
-            Some(s"$checkpoint#$batchId"))
-          ()
-      })
-
-  /** Always-on BM25 index maintenance: each micro-batch of documents is
-    * one [[graft.operators.Retrieval.Bm25Index.appendOnce]] keyed on
-    * (checkpoint path, batchId) — globally unique across streams, so
-    * two checkpoints feeding one index over time can't collide on bare
-    * batch ids; a redelivered batch whose append COMMITTED skips via
-    * the key-stamped stats marker, one that crashed mid-append rolls
-    * back and re-appends (the index's StoreTxn semantics). Resetting
-    * the checkpoint without resetting the index reuses old keys and
-    * SKIPS those batches (see appendOnce). Ids must be unique across
-    * the whole stream (the index's own contract).
-    *
-    * The sink holds the index root's maintenance lease from start to
-    * termination: a second concurrent sink on the same index fails
-    * fast instead of silently interleaving appends. */
-  def bm25IndexSink(docs: DataFrame,
-                    index: graft.operators.Retrieval.Bm25Index,
-                    checkpoint: String, idCol: String, textCol: String,
-                    trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-                    autoCompact: Option[CompactionPolicy] =
-                      Some(CompactionPolicy()))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    leasedSink(docs, index.storeRoot, checkpoint, trigger)(
-      withAutoCompact(index.storeRoot, autoCompact, index.compact) {
-        (batch, batchId) =>
-          index.appendOnce(batch, idCol, textCol,
-            Some(s"$checkpoint#$batchId"))
-          ()
-      })
-
-  /** Cron-compatible catch-up form of [[bm25IndexSink]] — lease held
-    * for the run, released synchronously (back-to-back catch-ups never
-    * race a termination listener). */
-  def runBm25IndexAvailableNow(docs: DataFrame,
-                               index: graft.operators.Retrieval.Bm25Index,
-                               checkpoint: String, idCol: String,
-                               textCol: String,
-                               autoCompact: Option[CompactionPolicy] =
-                                 Some(CompactionPolicy())): Unit =
-    leasedAvailableNow(docs, index.storeRoot, checkpoint)(
-      withAutoCompact(index.storeRoot, autoCompact, index.compact) {
-        (batch, batchId) =>
-          index.appendOnce(batch, idCol, textCol,
             Some(s"$checkpoint#$batchId"))
           ()
       })

@@ -364,14 +364,15 @@ class PipelineSpec extends SparkSpec {
       withNull.select("doc_id").as[Long].collect().toSet)
   }
 
-  test("curation store: a pre-owner-column exact table ingests with null " +
-      "winners; compact upgrades it in place") {
+  test("curation store: a pre-owner-column exact table is refused, state " +
+      "unchanged") {
     val root = freshRoot()
     val store = new Pipeline.CurationStore(spark, root, "t", cfg,
       Some(evalSet), "text")
     store.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
-    // forge the legacy layout: rewrite the exact table with the
-    // 2-column schema stores had before the owner id rode along
+    val labels = store.readLabels.collect().map(_.toString).sorted.toSeq
+    // forge the earlier layout: the exact table with the 2-column schema
+    // stores had before the owner id rode along
     val wh = new graft.sources.Warehouse(spark, root)
     val legacyRows = wh.readBucketed("t_cur_exact")
       .select("__h1", "__h2").collect().toSeq
@@ -384,27 +385,14 @@ class PipelineSpec extends SparkSpec {
           org.apache.spark.sql.types.StructField("__h2",
             org.apache.spark.sql.types.LongType)))),
       Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets)
-    // ingest against the legacy table: must succeed (a 3-column append
-    // would throw column-arity); the store-dup winner degrades to null
-    val r2 = store.ingest(docs.filter(col("doc_id") > 5), "doc_id", "text",
-      withAudit = true)
-    val a2 = r2.audit.get.as[(Long, String, Option[Long])]
-      .collect().sortBy(_._1).toSeq
-    assert(a2.contains((6L, "exact_dup", None)))
-    assert(r2.kept.select("id").as[Long].collect().sorted.toSeq === Seq(8L))
-    // compaction doubles as the schema upgrade: owner column backfilled
-    // null, and the NEXT ingest's rows carry their ids again
-    store.compact()
-    assert(wh.readBucketed(
-      graft.sources.StoreTxn.getKv(root, "active:t:cur_exact").get)
-      .columns.contains("id"))
-    val newText = "it is a new fact commonly observed that a writer in " +
-      "search of the words must be in need of them today and every day"
-    store.ingest(Seq((30L, newText)).toDF("doc_id", "text"), "doc_id", "text")
-    val r4 = store.ingest(Seq((31L, newText)).toDF("doc_id", "text"),
-      "doc_id", "text", withAudit = true)
-    assert(r4.audit.get.as[(Long, String, Option[Long])].collect().toSeq
-      .contains((31L, "exact_dup", Some(30L))))
+    val e = intercept[IllegalArgumentException] {
+      store.ingest(docs.filter(col("doc_id") > 5), "doc_id", "text",
+        withAudit = true)
+    }
+    assert(e.getMessage.contains("t_cur_exact") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
+    assert(store.maxIngestedId === Some(5L))
+    assert(store.readLabels.collect().map(_.toString).sorted.toSeq === labels)
   }
 
   test("authority gate composes into curate: hosts below the rank bar " +

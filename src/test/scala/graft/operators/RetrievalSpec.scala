@@ -102,6 +102,55 @@ class RetrievalSpec extends SparkSpec {
     assert(served === oneShot && served.nonEmpty) // scores bit-equal
   }
 
+  test("bm25 index: N and Σdl ride in the commit record, so a warm search " +
+      "starts one job, not three") {
+    val corpus = (1L to 60L).map { i =>
+      (i, if (i % 5 == 0) "spark engine cluster" else s"filler$i words here")
+    }.toDF("id", "text")
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bm25jobs_").toString
+    val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
+    idx.append(corpus.filter(col("id") <= 30), "id", "text")
+    idx.append(corpus.filter(col("id") > 30), "id", "text")
+    val tokens = corpus.select(size(graft.functions.TextFunctions
+      .tokens(col("text")))).as[Int].collect().map(_.toLong).sum
+    assert(graft.sources.StoreTxn.getKv(root, "bm25:t:n") === Some("60"))
+    assert(graft.sources.StoreTxn.getKv(root, "bm25:t:sumdl") ===
+      Some(tokens.toString))
+    idx.search(Seq("spark", "engine"), k = 8).collect() // warm
+    // the per-term document frequencies are the one control read left,
+    // one job: the postings are bucketed by term, so their aggregate
+    // needs no exchange. The N/Σdl aggregate over a stats directory took
+    // two more (a shuffle-map job and its result job).
+    val (_, ran) = graft.Jobs.during(spark)(
+      idx.search(Seq("spark", "engine"), k = 8))
+    assert(ran.jobs.size === 1, ran)
+  }
+
+  test("bm25 index: a root whose postings predate the commit-record totals " +
+      "is refused for appends and searches") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bm25old_").toString
+    val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
+    idx.append(docs, "id", "text")
+    // forge the earlier format: postings and lengths, no N/Σdl kvs
+    val commit = new java.io.File(root, "_txn/commit").toPath
+    java.nio.file.Files.writeString(commit, java.nio.file.Files
+      .readString(commit).split("\n").filterNot(_.startsWith("kv\tbm25:"))
+      .mkString("\n"))
+    val posts = new graft.sources.Warehouse(spark, root)
+      .readBucketed("t_bm_post").collect().map(_.toString).sorted.toSeq
+    Seq(() => idx.search(Seq("spark"), 5),
+        () => idx.append(docs.select((col("id") + 10).as("id"), col("text")),
+          "id", "text")).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("rebuild under a fresh root"), e.getMessage)
+    }
+    assert(new graft.sources.Warehouse(spark, root).readBucketed("t_bm_post")
+      .collect().map(_.toString).sorted.toSeq === posts,
+      "the refused append wrote nothing")
+  }
+
   test("rrfFuse combines ranks, handles one-sided hits, caps at k") {
     val lex = Seq((10L, 1), (11L, 2), (12L, 3)).toDF("id", "rank")
     val sem = Seq((11L, 1), (13L, 2)).toDF("id", "rank")

@@ -72,7 +72,7 @@ class StorageSpec extends SparkSpec {
     assert(st.readUnprocessed("docs", "op").count() === 0)
   }
 
-  test("staging watermark: a root with the one-row parquet marker keeps it") {
+  test("staging watermark: a root with the one-row parquet marker is refused") {
     val root = tmpRoot()
     val st = new StagingStore(spark, root)
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
@@ -80,10 +80,13 @@ class StorageSpec extends SparkSpec {
     st.appendAt("docs", Seq(1).toDF("id"), t0)
     st.appendAt("docs", Seq(2).toDF("id"), t1)
     Seq(t0).toDF("wm").write.parquet(s"$root/watermarks/docs__op")
-    assert(st.readUnprocessed("docs", "op").select("id").as[Int].collect().toSeq
-      === Seq(2))
-    st.advanceWatermarkTo("docs", "op", t1)
-    assert(st.watermark("docs", "op") === Some(t1))
+    val e = intercept[IllegalArgumentException](st.readUnprocessed("docs", "op"))
+    assert(e.getMessage.contains("docs__op") && e.getMessage.contains("rebuild"),
+      e.getMessage)
+    // reading nothing, the refusal starts no job either
+    val (_, ran) = graft.Jobs.during(spark)(
+      intercept[IllegalArgumentException](st.watermark("docs", "op")))
+    assert(ran.jobs.isEmpty, ran)
   }
 
   test("warehouse: idempotent append is exactly-once under replay") {
@@ -277,6 +280,15 @@ class StorageSpec extends SparkSpec {
     wh.appendBucketed("undo_t", Seq((1L, 2.0, 3)).toDF("k", "x", "y"), Seq("k"), 8)
     assert(wh.readBucketed("undo_t").as[(Long, Double, Int)].collect().toSeq ===
       Seq((1L, 2.0, 3)))
+    // a table with data but no recorded schema is refused both ways
+    assert(new java.io.File(s"$root/warehouse/_graft_schema_schema_t").delete())
+    Seq(() => wh.readBucketed("schema_t"), () =>
+        wh.appendBucketed("schema_t", Seq((2L, "b")).toDF("k", "v"), Seq("k"), 4))
+      .foreach { op =>
+        val r = intercept[IllegalArgumentException](op())
+        assert(r.getMessage.contains("no recorded schema") &&
+          r.getMessage.contains("rebuild"), r.getMessage)
+      }
   }
 
   test("bucketed append rejects a drifted bucket layout instead of corrupting the spec") {
@@ -352,14 +364,23 @@ class StorageSpec extends SparkSpec {
       val ((fresh, history), ran) = graft.Jobs.during(spark)(st.readSplit(c, "op"))
       assert(ran.jobs.isEmpty && ran.queries.isEmpty, ran)
       assert(fresh.count() === 1 && history.count() === 1)
-      // a root written before schemas were recorded infers once, then has one
-      assert(sidecar.delete())
-      assert(st.readAll(c).count() === 2)
-      assert(sidecar.isFile && recorded === spark.read.parquet(dir).schema)
       val e = intercept[IllegalArgumentException](st.appendAt(c,
         staged().withColumn("extra", lit(1)), java.sql.Timestamp.valueOf("2024-01-03 10:00:00")))
       assert(e.getMessage.contains(s"'$c'"))
       assert(st.readAll(c).count() === 2, "the rejected append wrote nothing")
+      // a collection written before schemas were recorded is refused,
+      // for reads and appends alike, and nothing is inferred
+      assert(sidecar.delete())
+      val again = staged()
+      val (_, refusals) = graft.Jobs.during(spark)(Seq(() => st.readAll(c),
+          () => st.appendAt(c, again, java.sql.Timestamp.valueOf("2024-01-03 10:00:00")))
+        .foreach { op =>
+          val r = intercept[IllegalArgumentException](op())
+          assert(r.getMessage.contains("no recorded schema") &&
+            r.getMessage.contains("rebuild"), r.getMessage)
+        })
+      assert(refusals.jobs.isEmpty, refusals)
+      assert(!sidecar.exists() && spark.read.parquet(dir).count() === 2)
     }
   }
 

@@ -132,6 +132,85 @@ class StoreTxnSpec extends SparkSpec {
     assert(idx2.search(Seq("alpha"), k = 20).count() === 10L)
   }
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Run `op` on a copy of `warm` uncrashed, then on further copies
+    * crashed at each of its `touches` directory registrations and before
+    * its commit, each followed by a blind retry of `op`: every retried
+    * store must `observe` as the uncrashed one, and its commit record
+    * and warehouse listing (tables and sidecars) must be identical. */
+  private def crashMatrix(warm: String, touches: Int)(op: String => Unit)(
+      observe: String => Seq[String]): Unit = {
+    def copy(prefix: String) = {
+      val root = tmp(prefix)
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(warm),
+        new java.io.File(root))
+      root
+    }
+    def state(root: String) = observe(root) ++
+      new java.io.File(root, "warehouse").list().sorted.toSeq :+
+      java.nio.file.Files.readString(new java.io.File(root, "_txn/commit").toPath)
+    val clean = copy("graft_txn_clean_")
+    op(clean)
+    val expected = state(clean)
+    for (crash <- (1 to touches).map(Some(_)) :+ None) {
+      val root = copy("graft_txn_crash_")
+      crash match {
+        case Some(n) => StoreTxn.hooks.crashAfterTouches = n
+        case None => StoreTxn.hooks.crashBeforeCommit = true
+      }
+      crashAndExpire(op(root))
+      if (crash.isEmpty) { // `touches` is the whole write set
+        val intent = java.nio.file.Files.readString(new java.io.File(root,
+          "_txn/intent").toPath).split("\n").filter(_.startsWith("dir\t"))
+        assert(intent.length === touches, intent.mkString("; "))
+      }
+      op(root)
+      assert(state(root) === expected, s"crash $crash")
+    }
+  }
+
+  test("bm25 index: a crash at every touch of a keyed append or a compaction, " +
+      "or before its commit, then a blind retry equals a clean store") {
+    val docs = corpus(24, seed = 9L).toDF("doc_id", "text")
+    def index(root: String) =
+      new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
+    def append(root: String, lo: Long, hi: Long, key: String): Unit = {
+      index(root).appendOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
+        "doc_id", "text", Some(key))
+      ()
+    }
+    // the ranking and the N/Σdl totals (the commit record is compared too)
+    def observe(root: String) =
+      rows(index(root).search(Seq("alpha", "kilo"), 10)) ++
+        Seq("n", "sumdl").map(k => s"$k=${StoreTxn.getKv(root, s"bm25:t:$k")}")
+    val warm = tmp("graft_txn_bmwarm_")
+    append(warm, 0, 12, "k1")
+    crashMatrix(warm, touches = 2)(append(_, 12, 24, "k2"))(observe)
+    append(warm, 12, 24, "k2")
+    crashMatrix(warm, touches = 2)(root => index(root).compact())(observe)
+  }
+
+  test("gram index: a crash at every touch of a keyed append or a compaction, " +
+      "or before its commit, then a blind retry equals a clean store") {
+    val docs = corpus(24, seed = 10L).toDF("doc_id", "text")
+    val eval = docs.filter(col("doc_id") % 5 === 0).select("text")
+    def index(root: String) = new Decontamination.GramIndex(spark, root, "t",
+      n = 3, nStoreBuckets = 2, prefixPartitions = 4)
+    def append(root: String, lo: Long, hi: Long, key: String): Unit = {
+      index(root).appendOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
+        "doc_id", "text", Some(key))
+      ()
+    }
+    def observe(root: String) = rows(index(root).check(eval, "text"))
+    val warm = tmp("graft_txn_gramwarm_")
+    append(warm, 0, 12, "k1")
+    crashMatrix(warm, touches = 1)(append(_, 12, 24, "k2"))(observe)
+    append(warm, 12, 24, "k2")
+    crashMatrix(warm, touches = 1)(root => index(root).compact())(observe)
+  }
+
   test("curation store: kill mid-ingest, blind retry equals the uncrashed run") {
     val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
       minhash = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,

@@ -441,7 +441,7 @@ class StreamingSpec extends SparkSpec {
     val idx = new graft.operators.Retrieval.Bm25Index(
       spark, s"$root/idx", "t", nStoreBuckets = 2)
     val schema = corpus.toDF("doc_id", "text").schema
-    Streaming.runBm25IndexAvailableNow(
+    Streaming.runAppendStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       idx, s"$root/ckpt", "doc_id", "text")
@@ -469,12 +469,12 @@ class StreamingSpec extends SparkSpec {
     val schema = corpus.toDF("doc_id", "text").schema
     def stream() = spark.readStream.schema(schema).parquet(inDir)
     // first sink holds the index root's maintenance lease...
-    val q1 = Streaming.bm25IndexSink(stream(), idx, s"$root/ckpt1",
+    val q1 = Streaming.appendStoreSink(stream(), idx, s"$root/ckpt1",
       "doc_id", "text")
     try {
       // ...so a second sink on the SAME index fails fast at start
       val e = intercept[IllegalStateException] {
-        Streaming.bm25IndexSink(stream(), idx, s"$root/ckpt2",
+        Streaming.appendStoreSink(stream(), idx, s"$root/ckpt2",
           "doc_id", "text")
       }
       assert(e.getMessage.contains("maintenance"), e.getMessage)
@@ -484,7 +484,7 @@ class StreamingSpec extends SparkSpec {
     // successor runs
     val deadline = System.currentTimeMillis + 20000
     def successor(): Unit =
-      try Streaming.runBm25IndexAvailableNow(
+      try Streaming.runAppendStoreAvailableNow(
         spark.readStream.schema(schema).parquet(inDir), idx, s"$root/ckpt1",
         "doc_id", "text")
       catch {
