@@ -285,9 +285,8 @@ object Decontamination {
                         nStoreBuckets: Int = 32,
                         prefixPartitions: Int = 64) extends AppendStore {
     private val wh = new graft.sources.Warehouse(spark, root)
-    private val gramSpec = StoreCompaction.TableSpec(
-      s"active:$name:gram", s"${name}_dc_gram")
-    private def gramTable: String = StoreCompaction.active(wh.root, gramSpec)
+    private val gramSpec = StoreCompaction.TableSpec(s"${name}_dc_gram")
+    private def gramTable: String = wh.live(gramSpec.base)
     def storeRoot: String = wh.root
 
     // row-identity parameters: ghash is over n-grams, gpfx is mod

@@ -404,19 +404,7 @@ object Dedup {
     require(k >= 1, s"gram size must be >= 1, got $k")
     require(minSpan >= k,
       s"minSpan ($minSpan) below the gram size ($k) is unsatisfiable")
-    // the gram stream is byte-SMALL (id, pos, two longs) but CPU-dense
-    // (hash sort/join over every token position), and AQE's byte-driven
-    // coalescing serialized the dup-decide join onto ONE task at sf0.1
-    // (Prof r13: two 1-task stages of ~0.5-0.7 s CPU each at 32 cores).
-    // An explicit repartition on the gram hash pins the exchange at the
-    // session's parallelism — gram hashes are collision-free keys, so
-    // this distributes evenly (no q128-style hot-key serialization) —
-    // and BOTH consumers (the dup-count aggregate and the semi join
-    // back) reuse the one exchange.
     val grams = positionedGramHashes(df, idCol, textCol, k)
-      .repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("__h1"), col("__h2"))
     val dupGrams = grams
       .groupBy("__h1", "__h2").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 1)
@@ -501,63 +489,6 @@ object Dedup {
         when(col("__sp").isNull, col("__orig"))
           .otherwise(array_join(col("__kept"), " ")).as("text"),
         (size(col("__t")) - size(col("__kept"))).cast("long").as("n_removed"))
-  }
-
-  /** MinHash signature: per row, for each of `numHashes` seeded hash
-    * functions take the min over the shingle set. Pure column program —
-    * `transform` over a seeded xxhash64 of each shingle, `array_min`.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingles,
-        s => xxhash64(lit(seed), s)))
-    }: _*)
-
-  /** MinHash + LSH banding near-dup candidates: signature of
-    * `bands*rowsPerBand` minhashes, hashed per band; docs sharing any
-    * band bucket become candidate pairs, then exact Jaccard verifies.
-    *
-    * Scale: candidate generation is an equi-join on (band, bucketHash) —
-    * tunable via bands/rows for the target threshold; verification cost
-    * is proportional to candidates, not n².
-    */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      shingleN: Int, bands: Int, rowsPerBand: Int,
-                      threshold: Double, maxBucket: Int = 1000): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // Candidate generation carries ONLY (id, band, bucket) through the
-    // explode and the grouping — never the document text. At 100 TB the
-    // banded shuffle is then bands × 20 bytes per doc instead of bands ×
-    // document bytes. Pairs come from in-group combinations of the sorted
-    // id list, bounded by `maxBucket` (a degenerate bucket — thousands of
-    // near-empty docs sharing a signature — would otherwise go quadratic);
-    // texts are re-joined by id afterwards for the exact-Jaccard
-    // verification, which touches only candidate ids.
-    val staged = df
-      .select(col(idCol).as("id"),
-        TextFunctions.tokens(col(textCol)).as("__toks"))
-      .select(col("id"),
-        TextFunctions.wordShinglesFromTokens(col("__toks"), shingleN)
-          .as("__sh"))
-    val withSig = staged.select(col("id"),
-      minhashSignature(col("__sh"), numHashes).as("sig"))
-    val banded = withSig.select(col("id"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-            .cast("array<string>").cast("string")).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val candidates = bucketCandidates(banded, Seq("band", "bucket"), maxBucket)
-    val sets = staged.select(col("id").as("__tid"), col("__sh"))
-    candidates
-      .join(sets, col("id_a") === col("__tid"))
-      .withColumnRenamed("__sh", "sh_a").drop("__tid")
-      .join(sets, col("id_b") === col("__tid"))
-      .withColumnRenamed("__sh", "sh_b").drop("__tid")
-      .withColumn("jaccard", exactJaccardFromSets(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** Exact Jaccard of two texts' shingle sets, as a column program. */
@@ -1146,35 +1077,4 @@ object Dedup {
             bit_count(x.getField("sig").bitwiseXOR(y.getField("sig")))
               .as("hamming"))))),
       p => p.getField("hamming") <= maxDist)
-
-  /** 64-bit SimHash over word tokens: per bit, sum +1/-1 weighted by the
-    * token-hash bit, sign → bit. Near-dups = signatures within small
-    * Hamming distance; bucketing on bit-chunks gives the candidate join.
-    */
-  def simhash(text: Column): Column = {
-    val tokenHashes = transform(TextFunctions.tokens(text), t => xxhash64(t))
-    (0 until 64).map { bit =>
-      val bitSum = aggregate(tokenHashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, bit).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L) * lit(1L << bit)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
-  /** SimHash near-dup candidate pairs within Hamming distance `maxDist`,
-    * using the pigeonhole 4×16-bit chunk trick: pairs within distance ≤3
-    * must share at least one exact 16-bit chunk → group on
-    * (chunkIdx, chunkValue) bounded by `maxBucket` (a degenerate chunk
-    * value would otherwise go quadratic), pair + verify with the native
-    * in-group Hamming kernel — same shape as [[simhashPortablePairs]]. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3, maxBucket: Int = 10000): DataFrame = {
-    val withSig = df.select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-    val chunked = withSig.select(col("id"), col("sig"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("sig"), c * 16).bitwiseAND(0xFFFFL).as("cval"))
-      }: _*)).as("cc"))
-      .select(col("id"), col("sig"), col("cc.chunk"), col("cc.cval"))
-    hammingCandidates(chunked, Seq("chunk", "cval"), maxBucket, maxDist)
-  }
 }

@@ -67,12 +67,10 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
                       cfg: EdgeStoreConfig) extends AppendStore {
   private def edgeParams = Seq(
     "weighted" -> cfg.weightCol.isDefined.toString)
-  private val edgeSpec = StoreCompaction.TableSpec(
-    s"active:$name:eg_edge", s"${name}_eg_edge")
-  private val wtotSpec = StoreCompaction.TableSpec(
-    s"active:$name:eg_wtot", s"${name}_eg_wtot")
-  private def edgeTable = StoreCompaction.active(wh.root, edgeSpec)
-  private def wtotTable = StoreCompaction.active(wh.root, wtotSpec)
+  private val edgeSpec = StoreCompaction.TableSpec(s"${name}_eg_edge")
+  private val wtotSpec = StoreCompaction.TableSpec(s"${name}_eg_wtot")
+  private def edgeTable = wh.live(edgeSpec.base)
+  private def wtotTable = wh.live(wtotSpec.base)
   def storeRoot: String = wh.root
 
   /** Rewrite both tables into fresh single-generation layouts,
@@ -223,8 +221,8 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
   private def storedState(spark: SparkSession,
                           state: String): Option[DataFrame] = {
     graft.sources.StoreTxn.recoverIfIdle(spark, wh.root)
-    graft.sources.StoreTxn.stateDir(wh.root, state)
-      .map(spark.read.parquet(_))
+    Some(graft.sources.StoreTxn.live(wh.root, s"state/$state"))
+      .filter(new java.io.File(_).isDirectory).map(spark.read.parquet(_))
   }
 
   /** The last [[pageRankMaintain]]'s rank table (node, rank_fp), or
@@ -271,13 +269,13 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     graft.sources.StoreTxn.transact(spark, wh.root) {
       val txn = graft.sources.StoreTxn.current(wh.root)
       ranks.select("node", "rank_fp")
-        .write.parquet(txn.stateVersionDir(state))
+        .write.parquet(txn.newVersion(s"state/$state"))
       kvs.foreach { case (k, v) => txn.putKv(k, v) }
     }
     Graph.pinnedBy(ranks).foreach(i =>
       sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
     val committed = spark.read.parquet(
-      graft.sources.StoreTxn.stateDir(wh.root, state).get)
+      graft.sources.StoreTxn.live(wh.root, s"state/$state"))
     committed.select(col("node"), col("rank_fp"),
       (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
   }

@@ -485,9 +485,8 @@ object Pipeline {
     private val wh = new graft.sources.Warehouse(spark, root)
     private[graft] def storeRoot: String = root
     private val mh = new MinhashStore(wh, s"${name}_cur", cfg.minhash)
-    private val exactSpec = StoreCompaction.TableSpec(
-      s"active:$name:cur_exact", s"${name}_cur_exact")
-    private def exactTable = StoreCompaction.active(root, exactSpec)
+    private val exactSpec = StoreCompaction.TableSpec(s"${name}_cur_exact")
+    private def exactTable = wh.live(exactSpec.base)
     private val labelsState = s"${name}_labels"
     private val maxIdKey = s"${name}_maxid"
     // the eval n-grams on the driver for a local delta's decontamination,
@@ -578,11 +577,11 @@ object Pipeline {
         // marker exists to prevent) and reset every component label,
         // so refuse instead of silently starting over on top of it.
         val orphans = Seq(
-          s"$root/state/${name}_maxid",
-          s"$root/state/$labelsState",
-          s"$root/warehouse/${exactSpec.base}",
-          s"$root/warehouse/${name}_cur_mh_sig")
-          .filter(p => new java.io.File(p).exists())
+          s"state/${name}_maxid",
+          s"state/$labelsState",
+          s"warehouse/${exactSpec.base}",
+          s"warehouse/${name}_cur_mh_sig")
+          .flatMap(graft.sources.StoreTxn.copies(root, _))
         require(orphans.isEmpty,
           s"CurationStore '$name' at $root has store artifacts but no " +
             s"committed ingest record (${orphans.mkString(", ")}) — a " +
@@ -780,7 +779,7 @@ object Pipeline {
       // sub-second fixed-cost write; txn registration happens on THIS
       // thread before the writes start). Local labels are written by one
       // task, as one file.
-      val labelsDir = txn.stateVersionDir(labelsState)
+      val labelsDir = txn.newVersion(s"state/$labelsState")
       graft.core.Par.both(
         (if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels)
           .write.parquet(labelsDir),
@@ -834,28 +833,23 @@ object Pipeline {
 
     /** The committed (id, comp) labels, read with their known schema —
       * no schema-inference job per read. */
-    private[graft] def readLabels: DataFrame =
-      graft.sources.StoreTxn.stateDir(root, labelsState) match {
-        case Some(p) => spark.read.schema(LabelsSchema).parquet(p)
-        case None => spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), LabelsSchema)
-      }
+    private[graft] def readLabels: DataFrame = {
+      val p = graft.sources.StoreTxn.live(root, s"state/$labelsState")
+      if (new java.io.File(p).isDirectory) spark.read.schema(LabelsSchema).parquet(p)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), LabelsSchema)
+    }
 
-    /** Rewrite every fragmented layout of this store into fresh compact
-      * generations — the embedded MinHash store's two tables and the
+    /** Rewrite every fragmented layout of this store into new compact
+      * versions — the embedded MinHash store's two tables and the
       * exact-hash membership table (every ingest appends one file set to
       * each; a long-lived maintenance sink otherwise pays per-file read
       * overhead that grows with stream age; the labels are one version
-      * per ingest already). Rows identical everywhere. Two transactions,
-      * not one: each is idempotent maintenance, a crash between them leaves
-      * a partially-compacted-but-consistent store, and nesting them
-      * would run [[StoreCompaction]]'s post-commit generation sweep
-      * before the outer commit actually published. */
+      * per ingest already). Rows identical everywhere. Two transactions:
+      * each is idempotent maintenance, and a crash between them leaves
+      * a partially-compacted-but-consistent store. */
     def compact(): Unit = {
       graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      if (wh.exists(s"${name}_cur_mh_sig") ||
-          graft.sources.StoreTxn.getKv(root, s"active:${name}_cur:mh_sig")
-            .isDefined)
+      if (wh.exists(wh.live(s"${name}_cur_mh_sig")))
         mh.compact(spark)
       if (wh.exists(exactTable))
         StoreCompaction.compact(spark, wh, s"CurationStore '$name'",

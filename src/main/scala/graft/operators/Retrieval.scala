@@ -125,12 +125,10 @@ object Retrieval {
                         nStoreBuckets: Int = 32) extends AppendStore {
     private val wh = new graft.sources.Warehouse(spark, root)
     def storeRoot: String = wh.root
-    private val postSpec = StoreCompaction.TableSpec(
-      s"active:$name:post", s"${name}_bm_post")
-    private val lenSpec = StoreCompaction.TableSpec(
-      s"active:$name:len", s"${name}_bm_len")
-    private def postTable = StoreCompaction.active(wh.root, postSpec)
-    private def lenTable = StoreCompaction.active(wh.root, lenSpec)
+    private val postSpec = StoreCompaction.TableSpec(s"${name}_bm_post")
+    private val lenSpec = StoreCompaction.TableSpec(s"${name}_bm_len")
+    private def postTable = wh.live(postSpec.base)
+    private def lenTable = wh.live(lenSpec.base)
     private val nKey = s"bm25:$name:n"
     private val sumdlKey = s"bm25:$name:sumdl"
     // postings are keyed on tokens — the tokenizer mode is store

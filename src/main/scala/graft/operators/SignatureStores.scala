@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
 trait PairStore {
   /** Canonical store root — the lease/transaction scope. */
   def storeRoot: String
-  /** Rewrite the store's active generations into fresh compact layouts
+  /** Rewrite the store's live tables into new compact versions
     * (rows identical) — see [[StoreCompaction]]. Abstract on the trait
     * so maintenance sinks ([[graft.streaming.Streaming.nearDupSink]])
     * can self-trigger it on a fragmentation threshold. */
@@ -91,7 +91,7 @@ trait PairStore {
 trait AppendStore {
   /** Canonical store root — the lease/transaction scope. */
   def storeRoot: String
-  /** Rewrite the store's active generations into fresh compact layouts
+  /** Rewrite the store's live tables into new compact versions
     * (rows identical) — see [[StoreCompaction]]. Abstract on the trait
     * so maintenance sinks ([[graft.streaming.Streaming.appendStoreSink]])
     * can self-trigger it on a fragmentation threshold. */
@@ -132,55 +132,36 @@ trait AppendStore {
   * An always-on maintenance sink appends one file set per micro-batch,
   * so a long-lived store accretes files and the serve/ingest read pays
   * per-file open/footer/schedule overhead that grows with stream age.
-  * Compaction rewrites each table's ACTIVE physical generation into one
-  * fresh `<base>__c<epoch>` successor laid out exactly like it — the
-  * bucket count, bucket columns, partition column and parameters come
-  * from the live generation's sidecars ([[graft.sources.Warehouse
-  * .rewriteBucketed]]) — and publishes ALL of a store's new generations
-  * through kv aliases in one StoreTxn commit, so readers switch
-  * atomically and a crash mid-compact rolls back to the old generations
-  * untouched. The rewrite is aligned on the writer's own bucket id, so
-  * a new generation holds one file per non-empty (partition, bucket)
-  * cell. Superseded generation directories are swept post-commit
-  * (unreachable the instant the aliases publish; the sweep is
-  * idempotent across crashes). Scalar state in the commit record —
-  * the replay-key ledger, BM25's document count and length total —
-  * needs no rewrite. */
+  * Compaction rewrites each table's live directory into the
+  * transaction's new version of it ([[graft.sources.StoreTxn]]), laid
+  * out exactly like it — the bucket count, bucket columns, partition
+  * column and parameters come from the live directory's sidecars
+  * ([[graft.sources.Warehouse.rewriteBucketed]]). One commit publishes
+  * all of a store's new versions, so readers switch atomically, a crash
+  * mid-compact rolls back to the old directories untouched, and the
+  * commit's GC deletes the superseded ones. The rewrite is aligned on
+  * the writer's own bucket id, so a new version holds one file per
+  * non-empty (partition, bucket) cell. Scalar state in the commit
+  * record — the replay-key ledger, BM25's document count and length
+  * total — needs no rewrite. */
 private[operators] object StoreCompaction {
-  /** One physical table of a store: resolved through `aliasKey` (the
-    * active-generation pointer in the commit record), its rows passed
-    * through `transform` during the rewrite. Usually identity; a store
+  /** One physical table of a store, named by its base, with its rows
+    * passed through `transform` during the rewrite. Usually identity; a store
     * whose EVERY reader re-aggregates by the bucket keys may merge rows
     * here ([[EdgeStore]] collapses cross-append duplicate edges) — any
     * other row-count change silently corrupts the store. */
-  final case class TableSpec(aliasKey: String, base: String,
+  final case class TableSpec(base: String,
                              transform: DataFrame => DataFrame = identity)
-
-  def active(root: String, spec: TableSpec): String =
-    graft.sources.StoreTxn.getKv(root, spec.aliasKey).getOrElse(spec.base)
 
   def compact(spark: org.apache.spark.sql.SparkSession,
               wh: graft.sources.Warehouse, storeLabel: String,
               tables: Seq[TableSpec]): Unit = {
     graft.sources.StoreTxn.recoverIfIdle(spark, wh.root)
-    require(tables.exists(t => wh.exists(active(wh.root, t))),
+    require(tables.exists(t => wh.exists(wh.live(t.base))),
       s"$storeLabel at ${wh.root} has no ingests — nothing to compact")
     graft.sources.StoreTxn.transact(spark, wh.root) {
-      val txn = graft.sources.StoreTxn.current(wh.root)
-      tables.filter(t => wh.exists(active(wh.root, t))).foreach { t =>
-        val newTable = s"${t.base}__c${txn.epoch}"
-        wh.rewriteBucketed(active(wh.root, t), newTable, t.transform)
-        txn.putKv(t.aliasKey, newTable)
-      }
-    }
-    val whDir = new java.io.File(s"${wh.root}/warehouse")
-    tables.foreach { t =>
-      val live = active(wh.root, t)
-      Option(whDir.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory &&
-          (f.getName == t.base || f.getName.startsWith(t.base + "__c")) &&
-          f.getName != live)
-        .foreach(f => wh.dropTable(f.getName))
+      tables.filter(t => wh.exists(wh.live(t.base))).foreach(t =>
+        wh.rewriteBucketed(wh.live(t.base), wh.newVersion(t.base), t.transform))
     }
   }
 }
@@ -240,12 +221,10 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
     "rowsPerBand" -> cfg.rowsPerBand.toString, "seed" -> cfg.seed.toString,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
-  private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:mh_sig", s"${name}_mh_sig")
-  private val setSpec = StoreCompaction.TableSpec(
-    s"active:$name:mh_set", s"${name}_mh_set")
-  private def sigTable = StoreCompaction.active(wh.root, sigSpec)
-  private def setTable = StoreCompaction.active(wh.root, setSpec)
+  private val sigSpec = StoreCompaction.TableSpec(s"${name}_mh_sig")
+  private val setSpec = StoreCompaction.TableSpec(s"${name}_mh_set")
+  private def sigTable = wh.live(sigSpec.base)
+  private def setTable = wh.live(setSpec.base)
   def storeRoot: String = wh.root
 
   /** Rewrite both tables (LSH index + shingle sets) into fresh
@@ -535,11 +514,10 @@ object MinhashStore {
 final class IvfStore(wh: graft.sources.Warehouse, name: String,
                      centroids: DataFrame, nStoreBuckets: Int = 64)
     extends AppendStore {
-  // appends land in the ACTIVE physical generation; [[compact]]
-  // publishes a `__c<epoch>` successor through the commit-record alias
-  private val tableSpec = StoreCompaction.TableSpec(
-    s"active:$name:ivf", s"${name}_ivf")
-  private def table: String = StoreCompaction.active(wh.root, tableSpec)
+  // appends land in the live directory; [[compact]] publishes a new
+  // version of it
+  private val tableSpec = StoreCompaction.TableSpec(s"${name}_ivf")
+  private def table: String = wh.live(tableSpec.base)
 
   // the frozen-centroid contract, made self-enforcing: a fingerprint of
   // the actual centroid values (bounded collect — one row per cell,
@@ -610,9 +588,8 @@ final class HammingStore(wh: graft.sources.Warehouse, name: String,
     s"chunk layout ${cfg.chunks}x${cfg.chunkBits} exceeds 64 bits")
   private def sigParams = Seq(
     "chunks" -> cfg.chunks.toString, "chunkBits" -> cfg.chunkBits.toString)
-  private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:hm_sig", s"${name}_hm_sig")
-  private def sigTable = StoreCompaction.active(wh.root, sigSpec)
+  private val sigSpec = StoreCompaction.TableSpec(s"${name}_hm_sig")
+  private def sigTable = wh.live(sigSpec.base)
   def storeRoot: String = wh.root
 
   /** Rewrite the signature table into one fresh generation — see
@@ -674,9 +651,8 @@ final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
                         books: Seq[Seq[(Int, Array[Double])]],
                         nStoreBuckets: Int = 64)
     extends AppendStore {
-  private val tableSpec = StoreCompaction.TableSpec(
-    s"active:$name:adc", s"${name}_adc")
-  private def table: String = StoreCompaction.active(wh.root, tableSpec)
+  private val tableSpec = StoreCompaction.TableSpec(s"${name}_adc")
+  private def table: String = wh.live(tableSpec.base)
 
   private lazy val centroidFp: Long = {
     val rows = centroids.select(col("cell").cast("int"),
@@ -753,12 +729,10 @@ final case class EmbeddingLshConfig(threshold: Double, dim: Int,
   * incompatible signature space. */
 final class EmbeddingLshStore(wh: graft.sources.Warehouse, name: String,
                               cfg: EmbeddingLshConfig) extends PairStore {
-  private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:el_sig", s"${name}_el_sig")
-  private val vecSpec = StoreCompaction.TableSpec(
-    s"active:$name:el_vec", s"${name}_el_vec")
-  private def sigTable = StoreCompaction.active(wh.root, sigSpec)
-  private def vecTable = StoreCompaction.active(wh.root, vecSpec)
+  private val sigSpec = StoreCompaction.TableSpec(s"${name}_el_sig")
+  private val vecSpec = StoreCompaction.TableSpec(s"${name}_el_vec")
+  private def sigTable = wh.live(sigSpec.base)
+  private def vecTable = wh.live(vecSpec.base)
   def storeRoot: String = wh.root
   private val planeTables = cfg.planes.getOrElse(
     (0 until cfg.tables).map(t =>
@@ -863,9 +837,8 @@ final class SimhashStore(wh: graft.sources.Warehouse, name: String,
     "chunkBits" -> cfg.chunkBits.toString,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
-  private val sigSpec = StoreCompaction.TableSpec(
-    s"active:$name:sh_sig", s"${name}_sh_sig")
-  private def sigTable = StoreCompaction.active(wh.root, sigSpec)
+  private val sigSpec = StoreCompaction.TableSpec(s"${name}_sh_sig")
+  private def sigTable = wh.live(sigSpec.base)
   def storeRoot: String = wh.root
 
   /** Rewrite the signature table into one fresh generation — see
@@ -956,12 +929,10 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
     "maxDocFreq" -> cfg.maxDocFreq.toString,
     "scriptAwareTokens" ->
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
-  private val postSpec = StoreCompaction.TableSpec(
-    s"active:$name:ct_post", s"${name}_ct_post")
-  private val sizeSpec = StoreCompaction.TableSpec(
-    s"active:$name:ct_size", s"${name}_ct_size")
-  private def postTable = StoreCompaction.active(wh.root, postSpec)
-  private def sizeTable = StoreCompaction.active(wh.root, sizeSpec)
+  private val postSpec = StoreCompaction.TableSpec(s"${name}_ct_post")
+  private val sizeSpec = StoreCompaction.TableSpec(s"${name}_ct_size")
+  private def postTable = wh.live(postSpec.base)
+  private def sizeTable = wh.live(sizeSpec.base)
   def storeRoot: String = wh.root
 
   /** Rewrite both tables (postings + sizes) into fresh

@@ -59,7 +59,7 @@ object Similarity {
     * the banding shuffle is then tables × ~20 bytes per vector instead
     * of tables × vector bytes. Vectors are re-joined by id only after
     * dedup, for exact scoring over the (small) candidate set — the same
-    * shape as [[Dedup.minhashLshPairs]]. */
+    * shape as [[Dedup.minhashPortablePairs]]. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, dim: Int,
               tables: Int = 8, bitsPerTable: Int = 12,

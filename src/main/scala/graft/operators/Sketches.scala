@@ -203,134 +203,93 @@ object Sketches {
     * are still in exact coupon range — SketchesSpec; once in dense HLL
     * mode the union's estimate may differ from the one-shot's by a
     * fraction of the error bound, which DistinctStoreSpec pins against
-    * the EXACT count). Serve cost is #appends × #groups fixed-size rows, never
-    * the batches' raw data: the incremental "distinct tokens per
-    * source, corpus to date" a 100 TB ingest cannot afford to re-scan
-    * for.
+    * the EXACT count). Serve cost is #appends × #groups fixed-size rows
+    * until [[compact]] folds them to #groups, never the batches' raw
+    * data: the incremental "distinct tokens per source, corpus to date"
+    * a 100 TB ingest cannot afford to re-scan for.
     *
-    * The [[AppendStore]] idCol slot carries the GROUP column (the store
-    * counts values per group); both column names and lgK are store
-    * identity — recorded in the transaction ledger on first append and
-    * validated on every later one, so sketches of different geometry
-    * or meaning never merge.
+    * The sketch rows live in one plain parquet directory,
+    * `state/<name>_hll_sk`, or the version of it the last [[compact]]
+    * published ([[graft.sources.StoreTxn.live]]). The [[AppendStore]]
+    * idCol slot carries the GROUP column (the store counts values per
+    * group); both column names and lgK are store identity — recorded in
+    * the transaction ledger on first append and validated on every
+    * later one, so sketches of different geometry or meaning never
+    * merge.
     *
-    * CRASH SEMANTICS: appends are single-table [[graft.sources
-    * .StoreTxn]] transactions with the family's commit-record key
-    * ledger — [[AppendStore.appendOnce]] redelivery skips completed
-    * appends, a mid-append crash rolls back on the next open, and
+    * CRASH SEMANTICS: an append is a single-directory [[graft.sources
+    * .StoreTxn]] transaction that adds files to the live directory under
+    * the undo log, with the family's commit-record key ledger —
+    * [[AppendStore.appendOnce]] redelivery skips completed appends, a
+    * mid-append crash rolls back on the next open, and
     * [[graft.streaming.Streaming.appendStoreSink]] gives it the same
-    * exactly-once streaming maintenance as IvfStore/GramIndex. */
+    * exactly-once streaming maintenance as IvfStore/GramIndex. A
+    * [[compact]] writes a new version and publishes it at commit: a
+    * crash before the publish leaves the old directory live and
+    * untouched, and the commit's GC deletes the folded one. */
   final class DistinctStore(spark: SparkSession, root0: String,
                             name: String, lgK: Int = 12,
                             nBaseBuckets: Int = 32) extends AppendStore {
     private val root = new java.io.File(root0).getCanonicalPath
     def storeRoot: String = root
     private val rel = s"state/${name}_hll_sk"
-    private val skPath = s"$root/$rel"
-    private val baseState = s"${name}_hll_base"
-    private val compactKey = s"compact:$name:upto"
+    private val paramKey = s"param:$name:distinct"
 
     override protected def appendBody(batch: DataFrame, groupCol: String,
                                       valueCol: String): Unit = {
       val txn = graft.sources.StoreTxn.current(root)
       // store identity: first append fixes (groupCol, valueCol, lgK)
       val want = s"$groupCol,$valueCol,$lgK"
-      graft.sources.StoreTxn.getKv(root, s"param:$name:distinct") match {
+      graft.sources.StoreTxn.getKv(root, paramKey) match {
         case Some(have) => require(have == want,
           s"DistinctStore '$name' was created with ($have), got ($want)")
-        case None => txn.putKv(s"param:$name:distinct", want)
+        case None => txn.putKv(paramKey, want)
       }
-      txn.touchPath(rel)
-      // one DELTA DIRECTORY per append, named by the transaction epoch:
-      // compaction can then fold "every delta ≤ E" and record E, instead
-      // of trying to delete files an undo could never restore
+      val live = graft.sources.StoreTxn.live(root, rel)
+      txn.touchPath(live.stripPrefix(s"$root/"))
       distinctSketches(batch, Seq(groupCol), valueCol, lgK)
-        .write.mode("overwrite").parquet(s"$skPath/a${txn.epoch}")
+        .write.mode("append").parquet(live)
     }
 
-    /** Delta dirs currently visible, with their epochs; `liveOnly` drops
-      * those already folded into the base. */
-    private def deltaDirs(liveOnly: Boolean): Seq[(Long, String)] = {
-      val upto = graft.sources.StoreTxn.getKv(root, compactKey)
-        .map(_.toLong).getOrElse(-1L)
-      val dir = new java.io.File(skPath)
-      Option(dir.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("a"))
-        .flatMap(f => f.getName.stripPrefix("a").toLongOption
-          .map(e => (e, f.getPath)))
-        .filter { case (e, _) => !liveOnly || e > upto }
-        .sortBy(_._1)
-    }
-
-    private def sketchRows(): DataFrame = {
+    /** The group column and the live sketch rows. */
+    private def sketchRows(): (String, DataFrame) = {
       graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      val base = graft.sources.StoreTxn.stateDir(root, baseState).toSeq
-      val paths = base ++ deltaDirs(liveOnly = true).map(_._2)
-      require(paths.nonEmpty,
-        s"DistinctStore '$name' at $root has no appends — append before estimating")
-      spark.read.parquet(paths: _*)
+      val param = graft.sources.StoreTxn.getKv(root, paramKey)
+      require(param.isDefined,
+        s"DistinctStore '$name' at $root has no appends — append before " +
+          "estimating or compacting")
+      (param.get.split(',')(0),
+        spark.read.parquet(graft.sources.StoreTxn.live(root, rel)))
     }
 
     /** Per-group estimate over everything appended so far:
       * (groupCol, approx_distinct). */
     def estimate(): DataFrame = {
-      val rows = sketchRows()
-      val param = graft.sources.StoreTxn.getKv(root, s"param:$name:distinct")
-      mergeDistinctSketches(rows, Seq(param.get.split(',')(0)))
+      val (gcol, rows) = sketchRows()
+      mergeDistinctSketches(rows, Seq(gcol))
     }
 
     /** Whole-store estimate: one (approx_distinct) row. */
     def estimateTotal(): DataFrame =
-      mergeDistinctSketches(sketchRows(), Seq.empty)
+      mergeDistinctSketches(sketchRows()._2, Seq.empty)
 
-    /** Fold the base and every visible delta into ONE sketch row per
-      * group, published as a fresh base version — the maintenance pass
-      * that keeps an always-on sink's serve cost flat instead of
-      * growing with stream age (#appends × #groups rows → #groups
-      * rows). Runs as one transaction: the new base version publishes
-      * atomically with the fold watermark, a crash mid-compact rolls
-      * back to the old base + deltas, and a blind retry converges.
-      * Folded delta directories are physically removed only AFTER the
-      * commit (they are logically dead the instant the watermark
-      * publishes; a crash between commit and cleanup leaves inert
-      * directories the next compact removes). Estimates are unchanged
-      * by construction — HLL union is associative. */
+    /** Fold the live rows into ONE sketch row per group, published as a
+      * new version — the maintenance pass that keeps an always-on sink's
+      * serve cost flat instead of growing with stream age (#appends ×
+      * #groups rows → #groups rows). One transaction: see CRASH
+      * SEMANTICS. Estimates are unchanged by construction — HLL union
+      * is associative. The version is written group-partitioned: a
+      * per-URL/per-host store has millions of groups × 2^lgK-byte
+      * sketches, and coalesce(1) would funnel GBs through a single
+      * writer task; small stores still produce few files (empty
+      * partitions emit none). */
     def compact(spark: SparkSession): Unit = compact() // AppendStore form
-    def compact(): Unit = {
-      graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      val folded = scala.collection.mutable.Buffer.empty[String]
+    def compact(): Unit =
       graft.sources.StoreTxn.transact(spark, root) {
-        val param = graft.sources.StoreTxn.getKv(root, s"param:$name:distinct")
-        require(param.isDefined,
-          s"DistinctStore '$name' at $root has no appends — nothing to compact")
-        val gcol = param.get.split(',')(0)
-        val deltas = deltaDirs(liveOnly = true)
-        if (deltas.nonEmpty) {
-          val txn = graft.sources.StoreTxn.current(root)
-          val base = graft.sources.StoreTxn.stateDir(root, baseState).toSeq
-          val merged = spark.read
-            .parquet((base ++ deltas.map(_._2)): _*)
-            .groupBy(col(gcol))
-            .agg(hll_union_agg(col("hll")).as("hll"))
-          val outDir = txn.stateVersionDir(baseState)
-          // group-partitioned base write, like every other store's
-          // compactor: a per-URL/per-host store has millions of groups
-          // × 2^lgK-byte sketches — coalesce(1) would funnel GBs
-          // through a single writer task. Small stores still produce
-          // few files (empty partitions emit none).
-          merged.repartition(nBaseBuckets, col(gcol))
-            .write.mode("overwrite").parquet(outDir)
-          txn.putKv(compactKey, deltas.map(_._1).max.toString)
-          folded ++= deltas.map(_._2)
-        }
+        val (gcol, rows) = sketchRows()
+        rows.groupBy(col(gcol)).agg(hll_union_agg(col("hll")).as("hll"))
+          .repartition(nBaseBuckets, col(gcol))
+          .write.parquet(graft.sources.StoreTxn.current(root).newVersion(rel))
       }
-      // post-commit physical cleanup of logically-dead delta dirs; also
-      // sweep any dirs a previous compact's crash-after-commit left
-      val upto = graft.sources.StoreTxn.getKv(root, compactKey)
-        .map(_.toLong).getOrElse(-1L)
-      (folded ++ deltaDirs(liveOnly = false)
-        .filter(_._1 <= upto).map(_._2)).distinct
-        .foreach(p => graft.sources.StoreTxn.rmrf(new java.io.File(p)))
-    }
   }
 }

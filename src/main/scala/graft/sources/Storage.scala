@@ -370,14 +370,23 @@ final class Warehouse(spark: SparkSession, root0: String) {
     (lines(0).toInt, lines(1).split(",").toSeq, lines.lift(2))
   }
 
+  /** The table name of `table`'s live directory: the version the
+    * store's commit record names ([[StoreTxn.live]]), or `table`. */
+  private[graft] def live(table: String): String =
+    new java.io.File(StoreTxn.live(root, s"warehouse/$table")).getName
+
+  /** The table name of the open transaction's new version of `table`
+    * ([[StoreTxn.Txn.newVersion]]). */
+  private[graft] def newVersion(table: String): String =
+    new java.io.File(StoreTxn.current(root).newVersion(s"warehouse/$table")).getName
+
   /** Rewrite bucketed `table` into the fresh table `into` with the same
     * layout — bucket count, bucket columns, partition column and
     * parameters, all copied from `table`'s sidecars — its rows passed
     * through `transform`. Store compaction's rewrite step: the
-    * generation it writes is laid out exactly like the one it replaces. */
+    * version it writes is laid out exactly like the one it replaces. */
   private[graft] def rewriteBucketed(table: String, into: String,
                                      transform: DataFrame => DataFrame): Unit = {
-    StoreTxn.touchIfActive(root, s"warehouse/$into")
     val params = Warehouse.sidecar(root, "params", table)
     if (params.isFile) StoreTxn.writeAtomic(Warehouse.sidecar(root, "params", into),
       java.nio.file.Files.readString(params.toPath))
@@ -417,16 +426,6 @@ final class Warehouse(spark: SparkSession, root0: String) {
       val prev = java.nio.file.Files.readString(f.toPath)
       require(prev == content, mismatch(prev))
     } else if (write) StoreTxn.writeAtomic(f, content)
-
-  /** Physically remove a table this warehouse owns, directory and
-    * sidecars. STORE-INTERNAL maintenance (compaction sweeps of
-    * superseded physical generations) — not a user data-management API;
-    * callers must only target tables a committed alias has already
-    * replaced. */
-  private[graft] def dropTable(table: String): Unit = {
-    StoreTxn.rmrf(new java.io.File(path(table)))
-    Warehouse.sidecars(root, table).foreach(_.delete())
-  }
 }
 
 object Warehouse {
@@ -435,8 +434,9 @@ object Warehouse {
   private def sidecar(root: String, kind: String, table: String) =
     new java.io.File(s"$root/warehouse", s"_graft_${kind}_$table")
 
-  /** Every sidecar a table may have — what a drop or an undo of the
-    * table's creation removes with its directory. */
+  /** Every sidecar a table may have — what an undo of the table's
+    * creation or the GC of a superseded version removes with its
+    * directory. */
   private[sources] def sidecars(root: String, table: String): Seq[java.io.File] =
     Seq("bucket_spec", "params", "schema").map(sidecar(root, _, table))
 }

@@ -35,8 +35,8 @@ import org.apache.spark.sql.SparkSession
   * in each snapshotted directory it deletes every top-level entry
   * absent from the snapshot (Spark part files carry unique task UUIDs,
   * so the complement is exactly the crashed ingest's output, including
-  * `_temporary` droppings), removes state-version directories the
-  * commit record does not reference, and clears the intent. Every crash
+  * `_temporary` droppings), removes the version directories the
+  * crashed transaction wrote, and clears the intent. Every crash
   * window converges under a BLIND retry, no external snapshot:
   *
   *  - crash before the intent publishes: nothing visible changed;
@@ -46,14 +46,28 @@ import org.apache.spark.sql.SparkSession
   *  - crash mid-undo: undo is a pure set difference — idempotent — and
   *    reruns on the next open.
   *
-  * Overwrite-shaped state (connected-component labels) cannot be
-  * protected by undo-of-new-files — an overwrite DESTROYS the old files
-  * — so transactions write such state to a fresh versioned directory
-  * (`state/<name>/v<epoch>`) and readers resolve the version the commit
-  * record names; stale versions are garbage-collected after commit.
-  * Scalar markers (the curation max-id) ride in the commit record
-  * itself, which makes "marker advanced" literally the same event as
-  * "ingest committed".
+  * Overwrite-shaped state cannot be protected by undo-of-new-files —
+  * an overwrite DESTROYS the old files — so a transaction writes the new
+  * copy of such a directory beside the old one, as a VERSION: the
+  * labels, the ranks, a compacted store table and a folded
+  * DistinctStore all do. A version of the root-relative directory `rel`
+  * is `rel__v<epoch>` (one naming rule, so a version's name starts with
+  * its base name); the commit record's version entries are the only
+  * pointer from `rel` to its live directory, and [[live]] is the one
+  * resolver — the record's version, or `rel` itself before any. Commit
+  * publishes the new versions and then garbage-collects every other
+  * copy of each published directory (a warehouse table's sidecars with
+  * it); a crash between the publish and the GC leaves superseded copies
+  * the next commit of the same directory removes. Undo and that GC are
+  * the only deletes of a superseded copy. Appends go into the live
+  * directory under the undo log, versioned or not. Scalar markers (the
+  * curation max-id) ride in the commit record itself, which makes
+  * "marker advanced" literally the same event as "ingest committed".
+  *
+  * A root written in an earlier layout — `active:` alias kvs, version
+  * entries not named by their root-relative directory, or a state
+  * directory holding `v<n>` versions or `a<n>` DistinctStore deltas — is
+  * refused when it is opened ([[recover]]), before anything is written.
   *
   * CONCURRENCY — the family's documented single-writer-per-root
   * contract is now enforced, not assumed: every transaction (and every
@@ -164,6 +178,7 @@ object StoreTxn {
     * `failOnLiveForeignWriter` (write paths) a fresh foreign lease
     * raises; read paths pass false and just read the live state. */
   private def recover(key: String, failOnLiveForeignWriter: Boolean): Unit = {
+    requireCurrentLayout(key)
     val intent = intentFile(key)
     if (!intent.exists()) return
     val lease = leaseFile(key)
@@ -204,12 +219,45 @@ object StoreTxn {
   def getKv(root: String, k: String): Option[String] =
     readCommit(commitFile(canon(root))).kv.get(k)
 
-  /** The committed version directory of a versioned state, if any
-    * ingest published one. */
-  def stateDir(root: String, state: String): Option[String] = {
+  /** The live directory of the root-relative directory `rel`, as an
+    * absolute path: the version the commit record names, or `rel`
+    * itself before any transaction published one. */
+  def live(root: String, rel: String): String = {
     val key = canon(root)
-    readCommit(commitFile(key)).versions.get(state)
-      .map(v => s"$key/state/$state/v$v")
+    s"$key/${readCommit(commitFile(key)).versions.get(rel).fold(rel)(versionRel(rel, _))}"
+  }
+
+  /** The one naming rule for versions: `rel`'s version of `epoch`. */
+  private def versionRel(rel: String, epoch: Long): String = s"${rel}__v$epoch"
+
+  /** Every copy of `rel` on disk — `rel` itself and each of its
+    * versions — as root-relative paths. */
+  private[graft] def copies(root: String, rel: String): Seq[String] = {
+    val dir = new File(canon(root), rel)
+    val version = s"${dir.getName}__v"
+    Option(dir.getParentFile.list()).toSeq.flatten
+      .filter(n => n == dir.getName ||
+        n.startsWith(version) && n.drop(version.length).toLongOption.isDefined)
+      .map(n => rel.take(rel.lastIndexOf('/') + 1) + n)
+  }
+
+  /** Throws when `key` holds a layout of an earlier format, which
+    * [[live]] would not resolve: compaction aliases in the commit
+    * record, version entries that do not name their directory, and
+    * state directories holding nested `v<n>` versions or `a<n>`
+    * DistinctStore deltas. */
+  private def requireCurrentLayout(key: String): Unit = {
+    val c = readCommit(commitFile(key))
+    val nested = Option(new File(key, "state").listFiles()).toSeq.flatten
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.matches("[av][0-9]+"))
+        .map(f => s"state/${d.getName}/${f.getName}"))
+    val legacy = c.kv.keys.filter(_.startsWith("active:")).map(k => s"kv $k") ++
+      c.versions.keys.filterNot(r => r.startsWith("state/") || r.startsWith("warehouse/"))
+        .map(v => s"version entry $v") ++ nested
+    require(legacy.isEmpty,
+      s"store root $key holds ${legacy.head}, a layout of an earlier format " +
+        "— rebuild under a fresh root")
   }
 
   /** Exclusive long-lived maintenance lease for an always-on sink: held
@@ -244,7 +292,7 @@ object StoreTxn {
   private[graft] final class Txn(key: String) {
     private[graft] val epoch: Long = readCommit(commitFile(key)).epoch + 1
     private val touched = scala.collection.mutable.LinkedHashMap.empty[String, DirSnap]
-    private val stateWrites = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    private val versionWrites = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     private val kvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
     /** Snapshot `rel` (root-relative) into the intent before its first
@@ -282,13 +330,14 @@ object StoreTxn {
       }
     }
 
-    /** A fresh directory for this transaction's version of `state` —
-      * registered in the intent (write-ahead) so a crashed version is
-      * swept; published by commit. */
-    def stateVersionDir(state: String): String = synchronized {
-      stateWrites(state) = epoch
+    /** The absolute path of this transaction's new version of the
+      * root-relative directory `rel` — registered in the intent
+      * (write-ahead) so a crashed version is swept; published, and every
+      * other copy of `rel` deleted, by commit. */
+    def newVersion(rel: String): String = synchronized {
+      versionWrites(rel) = epoch
       persistIntent()
-      s"$key/state/$state/v$epoch"
+      s"$key/${versionRel(rel, epoch)}"
     }
 
     /** Buffer a scalar for the commit record. Visible only on commit. */
@@ -299,24 +348,25 @@ object StoreTxn {
         (s"epoch\t$epoch" +:
           (touched.values.map(d =>
             s"dir\t${d.rel}\t${if (d.existed) 1 else 0}\t${d.names.toSeq.sorted.mkString(",")}").toSeq ++
-            stateWrites.map { case (s, e) => s"state\t$s\t$e" }.toSeq)).mkString("\n"))
+            versionWrites.map { case (s, e) => s"state\t$s\t$e" }.toSeq)).mkString("\n"))
 
     private[sources] def commit(): Unit = synchronized {
       val prev = readCommit(commitFile(key))
-      val versions = prev.versions ++ stateWrites.keys.map(_ -> epoch)
+      val versions = prev.versions ++ versionWrites.keys.map(_ -> epoch)
       writeAtomic(commitFile(key),
         (s"epoch\t$epoch" +:
           (versions.toSeq.sorted.map { case (s, v) => s"v\t$s\t$v" } ++
             (prev.kv ++ kvs).toSeq.sorted.map { case (k, v) => s"kv\t$k\t$v" })).mkString("\n"))
       Files.deleteIfExists(intentFile(key).toPath)
-      // GC superseded state versions — matches the old in-place
-      // overwrite's contract (readers materialize what they keep)
-      stateWrites.keys.foreach(s => prev.versions.get(s)
-        .filter(_ != epoch).foreach(v => rmrf(new File(key, s"state/$s/v$v"))))
+      // GC every other copy of each published directory: the base, the
+      // version it replaced, and any a crash after an earlier commit left
+      // (readers materialize what they keep, as with an overwrite)
+      versionWrites.keys.foreach(rel => copies(key, rel)
+        .filter(_ != versionRel(rel, epoch)).foreach(drop(key, _)))
     }
 
     private[sources] def rollback(): Unit = synchronized {
-      undo(key, Intent(epoch, touched.values.toVector, stateWrites.toVector))
+      undo(key, Intent(epoch, touched.values.toVector, versionWrites.toVector))
       Files.deleteIfExists(intentFile(key).toPath)
       ()
     }
@@ -383,17 +433,13 @@ object StoreTxn {
 
   /** Physical undo: restore every snapshotted directory to its
     * recursive snapshot (delete entries the snapshot doesn't know,
-    * whole subtrees at a time), drop directories — and their
-    * sidecars — that did not exist, and sweep this transaction's state
-    * versions. */
+    * whole subtrees at a time), drop directories that did not exist,
+    * and drop this transaction's versions. */
   private def undo(key: String, intent: Intent): Unit = {
     intent.dirs.foreach { snap =>
       val dir = new File(key, snap.rel)
-      if (!snap.existed) {
-        rmrf(dir)
-        if (snap.rel.startsWith("warehouse/"))
-          Warehouse.sidecars(key, snap.rel.stripPrefix("warehouse/")).foreach(rmrf)
-      } else if (dir.exists()) {
+      if (!snap.existed) drop(key, snap.rel)
+      else if (dir.exists()) {
         def sweep(f: File, rel: String): Unit =
           if (!snap.names.contains(rel)) rmrf(f) // unknown subtree: all new
           else if (f.isDirectory)
@@ -402,7 +448,15 @@ object StoreTxn {
         Option(dir.listFiles()).foreach(_.foreach(c => sweep(c, c.getName)))
       }
     }
-    intent.states.foreach { case (s, e) => rmrf(new File(key, s"state/$s/v$e")) }
+    intent.states.foreach { case (rel, e) => drop(key, versionRel(rel, e)) }
+  }
+
+  /** Delete the root-relative directory `rel` and, for a warehouse
+    * table, its sidecars. */
+  private def drop(key: String, rel: String): Unit = {
+    rmrf(new File(key, rel))
+    if (rel.startsWith("warehouse/"))
+      Warehouse.sidecars(key, rel.stripPrefix("warehouse/")).foreach(rmrf)
   }
 
   /** Delete a file or directory tree; a delete that fails throws. */

@@ -75,17 +75,6 @@ class DedupSpec extends SparkSpec {
       .count() === 0)
   }
 
-  test("minhashLshPairs recovers high-jaccard pairs with verified values") {
-    val pairs = Dedup.minhashLshPairs(docs, "id", "text",
-        shingleN = 3, bands = 16, rowsPerBand = 2, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2) -> p._3).toMap
-    assert(pairs.contains((1L, 2L)))
-    assert(pairs((1L, 2L)) === 1.0)
-    // verification is EXACT set Jaccard (array_intersect/union), which for
-    // (1,3) is 5 common / 9 union
-    pairs.get((1L, 3L)).foreach(j => assert(math.abs(j - 5.0 / 9.0) < 1e-12))
-  }
-
   test("portable minhash pairs recover dups with exact-jaccard verification") {
     val pairs = Dedup.minhashPortablePairs(docs, "id", "text",
         shingleN = 3, bands = 16, rowsPerBand = 1, threshold = 0.5, seed = 7L)
@@ -141,35 +130,21 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("simhash of identical text is identical; pairs within distance") {
-    val out = Dedup.simhashPairs(docs, "id", "text", maxDist = 3)
-      .as[(Long, Long, Long)].collect().map(p => (p._1, p._2) -> p._3).toMap
-    assert(out.contains((1L, 2L)))
-    assert(out((1L, 2L)) === 0L, "identical docs → distance 0")
-  }
-
-  test("simhashPairs excludes far pairs") {
-    val out = Dedup.simhashPairs(docs, "id", "text", maxDist = 3)
-      .as[(Long, Long, Long)].collect()
-    assert(!out.exists(p => (p._1, p._2) === ((1L, 4L))),
-      "unrelated docs must not appear within distance 3")
-  }
-
   test("legacy pair generators drop over-cap hot buckets") {
     // 6 identical docs share EVERY band/chunk bucket — a cap below the
     // group size must drop the bucket entirely (no quadratic blow-up),
     // and a cap at the group size must let all C(6,2)=15 pairs through
     val clones = Seq.tabulate(6)(i =>
       (i.toLong, "same exact text for every clone here")).toDF("id", "text")
-    assert(Dedup.minhashLshPairs(clones, "id", "text",
+    assert(Dedup.minhashPortablePairs(clones, "id", "text",
       shingleN = 3, bands = 4, rowsPerBand = 2, threshold = 0.5,
       maxBucket = 5).count() === 0)
-    assert(Dedup.simhashPairs(clones, "id", "text",
+    assert(Dedup.simhashPortablePairs(clones, "id", "text",
       maxDist = 3, maxBucket = 5).count() === 0)
-    assert(Dedup.minhashLshPairs(clones, "id", "text",
+    assert(Dedup.minhashPortablePairs(clones, "id", "text",
       shingleN = 3, bands = 4, rowsPerBand = 2, threshold = 0.5,
       maxBucket = 6).count() === 15)
-    assert(Dedup.simhashPairs(clones, "id", "text",
+    assert(Dedup.simhashPortablePairs(clones, "id", "text",
       maxDist = 3, maxBucket = 6).count() === 15)
   }
 

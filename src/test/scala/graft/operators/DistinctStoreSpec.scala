@@ -80,23 +80,31 @@ class DistinctStoreSpec extends SparkSpec {
     (0 until 6).foreach(i =>
       store.append(rows(i * 500, (i + 1) * 500), "g", "v"))
     val before = store.estimate().as[(String, Long)].collect().toMap
-    def deltaCount = Option(new java.io.File(
-        s"${store.storeRoot}/state/d_hll_sk").listFiles()).toSeq.flatten
-      .count(f => f.isDirectory && f.getName.startsWith("a"))
-    assert(deltaCount === 6)
+    // the sketch directories under state/, and the live one's rows
+    def sketchDirs = Option(new java.io.File(s"${store.storeRoot}/state")
+        .listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("d_hll_sk")).map(_.getName)
+    def liveRows = spark.read.parquet(graft.sources.StoreTxn.live(
+      store.storeRoot, "state/d_hll_sk")).count()
+    assert(sketchDirs === Seq("d_hll_sk") && liveRows === 18L,
+      "6 appends x 3 groups")
     store.compact()
-    assert(deltaCount === 0, "folded deltas physically removed post-commit")
+    assert(sketchDirs.size === 1 && sketchDirs.head.startsWith("d_hll_sk__v"),
+      s"one live directory after compact: $sketchDirs")
+    assert(liveRows === 3L, "one sketch row per group")
     assert(store.estimate().as[(String, Long)].collect().toMap === before)
-    // appends after compaction fold on top of the base
+    // appends after compaction fold on top, in the live directory
+    val folded = sketchDirs
     store.append(rows(3000, 4000), "g", "v")
-    assert(deltaCount === 1)
+    assert(sketchDirs === folded)
     assertClose(store.estimate().as[(String, Long)].collect().toMap,
       rows(0, 4000))
-    // second compact folds the new delta too; a third is a no-op
+    // a second compact folds the new rows too; a third changes nothing
     store.compact()
     val after = store.estimate().as[(String, Long)].collect().toMap
     store.compact()
     assert(store.estimate().as[(String, Long)].collect().toMap === after)
+    assert(sketchDirs.size === 1)
   }
 
   test("compact writes a group-partitioned base (many files, one task " +
@@ -113,8 +121,8 @@ class DistinctStoreSpec extends SparkSpec {
     val before = store.estimate().as[(String, Long)].collect().toMap
     assert(before.size === 50000)
     store.compact()
-    val baseDir = graft.sources.StoreTxn
-      .stateDir(store.storeRoot, "dw_hll_base").get
+    val baseDir = graft.sources.StoreTxn.live(store.storeRoot, "state/dw_hll_sk")
+    assert(baseDir.endsWith("/state/dw_hll_sk__v3"), s"the folded version: $baseDir")
     val baseFiles = Option(new java.io.File(baseDir).listFiles()).toSeq
       .flatten.count(f => f.getName.startsWith("part-"))
     assert(baseFiles > 1 && baseFiles <= 8,

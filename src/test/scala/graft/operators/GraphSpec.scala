@@ -449,8 +449,8 @@ class GraphSpec extends SparkSpec {
     // superseded rank-state versions are GC'd by the commit — one
     // version directory per state, not one per epoch
     def versionDirs(state: String) =
-      Option(new java.io.File(s"$root/state/$state").listFiles())
-        .toSeq.flatten.count(_.isDirectory)
+      Option(new java.io.File(s"$root/state").listFiles())
+        .toSeq.flatten.count(d => d.isDirectory && d.getName.startsWith(s"${state}__v"))
     assert(versionDirs("g_tranks") === 1,
       "superseded trust-rank versions must be swept")
     store.pageRankMaintain(spark, 1)

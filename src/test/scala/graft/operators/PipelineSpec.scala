@@ -254,6 +254,14 @@ class PipelineSpec extends SparkSpec {
       store.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
     }
     assert(e.getMessage.contains("no committed ingest record"))
+    // an orphaned labels VERSION is an artifact too
+    val versioned = freshRoot()
+    assert(new java.io.File(s"$versioned/state/t_labels__v3").mkdirs())
+    val e2 = intercept[IllegalArgumentException] {
+      new Pipeline.CurationStore(spark, versioned, "t", cfg)
+        .ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
+    }
+    assert(e2.getMessage.contains("state/t_labels__v3"), e2.getMessage)
     // a clean root (same handle config) still works
     val ok = new Pipeline.CurationStore(spark, freshRoot(), "t", cfg)
     ok.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
@@ -376,7 +384,8 @@ class PipelineSpec extends SparkSpec {
     val wh = new graft.sources.Warehouse(spark, root)
     val legacyRows = wh.readBucketed("t_cur_exact")
       .select("__h1", "__h2").collect().toSeq
-    wh.dropTable("t_cur_exact")
+    Seq("t_cur_exact", "_graft_bucket_spec_t_cur_exact", "_graft_schema_t_cur_exact")
+      .foreach(f => graft.sources.StoreTxn.rmrf(new java.io.File(s"$root/warehouse/$f")))
     wh.appendBucketed("t_cur_exact",
       spark.createDataFrame(spark.sparkContext.parallelize(legacyRows),
         org.apache.spark.sql.types.StructType(Seq(

@@ -139,7 +139,8 @@ class StoreTxnSpec extends SparkSpec {
     * crashed at each of its `touches` directory registrations and before
     * its commit, each followed by a blind retry of `op`: every retried
     * store must `observe` as the uncrashed one, and its commit record
-    * and warehouse listing (tables and sidecars) must be identical. */
+    * and its warehouse (tables and sidecars) and state listings must be
+    * identical. */
   private def crashMatrix(warm: String, touches: Int)(op: String => Unit)(
       observe: String => Seq[String]): Unit = {
     def copy(prefix: String) = {
@@ -149,7 +150,8 @@ class StoreTxnSpec extends SparkSpec {
       root
     }
     def state(root: String) = observe(root) ++
-      new java.io.File(root, "warehouse").list().sorted.toSeq :+
+      Seq("warehouse", "state").flatMap(d =>
+        Option(new java.io.File(root, d).list()).toSeq.flatten.sorted.map(n => s"$d/$n")) :+
       java.nio.file.Files.readString(new java.io.File(root, "_txn/commit").toPath)
     val clean = copy("graft_txn_clean_")
     op(clean)
@@ -209,6 +211,119 @@ class StoreTxnSpec extends SparkSpec {
     crashMatrix(warm, touches = 1)(append(_, 12, 24, "k2"))(observe)
     append(warm, 12, 24, "k2")
     crashMatrix(warm, touches = 1)(root => index(root).compact())(observe)
+  }
+
+  test("distinct store: a crash at every touch of a keyed append or a " +
+      "compaction, or before its commit, then a blind retry equals a clean store") {
+    val data = (0 until 900).map(i => (i, s"g${i % 3}", s"v${i % 400}")).toDF("i", "g", "v")
+    def store(root: String) = new Sketches.DistinctStore(spark, root, "d")
+    def append(root: String, lo: Int, hi: Int, key: String): Unit = {
+      store(root).appendOnce(data.filter(col("i") >= lo && col("i") < hi),
+        "g", "v", Some(key))
+      ()
+    }
+    def observe(root: String) =
+      rows(store(root).estimate()) ++ rows(store(root).estimateTotal())
+    val warm = tmp("graft_txn_dswarm_")
+    append(warm, 0, 300, "k1")
+    crashMatrix(warm, touches = 1)(append(_, 300, 600, "k2"))(observe)
+    append(warm, 300, 600, "k2")
+    // the fold writes a new version, which is not a touched directory
+    crashMatrix(warm, touches = 0)(root => store(root).compact())(observe)
+    store(warm).compact()
+    crashMatrix(warm, touches = 1)(append(_, 600, 900, "k3"))(observe)
+  }
+
+  test("a superseded version a crash between commit and GC left behind " +
+      "is deleted by the next commit of its directory") {
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
+      minhash = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,
+        threshold = 0.5, seed = 7L))
+    val docs = corpus(45, seed = 11L).toDF("id", "text")
+    val root = tmp("graft_txn_gc_")
+    val store = new Pipeline.CurationStore(spark, root, "t", cfg)
+    def labels = StoreTxn.live(root, "state/t_labels")
+    def listing(d: String) =
+      Option(new java.io.File(root, d).list()).toSeq.flatten.sorted
+    store.ingest(docs.filter(col("id") < 15), "id", "text")
+    val v1 = labels
+    store.ingest(docs.filter(col("id") >= 15 && col("id") < 30), "id", "text")
+    val v2 = labels
+    assert(v1 != v2 && listing("state") === Seq(new java.io.File(v2).getName))
+    // the crash window: the commit that published v2 died before its GC
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(v2),
+      new java.io.File(v1))
+    store.ingest(docs.filter(col("id") >= 30), "id", "text")
+    assert(listing("state") === Seq(new java.io.File(labels).getName),
+      "the next labels commit deletes every superseded version")
+    // a compaction's GC takes the replaced tables' sidecars with them
+    store.compact()
+    val wh = new Warehouse(spark, root)
+    val live = Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set").map(wh.live)
+    assert(live.forall(_.contains("__v")), live)
+    assert(listing("warehouse") === (live ++ live.flatMap(t =>
+      Seq("bucket_spec", "schema").map(k => s"_graft_${k}_$t")) ++
+      Seq(s"_graft_params_${live(1)}")).sorted)
+  }
+
+  test("roots of an earlier layout are refused before anything is written") {
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
+      minhash = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,
+        threshold = 0.5, seed = 7L))
+    val docs = corpus(30, seed = 12L).toDF("id", "text")
+    def files(root: String): Seq[(String, Long)] = {
+      val base = new java.io.File(root).toPath
+      java.nio.file.Files.walk(base).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => (base.relativize(p).toString, p.toFile.length)).sorted
+    }
+    def refused(root: String)(attempts: (() => Any)*): Unit = {
+      val before = files(root)
+      attempts.foreach { a =>
+        val e = intercept[IllegalArgumentException](a())
+        assert(e.getMessage.contains("rebuild under a fresh root"), e.getMessage)
+      }
+      assert(files(root) === before, "a refused root is left as it was")
+    }
+    def commitFile(root: String) = new java.io.File(root, "_txn/commit").toPath
+    def editCommit(root: String)(f: String => String): Unit =
+      java.nio.file.Files.writeString(commitFile(root),
+        f(java.nio.file.Files.readString(commitFile(root))))
+    def curation(root: String) = new Pipeline.CurationStore(spark, root, "t", cfg)
+
+    // a compaction alias in the commit record
+    val aliased = tmp("graft_txn_old_alias_")
+    curation(aliased).ingest(docs.filter(col("id") < 15), "id", "text")
+    editCommit(aliased)(_ + "\nkv\tactive:t_cur:mh_sig\tt_cur_mh_sig__c2")
+    refused(aliased)(
+      () => curation(aliased).ingest(docs.filter(col("id") >= 15), "id", "text"),
+      () => curation(aliased).compact(),
+      () => new MinhashStore(new Warehouse(spark, aliased), "t_cur", cfg.minhash)
+        .ingest(docs.filter(col("id") >= 15), "id", "text"))
+
+    // a version entry keyed by the bare state name, its directory nested
+    val nested = tmp("graft_txn_old_version_")
+    curation(nested).ingest(docs.filter(col("id") < 15), "id", "text")
+    val v1 = new java.io.File(nested, "state/t_labels__v1")
+    assert(v1.isDirectory)
+    assert(new java.io.File(nested, "state/t_labels").mkdirs())
+    assert(v1.renameTo(new java.io.File(nested, "state/t_labels/v1")))
+    editCommit(nested)(_.replace("v\tstate/t_labels\t1", "v\tt_labels\t1"))
+    refused(nested)(
+      () => curation(nested).ingest(docs.filter(col("id") >= 15), "id", "text"))
+
+    // DistinctStore per-append delta directories
+    val deltas = tmp("graft_txn_old_deltas_")
+    val ds = new Sketches.DistinctStore(spark, deltas, "d")
+    ds.append(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v")
+    val sk = new java.io.File(deltas, "state/d_hll_sk")
+    val a1 = new java.io.File(sk, "a1")
+    assert(a1.mkdir())
+    sk.listFiles().filter(_.isFile).foreach(f => assert(f.renameTo(new java.io.File(a1, f.getName))))
+    refused(deltas)(
+      () => ds.append(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v"),
+      () => ds.estimate(),
+      () => ds.compact())
   }
 
   test("curation store: kill mid-ingest, blind retry equals the uncrashed run") {
@@ -303,7 +418,7 @@ class StoreTxnSpec extends SparkSpec {
             "_txn/intent").toPath).split("\n").map(_.split("\t")).toSeq
           assert(intent.filter(_(0) == "dir").map(_(1)).toSet === Set(
             "warehouse/t_cur_exact", "warehouse/t_cur_mh_sig", "warehouse/t_cur_mh_set"))
-          assert(intent.filter(_(0) == "state").map(_(1)) === Seq("t_labels"))
+          assert(intent.filter(_(0) == "state").map(_(1)) === Seq("state/t_labels"))
         }
         val retry = store(root)
         assert(observed(retry, ingest(retry, gate0, delta)) === expected,
