@@ -276,18 +276,21 @@ object Decontamination {
     * fraction of the postings instead of all of them, and a gram-dense
     * suite degrades gracefully to the full bucket-aligned scan — never
     * worse. Bucketing stays so an over-broadcast-size eval side still
-    * joins shuffle-free on the postings side. An [[AppendStore]]:
+    * joins shuffle-free on the postings side. The default of 8 prefix
+    * partitions keeps a read under the 32 directories above which Spark
+    * lists them in a job of its own. A [[KeyedStore]]:
     * appends are StoreTxn transactions (crash ⇒ rollback, blind retry
     * converges), keyed appends skip on redelivery, and compaction is
     * [[StoreCompaction]]'s, which keeps the gpfx partitioning. */
   final class GramIndex(spark: org.apache.spark.sql.SparkSession,
                         root: String, name: String, n: Int,
                         nStoreBuckets: Int = 32,
-                        prefixPartitions: Int = 64) extends AppendStore {
-    private val wh = new graft.sources.Warehouse(spark, root)
+                        prefixPartitions: Int = 8) extends KeyedStore[Unit] {
+    protected val wh = new graft.sources.Warehouse(spark, root)
     private val gramSpec = StoreCompaction.TableSpec(s"${name}_dc_gram")
     private def gramTable: String = wh.live(gramSpec.base)
-    def storeRoot: String = wh.root
+    protected def label = s"GramIndex '$name'"
+    private[graft] def tables = Seq(gramSpec)
 
     // row-identity parameters: ghash is over n-grams, gpfx is mod
     // prefixPartitions, and tokenization follows the session's
@@ -304,7 +307,7 @@ object Decontamination {
     private def gpfx(ghash: org.apache.spark.sql.Column) =
       pmod(ghash, lit(prefixPartitions)).cast("int")
 
-    protected def appendBody(docs: DataFrame, idCol: String,
+    protected def writeBatch(docs: DataFrame, idCol: String,
                              textCol: String): Unit = {
       wh.paramsSpecValidated(gramTable, storeParams)
       wh.appendBucketed(gramTable,
@@ -333,12 +336,5 @@ object Decontamination {
         .join(eg, Seq("ghash"), "left_semi")
         .select("id").distinct()
     }
-
-    /** Rewrite the accumulated postings into one fresh generation, one
-      * file per non-empty (gpfx, bucket) cell — see [[StoreCompaction]]
-      * (identical rows: ids are unique across appends). */
-    def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-      StoreCompaction.compact(spark, wh, s"GramIndex '$name'", Seq(gramSpec))
-    def compact(): Unit = compact(spark)
   }
 }

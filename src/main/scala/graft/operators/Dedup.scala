@@ -491,11 +491,6 @@ object Dedup {
         (size(col("__t")) - size(col("__kept"))).cast("long").as("n_removed"))
   }
 
-  /** Exact Jaccard of two texts' shingle sets, as a column program. */
-  def exactJaccard(a: Column, b: Column, n: Int): Column =
-    exactJaccardFromSets(TextFunctions.wordShingles(a, n),
-      TextFunctions.wordShingles(b, n))
-
   /** Jaccard of two PRE-COMPUTED shingle-set columns: pairwise verifiers
     * join per-doc sets by id so each document's shingling runs once, not
     * once per candidate pair it appears in. */
@@ -622,28 +617,6 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Shared staging of the portable MinHash pipeline for one batch of
-    * documents: returns (banded, sets) where `banded` is the LSH index
-    * slice (id, band, bucket) — exactly what a signature STORE persists —
-    * and `sets` is (id, hset), the distinct shingle-hash set the exact
-    * Jaccard verification reads.
-    *
-    * Stage tokens → shingles → hashes as three projections, each alias
-    * bound to a COLUMN before the next references it: a lambda that
-    * captures a non-attribute subtree re-evaluates it per array ELEMENT
-    * (inline shingling is O(tokens²) per row — it dominated the r2
-    * bench), and the bands×rows min expressions all share `hv` as a row
-    * slot (CollapseProject keeps multiply-referenced non-trivial aliases
-    * materialized). */
-  private[operators] def minhashStage(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, bands: Int, rowsPerBand: Int,
-      seed: Long): (DataFrame, DataFrame) = {
-    val combined =
-      minhashCombined(df, idCol, textCol, shingleN, bands, rowsPerBand, seed)
-    (bandedFromCombined(combined, bands, rowsPerBand),
-      combined.select(col("id"), col("hset")))
-  }
-
   /** The ONE expensive pass of the portable MinHash pipeline —
     * tokenize → shingle → hash → per-function minima AND the distinct
     * hash set, emitted together as (id, mins, hset). Both MinHash
@@ -714,10 +687,6 @@ object Dedup {
           lit(1L)).otherwise(lit(-1L)))
       when(s > 0, lit(1L << bit)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  def simhashPortable(text: Column, coeffs: Seq[(Long, Long)]): Column =
-    simhashFromHashes(transform(TextFunctions.tokens(text), t => polyHash(t)),
-      coeffs)
 
   /** Portable SimHash near-dup pairs within Hamming distance `maxDist`
     * over a `chunks`×`chunkBits`-bit signature: pigeonhole on the chunks

@@ -32,7 +32,7 @@ final case class EdgeStoreConfig(weightCol: Option[String] = None,
   *
   * Appends run as [[graft.sources.StoreTxn]] transactions (atomic
   * publish, crash rollback, writer lease) with the family's
-  * `appendOnce` redelivery ledger, so the store composes with the
+  * `ingestOnce` redelivery ledger, so the store composes with the
   * streaming maintenance sink unchanged.
   *
   * Equivalence contract (oracle-verified, q157): after appending
@@ -63,31 +63,29 @@ final case class EdgeStoreConfig(weightCol: Option[String] = None,
   * stage such batches first (`batch.write.parquet(tmp)` then append
   * the read, or `localCheckpoint` a bounded batch) and append the
   * staged frame. */
-final class EdgeStore(wh: graft.sources.Warehouse, name: String,
-                      cfg: EdgeStoreConfig) extends AppendStore {
+final class EdgeStore(protected val wh: graft.sources.Warehouse, name: String,
+                      cfg: EdgeStoreConfig) extends KeyedStore[Unit] {
   private def edgeParams = Seq(
     "weighted" -> cfg.weightCol.isDefined.toString)
   private val edgeSpec = StoreCompaction.TableSpec(s"${name}_eg_edge")
   private val wtotSpec = StoreCompaction.TableSpec(s"${name}_eg_wtot")
   private def edgeTable = wh.live(edgeSpec.base)
   private def wtotTable = wh.live(wtotSpec.base)
-  def storeRoot: String = wh.root
+  protected def label = s"EdgeStore '$name'"
 
-  /** Rewrite both tables into fresh single-generation layouts,
-    * collapsing cross-append duplicates while at it (the per-row
-    * transform contract allows only row-local maps, so the collapse
-    * rides the pre-partitioned rewrite as a groupBy that the bucket
-    * alignment keeps exchange-free — rows may MERGE here, which is
-    * semantics-preserving for this store because every reader
+  /** Compaction collapses cross-append duplicates while it rewrites
+    * (the per-row transform contract allows only row-local maps, so the
+    * collapse rides the pre-partitioned rewrite as a groupBy that the
+    * bucket alignment keeps exchange-free — rows may MERGE here, which
+    * is semantics-preserving for this store because every reader
     * re-aggregates by the same keys). */
-  def compact(spark: SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"EdgeStore '$name'",
-      Seq(edgeSpec.copy(transform = df => df.groupBy("src", "dst")
-            .agg(sum(col("w")).as("w"), sum(col("cnt")).as("cnt"))),
-        wtotSpec.copy(transform = df => df.groupBy("src")
-          .agg(sum(col("wtot")).as("wtot")))))
+  private[graft] def tables = Seq(
+    edgeSpec.copy(transform = df => df.groupBy("src", "dst")
+      .agg(sum(col("w")).as("w"), sum(col("cnt")).as("cnt"))),
+    wtotSpec.copy(transform = df => df.groupBy("src")
+      .agg(sum(col("wtot")).as("wtot"))))
 
-  protected def appendBody(batch: DataFrame, srcCol: String,
+  protected def writeBatch(batch: DataFrame, srcCol: String,
                            dstCol: String): Unit = {
     // integral node ids only — the cast below would silently collapse a
     // string-keyed batch (e.g. Graph.hostEdges output appended directly,
@@ -285,8 +283,9 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     * result as the store's new rank table — a versioned state directory
     * published by a StoreTxn commit, so readers switch atomically and a
     * crash rolls back to the previous ranks. The maintenance loop a
-    * crawl runs per edge epoch is then literally `store.append(batch);
-    * store.pageRankMaintain(iters)` — on an unchanged store, k
+    * crawl runs per edge epoch is then literally
+    * `store.ingest(batch, "src", "dst"); store.pageRankMaintain(iters)`
+    * — on an unchanged store, k
     * maintained + j maintained iterations equal one k+j cold run
     * (spec-pinned); after appends, the stored prior reaches a given
     * `tol` in fewer iterations than the uniform start (0.23× the L1

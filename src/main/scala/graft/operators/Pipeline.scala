@@ -487,6 +487,9 @@ object Pipeline {
     private val mh = new MinhashStore(wh, s"${name}_cur", cfg.minhash)
     private val exactSpec = StoreCompaction.TableSpec(s"${name}_cur_exact")
     private def exactTable = wh.live(exactSpec.base)
+    /** The store's bucketed tables: the embedded MinHash store's two and
+      * the exact-hash membership table. */
+    private[graft] def tables = mh.tables :+ exactSpec
     private val labelsState = s"${name}_labels"
     private val maxIdKey = s"${name}_maxid"
     // the eval n-grams on the driver for a local delta's decontamination,
@@ -576,11 +579,8 @@ object Pipeline {
         // its exact hashes and signatures (the double-posting the
         // marker exists to prevent) and reset every component label,
         // so refuse instead of silently starting over on top of it.
-        val orphans = Seq(
-          s"state/${name}_maxid",
-          s"state/$labelsState",
-          s"warehouse/${exactSpec.base}",
-          s"warehouse/${name}_cur_mh_sig")
+        val orphans = (Seq(s"state/${name}_maxid", s"state/$labelsState") ++
+            tables.map(t => s"warehouse/${t.base}"))
           .flatMap(graft.sources.StoreTxn.copies(root, _))
         require(orphans.isEmpty,
           s"CurationStore '$name' at $root has store artifacts but no " +
@@ -839,25 +839,12 @@ object Pipeline {
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), LabelsSchema)
     }
 
-    /** Rewrite every fragmented layout of this store into new compact
-      * versions — the embedded MinHash store's two tables and the
-      * exact-hash membership table (every ingest appends one file set to
-      * each; a long-lived maintenance sink otherwise pays per-file read
-      * overhead that grows with stream age; the labels are one version
-      * per ingest already). Rows identical everywhere. Two transactions:
-      * each is idempotent maintenance, and a crash between them leaves
-      * a partially-compacted-but-consistent store. */
-    def compact(): Unit = {
-      graft.sources.StoreTxn.recoverIfIdle(spark, root)
-      if (wh.exists(wh.live(s"${name}_cur_mh_sig")))
-        mh.compact(spark)
-      if (wh.exists(exactTable))
-        StoreCompaction.compact(spark, wh, s"CurationStore '$name'",
-          Seq(exactSpec))
-    }
-
-    /** Uniform signature for the maintenance-sink trigger. */
-    def compact(sparkSession: org.apache.spark.sql.SparkSession): Unit =
-      compact()
+    /** Rewrite [[tables]] into new compact versions in one transaction
+      * (every ingest appends one file set to each; a long-lived
+      * maintenance sink otherwise pays per-file read overhead that grows
+      * with stream age; the labels are one version per ingest already).
+      * Rows identical everywhere — see [[StoreCompaction]]. */
+    def compact(): Unit =
+      StoreCompaction.compact(wh, s"CurationStore '$name'", tables)
   }
 }

@@ -324,15 +324,6 @@ object Quantization {
     books
   }
 
-  /** PQ codebooks as a (sub, cell, cvec) frame for persistence. */
-  def pqCodebookDf(spark: org.apache.spark.sql.SparkSession,
-                   books: Seq[Seq[(Int, Array[Double])]]): DataFrame = {
-    import spark.implicits._
-    books.zipWithIndex.flatMap { case (b, s) =>
-      b.map { case (c, v) => (s, c, v.toSeq) }
-    }.toDF("sub", "cell", "cvec")
-  }
-
   /** Encode vectors to `m`-byte PQ codes: per subspace, the nearest
     * codebook centroid by the SAME argmin kernel the IVF family assigns
     * with (left-to-right IEEE L2, smallest-cell ties). One narrow map,

@@ -94,7 +94,7 @@ object Retrieval {
   }
 
   /** Persisted, APPENDABLE BM25 index — the retrieval member of the
-    * incremental-store family, an [[AppendStore]]: a corpus is indexed
+    * incremental-store family, a [[KeyedStore]]: a corpus is indexed
     * batch by batch, and [[search]] over the accumulated index
     * reproduces [[Retrieval.bm25TopK]] over the union BIT-FOR-BIT
     * (oracle-verified, q85), because document frequencies, N and Σdl
@@ -118,15 +118,16 @@ object Retrieval {
     * atomically, and a crash anywhere mid-append rolls back on the next
     * open ([[search]] heals a dead writer's partial append before
     * reading), so a blind retry converges with no external snapshot.
-    * Keyed appends ([[appendOnce]]) and compaction are the family's
-    * ([[AppendStore]], [[StoreCompaction]]). */
+    * Keyed appends ([[ingestOnce]]) and compaction are the family's
+    * ([[KeyedStore]], [[StoreCompaction]]). */
   final class Bm25Index(spark: org.apache.spark.sql.SparkSession,
                         root: String, name: String,
-                        nStoreBuckets: Int = 32) extends AppendStore {
-    private val wh = new graft.sources.Warehouse(spark, root)
-    def storeRoot: String = wh.root
+                        nStoreBuckets: Int = 32) extends KeyedStore[Unit] {
+    protected val wh = new graft.sources.Warehouse(spark, root)
     private val postSpec = StoreCompaction.TableSpec(s"${name}_bm_post")
     private val lenSpec = StoreCompaction.TableSpec(s"${name}_bm_len")
+    protected def label = s"Bm25Index '$name'"
+    private[graft] def tables = Seq(postSpec, lenSpec)
     private def postTable = wh.live(postSpec.base)
     private def lenTable = wh.live(lenSpec.base)
     private val nKey = s"bm25:$name:n"
@@ -151,7 +152,7 @@ object Retrieval {
       t
     }
 
-    protected def appendBody(docs: DataFrame, idCol: String,
+    protected def writeBatch(docs: DataFrame, idCol: String,
                              textCol: String): Unit = {
       val (n0, sumdl0) = totals.getOrElse((0L, 0L))
       wh.paramsSpecValidated(postTable, params)
@@ -173,13 +174,6 @@ object Retrieval {
       txn.putKv(nKey, (n0 + batch.getLong(0)).toString)
       txn.putKv(sumdlKey, (sumdl0 + batch.getLong(1)).toString)
     }
-
-    /** Rewrite the postings and lengths into one fresh generation — see
-      * [[StoreCompaction]]. */
-    def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-      StoreCompaction.compact(spark, wh, s"Bm25Index '$name'",
-        Seq(postSpec, lenSpec))
-    def compact(): Unit = compact(spark)
 
     def search(queryTerms: Seq[String], k: Int,
                k1: Double = 1.2, b: Double = 0.75,

@@ -20,10 +20,19 @@ import org.apache.spark.sql.functions._
 // snapshot-restore discipline. The root's writer lease enforces the
 // single-writer contract the stores always documented.
 
-/** The shared ingest surface of the pair-emitting signature stores
-  * (MinHash / SimHash / embedding-LSH) — one transactional `ingest`
-  * plus the key-idempotent `ingestOnce` a streaming maintenance sink
-  * needs (the [[AppendStore.appendOnce]] contract for pair stores):
+/** The incremental-store family's one keyed write. A store declares its
+  * [[graft.sources.Warehouse]], a label for its messages, its bucketed
+  * `tables`, and the body that writes one batch and returns `R` — the
+  * verified pairs of a pair store ([[MinhashStore]], [[SimhashStore]],
+  * [[EmbeddingLshStore]], [[HammingStore]], [[ContainmentStore]]), or
+  * `Unit` for a store whose write only appends ([[IvfStore]],
+  * [[IvfAdcStore]], [[EdgeStore]], [[Retrieval.Bm25Index]],
+  * [[Decontamination.GramIndex]], [[Sketches.DistinctStore]]). The trait
+  * supplies the rest once: the transaction, the key ledger, compaction
+  * over the declared tables, and with them the streaming maintenance
+  * sink ([[graft.streaming.Streaming.storeSink]]).
+  *
+  * `ingestOnce` is the key-idempotent form a streaming sink needs:
   *
   *  - a COMPLETED ingest key skips on redelivery — the key is buffered
   *    into the store's commit record, so "key visible" IS "ingest
@@ -32,27 +41,29 @@ import org.apache.spark.sql.functions._
   *    compaction, if ever needed, is a maintenance rewrite);
   *  - a CRASHED ingest left no key, rolls back on the next open
   *    (StoreTxn), and the redelivered batch re-ingests cleanly;
-  *  - `beforeCommit` runs on the materialized pairs INSIDE the
-  *    transaction, before it publishes — append the pairs delta to a
-  *    warehouse table there (keyed idempotent, curation-sink style)
-  *    and the delta is durable before the skip-key exists, so a crash
-  *    between the two redelivers into a retry, never a silent loss. */
-trait PairStore {
-  /** Canonical store root — the lease/transaction scope. */
-  def storeRoot: String
-  /** Rewrite the store's live tables into new compact versions
-    * (rows identical) — see [[StoreCompaction]]. Abstract on the trait
-    * so maintenance sinks ([[graft.streaming.Streaming.nearDupSink]])
-    * can self-trigger it on a fragmentation threshold. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit
-  protected def ingestBody(batch: DataFrame, idCol: String,
-                           valueCol: String): DataFrame
+  *  - `beforeCommit` runs on the write's result INSIDE the transaction,
+  *    before it publishes — append a pairs delta to a warehouse table
+  *    there (keyed idempotent, curation-sink style) and the delta is
+  *    durable before the skip-key exists, so a crash between the two
+  *    redelivers into a retry, never a silent loss. */
+trait KeyedStore[R] {
+  protected def wh: graft.sources.Warehouse
+  /** The store as its messages name it, e.g. `MinhashStore 't'`. */
+  protected def label: String
+  /** The store's bucketed tables: what [[compact]] rewrites, and the
+    * write set of one ingest. */
+  private[graft] def tables: Seq[StoreCompaction.TableSpec]
+  /** One batch's writes, inside the ingest's transaction. A result
+    * that reads the store must be materialized before the appends. */
+  protected def writeBatch(batch: DataFrame, idCol: String, valueCol: String): R
 
-  /** Near-dup pairs of `batch` against itself and the store, then the
-    * batch's signatures enter the store — one atomic transaction. */
-  def ingest(batch: DataFrame, idCol: String, valueCol: String): DataFrame =
+  /** Canonical store root — the lease/transaction scope. */
+  def storeRoot: String = wh.root
+
+  /** Write one batch — one atomic transaction. */
+  def ingest(batch: DataFrame, idCol: String, valueCol: String): R =
     graft.sources.StoreTxn.transact(batch.sparkSession, storeRoot) {
-      ingestBody(batch, idCol, valueCol)
+      writeBatch(batch, idCol, valueCol)
     }
 
   /** [[ingest]], skipped if `ingestKey` already committed. Returns None
@@ -60,8 +71,7 @@ trait PairStore {
     * streaming sink uses "<checkpoint>#<batchId>"). */
   def ingestOnce(batch: DataFrame, idCol: String, valueCol: String,
                  ingestKey: Option[String],
-                 beforeCommit: DataFrame => Unit = _ => ())
-      : Option[DataFrame] = {
+                 beforeCommit: R => Unit = (_: R) => ()): Option[R] = {
     val spark = batch.sparkSession
     if (ingestKey.exists(IngestKeys.completed(spark, storeRoot, _)))
       return None
@@ -73,57 +83,17 @@ trait PairStore {
           graft.sources.StoreTxn.getKv(storeRoot, IngestKeys.kvKey(k))
             .isDefined)) None
       else {
-        val pairs = ingestBody(batch, idCol, valueCol)
-        beforeCommit(pairs)
+        val result = writeBatch(batch, idCol, valueCol)
+        beforeCommit(result)
         ingestKey.foreach(IngestKeys.record(storeRoot, _))
-        Some(pairs)
+        Some(result)
       }
     }
   }
-}
 
-/** The key-once sibling of [[PairStore]] for stores whose write path
-  * APPENDS without emitting a result ([[IvfStore]],
-  * [[Retrieval.Bm25Index]], [[Decontamination.GramIndex]]) — the same
-  * commit-record key ledger,
-  * so each store in the family gets an always-on streaming maintenance
-  * form with identical redelivery/crash semantics. */
-trait AppendStore {
-  /** Canonical store root — the lease/transaction scope. */
-  def storeRoot: String
-  /** Rewrite the store's live tables into new compact versions
-    * (rows identical) — see [[StoreCompaction]]. Abstract on the trait
-    * so maintenance sinks ([[graft.streaming.Streaming.appendStoreSink]])
-    * can self-trigger it on a fragmentation threshold. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit
-  protected def appendBody(batch: DataFrame, idCol: String,
-                           valueCol: String): Unit
-
-  /** Append one batch — one atomic transaction. */
-  def append(batch: DataFrame, idCol: String, valueCol: String): Unit =
-    graft.sources.StoreTxn.transact(batch.sparkSession, storeRoot) {
-      appendBody(batch, idCol, valueCol)
-    }
-
-  /** [[append]], skipped if `appendKey` already committed. Returns
-    * false on a skip. */
-  def appendOnce(batch: DataFrame, idCol: String, valueCol: String,
-                 appendKey: Option[String]): Boolean = {
-    val spark = batch.sparkSession
-    if (appendKey.exists(IngestKeys.completed(spark, storeRoot, _)))
-      return false
-    graft.sources.StoreTxn.transact(spark, storeRoot) {
-      // in-transaction re-check — see PairStore.ingestOnce
-      if (appendKey.exists(k =>
-          graft.sources.StoreTxn.getKv(storeRoot, IngestKeys.kvKey(k))
-            .isDefined)) false
-      else {
-        appendBody(batch, idCol, valueCol)
-        appendKey.foreach(IngestKeys.record(storeRoot, _))
-        true
-      }
-    }
-  }
+  /** Rewrite the store's live tables into new compact versions (rows
+    * identical) — see [[StoreCompaction]]. */
+  def compact(): Unit = StoreCompaction.compact(wh, label, tables)
 }
 
 /** Generation-rewrite compaction, the one implementation every store
@@ -144,7 +114,7 @@ trait AppendStore {
   * non-empty (partition, bucket) cell. Scalar state in the commit
   * record — the replay-key ledger, BM25's document count and length
   * total — needs no rewrite. */
-private[operators] object StoreCompaction {
+private[graft] object StoreCompaction {
   /** One physical table of a store, named by its base, with its rows
     * passed through `transform` during the rewrite. Usually identity; a store
     * whose EVERY reader re-aggregates by the bucket keys may merge rows
@@ -153,13 +123,12 @@ private[operators] object StoreCompaction {
   final case class TableSpec(base: String,
                              transform: DataFrame => DataFrame = identity)
 
-  def compact(spark: org.apache.spark.sql.SparkSession,
-              wh: graft.sources.Warehouse, storeLabel: String,
+  def compact(wh: graft.sources.Warehouse, storeLabel: String,
               tables: Seq[TableSpec]): Unit = {
-    graft.sources.StoreTxn.recoverIfIdle(spark, wh.root)
+    graft.sources.StoreTxn.recoverIfIdle(wh.spark, wh.root)
     require(tables.exists(t => wh.exists(wh.live(t.base))),
       s"$storeLabel at ${wh.root} has no ingests — nothing to compact")
-    graft.sources.StoreTxn.transact(spark, wh.root) {
+    graft.sources.StoreTxn.transact(wh.spark, wh.root) {
       tables.filter(t => wh.exists(wh.live(t.base))).foreach(t =>
         wh.rewriteBucketed(wh.live(t.base), wh.newVersion(t.base), t.transform))
     }
@@ -214,8 +183,9 @@ final case class MinhashConfig(shingleN: Int, bands: Int, rowsPerBand: Int,
   * history is the more useful semantics (pairs are never retracted);
   * the equivalence oracle holds whenever no bucket crosses the cap
   * between ingests. */
-final class MinhashStore(wh: graft.sources.Warehouse, name: String,
-                         cfg: MinhashConfig) extends PairStore {
+final class MinhashStore(protected val wh: graft.sources.Warehouse,
+                         name: String, cfg: MinhashConfig)
+    extends KeyedStore[DataFrame] {
   private def sigParams = Seq(
     "shingleN" -> cfg.shingleN.toString, "bands" -> cfg.bands.toString,
     "rowsPerBand" -> cfg.rowsPerBand.toString, "seed" -> cfg.seed.toString,
@@ -225,27 +195,22 @@ final class MinhashStore(wh: graft.sources.Warehouse, name: String,
   private val setSpec = StoreCompaction.TableSpec(s"${name}_mh_set")
   private def sigTable = wh.live(sigSpec.base)
   private def setTable = wh.live(setSpec.base)
-  def storeRoot: String = wh.root
-
-  /** Rewrite both tables (LSH index + shingle sets) into fresh
-    * single-generation layouts — see [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"MinhashStore '$name'",
-      Seq(sigSpec, setSpec))
+  protected def label = s"MinhashStore '$name'"
+  private[graft] def tables = Seq(sigSpec, setSpec)
 
   /** Near-dup pairs of `batch` against itself AND the store, then the
     * batch's signatures are appended to the store. The returned frame
     * is materialized (a local relation or a localCheckpoint) BEFORE the
     * append — it must be: a lazy plan would re-read the store post-append
     * and pair the batch against its own signatures. */
-  protected def ingestBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     val (pairs, append) = ingestParts(batch, idCol, textCol)
     append()
     pairs
   }
 
-  /** [[ingestBody]] split into (materialized pairs, deferred appends):
+  /** [[writeBatch]] split into (materialized pairs, deferred appends):
     * the pairs are computed against the PRE-append store state, after
     * which the two table appends touch nothing the caller reads — an
     * embedding caller inside the same transaction
@@ -511,13 +476,15 @@ object MinhashStore {
   * centroid set and the index is silently wrong. Callers freeze them at
   * store creation (train once on a representative sample; re-train =
   * new store + rebuild), which is the standard IVF contract. */
-final class IvfStore(wh: graft.sources.Warehouse, name: String,
+final class IvfStore(protected val wh: graft.sources.Warehouse, name: String,
                      centroids: DataFrame, nStoreBuckets: Int = 64)
-    extends AppendStore {
+    extends KeyedStore[Unit] {
   // appends land in the live directory; [[compact]] publishes a new
   // version of it
   private val tableSpec = StoreCompaction.TableSpec(s"${name}_ivf")
   private def table: String = wh.live(tableSpec.base)
+  protected def label = s"IvfStore '$name'"
+  private[graft] def tables = Seq(tableSpec)
 
   // the frozen-centroid contract, made self-enforcing: a fingerprint of
   // the actual centroid values (bounded collect — one row per cell,
@@ -538,9 +505,8 @@ final class IvfStore(wh: graft.sources.Warehouse, name: String,
       .toLong & 0xffffffffL
   }
   private def storeParams = Seq("centroidFp" -> centroidFp.toString)
-  def storeRoot: String = wh.root
 
-  protected def appendBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            vecCol: String): Unit = {
     wh.paramsSpecValidated(table, storeParams)
     wh.appendBucketed(table,
@@ -555,12 +521,6 @@ final class IvfStore(wh: graft.sources.Warehouse, name: String,
     Similarity.ivfTopKAssigned(wh.readBucketed(table), queries, idCol,
       vecCol, k, centroids, nProbes)
   }
-
-  /** Rewrite the accumulated cell-bucketed vectors into one fresh
-    * physical generation — see [[StoreCompaction]] (rows identical;
-    * ids are unique across appends). */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"IvfStore '$name'", Seq(tableSpec))
 }
 
 /** Parameters of a precomputed-signature hamming store — the chunk
@@ -580,8 +540,9 @@ final case class HammingConfig(maxDist: Int = 3, chunks: Int = 4,
   * exactly the pairs the one-shot operator finds on the union, each
   * pair once, at the ingest of its later endpoint. Null signatures
   * never enter the store (they cannot match anything). */
-final class HammingStore(wh: graft.sources.Warehouse, name: String,
-                         cfg: HammingConfig) extends PairStore {
+final class HammingStore(protected val wh: graft.sources.Warehouse,
+                         name: String, cfg: HammingConfig)
+    extends KeyedStore[DataFrame] {
   require(cfg.maxDist < cfg.chunks,
     s"pigeonhole needs maxDist < chunks: ${cfg.maxDist} >= ${cfg.chunks}")
   require(cfg.chunks * cfg.chunkBits <= 64,
@@ -590,14 +551,10 @@ final class HammingStore(wh: graft.sources.Warehouse, name: String,
     "chunks" -> cfg.chunks.toString, "chunkBits" -> cfg.chunkBits.toString)
   private val sigSpec = StoreCompaction.TableSpec(s"${name}_hm_sig")
   private def sigTable = wh.live(sigSpec.base)
-  def storeRoot: String = wh.root
+  protected def label = s"HammingStore '$name'"
+  private[graft] def tables = Seq(sigSpec)
 
-  /** Rewrite the signature table into one fresh generation — see
-    * [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"HammingStore '$name'", Seq(sigSpec))
-
-  protected def ingestBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            sigCol: String): DataFrame = {
     wh.paramsSpecValidated(sigTable, sigParams)
     // SAME staging as the one-shot operator — the equivalence contract
@@ -646,13 +603,15 @@ final class HammingStore(wh: graft.sources.Warehouse, name: String,
   * [[IvfStore]] frozen-centroid rule, extended): fingerprints of both
   * are recorded at first append and validated on every append and
   * serve, so a handle built on retrained parameters fails fast. */
-final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
-                        centroids: DataFrame,
+final class IvfAdcStore(protected val wh: graft.sources.Warehouse,
+                        name: String, centroids: DataFrame,
                         books: Seq[Seq[(Int, Array[Double])]],
                         nStoreBuckets: Int = 64)
-    extends AppendStore {
+    extends KeyedStore[Unit] {
   private val tableSpec = StoreCompaction.TableSpec(s"${name}_adc")
   private def table: String = wh.live(tableSpec.base)
+  protected def label = s"IvfAdcStore '$name'"
+  private[graft] def tables = Seq(tableSpec)
 
   private lazy val centroidFp: Long = {
     val rows = centroids.select(col("cell").cast("int"),
@@ -674,9 +633,8 @@ final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
   private def storeParams = Seq("centroidFp" -> centroidFp.toString,
     "booksFp" -> booksFp.toString,
     "m" -> books.size.toString, "ksub" -> books.head.size.toString)
-  def storeRoot: String = wh.root
 
-  protected def appendBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            vecCol: String): Unit = {
     wh.paramsSpecValidated(table, storeParams)
     wh.appendBucketed(table,
@@ -696,10 +654,6 @@ final class IvfAdcStore(wh: graft.sources.Warehouse, name: String,
       t.select(col("id").as(idCol), col("vec").as(vecCol)),
       queries, idCol, vecCol, k, centroids, books, nProbes, rescoreFactor)
   }
-
-  /** Rewrite into one fresh generation — see [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"IvfAdcStore '$name'", Seq(tableSpec))
 }
 
 /** Parameters of a hyperplane-LSH embedding store. `planes` pins the
@@ -727,23 +681,19 @@ final case class EmbeddingLshConfig(threshold: Double, dim: Int,
   * growth caveat. The hyperplane tables are frozen at store creation:
   * ingesting with a different config would band new vectors into an
   * incompatible signature space. */
-final class EmbeddingLshStore(wh: graft.sources.Warehouse, name: String,
-                              cfg: EmbeddingLshConfig) extends PairStore {
+final class EmbeddingLshStore(protected val wh: graft.sources.Warehouse,
+                              name: String, cfg: EmbeddingLshConfig)
+    extends KeyedStore[DataFrame] {
   private val sigSpec = StoreCompaction.TableSpec(s"${name}_el_sig")
   private val vecSpec = StoreCompaction.TableSpec(s"${name}_el_vec")
   private def sigTable = wh.live(sigSpec.base)
   private def vecTable = wh.live(vecSpec.base)
-  def storeRoot: String = wh.root
+  protected def label = s"EmbeddingLshStore '$name'"
+  private[graft] def tables = Seq(sigSpec, vecSpec)
   private val planeTables = cfg.planes.getOrElse(
     (0 until cfg.tables).map(t =>
       graft.functions.VectorFunctions.randomPlanes(
         cfg.bitsPerTable, cfg.dim, cfg.seed + t)))
-
-  /** Rewrite both tables (LSH index + vectors) into fresh
-    * single-generation layouts — see [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"EmbeddingLshStore '$name'",
-      Seq(sigSpec, vecSpec))
 
   // the planes ARE the signature space (explicitly pinned or derived
   // from dim/tables/bits/seed), so the sidecar records a fingerprint
@@ -759,7 +709,7 @@ final class EmbeddingLshStore(wh: graft.sources.Warehouse, name: String,
     "bitsPerTable" -> cfg.bitsPerTable.toString,
     "planesFp" -> planesFp.toString)
 
-  protected def ingestBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            vecCol: String): DataFrame = {
     wh.paramsSpecValidated(sigTable, sigParams)
     import graft.functions.VectorFunctions.{cosineFromParts, dot, norm}
@@ -828,8 +778,9 @@ final case class SimhashConfig(maxDist: Int = 3, seed: Long = 42L,
   * the signature doubles as the verifier (Hamming distance), so no
   * separate set table is needed. Same equivalence contract and
   * cap caveat as [[MinhashStore]] (oracle-verified, q66). */
-final class SimhashStore(wh: graft.sources.Warehouse, name: String,
-                         cfg: SimhashConfig) extends PairStore {
+final class SimhashStore(protected val wh: graft.sources.Warehouse,
+                         name: String, cfg: SimhashConfig)
+    extends KeyedStore[DataFrame] {
   require(cfg.maxDist < cfg.chunks,
     s"pigeonhole needs maxDist < chunks: ${cfg.maxDist} >= ${cfg.chunks}")
   private def sigParams = Seq(
@@ -839,14 +790,10 @@ final class SimhashStore(wh: graft.sources.Warehouse, name: String,
       graft.functions.TextFunctions.scriptAwareEnabled.toString)
   private val sigSpec = StoreCompaction.TableSpec(s"${name}_sh_sig")
   private def sigTable = wh.live(sigSpec.base)
-  def storeRoot: String = wh.root
+  protected def label = s"SimhashStore '$name'"
+  private[graft] def tables = Seq(sigSpec)
 
-  /** Rewrite the signature table into one fresh generation — see
-    * [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"SimhashStore '$name'", Seq(sigSpec))
-
-  protected def ingestBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     // signature-space identity — see MinhashStore.ingest
     wh.paramsSpecValidated(sigTable, sigParams)
@@ -885,7 +832,7 @@ final case class ContainmentConfig(shingleN: Int, threshold: Double,
                                    // side under this estimate →
                                    // broadcast + fused single-job
                                    // ingest; over → prune-to-candidates
-                                   // + merge (see ingestBody). 0 forces
+                                   // + merge (see writeBatch). 0 forces
                                    // the pruned path. 4 MB ≈ a few
                                    // hundred k docs — at 1M both
                                    // routes measure ~16 s (recall
@@ -922,8 +869,9 @@ final case class ContainmentConfig(shingleN: Int, threshold: Double,
   * under it (the MinhashStore caveat, same deliberate choice: pairs are
   * never retracted). `common` under the cap is a LOWER bound, so the
   * threshold stays conservative — see the batch form's scaladoc. */
-final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
-                             cfg: ContainmentConfig) extends PairStore {
+final class ContainmentStore(protected val wh: graft.sources.Warehouse,
+                             name: String, cfg: ContainmentConfig)
+    extends KeyedStore[DataFrame] {
   private def postParams = Seq(
     "shingleN" -> cfg.shingleN.toString,
     "maxDocFreq" -> cfg.maxDocFreq.toString,
@@ -933,15 +881,10 @@ final class ContainmentStore(wh: graft.sources.Warehouse, name: String,
   private val sizeSpec = StoreCompaction.TableSpec(s"${name}_ct_size")
   private def postTable = wh.live(postSpec.base)
   private def sizeTable = wh.live(sizeSpec.base)
-  def storeRoot: String = wh.root
+  protected def label = s"ContainmentStore '$name'"
+  private[graft] def tables = Seq(postSpec, sizeSpec)
 
-  /** Rewrite both tables (postings + sizes) into fresh
-    * single-generation layouts — see [[StoreCompaction]]. */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit =
-    StoreCompaction.compact(spark, wh, s"ContainmentStore '$name'",
-      Seq(postSpec, sizeSpec))
-
-  protected def ingestBody(batch: DataFrame, idCol: String,
+  protected def writeBatch(batch: DataFrame, idCol: String,
                            textCol: String): DataFrame = {
     // shingle-space identity: stored postings are only comparable to
     // batches shingled under the same n / tokenizer mode, and the df

@@ -210,7 +210,7 @@ object Sketches {
     *
     * The sketch rows live in one plain parquet directory,
     * `state/<name>_hll_sk`, or the version of it the last [[compact]]
-    * published ([[graft.sources.StoreTxn.live]]). The [[AppendStore]]
+    * published ([[graft.sources.StoreTxn.live]]). The [[KeyedStore]]
     * idCol slot carries the GROUP column (the store counts values per
     * group); both column names and lgK are store identity — recorded in
     * the transaction ledger on first append and validated on every
@@ -220,23 +220,26 @@ object Sketches {
     * CRASH SEMANTICS: an append is a single-directory [[graft.sources
     * .StoreTxn]] transaction that adds files to the live directory under
     * the undo log, with the family's commit-record key ledger —
-    * [[AppendStore.appendOnce]] redelivery skips completed appends, a
+    * [[KeyedStore.ingestOnce]] redelivery skips completed appends, a
     * mid-append crash rolls back on the next open, and
-    * [[graft.streaming.Streaming.appendStoreSink]] gives it the same
+    * [[graft.streaming.Streaming.storeSink]] gives it the same
     * exactly-once streaming maintenance as IvfStore/GramIndex. A
     * [[compact]] writes a new version and publishes it at commit: a
     * crash before the publish leaves the old directory live and
     * untouched, and the commit's GC deletes the folded one. */
   final class DistinctStore(spark: SparkSession, root0: String,
                             name: String, lgK: Int = 12,
-                            nBaseBuckets: Int = 32) extends AppendStore {
-    private val root = new java.io.File(root0).getCanonicalPath
-    def storeRoot: String = root
+                            nBaseBuckets: Int = 32) extends KeyedStore[Unit] {
+    protected val wh = new graft.sources.Warehouse(spark, root0)
+    private val root = wh.root
+    protected def label = s"DistinctStore '$name'"
+    // the sketch rows are a plain state directory, not a bucketed table
+    private[graft] def tables = Seq.empty[StoreCompaction.TableSpec]
     private val rel = s"state/${name}_hll_sk"
     private val paramKey = s"param:$name:distinct"
 
-    override protected def appendBody(batch: DataFrame, groupCol: String,
-                                      valueCol: String): Unit = {
+    protected def writeBatch(batch: DataFrame, groupCol: String,
+                             valueCol: String): Unit = {
       val txn = graft.sources.StoreTxn.current(root)
       // store identity: first append fixes (groupCol, valueCol, lgK)
       val want = s"$groupCol,$valueCol,$lgK"
@@ -283,8 +286,7 @@ object Sketches {
       * sketches, and coalesce(1) would funnel GBs through a single
       * writer task; small stores still produce few files (empty
       * partitions emit none). */
-    def compact(spark: SparkSession): Unit = compact() // AppendStore form
-    def compact(): Unit =
+    override def compact(): Unit =
       graft.sources.StoreTxn.transact(spark, root) {
         val (gcol, rows) = sketchRows()
         rows.groupBy(col(gcol)).agg(hll_union_agg(col("hll")).as("hll"))

@@ -434,11 +434,11 @@ private[queries] object CurationQueries {
           new Warehouse(s, scratchRoot("graft_q164e_")), "crawl",
           EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 8))
         // epoch 1: crawl → edges → cold rank maintenance
-        estore.append(epochEdges(b1), "src", "dst")
+        estore.ingest(epochEdges(b1), "src", "dst")
         estore.pageRankMaintain(s, iters = 2)
         // epoch 2: new pages grow the graph; ONE warm iteration from
         // the committed epoch-1 ranks
-        estore.append(epochEdges(b2), "src", "dst")
+        estore.ingest(epochEdges(b2), "src", "dst")
         val ranks = estore.pageRankMaintain(s, iters = 1)
         val n = ranks.count() // bounded control read, = the oracle's gfk.n
         val gate = Pipeline.AuthorityGate(ranks, "host",
@@ -757,15 +757,10 @@ private[queries] object CurationQueries {
       (s, dir) => {
         val d = T.documents(s, dir)
         val corpus = d.filter(col("doc_id") >= 25)
-        // prefixPartitions sized to the sf-scale corpus like nStoreBuckets:
-        // partitions × buckets multiply into per-append file count, and 64
-        // partitions over a few-thousand-doc corpus is all file overhead
-        // (the 10M probe makes the same sizing call in the other direction)
         val idx = new Decontamination.GramIndex(s,
-          scratchRoot("graft_q86_"), "inc", n = 5, nStoreBuckets = 8,
-          prefixPartitions = 8)
-        idx.append(corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-        idx.append(corpus.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+          scratchRoot("graft_q86_"), "inc", n = 5, nStoreBuckets = 8)
+        idx.ingest(corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+        idx.ingest(corpus.filter(col("doc_id") % 2 === 1), "doc_id", "text")
         idx.check(d.filter(col("doc_id") < 25), "text")
           .withColumnRenamed("id", "doc_id")
       },

@@ -379,8 +379,8 @@ private[queries] object ScaleQueries {
         val root = java.nio.file.Files
           .createTempDirectory("graft_q122_").toString
         val store = new Sketches.DistinctStore(s, root, "inc")
-        store.append(toks.filter(col("doc_id") % 2 === 0), "lang", "tok")
-        store.append(toks.filter(col("doc_id") % 2 === 1), "lang", "tok")
+        store.ingest(toks.filter(col("doc_id") % 2 === 0), "lang", "tok")
+        store.ingest(toks.filter(col("doc_id") % 2 === 1), "lang", "tok")
         store.estimate()
       },
       None),
@@ -460,8 +460,8 @@ private[queries] object ScaleQueries {
             .createTempDirectory("graft_q157_").toString),
           "inc", graft.operators.EdgeStoreConfig(
             weightCol = Some("w"), nStoreBuckets = 8))
-        store.append(e.filter(col("dst") % 2 === 0), "src", "dst")
-        store.append(e.filter(col("dst") % 2 === 1), "src", "dst")
+        store.ingest(e.filter(col("dst") % 2 === 0), "src", "dst")
+        store.ingest(e.filter(col("dst") % 2 === 1), "src", "dst")
         store.degrees(s)
       },
       Some(s"""
@@ -490,7 +490,7 @@ private[queries] object ScaleQueries {
             .createTempDirectory("graft_q158_").toString),
           "inc", graft.operators.EdgeStoreConfig(
             weightCol = Some("w"), nStoreBuckets = 8))
-        store.append(graphEdges(s, dir), "src", "dst")
+        store.ingest(graphEdges(s, dir), "src", "dst")
         val prior = store.pageRank(s, iters = 2)
           .select("node", "rank_fp").localCheckpoint(true)
         store.pageRank(s, iters = 1, prior = Some(prior))
@@ -537,7 +537,7 @@ private[queries] object ScaleQueries {
             .createTempDirectory("graft_q165_").toString),
           "inc", graft.operators.EdgeStoreConfig(
             weightCol = Some("w"), nStoreBuckets = 8))
-        store.append(e, "src", "dst")
+        store.ingest(e, "src", "dst")
         store.trustRankMaintain(s, iters = 2, seeds, "node")
         store.trustRankMaintain(s, iters = 1, seeds, "node")
       },
@@ -681,13 +681,13 @@ private[queries] object ScaleQueries {
         // (guide: fill the tail with the other leg's jobs)
         val (_, ranks) = graft.core.Par.both(
           {
-            idx.append(anchorDocs.filter(col("host") % 2 === 0),
+            idx.ingest(anchorDocs.filter(col("host") % 2 === 0),
               "host", "text")
-            idx.append(anchorDocs.filter(col("host") % 2 === 1),
+            idx.ingest(anchorDocs.filter(col("host") % 2 === 1),
               "host", "text")
           },
           {
-            estore.append(Graph.hostEdges(pages, "url", "html")
+            estore.ingest(Graph.hostEdges(pages, "url", "html")
               .select(hostNum(col("src")).as("src"),
                 hostNum(col("dst")).as("dst"), col("w"))
               .localCheckpoint(true), "src", "dst") // staged: append scans 2x
@@ -848,7 +848,7 @@ private[queries] object ScaleQueries {
           .createTempDirectory("graft_trankstore_").toString),
         "trank", graft.operators.EdgeStoreConfig(
           weightCol = Some("w"), nStoreBuckets = 8))
-      store.append(e, "src", "dst")
+      store.ingest(e, "src", "dst")
       store.trustRankMaintain(s, iters = 3, seeds, "node")
     })
   private[queries] def storedSupplierRanks(
@@ -860,7 +860,7 @@ private[queries] object ScaleQueries {
           .createTempDirectory("graft_rankstore_").toString),
         "rank", graft.operators.EdgeStoreConfig(
           weightCol = Some("w"), nStoreBuckets = 8))
-      store.append(graphEdges(s, dir), "src", "dst")
+      store.ingest(graphEdges(s, dir), "src", "dst")
       val ranks = store.pageRankMaintain(s, iters = 3)
       (ranks, ranks.count()) // node count, = the oracle's k.n
     })

@@ -132,8 +132,8 @@ private[queries] object SequenceQueries {
           .createTempDirectory("graft_q85_").toString
         val idx = new graft.operators.Retrieval.Bm25Index(s, root, "inc",
           nStoreBuckets = 8)
-        idx.append(d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
-        idx.append(d.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+        idx.ingest(d.filter(col("doc_id") % 2 === 0), "doc_id", "text")
+        idx.ingest(d.filter(col("doc_id") % 2 === 1), "doc_id", "text")
         idx.search(Seq("table", "spark", "window"), k = 10)
           .withColumnRenamed("id", "doc_id")
           .withColumn("rank", col("rank").cast("long"))

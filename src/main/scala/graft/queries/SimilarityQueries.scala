@@ -165,8 +165,8 @@ private[queries] object SimilarityQueries {
         val store = new graft.operators.IvfStore(
           new graft.sources.Warehouse(s, root), "inc", cents,
           nStoreBuckets = 8)
-        store.append(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
-        store.append(e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+        store.ingest(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
+        store.ingest(e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
         store.serve(e.filter(col("vec_id") < 8), "vec_id", "embedding",
             k = 5, nProbes = 2)
           .withColumn("rank", col("rank").cast("long"))
@@ -837,8 +837,8 @@ private[queries] object SimilarityQueries {
         val store = new graft.operators.IvfAdcStore(
           new graft.sources.Warehouse(s, root), "inc", cents, books,
           nStoreBuckets = 8)
-        store.append(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
-        store.append(e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+        store.ingest(e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
+        store.ingest(e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
         store.serve(e.filter(col("vec_id") < 8), "vec_id", "embedding",
             k = 5, nProbes = 2, rescoreFactor = 3)
           .withColumn("rank", col("rank").cast("long"))

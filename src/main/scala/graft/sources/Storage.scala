@@ -79,21 +79,11 @@ final class StagingStore(spark: SparkSession, root: String) {
     }
   }
 
-  /** Rows not yet processed by `op`. */
-  def readUnprocessed(collection: String, op: String): DataFrame =
-    readSplit(collection, op)._1
-
-  /** Advance the op watermark to the max ingest time of `processed` (one
-    * Spark job; [[advanceWatermarkTo]] takes a known instant instead).
-    * Call AFTER the downstream write succeeded — crash before this point
-    * re-processes the batch (at-least-once), and the warehouse's
-    * idempotent append turns that into exactly-once. */
-  def advanceWatermark(collection: String, op: String, processed: DataFrame): Unit =
-    Option(processed.agg(max(col("__ingested_at"))).head().getTimestamp(0))
-      .foreach(advanceWatermarkTo(collection, op, _))
-
   /** Set the op watermark to `ts`: write a temp file, then rename it over
-    * the marker, so a crash leaves either the old or the new instant. */
+    * the marker, so a crash leaves either the old or the new instant.
+    * Call AFTER the downstream write succeeded — a crash before this
+    * point re-processes the batch (at-least-once), and the warehouse's
+    * idempotent append turns that into exactly-once. */
   def advanceWatermarkTo(collection: String, op: String,
                          ts: java.sql.Timestamp): Unit =
     StoreTxn.writeAtomic(wmFile(collection, op), ts.toInstant.toString)
@@ -169,7 +159,7 @@ private[sources] object SchemaSidecar {
   }
 }
 
-final class Warehouse(spark: SparkSession, root0: String) {
+final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
 
   /** Canonicalized so the StoreTxn registry and the lease files agree
     * however the caller spelled the path. */

@@ -172,18 +172,20 @@ object Streaming {
                    auditTable: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     leasedSink(docs, store.storeRoot, checkpoint, trigger)(
-      withAutoCompact(store.storeRoot, autoCompact, _ => store.compact())(
+      withAutoCompact(store.storeRoot, autoCompact, store.compact())(
         curateBatch(store, warehouse, keptTable, retractedTable,
           idCol, textCol, auditTable)))
 
   // ------------------------------------------ shared sink plumbing
   //
-  // Every store-maintenance sink is the same scaffold: writeStream +
+  // Two store-maintenance sinks: [[storeSink]] for every keyed store,
+  // and [[curationSink]], whose redelivery skip reads the curation
+  // store's max-id marker. Both are the same scaffold: writeStream +
   // checkpoint + foreachBatch over a per-batch body, a maintenance
   // lease on the store root held from start to termination (released
   // by listener on the always-on form, synchronously on the catch-up
-  // form), and lease release on a failed start. ONE implementation —
-  // a fix to the lease or listener logic must not need four edits.
+  // form), auto-compaction, and lease release on a failed start. ONE
+  // implementation — a fix to the lease or listener logic is one edit.
 
   /** Self-triggered compaction policy for the always-on maintenance
     * sinks. Every micro-batch appends one file set per store table, so
@@ -235,8 +237,7 @@ object Streaming {
     * which only delays the next check — the file threshold itself is
     * stateless. */
   private def withAutoCompact(storeRoot: String,
-      policy: Option[CompactionPolicy],
-      doCompact: SparkSession => Unit)
+      policy: Option[CompactionPolicy], doCompact: => Unit)
       (body: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     policy match {
       case None => body
@@ -246,7 +247,7 @@ object Streaming {
           body(batch, batchId)
           if (batches.incrementAndGet() % p.checkEvery == 0 &&
               dataFileCount(storeRoot) > p.maxFiles)
-            doCompact(batch.sparkSession)
+            doCompact
         }
     }
 
@@ -305,7 +306,7 @@ object Streaming {
                                 Some(CompactionPolicy()),
                               auditTable: Option[String] = None): Unit =
     leasedAvailableNow(docs, store.storeRoot, checkpoint)(
-      withAutoCompact(store.storeRoot, autoCompact, _ => store.compact())(
+      withAutoCompact(store.storeRoot, autoCompact, store.compact())(
         curateBatch(store, warehouse, keptTable, retractedTable,
           idCol, textCol, auditTable)))
 
@@ -354,118 +355,68 @@ object Streaming {
     val minId = batch.agg(min(col(idCol)).cast("long")).head()
     if (minId.isNullAt(0)) return // empty micro-batch
     if (store.maxIngestedId.exists(_ >= minId.getLong(0))) return // redelivery
+    def append(table: String, rows: DataFrame): Unit =
+      appendBatch(warehouse, table, "__batch_id")(rows, batchId)
     store.ingest(batch, idCol, textCol, beforeCommit = delta => {
-      warehouse.idempotentAppend(keptTable,
-        delta.kept.withColumn("__batch_id", lit(batchId)),
-        keys = Seq("__batch_id"), partitionCol = "__batch_id")
-      warehouse.idempotentAppend(retractedTable,
-        delta.retracted.withColumn("__batch_id", lit(batchId)),
-        keys = Seq("__batch_id"), partitionCol = "__batch_id")
+      append(keptTable, delta.kept)
+      append(retractedTable, delta.retracted)
       // drop-ledger table (opt-in): same durability argument as the
       // kept/retracted deltas — appended BEFORE the store transaction
       // publishes its skip key, keyed idempotent on the batch id
-      auditTable.foreach { t =>
-        warehouse.idempotentAppend(t,
-          delta.audit.get.withColumn("__batch_id", lit(batchId)),
-          keys = Seq("__batch_id"), partitionCol = "__batch_id")
-      }
+      auditTable.foreach(append(_, delta.audit.get))
     }, withAudit = auditTable.isDefined)
     ()
   }
 
-  /** Always-on near-dup pair-store maintenance — one sink for the whole
-    * signature-store family ([[graft.operators.MinhashStore]],
-    * [[graft.operators.SimhashStore]],
-    * [[graft.operators.EmbeddingLshStore]] — anything implementing
-    * [[graft.operators.PairStore]]): each micro-batch is one
-    * `ingestOnce` keyed on (checkpoint path, batchId), and the batch's
-    * verified pairs delta lands in `pairsTable` (partitioned by
-    * __batch_id, keyed idempotent) via the ingest's beforeCommit hook —
-    * durable BEFORE the store transaction publishes its skip key, so a
-    * crash between the two redelivers into a clean retry, never a
-    * silent pair loss (the curation-sink argument). The union of the
-    * delta partitions is exactly the incremental pair history the
-    * store's batch contract defines (q65/q66/q78).
+  /** Always-on maintenance of a keyed store — one sink for the whole
+    * incremental-store family (anything implementing
+    * [[graft.operators.KeyedStore]]): each micro-batch is one
+    * `ingestOnce` keyed on (checkpoint path, batchId) in the store's
+    * commit-record ledger — completed keys skip on redelivery, crashed
+    * ingests roll back and re-run. `beforeCommit` receives the batch's
+    * result and id inside the ingest's transaction: a pair store's
+    * verified pairs delta lands there, e.g. through
+    * `appendBatch(warehouse, pairsTable, "__batch_id")` — durable BEFORE
+    * the store transaction publishes its skip key, so a crash between
+    * the two redelivers into a clean retry, never a silent pair loss
+    * (the curation-sink argument). The union of such delta partitions is
+    * exactly the incremental pair history the store's batch contract
+    * defines (q65/q66/q78).
     *
     * The sink holds the store root's maintenance lease from start to
     * termination: a second sink on the same store fails fast. */
-  def nearDupSink(docs: DataFrame, store: graft.operators.PairStore,
-                  warehouse: graft.sources.Warehouse, pairsTable: String,
-                  checkpoint: String, idCol: String, valueCol: String,
-                  trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-                  autoCompact: Option[CompactionPolicy] =
-                    Some(CompactionPolicy()))
+  def storeSink[R](docs: DataFrame, store: graft.operators.KeyedStore[R],
+                   checkpoint: String, idCol: String, valueCol: String,
+                   beforeCommit: (R, Long) => Unit = (_: R, _: Long) => (),
+                   trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
+                   autoCompact: Option[CompactionPolicy] =
+                     Some(CompactionPolicy()))
       : org.apache.spark.sql.streaming.StreamingQuery =
     leasedSink(docs, store.storeRoot, checkpoint, trigger)(
-      withAutoCompact(store.storeRoot, autoCompact, store.compact)(
-        nearDupBatch(store, warehouse, pairsTable, checkpoint, idCol,
-          valueCol)))
+      withAutoCompact(store.storeRoot, autoCompact, store.compact())(
+        storeBatch(store, checkpoint, idCol, valueCol, beforeCommit)))
 
-  private def nearDupBatch(store: graft.operators.PairStore,
-      warehouse: graft.sources.Warehouse, pairsTable: String,
-      checkpoint: String, idCol: String, valueCol: String)
-      (batch: DataFrame, batchId: Long): Unit = {
-    store.ingestOnce(batch, idCol, valueCol,
-      Some(s"$checkpoint#$batchId"),
-      beforeCommit = pairs =>
-        warehouse.idempotentAppend(pairsTable,
-          pairs.withColumn("__batch_id", lit(batchId)),
-          keys = Seq("__batch_id"), partitionCol = "__batch_id"))
+  /** Cron-compatible catch-up form of [[storeSink]] — lease held for the
+    * run, released synchronously. */
+  def runStoreAvailableNow[R](docs: DataFrame,
+                              store: graft.operators.KeyedStore[R],
+                              checkpoint: String, idCol: String,
+                              valueCol: String,
+                              beforeCommit: (R, Long) => Unit =
+                                (_: R, _: Long) => (),
+                              autoCompact: Option[CompactionPolicy] =
+                                Some(CompactionPolicy())): Unit =
+    leasedAvailableNow(docs, store.storeRoot, checkpoint)(
+      withAutoCompact(store.storeRoot, autoCompact, store.compact())(
+        storeBatch(store, checkpoint, idCol, valueCol, beforeCommit)))
+
+  private def storeBatch[R](store: graft.operators.KeyedStore[R],
+      checkpoint: String, idCol: String, valueCol: String,
+      beforeCommit: (R, Long) => Unit)(batch: DataFrame, batchId: Long): Unit = {
+    store.ingestOnce(batch, idCol, valueCol, Some(s"$checkpoint#$batchId"),
+      beforeCommit(_, batchId))
     ()
   }
-
-  /** Cron-compatible catch-up form of [[nearDupSink]] — lease held for
-    * the run, released synchronously. */
-  def runNearDupAvailableNow(docs: DataFrame,
-                             store: graft.operators.PairStore,
-                             warehouse: graft.sources.Warehouse,
-                             pairsTable: String, checkpoint: String,
-                             idCol: String, valueCol: String,
-                             autoCompact: Option[CompactionPolicy] =
-                               Some(CompactionPolicy())): Unit =
-    leasedAvailableNow(docs, store.storeRoot, checkpoint)(
-      withAutoCompact(store.storeRoot, autoCompact, store.compact)(
-        nearDupBatch(store, warehouse, pairsTable, checkpoint, idCol,
-          valueCol)))
-
-  /** Always-on maintenance for the append-shaped stores
-    * ([[graft.operators.IvfStore]],
-    * [[graft.operators.Retrieval.Bm25Index]],
-    * [[graft.operators.Decontamination.GramIndex]],
-    * [[graft.operators.Sketches.DistinctStore]] — anything
-    * implementing [[graft.operators.AppendStore]]): each micro-batch is
-    * one `appendOnce` keyed on (checkpoint path, batchId) in the
-    * store's commit-record ledger — completed keys skip on redelivery,
-    * crashed appends roll back and re-run. The sink holds the store
-    * root's maintenance lease from start to termination. */
-  def appendStoreSink(docs: DataFrame, store: graft.operators.AppendStore,
-                      checkpoint: String, idCol: String, valueCol: String,
-                      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-                      autoCompact: Option[CompactionPolicy] =
-                        Some(CompactionPolicy()))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    leasedSink(docs, store.storeRoot, checkpoint, trigger)(
-      withAutoCompact(store.storeRoot, autoCompact, store.compact) {
-        (batch, batchId) =>
-          store.appendOnce(batch, idCol, valueCol,
-            Some(s"$checkpoint#$batchId"))
-          ()
-      })
-
-  /** Cron-compatible catch-up form of [[appendStoreSink]]. */
-  def runAppendStoreAvailableNow(docs: DataFrame,
-                                 store: graft.operators.AppendStore,
-                                 checkpoint: String, idCol: String,
-                                 valueCol: String,
-                                 autoCompact: Option[CompactionPolicy] =
-                                   Some(CompactionPolicy())): Unit =
-    leasedAvailableNow(docs, store.storeRoot, checkpoint)(
-      withAutoCompact(store.storeRoot, autoCompact, store.compact) {
-        (batch, batchId) =>
-          store.appendOnce(batch, idCol, valueCol,
-            Some(s"$checkpoint#$batchId"))
-          ()
-      })
 
   /** Stream-static enrichment join — the streaming form of matching a
     * small configured rules/lookup table (alert rules, urlset

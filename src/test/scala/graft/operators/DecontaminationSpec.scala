@@ -40,6 +40,28 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out === ((1L, 3L, 1L, 1.0 / 3.0)))
   }
 
+  test("gram index: a check at the default prefix partitions starts no listing job") {
+    // 40 documents of 8 distinct tokens: ~240 distinct 3-grams, whose
+    // hash prefixes fill every partition of either layout below
+    val docs = (1L to 40L).map(i =>
+      (i, (0 until 8).map(j => s"w${i}x$j").mkString(" "))).toDF("id", "text")
+    val ev = docs.filter(col("id") === 3L).select("text")
+    def listingJobs(idx: Decontamination.GramIndex): Int = {
+      idx.ingest(docs, "id", "text")
+      val (ids, ran) = graft.Jobs.during(spark)(
+        idx.check(ev, "text").as[Long].collect().toSeq)
+      assert(ids === Seq(3L))
+      // the file index's parallel listing runs as a job of the read itself
+      ran.jobs.count(_.contains("DataSource.resolveRelation"))
+    }
+    def root() = java.nio.file.Files.createTempDirectory("graft_gramlist_").toString
+    // 64 partitions: the read lists more than 32 directories, in a job
+    assert(listingJobs(new Decontamination.GramIndex(spark, root(), "t", n = 3,
+      nStoreBuckets = 1, prefixPartitions = 64)) === 1)
+    assert(listingJobs(new Decontamination.GramIndex(spark, root(), "t", n = 3,
+      nStoreBuckets = 1)) === 0)
+  }
+
   test("gram index: incremental appends check equal to the one-shot scan") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog today"),
@@ -52,8 +74,8 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .createTempDirectory("graft_gramidx_").toString
     val idx = new Decontamination.GramIndex(spark, root, "t", n = 5,
       nStoreBuckets = 2)
-    idx.append(docs.filter(col("id") <= 2), "id", "text")
-    idx.append(docs.filter(col("id") > 2), "id", "text")
+    idx.ingest(docs.filter(col("id") <= 2), "id", "text")
+    idx.ingest(docs.filter(col("id") > 2), "id", "text")
     val viaIndex = idx.check(ev, "text").as[Long].collect().sorted.toSeq
     val oneShot = Decontamination.contaminatedIds(docs, "id", "text",
       ev, "text", 5).as[Long].collect().sorted.toSeq
@@ -75,7 +97,7 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .createTempDirectory("graft_gramprune_").toString
     val idx = new Decontamination.GramIndex(spark, root, "t", n = 3,
       nStoreBuckets = 2, prefixPartitions = 64)
-    idx.append(docs, "id", "text")
+    idx.ingest(docs, "id", "text")
     val checked = idx.check(ev, "text")
     assert(checked.as[Long].collect().toSeq === Seq(7L),
       "pruned check must still flag exactly the overlapping doc")
@@ -109,7 +131,7 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .createTempDirectory("graft_gramreopen_").toString
     val idx = new Decontamination.GramIndex(spark, root, "t", n = 3,
       nStoreBuckets = 2, prefixPartitions = 8)
-    idx.append(docs, "id", "text")
+    idx.ingest(docs, "id", "text")
     assert(idx.check(ev, "text").as[Long].collect().toSeq === Seq(1L))
     // fresh-driver simulation: a handle on a new session has only the
     // files and sidecars; the reopen must read the PARTITIONED layout
@@ -129,7 +151,7 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val wrongN = new Decontamination.GramIndex(spark, root, "t", n = 5,
       nStoreBuckets = 2, prefixPartitions = 8)
     val e2 = intercept[IllegalArgumentException](
-      wrongN.append(docs.withColumn("id", col("id") + 10), "id", "text"))
+      wrongN.ingest(docs.withColumn("id", col("id") + 10), "id", "text"))
     assert(e2.getMessage.contains("parameter mismatch"))
     // and the matching handle still works after the failed attempts
     assert(idx2.check(ev, "text").as[Long].collect().toSeq === Seq(1L))
@@ -187,7 +209,7 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .createTempDirectory("graft_gramcmp_").toString
     val idx = new Decontamination.GramIndex(spark, root, "t", n = 3,
       nStoreBuckets = 2, prefixPartitions = 4)
-    (0 until 5).foreach(i => idx.appendOnce(
+    (0 until 5).foreach(i => idx.ingestOnce(
       docs.filter(col("id") % 5 === i), "id", "text", Some(s"k$i")))
     val before = idx.check(ev, "text").as[Long].collect().sorted.toSeq
     assert(before === Seq(7L))
@@ -207,12 +229,12 @@ class DecontaminationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(idx.check(ev, "text").as[Long].collect().sorted.toSeq === before)
     // completed key redelivered after compaction: still skips (ledger is
     // in the commit record, untouched by the generation swap)
-    assert(!idx.appendOnce(docs.filter(col("id") % 5 === 0), "id", "text",
-      Some("k0")))
+    assert(idx.ingestOnce(docs.filter(col("id") % 5 === 0), "id", "text",
+      Some("k0")).isEmpty)
     // new appends land in the new generation; a fresh handle resolves it
-    assert(idx.appendOnce(
+    assert(idx.ingestOnce(
       Seq((100L, "tok7_2 tok7_3 tok7_4 tok7_5 trailing")).toDF("id", "text"),
-      "id", "text", Some("k9")))
+      "id", "text", Some("k9")).isDefined)
     val idx2 = new Decontamination.GramIndex(spark, root, "t", n = 3,
       nStoreBuckets = 2, prefixPartitions = 4)
     assert(idx2.check(ev, "text").as[Long].collect().sorted.toSeq ===

@@ -27,9 +27,9 @@ class DistinctStoreSpec extends SparkSpec {
 
   test("incremental estimate tracks the exact union cardinality") {
     val store = new Sketches.DistinctStore(spark, tmp("graft_ds_"), "d")
-    store.append(rows(0, 2000), "g", "v")
-    store.append(rows(2000, 3500), "g", "v")
-    store.append(rows(3500, 5000), "g", "v")
+    store.ingest(rows(0, 2000), "g", "v")
+    store.ingest(rows(2000, 3500), "g", "v")
+    store.ingest(rows(3500, 5000), "g", "v")
     assertClose(store.estimate().as[(String, Long)].collect().toMap,
       rows(0, 5000))
     // estimate is a pure fold of the stored rows: replay-stable
@@ -42,13 +42,13 @@ class DistinctStoreSpec extends SparkSpec {
 
   test("store identity: a different column pair or lgK is rejected") {
     val store = new Sketches.DistinctStore(spark, tmp("graft_ds_"), "d")
-    store.append(rows(0, 100), "g", "v")
+    store.ingest(rows(0, 100), "g", "v")
     intercept[IllegalArgumentException] {
-      store.append(rows(0, 100).withColumnRenamed("v", "w"), "g", "w")
+      store.ingest(rows(0, 100).withColumnRenamed("v", "w"), "g", "w")
     }
     val other = new Sketches.DistinctStore(spark, store.storeRoot, "d",
       lgK = 14)
-    intercept[IllegalArgumentException] { other.append(rows(0, 100), "g", "v") }
+    intercept[IllegalArgumentException] { other.ingest(rows(0, 100), "g", "v") }
   }
 
   test("estimate before any append fails fast") {
@@ -58,19 +58,19 @@ class DistinctStoreSpec extends SparkSpec {
 
   test("completed append key redelivered is a no-op; crash mid-append retries clean") {
     val store = new Sketches.DistinctStore(spark, tmp("graft_ds_"), "d")
-    assert(store.appendOnce(rows(0, 1000), "g", "v", Some("k1")))
-    assert(!store.appendOnce(rows(0, 1000), "g", "v", Some("k1")))
+    assert(store.ingestOnce(rows(0, 1000), "g", "v", Some("k1")).isDefined)
+    assert(store.ingestOnce(rows(0, 1000), "g", "v", Some("k1")).isEmpty)
     // crash after the sketch-table touch, before commit: no key lands,
     // rollback on the (post-lease-expiry) retry, blind retry converges
     graft.sources.StoreTxn.leaseTtlMs = 250L
     graft.sources.StoreTxn.hooks.crashAfterTouches = 1
     try intercept[graft.sources.StoreTxn.SimulatedCrash] {
-      store.appendOnce(rows(1000, 2000), "g", "v", Some("k2"))
+      store.ingestOnce(rows(1000, 2000), "g", "v", Some("k2"))
     } finally graft.sources.StoreTxn.hooks.reset()
     Thread.sleep(400)
-    try assert(store.appendOnce(rows(1000, 2000), "g", "v", Some("k2")))
+    try assert(store.ingestOnce(rows(1000, 2000), "g", "v", Some("k2")).isDefined)
     finally graft.sources.StoreTxn.leaseTtlMs = 60000L
-    assert(!store.appendOnce(rows(1000, 2000), "g", "v", Some("k2")))
+    assert(store.ingestOnce(rows(1000, 2000), "g", "v", Some("k2")).isEmpty)
     assertClose(store.estimate().as[(String, Long)].collect().toMap,
       rows(0, 2000))
   }
@@ -78,7 +78,7 @@ class DistinctStoreSpec extends SparkSpec {
   test("compact folds deltas into one base: same estimates, fewer dirs") {
     val store = new Sketches.DistinctStore(spark, tmp("graft_ds_"), "d")
     (0 until 6).foreach(i =>
-      store.append(rows(i * 500, (i + 1) * 500), "g", "v"))
+      store.ingest(rows(i * 500, (i + 1) * 500), "g", "v"))
     val before = store.estimate().as[(String, Long)].collect().toMap
     // the sketch directories under state/, and the live one's rows
     def sketchDirs = Option(new java.io.File(s"${store.storeRoot}/state")
@@ -95,7 +95,7 @@ class DistinctStoreSpec extends SparkSpec {
     assert(store.estimate().as[(String, Long)].collect().toMap === before)
     // appends after compaction fold on top, in the live directory
     val folded = sketchDirs
-    store.append(rows(3000, 4000), "g", "v")
+    store.ingest(rows(3000, 4000), "g", "v")
     assert(sketchDirs === folded)
     assertClose(store.estimate().as[(String, Long)].collect().toMap,
       rows(0, 4000))
@@ -115,8 +115,8 @@ class DistinctStoreSpec extends SparkSpec {
       lgK = 4, nBaseBuckets = 8)
     val wide = spark.range(50000).selectExpr("concat('g', id) AS g",
       "concat('v', id % 7) AS v")
-    store.append(wide, "g", "v")
-    store.append(spark.range(50000).selectExpr("concat('g', id) AS g",
+    store.ingest(wide, "g", "v")
+    store.ingest(spark.range(50000).selectExpr("concat('g', id) AS g",
       "concat('w', id % 3) AS v"), "g", "v")
     val before = store.estimate().as[(String, Long)].collect().toMap
     assert(before.size === 50000)
@@ -132,8 +132,8 @@ class DistinctStoreSpec extends SparkSpec {
 
   test("crash mid-compact rolls back; blind retry converges") {
     val store = new Sketches.DistinctStore(spark, tmp("graft_ds_"), "d")
-    store.append(rows(0, 1000), "g", "v")
-    store.append(rows(1000, 2000), "g", "v")
+    store.ingest(rows(0, 1000), "g", "v")
+    store.ingest(rows(1000, 2000), "g", "v")
     val before = store.estimate().as[(String, Long)].collect().toMap
     graft.sources.StoreTxn.leaseTtlMs = 250L
     graft.sources.StoreTxn.hooks.crashBeforeCommit = true
@@ -148,13 +148,13 @@ class DistinctStoreSpec extends SparkSpec {
     assert(store.estimate().as[(String, Long)].collect().toMap === before)
   }
 
-  test("streamed maintenance (appendStoreSink catch-up) equals one-shot") {
+  test("streamed maintenance (storeSink catch-up) equals one-shot") {
     val root = tmp("graft_ds_stream_")
     val inDir = s"$root/in"
     rows(0, 1500).coalesce(1).write.mode("append").parquet(inDir)
     rows(1500, 3000).coalesce(1).write.mode("append").parquet(inDir)
     val store = new Sketches.DistinctStore(spark, s"$root/store", "d")
-    graft.streaming.Streaming.runAppendStoreAvailableNow(
+    graft.streaming.Streaming.runStoreAvailableNow(
       spark.readStream.schema(rows(0, 1).schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir),
       store, s"$root/ckpt", "g", "v")

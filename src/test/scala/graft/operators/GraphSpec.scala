@@ -140,8 +140,8 @@ class GraphSpec extends SparkSpec {
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 4))
     // split so one (src,dst) pair STRADDLES the batches — the
     // cross-append collapse has to merge it
-    store.append(edges.limit(3), "src", "dst")
-    store.append(edges.offset(3), "src", "dst")
+    store.ingest(edges.limit(3), "src", "dst")
+    store.ingest(edges.offset(3), "src", "dst")
     def degs(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("node").collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -153,7 +153,7 @@ class GraphSpec extends SparkSpec {
     val batch = ranks(Graph.pageRank(edges, "src", "dst", 3, Some("w")))
     assert(ranks(store.pageRank(spark, 3)).sameElements(batch))
     // compact merges cross-append duplicate rows; reads are unchanged
-    store.compact(spark)
+    store.compact()
     assert(degs(store.degrees(spark)).sameElements(
       degs(Graph.degrees(edges, "src", "dst", Some("w")))))
     assert(ranks(store.pageRank(spark, 3)).sameElements(batch))
@@ -180,12 +180,12 @@ class GraphSpec extends SparkSpec {
       s"out-weight read must not shuffle:\n$wtotPlan")
     // negative weights are rejected at the WRITE
     intercept[Exception] {
-      store.append(Seq((9L, 10L, -1L)).toDF("src", "dst", "w"),
+      store.ingest(Seq((9L, 10L, -1L)).toDF("src", "dst", "w"),
         "src", "dst")
     }
-    // appendOnce redelivery ledger: the second delivery skips
-    assert(store.appendOnce(edges.limit(1), "src", "dst", Some("b#1")))
-    assert(!store.appendOnce(edges.limit(1), "src", "dst", Some("b#1")))
+    // ingestOnce redelivery ledger: the second delivery skips
+    assert(store.ingestOnce(edges.limit(1), "src", "dst", Some("b#1")).isDefined)
+    assert(store.ingestOnce(edges.limit(1), "src", "dst", Some("b#1")).isEmpty)
   }
 
   test("hostEdges: absolute links only, hosts normalized, self-links " +
@@ -286,7 +286,7 @@ class GraphSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_egm_").toString)
     val store = new EdgeStore(wh, "g",
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
-    store.append(edges, "src", "dst")
+    store.ingest(edges, "src", "dst")
     assert(store.storedRanks(spark).isEmpty, "no ranks before maintain")
     // 2 maintained + 1 maintained ≡ 3 cold (unchanged store)
     store.pageRankMaintain(spark, iters = 2)
@@ -303,20 +303,20 @@ class GraphSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_egc_").toString)
     val store = new EdgeStore(wh, "g",
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
-    store.append(edges, "src", "dst")
-    store.append(edges, "src", "dst") // same keys again — must merge
+    store.ingest(edges, "src", "dst")
+    store.ingest(edges, "src", "dst") // same keys again — must merge
     def degs() = store.degrees(spark).orderBy("node").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     val before = degs()
     graft.sources.StoreTxn.leaseTtlMs = 250L
     graft.sources.StoreTxn.hooks.crashBeforeCommit = true
     try intercept[graft.sources.StoreTxn.SimulatedCrash] {
-      store.compact(spark)
+      store.compact()
     } finally graft.sources.StoreTxn.hooks.reset()
     Thread.sleep(400)
     try {
       assert(degs() === before, "crashed compact must not change reads")
-      store.compact(spark)
+      store.compact()
       assert(degs() === before, "compaction preserves the read results")
       // the merging transform actually collapsed the duplicate rows
       val files = Option(new java.io.File(s"${wh.root}/warehouse")
@@ -431,7 +431,7 @@ class GraphSpec extends SparkSpec {
     val wh = new graft.sources.Warehouse(spark, root)
     val store = new EdgeStore(wh, "g",
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
-    store.append(edges, "src", "dst")
+    store.ingest(edges, "src", "dst")
     val seeds = Seq(1L).toDF("node")
     assert(store.storedTrustRanks(spark).isEmpty)
     // the maintenance loop must not pin one rank table per epoch (the
@@ -479,7 +479,7 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long, Long)]
       .mapPartitions { it => scans.add(1); it }
       .toDF("src", "dst", "w")
-    store.append(counted, "src", "dst")
+    store.ingest(counted, "src", "dst")
     assert(scans.value === 2L,
       "append is two independent aggregation passes over the source — " +
         "if this changes, update the EdgeStore scaladoc's cost contract")
@@ -492,12 +492,12 @@ class GraphSpec extends SparkSpec {
     // string-keyed edges (hostEdges output appended directly) would
     // silently cast to (null, null) — refuse at the schema
     intercept[IllegalArgumentException] {
-      store.append(Seq(("a.example", "b.example")).toDF("src", "dst"),
+      store.ingest(Seq(("a.example", "b.example")).toDF("src", "dst"),
         "src", "dst")
     }
     // a null endpoint in an integral column fails row-locally
     intercept[Exception] {
-      store.append(Seq((Some(1L), None: Option[Long]))
+      store.ingest(Seq((Some(1L), None: Option[Long]))
         .toDF("src", "dst"), "src", "dst")
     }
   }

@@ -13,7 +13,7 @@ class GraphStorePinSpec extends SparkSpec {
     val store = new EdgeStore(new graft.sources.Warehouse(spark,
         java.nio.file.Files.createTempDirectory("graft_pin_").toString),
       "g", EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
-    store.append(Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 4L, 1L))
+    store.ingest(Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 4L, 1L))
       .toDF("src", "dst", "w"), "src", "dst")
     val stop = new AtomicBoolean(false)
     val failure = new AtomicReference[Throwable]()

@@ -114,7 +114,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .count(f => f.getName.endsWith(".parquet"))
     }
     assert(dataFiles("t_mh_sig") >= 12, "6 ingests x 2 buckets")
-    store.compact(spark)
+    store.compact()
     assert(dataFiles("t_mh_sig") <= 2,
       s"one generation left: ${dataFiles("t_mh_sig")}")
     assert(dataFiles("t_mh_set") <= 2)
@@ -159,7 +159,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .count(f => f.getName.endsWith(".parquet"))
     }
     assert(dataFiles("t_ct_post") >= 8, "4 ingests x 2 buckets")
-    store.compact(spark)
+    store.compact()
     assert(dataFiles("t_ct_post") <= 2,
       s"one generation left: ${dataFiles("t_ct_post")}")
     assert(dataFiles("t_ct_size") <= 2)
@@ -181,14 +181,14 @@ class IncrementalDedupSpec extends SparkSpec {
     val p2 = pairKey(store.ingest(docs.filter(col("id") >= 20), "id", "text"))
     graft.sources.StoreTxn.leaseTtlMs = 250L
     graft.sources.StoreTxn.hooks.crashBeforeCommit = true
-    try intercept[graft.sources.StoreTxn.SimulatedCrash] { store.compact(spark) }
+    try intercept[graft.sources.StoreTxn.SimulatedCrash] { store.compact() }
     finally graft.sources.StoreTxn.hooks.reset()
     Thread.sleep(400)
     try {
       // the un-compacted generations still serve; a re-ingest of batch 2
       // on a fresh twin root proves the surviving store is byte-equal in
       // behavior: compact again (completes now), then ingest batch 3
-      store.compact(spark)
+      store.compact()
       val full = pairKey(Dedup.simhashPortablePairs(
         docs.unionByName(docs.limit(0)), "id", "text",
         cfg.maxDist, cfg.seed, cfg.maxBucket, cfg.chunks, cfg.chunkBits))
@@ -308,8 +308,8 @@ class IncrementalDedupSpec extends SparkSpec {
       .select(col("vec_id").cast("int").as("cell"),
         col("embedding").cast("array<double>").as("cvec"))
     val store = new IvfStore(freshWh(), "t", cents, nStoreBuckets = 4)
-    store.append(vecs.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
-    store.append(vecs.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+    store.ingest(vecs.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
+    store.ingest(vecs.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     val queries = vecs.filter(col("vec_id") < 3)
     val inc = store.serve(queries, "vec_id", "embedding", k = 5, nProbes = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
@@ -319,7 +319,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(inc === oneShot && inc.nonEmpty)
     // compaction: one fresh generation, identical serving
-    store.compact(spark)
+    store.compact()
     val compacted = store.serve(queries, "vec_id", "embedding", 5, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     assert(compacted === inc)
@@ -327,7 +327,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val extra = (100L until 104L).map(i =>
       (i, Array.tabulate(8)(j => math.sin(8 + j).toFloat)))
       .toDF("vec_id", "embedding")
-    store.append(extra, "vec_id", "embedding")
+    store.ingest(extra, "vec_id", "embedding")
     assert(store.serve(queries, "vec_id", "embedding", 50, 4).count() >
       compacted.size)
   }
@@ -360,7 +360,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(p1 === full.filter(p => p._1 < 35 && p._2 < 35))
     assert(p2 === full.filter(p => p._1 >= 35 || p._2 >= 35))
     assert((p1 & p2) === Set.empty)
-    store.compact(spark)
+    store.compact()
     val extra = Seq((200L, Option(rnd.nextLong())),
       (201L, sigs.filter(col("id") === 3).select("sig").as[Option[Long]].head()))
       .toDF("id", "sig")
@@ -384,13 +384,13 @@ class IncrementalDedupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val wh = freshWh()
     val store = new IvfAdcStore(wh, "t", cents, books, nStoreBuckets = 4)
-    store.append(vecs.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
-    store.append(vecs.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
+    store.ingest(vecs.filter(col("vec_id") % 2 === 0), "vec_id", "embedding")
+    store.ingest(vecs.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
     val inc = served(store)
     val one = new IvfAdcStore(freshWh(), "t", cents, books, nStoreBuckets = 4)
-    one.append(vecs, "vec_id", "embedding")
+    one.ingest(vecs, "vec_id", "embedding")
     assert(inc === served(one) && inc.nonEmpty)
-    store.compact(spark)
+    store.compact()
     assert(served(store) === inc)
     // a handle on different codebooks must fail fast, not serve garbage
     val otherBooks = Quantization.pqTrain(
@@ -425,7 +425,7 @@ class IncrementalDedupSpec extends SparkSpec {
     assert((p1 ++ p2) === full && p1.intersect(p2).isEmpty)
     // compaction folds both generations; an exact re-submit of vector 0
     // still pairs against the compacted store
-    store.compact(spark)
+    store.compact()
     val dup0 = vecs.filter(col("id") === 0)
       .withColumn("id", lit(500L))
     val p3 = pairKey(store.ingest(dup0, "id", "vec"))

@@ -262,6 +262,19 @@ class PipelineSpec extends SparkSpec {
         .ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
     }
     assert(e2.getMessage.contains("state/t_labels__v3"), e2.getMessage)
+    // every declared table is an artifact: a root holding only the
+    // MinHash set table is refused, and the refusal writes nothing
+    val setOnly = freshRoot()
+    assert(new java.io.File(s"$setOnly/warehouse/t_cur_mh_set").mkdirs())
+    def files(r: String) = scala.util.Using.resource(
+      java.nio.file.Files.walk(new java.io.File(r).toPath))(_.toArray.toSeq.map(_.toString).sorted)
+    val before = files(setOnly)
+    val e3 = intercept[IllegalArgumentException] {
+      new Pipeline.CurationStore(spark, setOnly, "t", cfg)
+        .ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
+    }
+    assert(e3.getMessage.contains("warehouse/t_cur_mh_set"), e3.getMessage)
+    assert(files(setOnly) === before)
     // a clean root (same handle config) still works
     val ok = new Pipeline.CurationStore(spark, freshRoot(), "t", cfg)
     ok.ingest(docs.filter(col("doc_id") <= 5), "doc_id", "text")
@@ -481,7 +494,7 @@ class PipelineSpec extends SparkSpec {
       new graft.sources.Warehouse(spark, freshRoot()), "crawl",
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
     // long-keyed store: hash the host strings, keep the dimension
-    store.append(hostEdges.select(xxhash64(col("src")).as("src"),
+    store.ingest(hostEdges.select(xxhash64(col("src")).as("src"),
       xxhash64(col("dst")).as("dst"), col("w")), "src", "dst")
     assert(store.edges(spark).count() === hostEdges.count(),
       "the edge store holds every crawled host edge")

@@ -64,7 +64,7 @@ class RetrievalSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bm25log_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(docs, "id", "text")
+    idx.ingest(docs, "id", "text")
     val served = idx.search(Seq("spark"), 10, logIdf = true)
       .select("id", "score").as[(Long, Double)].collect().toSeq
     assert(served === robertson.map(r => (r._1, r._3)))
@@ -90,8 +90,8 @@ class RetrievalSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bm25spec_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(corpus.filter(col("id") <= 40), "id", "text")
-    idx.append(corpus.filter(col("id") > 40), "id", "text")
+    idx.ingest(corpus.filter(col("id") <= 40), "id", "text")
+    idx.ingest(corpus.filter(col("id") > 40), "id", "text")
     val served = idx.search(Seq("spark", "engine"), k = 8)
       .select("id", "score", "rank").as[(Long, Double, Int)]
       .collect().toSeq
@@ -110,8 +110,8 @@ class RetrievalSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bm25jobs_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(corpus.filter(col("id") <= 30), "id", "text")
-    idx.append(corpus.filter(col("id") > 30), "id", "text")
+    idx.ingest(corpus.filter(col("id") <= 30), "id", "text")
+    idx.ingest(corpus.filter(col("id") > 30), "id", "text")
     val tokens = corpus.select(size(graft.functions.TextFunctions
       .tokens(col("text")))).as[Int].collect().map(_.toLong).sum
     assert(graft.sources.StoreTxn.getKv(root, "bm25:t:n") === Some("60"))
@@ -132,7 +132,7 @@ class RetrievalSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bm25old_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(docs, "id", "text")
+    idx.ingest(docs, "id", "text")
     // forge the earlier format: postings and lengths, no N/Σdl kvs
     val commit = new java.io.File(root, "_txn/commit").toPath
     java.nio.file.Files.writeString(commit, java.nio.file.Files
@@ -141,7 +141,7 @@ class RetrievalSpec extends SparkSpec {
     val posts = new graft.sources.Warehouse(spark, root)
       .readBucketed("t_bm_post").collect().map(_.toString).sorted.toSeq
     Seq(() => idx.search(Seq("spark"), 5),
-        () => idx.append(docs.select((col("id") + 10).as("id"), col("text")),
+        () => idx.ingest(docs.select((col("id") + 10).as("id"), col("text")),
           "id", "text")).foreach { op =>
       val e = intercept[IllegalArgumentException](op())
       assert(e.getMessage.contains("rebuild under a fresh root"), e.getMessage)
@@ -185,7 +185,7 @@ class RetrievalSpec extends SparkSpec {
       .createTempDirectory("graft_bm25cmp_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
     (0 until 6).foreach(i =>
-      idx.appendOnce(corpus.filter(col("id") % 6 === i), "id", "text",
+      idx.ingestOnce(corpus.filter(col("id") % 6 === i), "id", "text",
         Some(s"k$i")))
     val before = idx.search(Seq("spark", "engine"), k = 8)
       .select("id", "score", "rank").as[(Long, Double, Int)].collect().toSeq
@@ -207,14 +207,14 @@ class RetrievalSpec extends SparkSpec {
     assert(after === before, "compaction must not change a single score")
     // the replay ledger survives: a completed key redelivered is a
     // no-op — re-appending would double postings and move every score
-    idx.appendOnce(corpus.filter(col("id") % 6 === 0), "id", "text",
+    idx.ingestOnce(corpus.filter(col("id") % 6 === 0), "id", "text",
       Some("k0"))
     assert(idx.search(Seq("spark", "engine"), k = 8)
       .select("id", "score", "rank").as[(Long, Double, Int)]
       .collect().toSeq === before)
     // ...and appends keep working on the new generation
     val extra = (91L to 95L).map(i => (i, "spark extra")).toDF("id", "text")
-    idx.appendOnce(extra, "id", "text", Some("k9"))
+    idx.ingestOnce(extra, "id", "text", Some("k9"))
     assert(idx.search(Seq("spark"), k = 5).count() === 5)
     // a FRESH handle on the same root resolves the compacted generation
     val idx2 = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
@@ -222,7 +222,7 @@ class RetrievalSpec extends SparkSpec {
       .select("id").as[Long].collect().nonEmpty)
     val served2 = idx2.search(Seq("spark"), k = 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq
-    idx2.appendOnce(corpus.filter(col("id") % 6 === 1), "id", "text",
+    idx2.ingestOnce(corpus.filter(col("id") % 6 === 1), "id", "text",
       Some("k1")) // completed pre-compact key: still skips
     assert(idx2.search(Seq("spark"), k = 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq === served2)
@@ -233,8 +233,8 @@ class RetrievalSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_bm25crash_").toString
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(corpus.filter(col("id") <= 20), "id", "text")
-    idx.append(corpus.filter(col("id") > 20), "id", "text")
+    idx.ingest(corpus.filter(col("id") <= 20), "id", "text")
+    idx.ingest(corpus.filter(col("id") > 20), "id", "text")
     val before = idx.search(Seq("spark"), k = 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq
     graft.sources.StoreTxn.leaseTtlMs = 250L

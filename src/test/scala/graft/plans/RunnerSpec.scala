@@ -138,7 +138,7 @@ class RunnerSpec extends SparkSpec {
       Operations.foreach { op =>
         val collection = if (op == "robotstxt") "robotstxt" else "html_parser"
         val partitions =
-          r.staging.readUnprocessed(collection, op).rdd.getNumPartitions
+          r.staging.readSplit(collection, op)._1.rdd.getNumPartitions
         val before = checkFiles()
         r.runOperation(op)
         // one file set per append: at most one file per batch partition,

@@ -10,24 +10,28 @@ class StorageSpec extends SparkSpec {
   private def tmpRoot(): String =
     Files.createTempDirectory("graft_store").toString
 
+  /** The rows of `docs` that `op` has not processed. */
+  private def unprocessed(st: StagingStore, op: String) =
+    st.readSplit("docs", op)._1
+
   test("staging: unprocessed-only incremental read with watermark") {
     val root = tmpRoot()
     val st = new StagingStore(spark, root)
-    st.appendAt("docs", Seq((1, "a"), (2, "b")).toDF("id", "v"),
-      java.sql.Timestamp.valueOf("2024-01-01 10:00:00"))
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    st.appendAt("docs", Seq((1, "a"), (2, "b")).toDF("id", "v"), t0)
     // first read sees everything
-    val batch1 = st.readUnprocessed("docs", "op1")
+    val batch1 = unprocessed(st, "op1")
     assert(batch1.count() === 2)
-    st.advanceWatermark("docs", "op1", batch1)
+    st.advanceWatermarkTo("docs", "op1", t0)
     // nothing new → empty
-    assert(st.readUnprocessed("docs", "op1").count() === 0)
+    assert(unprocessed(st, "op1").count() === 0)
     // late batch arrives → only it is read
     st.appendAt("docs", Seq((3, "c")).toDF("id", "v"),
       java.sql.Timestamp.valueOf("2024-01-02 10:00:00"))
-    val batch2 = st.readUnprocessed("docs", "op1")
+    val batch2 = unprocessed(st, "op1")
     assert(batch2.select("id").as[Int].collect().toSeq === Seq(3))
     // a second operation has its own watermark and still sees everything
-    assert(st.readUnprocessed("docs", "op2").count() === 3)
+    assert(unprocessed(st, "op2").count() === 3)
   }
 
   test("staging watermark: microsecond instants round-trip; the boundary row is read once") {
@@ -36,7 +40,9 @@ class StorageSpec extends SparkSpec {
     assert(st.watermark("docs", "op") === None, "absent watermark reads as None")
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123456")
     st.appendAt("docs", Seq(1).toDF("id"), t0)
-    st.advanceWatermark("docs", "op", st.readUnprocessed("docs", "op"))
+    // the watermark is the max instant the read returns
+    st.advanceWatermarkTo("docs", "op", unprocessed(st, "op")
+      .agg(max(col("__ingested_at"))).head().getTimestamp(0))
     assert(st.watermark("docs", "op") === Some(t0))
     assert(st.watermark("docs", "op").get.getNanos === 123456000)
     // the row at exactly the watermark is history: not re-read
@@ -46,11 +52,11 @@ class StorageSpec extends SparkSpec {
     // one microsecond later is unprocessed: not skipped
     val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00.123457")
     st.appendAt("docs", Seq(2).toDF("id"), t1)
-    assert(st.readUnprocessed("docs", "op").select("id").as[Int].collect().toSeq
+    assert(unprocessed(st, "op").select("id").as[Int].collect().toSeq
       === Seq(2))
     st.advanceWatermarkTo("docs", "op", t1)
     assert(st.watermark("docs", "op") === Some(t1))
-    assert(st.readUnprocessed("docs", "op").count() === 0)
+    assert(unprocessed(st, "op").count() === 0)
   }
 
   test("staging watermark: a temp file left by a crashed write is ignored") {
@@ -64,12 +70,12 @@ class StorageSpec extends SparkSpec {
     // crash between the temp write and the rename of the first advance
     Files.writeString(tmp, "2099-01-01T00:00:00Z")
     assert(st.watermark("docs", "op") === None)
-    assert(st.readUnprocessed("docs", "op").count() === 1)
+    assert(unprocessed(st, "op").count() === 1)
     st.advanceWatermarkTo("docs", "op", t0)
     // crash in a later advance: the committed marker still holds
     Files.writeString(tmp, "2099-01-01T00:00:00Z")
     assert(st.watermark("docs", "op") === Some(t0))
-    assert(st.readUnprocessed("docs", "op").count() === 0)
+    assert(unprocessed(st, "op").count() === 0)
   }
 
   test("staging watermark: a root with the one-row parquet marker is refused") {
@@ -80,7 +86,7 @@ class StorageSpec extends SparkSpec {
     st.appendAt("docs", Seq(1).toDF("id"), t0)
     st.appendAt("docs", Seq(2).toDF("id"), t1)
     Seq(t0).toDF("wm").write.parquet(s"$root/watermarks/docs__op")
-    val e = intercept[IllegalArgumentException](st.readUnprocessed("docs", "op"))
+    val e = intercept[IllegalArgumentException](unprocessed(st, "op"))
     assert(e.getMessage.contains("docs__op") && e.getMessage.contains("rebuild"),
       e.getMessage)
     // reading nothing, the refusal starts no job either

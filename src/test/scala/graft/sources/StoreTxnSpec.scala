@@ -12,6 +12,7 @@ import graft.operators._
   * exactly the state an uncrashed run produces. */
 class StoreTxnSpec extends SparkSpec {
   import spark.implicits._
+  import StoreTxnSpec.Keyed
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -44,11 +45,11 @@ class StoreTxnSpec extends SparkSpec {
   }
 
   /** Emulate a process death and wait out the corpse's lease. */
-  private def crashAndExpire(body: => Unit): Unit = {
-    StoreTxn.leaseTtlMs = 250L
+  private def crashAndExpire(body: => Unit, ttlMs: Long = 250L): Unit = {
+    StoreTxn.leaseTtlMs = ttlMs
     try {
       intercept[StoreTxn.SimulatedCrash](body)
-      Thread.sleep(400) // the dead writer's lease heartbeat goes stale
+      Thread.sleep(ttlMs * 8 / 5) // the dead writer's lease heartbeat goes stale
     } finally StoreTxn.hooks.reset()
   }
 
@@ -98,15 +99,15 @@ class StoreTxnSpec extends SparkSpec {
       (i, if (i % 4 == 0) s"spark engine cluster run$i" else s"filler$i words here"))
     val root = tmp("graft_txn_bm_")
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(docs.filter(_._1 <= 20).toDF("doc_id", "text"), "doc_id", "text")
+    idx.ingest(docs.filter(_._1 <= 20).toDF("doc_id", "text"), "doc_id", "text")
     StoreTxn.hooks.crashBeforeCommit = true
     crashAndExpire {
-      idx.append(docs.filter(_._1 > 20).toDF("doc_id", "text"), "doc_id", "text")
+      idx.ingest(docs.filter(_._1 > 20).toDF("doc_id", "text"), "doc_id", "text")
     }
     // a completed-but-unpublished append rolls back entirely; the blind
     // retry (fresh handle — the old JVM died) re-appends
     val idx2 = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx2.append(docs.filter(_._1 > 20).toDF("doc_id", "text"), "doc_id", "text")
+    idx2.ingest(docs.filter(_._1 > 20).toDF("doc_id", "text"), "doc_id", "text")
     val served = idx2.search(Seq("spark"), k = 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq
     val oneShot = Retrieval.bm25TopK(docs.toDF("doc_id", "text"),
@@ -121,14 +122,14 @@ class StoreTxnSpec extends SparkSpec {
     val root = tmp("graft_txn_bmkey_")
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
     StoreTxn.hooks.crashBeforeCommit = true
-    crashAndExpire { idx.appendOnce(docs, "doc_id", "text", Some("ck#0")) }
+    crashAndExpire { idx.ingestOnce(docs, "doc_id", "text", Some("ck#0")) }
     // redelivery of the SAME key after the crash: the stats marker never
     // committed, so this must re-append, not skip
     val idx2 = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx2.appendOnce(docs, "doc_id", "text", Some("ck#0"))
+    idx2.ingestOnce(docs, "doc_id", "text", Some("ck#0"))
     assert(idx2.search(Seq("alpha"), k = 20).count() === 10L)
     // and a second redelivery after the COMMITTED append is a no-op
-    idx2.appendOnce(docs, "doc_id", "text", Some("ck#0"))
+    idx2.ingestOnce(docs, "doc_id", "text", Some("ck#0"))
     assert(idx2.search(Seq("alpha"), k = 20).count() === 10L)
   }
 
@@ -162,13 +163,16 @@ class StoreTxnSpec extends SparkSpec {
         case Some(n) => StoreTxn.hooks.crashAfterTouches = n
         case None => StoreTxn.hooks.crashBeforeCommit = true
       }
-      crashAndExpire(op(root))
-      if (crash.isEmpty) { // `touches` is the whole write set
-        val intent = java.nio.file.Files.readString(new java.io.File(root,
-          "_txn/intent").toPath).split("\n").filter(_.startsWith("dir\t"))
-        assert(intent.length === touches, intent.mkString("; "))
-      }
-      op(root)
+      // no other writer runs here, so the dead one's lease may expire fast
+      try {
+        crashAndExpire(op(root), ttlMs = 50L)
+        if (crash.isEmpty) { // `touches` is the whole write set
+          val intent = java.nio.file.Files.readString(new java.io.File(root,
+            "_txn/intent").toPath).split("\n").filter(_.startsWith("dir\t"))
+          assert(intent.length === touches, intent.mkString("; "))
+        }
+        op(root)
+      } finally StoreTxn.leaseTtlMs = 250L
       assert(state(root) === expected, s"crash $crash")
     }
   }
@@ -179,7 +183,7 @@ class StoreTxnSpec extends SparkSpec {
     def index(root: String) =
       new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
     def append(root: String, lo: Long, hi: Long, key: String): Unit = {
-      index(root).appendOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
+      index(root).ingestOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
         "doc_id", "text", Some(key))
       ()
     }
@@ -201,7 +205,7 @@ class StoreTxnSpec extends SparkSpec {
     def index(root: String) = new Decontamination.GramIndex(spark, root, "t",
       n = 3, nStoreBuckets = 2, prefixPartitions = 4)
     def append(root: String, lo: Long, hi: Long, key: String): Unit = {
-      index(root).appendOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
+      index(root).ingestOnce(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
         "doc_id", "text", Some(key))
       ()
     }
@@ -218,7 +222,7 @@ class StoreTxnSpec extends SparkSpec {
     val data = (0 until 900).map(i => (i, s"g${i % 3}", s"v${i % 400}")).toDF("i", "g", "v")
     def store(root: String) = new Sketches.DistinctStore(spark, root, "d")
     def append(root: String, lo: Int, hi: Int, key: String): Unit = {
-      store(root).appendOnce(data.filter(col("i") >= lo && col("i") < hi),
+      store(root).ingestOnce(data.filter(col("i") >= lo && col("i") < hi),
         "g", "v", Some(key))
       ()
     }
@@ -232,6 +236,93 @@ class StoreTxnSpec extends SparkSpec {
     crashMatrix(warm, touches = 0)(root => store(root).compact())(observe)
     store(warm).compact()
     crashMatrix(warm, touches = 1)(append(_, 600, 900, "k3"))(observe)
+  }
+
+  test("every keyed store: a crash at every touch of a keyed ingest or a " +
+      "compaction, or before its commit, then a blind retry equals a clean store") {
+    val docs = corpus(16, seed = 13L).toDF("doc_id", "text")
+    val vecs = (0 until 16).map(i =>
+      (i.toLong, Array.tabulate(4)(j => (math.cos(i % 3 + j) + 0.01 * math.sin(i + j)).toFloat)))
+      .toDF("vec_id", "embedding")
+    val sigs = docs.select(col("doc_id"), xxhash64(col("text")).as("sig"))
+    val edges = (0L until 16L).map(i => (i % 6, (i * 5 + 1) % 7, i)).toDF("src", "dst", "i")
+    val cents = vecs.filter(col("vec_id") < 2).select(col("vec_id").cast("int").as("cell"),
+      col("embedding").cast("array<double>").as("cvec"))
+    val books = Quantization.pqTrain(
+      Quantization.residuals(vecs, "vec_id", "embedding", cents),
+      "id", "rvec", dim = 4, m = 2, ksub = 4, iters = 1)
+    def wh(root: String) = new Warehouse(spark, root)
+    // the two batches split the rows at 8 of `splitCol`
+    def keyed(name: String, open: String => KeyedStore[_], df: DataFrame,
+              idCol: String, valueCol: String, splitCol: Option[String] = None) = {
+      val split = col(splitCol.getOrElse(idCol))
+      Keyed(name, open, idCol, valueCol, df.filter(split < 8), df.filter(split >= 8))
+    }
+    val stores = Seq(
+      keyed("minhash", r => new MinhashStore(wh(r), "t", MinhashConfig(shingleN = 3,
+        bands = 8, rowsPerBand = 2, threshold = 0.5, seed = 7L, nStoreBuckets = 2)),
+        docs, "doc_id", "text"),
+      keyed("simhash", r => new SimhashStore(wh(r), "t", SimhashConfig(nStoreBuckets = 2)),
+        docs, "doc_id", "text"),
+      keyed("containment", r => new ContainmentStore(wh(r), "t",
+        ContainmentConfig(shingleN = 3, threshold = 0.5, nStoreBuckets = 2)),
+        docs, "doc_id", "text"),
+      keyed("hamming", r => new HammingStore(wh(r), "t",
+        HammingConfig(maxDist = 2, nStoreBuckets = 2)), sigs, "doc_id", "sig"),
+      keyed("embedding-lsh", r => new EmbeddingLshStore(wh(r), "t",
+        EmbeddingLshConfig(threshold = 0.8, dim = 4, tables = 2, bitsPerTable = 3,
+          nStoreBuckets = 2)), vecs, "vec_id", "embedding"),
+      keyed("ivf", r => new IvfStore(wh(r), "t", cents, nStoreBuckets = 2),
+        vecs, "vec_id", "embedding"),
+      keyed("ivfadc", r => new IvfAdcStore(wh(r), "t", cents, books, nStoreBuckets = 2),
+        vecs, "vec_id", "embedding"),
+      keyed("edge", r => new EdgeStore(wh(r), "t", EdgeStoreConfig(nStoreBuckets = 2)),
+        edges, "src", "dst", splitCol = Some("i")).copy(
+        // stored ranks the ingests and compactions must not touch
+        warmUp = r => { new EdgeStore(wh(r), "t", EdgeStoreConfig(nStoreBuckets = 2))
+          .pageRankMaintain(spark, iters = 2); () },
+        served = r => new EdgeStore(wh(r), "t", EdgeStoreConfig(nStoreBuckets = 2))
+          .storedRanks(spark).toSeq.flatMap(rows)))
+    // what each root's last ingest returned (a pair store's pairs)
+    val emitted = scala.collection.mutable.Map.empty[String, Seq[String]]
+    for (k <- stores) {
+      def ingest(root: String, b: DataFrame, key: String): Unit =
+        emitted(root) = k.open(root).ingestOnce(b, k.idCol, k.valueCol, Some(key)) match {
+          case Some(df: org.apache.spark.sql.Dataset[_]) => rows(df.toDF())
+          case _ => Nil
+        }
+      def observe(root: String) = emitted.getOrElse(root, Nil) ++ k.served(root) ++
+        k.open(root).tables.flatMap(t => rows(wh(root).readBucketed(wh(root).live(t.base))))
+      val warm = tmp(s"graft_txn_${k.name}_")
+      ingest(warm, k.b1, "k1")
+      k.warmUp(warm)
+      // one ingest or compaction registers each declared table once
+      val touches = k.open(warm).tables.size
+      withClue(k.name) {
+        crashMatrix(warm, touches)(ingest(_, k.b2, "k2"))(observe)
+        ingest(warm, k.b2, "k2")
+        crashMatrix(warm, touches)(k.open(_).compact())(observe)
+      }
+    }
+    assert(emitted.values.exists(_.nonEmpty), "the pair stores must emit pairs")
+  }
+
+  test("curation store: a crash at every touch of a compaction, or before " +
+      "its commit, then a blind retry equals a clean store") {
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0,
+      minhash = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,
+        threshold = 0.5, seed = 7L, nStoreBuckets = 2))
+    val docs = corpus(16, seed = 14L).toDF("id", "text")
+    def store(root: String) = new Pipeline.CurationStore(spark, root, "t", cfg)
+    def observe(root: String) = {
+      val wh = new Warehouse(spark, root)
+      store(root).tables.flatMap(t => rows(wh.readBucketed(wh.live(t.base)))) ++
+        rows(store(root).readLabels)
+    }
+    val warm = tmp("graft_txn_curcompact_")
+    store(warm).ingest(docs.filter(col("id") < 8), "id", "text")
+    store(warm).ingest(docs.filter(col("id") >= 8), "id", "text")
+    crashMatrix(warm, store(warm).tables.size)(store(_).compact())(observe)
   }
 
   test("a superseded version a crash between commit and GC left behind " +
@@ -315,13 +406,13 @@ class StoreTxnSpec extends SparkSpec {
     // DistinctStore per-append delta directories
     val deltas = tmp("graft_txn_old_deltas_")
     val ds = new Sketches.DistinctStore(spark, deltas, "d")
-    ds.append(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v")
+    ds.ingest(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v")
     val sk = new java.io.File(deltas, "state/d_hll_sk")
     val a1 = new java.io.File(sk, "a1")
     assert(a1.mkdir())
     sk.listFiles().filter(_.isFile).foreach(f => assert(f.renameTo(new java.io.File(a1, f.getName))))
     refused(deltas)(
-      () => ds.append(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v"),
+      () => ds.ingest(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v"),
       () => ds.estimate(),
       () => ds.compact())
   }
@@ -455,12 +546,12 @@ class StoreTxnSpec extends SparkSpec {
     java.nio.file.Files.writeString(leaseFile.toPath, "jvm=elsewhere pid=1\n")
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
     val e = intercept[IllegalStateException] {
-      idx.append(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text")
+      idx.ingest(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text")
     }
     assert(e.getMessage.contains("locked by another maintenance writer"))
     // a STALE lease (dead owner) is stolen silently
     assert(leaseFile.setLastModified(System.currentTimeMillis - 120000L))
-    idx.append(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text")
+    idx.ingest(Seq((1L, "a b c")).toDF("doc_id", "text"), "doc_id", "text")
     assert(idx.search(Seq("a"), 1).count() === 1L)
   }
 
@@ -468,7 +559,7 @@ class StoreTxnSpec extends SparkSpec {
     val docs = (1L to 10L).map(i => (i, s"alpha beta doc$i")).toDF("doc_id", "text")
     val root = tmp("graft_txn_fwd_")
     val idx = new Retrieval.Bm25Index(spark, root, "t", nStoreBuckets = 2)
-    idx.append(docs, "doc_id", "text")
+    idx.ingest(docs, "doc_id", "text")
     // simulate the crash window: the commit record (epoch 1) published,
     // but the epoch-1 intent was never cleaned up — it snapshots the
     // postings table as EMPTY, so a (wrong) undo would delete all of it
@@ -495,4 +586,16 @@ class StoreTxnSpec extends SparkSpec {
     assert(commit.contains("epoch\t2"),
       s"two ingests = two epochs (embedded minhash joins, not commits): $commit")
   }
+}
+
+object StoreTxnSpec {
+  /** A keyed store under the generic crash matrix: a handle on a root,
+    * its (id, value) columns, two batches, and an optional step run on
+    * the warm store before the matrices (state the store's writes must
+    * leave alone) with what that state serves. */
+  final case class Keyed(name: String, open: String => KeyedStore[_],
+                         idCol: String, valueCol: String,
+                         b1: DataFrame, b2: DataFrame,
+                         warmUp: String => Unit = _ => (),
+                         served: String => Seq[String] = _ => Nil)
 }

@@ -371,7 +371,7 @@ class StreamingSpec extends SparkSpec {
       EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
     val eDir = s"$root/edges_in"
     val eSchema = edgesOf(docs).schema
-    def edgeCatchUp(): Unit = Streaming.runAppendStoreAvailableNow(
+    def edgeCatchUp(): Unit = Streaming.runStoreAvailableNow(
       spark.readStream.schema(eSchema).option("maxFilesPerTrigger", 1)
         .parquet(eDir),
       estore, s"$root/eckpt", "src", "dst")
@@ -441,7 +441,7 @@ class StreamingSpec extends SparkSpec {
     val idx = new graft.operators.Retrieval.Bm25Index(
       spark, s"$root/idx", "t", nStoreBuckets = 2)
     val schema = corpus.toDF("doc_id", "text").schema
-    Streaming.runAppendStoreAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       idx, s"$root/ckpt", "doc_id", "text")
@@ -451,9 +451,9 @@ class StreamingSpec extends SparkSpec {
         corpus.toDF("doc_id", "text"), "doc_id", "text", Seq("spark"), 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq
     assert(served === oneShot && served.nonEmpty)
-    // a replayed appendOnce with an already-completed key is a no-op
+    // a replayed ingestOnce with an already-completed key is a no-op
     // (the sink keys batches as "<checkpoint>#<batchId>")
-    idx.appendOnce(corpus.take(5).toDF("doc_id", "text"), "doc_id", "text",
+    idx.ingestOnce(corpus.take(5).toDF("doc_id", "text"), "doc_id", "text",
       Some(s"$root/ckpt#0"))
     assert(idx.search(Seq("spark"), k = 5)
       .select("id", "score").as[(Long, Double)].collect().toSeq === oneShot)
@@ -469,12 +469,12 @@ class StreamingSpec extends SparkSpec {
     val schema = corpus.toDF("doc_id", "text").schema
     def stream() = spark.readStream.schema(schema).parquet(inDir)
     // first sink holds the index root's maintenance lease...
-    val q1 = Streaming.appendStoreSink(stream(), idx, s"$root/ckpt1",
+    val q1 = Streaming.storeSink(stream(), idx, s"$root/ckpt1",
       "doc_id", "text")
     try {
       // ...so a second sink on the SAME index fails fast at start
       val e = intercept[IllegalStateException] {
-        Streaming.appendStoreSink(stream(), idx, s"$root/ckpt2",
+        Streaming.storeSink(stream(), idx, s"$root/ckpt2",
           "doc_id", "text")
       }
       assert(e.getMessage.contains("maintenance"), e.getMessage)
@@ -484,7 +484,7 @@ class StreamingSpec extends SparkSpec {
     // successor runs
     val deadline = System.currentTimeMillis + 20000
     def successor(): Unit =
-      try Streaming.runAppendStoreAvailableNow(
+      try Streaming.runStoreAvailableNow(
         spark.readStream.schema(schema).parquet(inDir), idx, s"$root/ckpt1",
         "doc_id", "text")
       catch {
@@ -539,10 +539,11 @@ class StreamingSpec extends SparkSpec {
     val store = new graft.operators.MinhashStore(
       new graft.sources.Warehouse(spark, s"$root/store"), "t", cfg)
     val schema = corpus.toDF("doc_id", "text").schema
-    Streaming.runNearDupAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
-      store, wh, "nd_pairs", s"$root/ckpt", "doc_id", "text")
+      store, s"$root/ckpt", "doc_id", "text",
+      Streaming.appendBatch(wh, "nd_pairs", "__batch_id"))
     val streamed = wh.read("nd_pairs").select("id_a", "id_b")
       .as[(Long, Long)].collect().toSet
     val oneShot = graft.operators.Dedup.minhashPortablePairs(
@@ -586,10 +587,11 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(inDir)
     val wh = new graft.sources.Warehouse(spark, s"$root/wh")
     val schema = corpus.toDF("doc_id", "text").schema
-    Streaming.runNearDupAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
-      store, wh, "ct_pairs", s"$root/ckpt", "doc_id", "text")
+      store, s"$root/ckpt", "doc_id", "text",
+      Streaming.appendBatch(wh, "ct_pairs", "__batch_id"))
     val streamed = wh.read("ct_pairs").select("id_a", "id_b")
       .as[(Long, Long)].collect().toSet
     val oneShot = graft.operators.Dedup.ngramContainmentPairs(
@@ -618,7 +620,7 @@ class StreamingSpec extends SparkSpec {
       new graft.sources.Warehouse(spark, s"$root/store"), "t", cents,
       nStoreBuckets = 2)
     val schema = vecs.toDF("vec_id", "embedding").schema
-    Streaming.runAppendStoreAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       store, s"$root/ckpt", "vec_id", "embedding")
@@ -632,12 +634,12 @@ class StreamingSpec extends SparkSpec {
     val oneShot = new graft.operators.IvfStore(
       new graft.sources.Warehouse(spark, s"$root/oneshot"), "t", cents,
       nStoreBuckets = 2)
-    oneShot.append(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
+    oneShot.ingest(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
     assert(served === results(oneShot.serve(queries, "vec_id", "embedding",
       k = 3, nProbes = 2)) && served.nonEmpty)
     // a redelivered completed append key is a no-op (no duplicate rows)
-    assert(!store.appendOnce(vecs.filter(_._1 < 20).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", Some(s"$root/ckpt#0")))
+    assert(store.ingestOnce(vecs.filter(_._1 < 20).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Some(s"$root/ckpt#0")).isEmpty)
     assert(served === results(store.serve(queries, "vec_id", "embedding",
       k = 3, nProbes = 2)))
   }
@@ -657,7 +659,7 @@ class StreamingSpec extends SparkSpec {
       graft.operators.EdgeStoreConfig(weightCol = Some("w"),
         nStoreBuckets = 2))
     val schema = edges.toDF("src", "dst", "w").schema
-    Streaming.runAppendStoreAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       store, s"$root/ckpt", "src", "dst")
@@ -672,8 +674,8 @@ class StreamingSpec extends SparkSpec {
     assert(ranks(store.pageRank(spark, 2)) === ranks(
       graft.operators.Graph.pageRank(all, "src", "dst", 2, Some("w"))))
     // a redelivered completed append key is a no-op (degrees unchanged)
-    assert(!store.appendOnce(edges.filter(_._1 < 5).toDF("src", "dst", "w"),
-      "src", "dst", Some(s"$root/ckpt#0")))
+    assert(store.ingestOnce(edges.filter(_._1 < 5).toDF("src", "dst", "w"),
+      "src", "dst", Some(s"$root/ckpt#0")).isEmpty)
     assert(degs(store.degrees(spark)) ===
       degs(graft.operators.Graph.degrees(all, "src", "dst", Some("w"))))
   }
@@ -697,7 +699,7 @@ class StreamingSpec extends SparkSpec {
     val store = new graft.operators.IvfAdcStore(
       new graft.sources.Warehouse(spark, s"$root/store"), "t", cents, books,
       nStoreBuckets = 2)
-    Streaming.runAppendStoreAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(all.schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       store, s"$root/ckpt", "vec_id", "embedding")
@@ -710,12 +712,12 @@ class StreamingSpec extends SparkSpec {
     val oneShot = new graft.operators.IvfAdcStore(
       new graft.sources.Warehouse(spark, s"$root/oneshot"), "t", cents, books,
       nStoreBuckets = 2)
-    oneShot.append(all, "vec_id", "embedding")
+    oneShot.ingest(all, "vec_id", "embedding")
     assert(served === results(oneShot.serve(queries, "vec_id", "embedding",
       k = 3, nProbes = 2)) && served.nonEmpty)
     // redelivered completed append key: no-op
-    assert(!store.appendOnce(vecs.filter(_._1 < 20).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", Some(s"$root/ckpt#0")))
+    assert(store.ingestOnce(vecs.filter(_._1 < 20).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Some(s"$root/ckpt#0")).isEmpty)
   }
 
   test("append-store catch-up: streamed gram-index appends check like one shot") {
@@ -734,7 +736,7 @@ class StreamingSpec extends SparkSpec {
     val idx = new graft.operators.Decontamination.GramIndex(
       spark, s"$root/idx", "t", n = 5, nStoreBuckets = 2)
     val schema = docs.toDF("doc_id", "text").schema
-    Streaming.runAppendStoreAvailableNow(
+    Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       idx, s"$root/ckpt", "doc_id", "text")
@@ -745,8 +747,8 @@ class StreamingSpec extends SparkSpec {
     // change the flagged id set, so assert on the postings row count)
     val before = new graft.sources.Warehouse(spark, s"$root/idx")
       .read("t_dc_gram").count()
-    assert(!idx.appendOnce(docs.filter(_._1 <= 10).toDF("doc_id", "text"),
-      "doc_id", "text", Some(s"$root/ckpt#0")))
+    assert(idx.ingestOnce(docs.filter(_._1 <= 10).toDF("doc_id", "text"),
+      "doc_id", "text", Some(s"$root/ckpt#0")).isEmpty)
     assert(new graft.sources.Warehouse(spark, s"$root/idx")
       .read("t_dc_gram").count() === before)
   }
@@ -771,7 +773,7 @@ class StreamingSpec extends SparkSpec {
       nStoreBuckets = 2)
     val schema = vecs.toDF("vec_id", "embedding").schema
     val policy = Streaming.CompactionPolicy(maxFiles = 48, checkEvery = 8)
-    def drain(): Unit = Streaming.runAppendStoreAvailableNow(
+    def drain(): Unit = Streaming.runStoreAvailableNow(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(inDir),
       store, s"$root/ckpt", "vec_id", "embedding",
@@ -793,7 +795,7 @@ class StreamingSpec extends SparkSpec {
     val oneShot = new graft.operators.IvfStore(
       new graft.sources.Warehouse(spark, s"$root/oneshot"), "t", cents,
       nStoreBuckets = 2)
-    oneShot.append(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
+    oneShot.ingest(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
     val expect = oneShot.serve(queries, "vec_id", "embedding",
         k = 3, nProbes = 2)
       .select("query_id", "nbr_id", "rank").as[(Long, Long, Int)]
