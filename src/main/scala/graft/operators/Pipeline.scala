@@ -475,7 +475,32 @@ object Pipeline {
     * gate the collect cancels itself, at gate 0 it is not made, and
     * either way the Spark plans run as before up to the exact-dedup
     * survivors, which a batch within [[MinhashStore.MaxDriverDocs]]
-    * collects. */
+    * collects.
+    *
+    * RESIDENCY: an instance that fills a store keeps the rows of its
+    * four key tables — the exact-hash table, the MinHash signature and
+    * set tables and the component labels — on the driver as of one
+    * commit epoch, so a warm small delta answers its exact-membership,
+    * bucket, set and labels lookups from memory and reads no store table.
+    * The state starts empty at a driver-route ingest into a root with no
+    * committed ingest of this store (checked inside the transaction),
+    * and each committed ingest whose writes were all local relations
+    * grows it by those rows; [[compact]] rewrites the rows unchanged and
+    * carries it to the epoch it commits. An ingest uses the state only
+    * while its epoch is the transaction's epoch − 1, so another
+    * instance's or process's commit drops it. It is also dropped by an
+    * ingest with a Spark-route write, by a nested ingest or compaction
+    * (it joins its caller's open transaction, which may hold other
+    * writes to these tables) and once it holds more than
+    * [[CurationStore.MaxResident]] rows plus set elements. A dropped
+    * state is not rebuilt: the instance, like one opened on a store it
+    * did not fill, reads the rows a delta touches per key. A failed or
+    * rolled-back ingest or compaction puts back the state it found: its
+    * epoch is still the committed one. The state serves the same rows
+    * those reads return, so routing, pairing, the exact winner and the
+    * audit are the same code on either source; the instance's lock
+    * guards it (a streaming sink reuses one instance across
+    * micro-batches). */
   final class CurationStore(spark: org.apache.spark.sql.SparkSession,
                             root: String, name: String,
                             cfg: CurateConfig = CurateConfig(),
@@ -528,7 +553,9 @@ object Pipeline {
                                    textCol: String,
                                    beforeCommit: CurateDelta => Unit,
                                    withAudit: Boolean, maxDriverDocs: Long,
-                                   maxDriverEdges: Long): CurateDelta = {
+                                   maxDriverEdges: Long,
+                                   maxResident: Long = CurationStore.MaxResident)
+        : CurateDelta = {
       import spark.implicits._
       Pipeline.requireIntegralId(batch.schema, idCol, "CurationStore")
       // roll back any crashed prior ingest BEFORE the orphan scan below:
@@ -593,11 +620,26 @@ object Pipeline {
         s"batch ids must exceed all previously ingested ids " +
           s"(batch min ${minId.get} <= store max $prevMax)")
 
+      // a nested ingest joins its caller's transaction, which may hold
+      // other writes to these tables and commits later: it neither uses
+      // nor keeps the state
+      val nested = graft.sources.StoreTxn.isOpen(root)
+      // the state this ingest claimed, put back if it fails: nothing
+      // extends it before the commit, and a rollback restores its epoch
+      var claimed = false
+      var state: Option[Resident] = None
       // wide-string scans all execute inside the transaction's staged
       // materializations — tighten scan sizing for the call, restore after
-      graft.core.WideScan.withScanSizing(spark) {
+      val (delta, growth, epoch) = try graft.core.WideScan.withScanSizing(spark) {
       graft.sources.StoreTxn.transact(spark, root) {
       val txn = graft.sources.StoreTxn.current(root)
+      val held = claimResident()
+      claimed = true
+      // a state starts only where there is nothing to hold: the commit
+      // record this transaction builds on has no ingest of this store
+      state = if (maxResident <= 0 || nested) None
+        else held.filter(_.epoch == txn.epoch - 1).orElse(Option.when(
+          onDriver && maxIngestedId.isEmpty)(new Resident(txn.epoch - 1)))
       val stage: DataFrame => DataFrame = _.localCheckpoint(true)
       // a local frame is settled where the Spark route stages (no job)
       val staged = if (onDriver) stageOrSettle(stage) _ else stage
@@ -630,6 +672,8 @@ object Pipeline {
       // the hash+window (with the text column in the window shuffle)
       // once per consumer. A local batch takes [[exactOnDriver]].
       val hashed = Dedup.hashPair(decon, "text")
+      // read resident or not: its owner-column check refuses a table of
+      // an earlier format
       val tableExact = Option.when(wh.exists(exactTable)) {
         val st = wh.readBucketed(exactTable)
         // the owner id attributes a store-dup drop to its kept document
@@ -638,9 +682,18 @@ object Pipeline {
             "was written by an earlier format; rebuild under a fresh root")
         st
       }
+      // the store rows of a set of __h1 values, from the state or read
+      val exactRows: Option[(StructType, Seq[Long] => Option[Seq[Row]])] =
+        state match {
+          case Some(r) => r.exactSchema.map(schema =>
+            schema -> ((h1s: Seq[Long]) => r.exactRows(h1s, maxDriverDocs)))
+          case None => tableExact.map(st => st.schema -> (h1s => DriverRoute.collect(
+            st.filter(col("__h1").isInCollection(h1s)), maxDriverDocs,
+            "curation.ingest/exact").map(_.toSeq)))
+        }
       val driverExact =
         if (onDriver && DriverRoute.isLocal(hashed))
-          exactOnDriver(hashed, tableExact, withAudit, maxDriverDocs)
+          exactOnDriver(hashed, exactRows, withAudit)
         else None
       val exactHashed = driverExact match {
         case Some(d) => d.window
@@ -680,15 +733,19 @@ object Pipeline {
       // Par.both's worker under the label/delta/state work of this
       // thread; both legs join before the commit marker, and before a
       // rollback when either leg throws
-      val (pairs, mhAppend) =
-        mh.ingestParts(survivors, "id", "text", maxDriverDocs)
-      val (delta, _) = graft.core.Par.both({
-      val prevRead = readLabels
+      val (pairs, mhAppend, mhRows) = mh.ingestRows(survivors, "id", "text",
+        maxDriverDocs, state.map(_.minhash))
+      val ((delta, labels), _) = graft.core.Par.both({
       // the labels collect of the components' driver fold, made here so
       // the delta algebra below reads the same local rows
-      val prevLabels = DriverRoute.collect(prevRead, maxDriverEdges,
-          "curation.ingest/labels")
-        .map(DriverRoute.local(spark, _, LabelsSchema)).getOrElse(prevRead)
+      val prevLabels = state.map(_.labels)
+        .filter(l => maxDriverEdges > 0 && l.length <= maxDriverEdges) match {
+          case Some(l) => DriverRoute.local(spark, l.toSeq, LabelsSchema)
+          case None =>
+            val prevRead = readLabels
+            DriverRoute.collect(prevRead, maxDriverEdges, "curation.ingest/labels")
+              .map(DriverRoute.local(spark, _, LabelsSchema)).getOrElse(prevRead)
+        }
       // a local relation or internally checkpointed — safe to version below
       val labels = Dedup.connectedComponentsIncremental(prevLabels, pairs,
         "id_a", "id_b", maxDriverEdges = maxDriverEdges)
@@ -785,36 +842,50 @@ object Pipeline {
           .write.parquet(labelsDir),
         wh.appendBucketed(exactTable, fresh.select("__h1", "__h2", "id"),
           Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets))
-      CurateDelta(kept, retracted, audit)
+      (CurateDelta(kept, retracted, audit), labels)
       }, mhAppend())
       // the signature appends are durably done here, before the marker
       // publishes (commit is all-or-nothing per table set)
       txn.putKv(maxIdKey, math.max(maxId.get, prevMax).toString)
+      // what this ingest wrote, when every write was a local relation —
+      // the state grows by it once the commit returns
+      val growth = for {
+        _ <- state
+        rows <- mhRows
+        if DriverRoute.isLocal(fresh) && DriverRoute.isLocal(labels)
+      } yield {
+        val exactRows = fresh.select("__h1", "__h2", "id")
+        Growth(exactRows.collect(), exactRows.schema, rows, labels.collect())
+      }
+      (delta, growth, txn.epoch)
+      }
+      } catch { case e: Throwable =>
+        if (claimed) installResident(state)
+        throw e
+      }
+      installResident(growth.flatMap(g => state.flatMap(_.grown(epoch, g, maxResident))))
       delta
-      }
-      }
     }
 
     /** [[ingestGated]]'s exact step for a local `hashed` batch
       * (id, text, __h1, __h2) on the driver: the in-batch winner of each
       * hash pair is its minimum id, and store membership reads the rows
-      * of `table` whose __h1 is a winner's — one bounded collect, None
-      * when it is over `maxRows`. `window` (with `withWindow`) is the
-      * batch in [[Dedup.exactIdWindow]]'s shape and `store` the rows read,
-      * local relations of the Spark route's schemas for its audit arms;
-      * `fresh` is the winners the store does not hold. */
-    private def exactOnDriver(hashed: DataFrame, table: Option[DataFrame],
-                              withWindow: Boolean, maxRows: Long)
-        : Option[DriverExact] = {
+      * of the exact table (`table`: its schema and its rows of a set of
+      * __h1 values, None when they are over the read's bound) whose __h1
+      * is a winner's. `window` (with `withWindow`) is the batch in
+      * [[Dedup.exactIdWindow]]'s shape and `store` the rows read, local
+      * relations of the Spark route's schemas for its audit arms; `fresh`
+      * is the winners the store does not hold. */
+    private def exactOnDriver(hashed: DataFrame,
+                              table: Option[(StructType, Seq[Long] => Option[Seq[Row]])],
+                              withWindow: Boolean): Option[DriverExact] = {
       def id(r: Row): Long = r.getAs[Number](0).longValue
       val groups = hashed.collect().toSeq
         .groupBy(r => (r.getLong(2), r.getLong(3))).values.map(_.sortBy(id)).toSeq
       val winners = groups.map(_.head)
       val h1s = winners.map(_.getLong(2)).distinct
       val stored = table match {
-        case Some(st) if h1s.nonEmpty => DriverRoute.collect(
-            st.filter(col("__h1").isInCollection(h1s)), maxRows,
-            "curation.ingest/exact").getOrElse(return None).toSeq
+        case Some((_, read)) if h1s.nonEmpty => read(h1s).getOrElse(return None)
         case _ => Nil
       }
       val held = stored.map(r => (r.getAs[Long]("__h1"), r.getAs[Long]("__h2"))).toSet
@@ -827,9 +898,25 @@ object Pipeline {
           StructField("__win", idField.dataType)))))
       val fresh = winners.filterNot(r => held((r.getLong(2), r.getLong(3))))
       Some(DriverExact(window,
-        table.map(st => DriverRoute.local(spark, stored, st.schema)),
+        table.map { case (schema, _) => DriverRoute.local(spark, stored, schema) },
         DriverRoute.local(spark, fresh, hashed.schema)))
     }
+
+    // RESIDENCY (see the class doc): the state, guarded by this
+    // instance's lock; an ingest claims it for its duration
+    private var resident: Option[Resident] = None
+    private def claimResident(): Option[Resident] = synchronized {
+      val r = resident
+      resident = None
+      r
+    }
+    private def installResident(r: Option[Resident]): Unit = synchronized {
+      resident = r
+    }
+    /** The resident state's footprint (rows plus set elements) and its
+      * estimated heap bytes, if held. */
+    private[graft] def residentSize: Option[(Long, Long)] =
+      synchronized(resident.map(r => (r.footprint, r.bytes)))
 
     /** The committed (id, comp) labels, read with their known schema —
       * no schema-inference job per read. */
@@ -844,7 +931,76 @@ object Pipeline {
       * maintenance sink otherwise pays per-file read overhead that grows
       * with stream age; the labels are one version per ingest already).
       * Rows identical everywhere — see [[StoreCompaction]]. */
-    def compact(): Unit =
-      StoreCompaction.compact(wh, s"CurationStore '$name'", tables)
+    def compact(): Unit = {
+      val nested = graft.sources.StoreTxn.isOpen(root)
+      val held = claimResident()
+      val epoch = try StoreCompaction.compact(wh, s"CurationStore '$name'", tables)
+        catch { case e: Throwable => installResident(held); throw e }
+      // the rows are unchanged: the state of the epoch the compaction
+      // built on holds at the epoch it committed
+      installResident(held.filter(r => !nested && r.epoch == epoch - 1)
+        .map { r => r.epoch = epoch; r })
+    }
+
+    /** [[CurationStore]]'s resident state as of commit `epoch`. */
+    private final class Resident(var epoch: Long) {
+      var exactSchema: Option[StructType] = None
+      val minhash = new MinhashStore.Resident
+      private val exact =
+        scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Row]]
+      private var exactCount = 0L
+      var labels: Array[Row] = Array.empty
+      def footprint: Long = exactCount + labels.length + minhash.footprint
+      def bytes: Long = org.apache.spark.util.SizeEstimator.estimate(
+        Array[AnyRef](exact, labels, minhash))
+
+      def addExact(r: Row): Unit = {
+        exactCount += 1
+        val h1 = r.fieldIndex("__h1")
+        if (!r.isNullAt(h1))
+          exact.getOrElseUpdate(r.getLong(h1), scala.collection.mutable.ArrayBuffer.empty) += r
+      }
+
+      /** The exact rows whose __h1 is in `h1s`; None over `maxRows`. */
+      def exactRows(h1s: Seq[Long], maxRows: Long): Option[Seq[Row]] = {
+        val rows = h1s.distinct.flatMap(exact.getOrElse(_, Nil))
+        Option.when(maxRows > 0 && rows.size <= maxRows)(rows)
+      }
+
+      /** This state grown by one committed ingest's writes, as of
+        * `committed`; None over `maxUnits`. */
+      def grown(committed: Long, g: Growth, maxUnits: Long): Option[Resident] = {
+        // as a read reports the table: the recorded schema, every field
+        // nullable
+        val schema = exactSchema.getOrElse(StructType(
+          g.exactSchema.fields.map(_.copy(nullable = true))))
+        g.exact.foreach(r => addExact(
+          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+            Array(r.get(0), r.get(1), r.get(2)), schema)))
+        exactSchema = Some(schema)
+        mh.extendResident(minhash, g.mhRows)
+        labels = g.labels
+        epoch = committed
+        Option.when(footprint <= maxUnits)(this)
+      }
+    }
   }
+
+  object CurationStore {
+    /** [[CurationStore]]'s residency bound in rows held plus set
+      * elements — see its RESIDENCY paragraph. A driver-memory bound: the
+      * state won at every store size ScaleProbe `resident` measured (4
+      * vCPU, 120-token documents, warm 100-document deltas, 5 vs 8–9
+      * jobs: 1.65 vs 2.57 s over 10³ documents, 1.40 vs 1.92 s over 10⁴,
+      * 1.20 vs 2.25 s over 10⁵) and cost ~26 heap bytes per unit (34 MB
+      * at 1.3M units, 334 MB at 12.7M). 2²² units is ~110 MB, about
+      * 3·10⁴ such documents. */
+    private[graft] val MaxResident: Long = 1L << 22
+  }
+
+  /** One committed driver-route ingest's writes: the exact rows
+    * (__h1, __h2, id) and their schema, the MinHash batch's
+    * (id, mins, hset) rows and the new labels. */
+  private final case class Growth(exact: Array[Row], exactSchema: StructType,
+                                  mhRows: Array[Row], labels: Array[Row])
 }

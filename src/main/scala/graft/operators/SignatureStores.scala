@@ -123,14 +123,16 @@ private[graft] object StoreCompaction {
   final case class TableSpec(base: String,
                              transform: DataFrame => DataFrame = identity)
 
+  /** Rewrite the live `tables` in one transaction; returns its epoch. */
   def compact(wh: graft.sources.Warehouse, storeLabel: String,
-              tables: Seq[TableSpec]): Unit = {
+              tables: Seq[TableSpec]): Long = {
     graft.sources.StoreTxn.recoverIfIdle(wh.spark, wh.root)
     require(tables.exists(t => wh.exists(wh.live(t.base))),
       s"$storeLabel at ${wh.root} has no ingests — nothing to compact")
     graft.sources.StoreTxn.transact(wh.spark, wh.root) {
       tables.filter(t => wh.exists(wh.live(t.base))).foreach(t =>
         wh.rewriteBucketed(wh.live(t.base), wh.newVersion(t.base), t.transform))
+      graft.sources.StoreTxn.current(wh.root).epoch
     }
   }
 }
@@ -225,6 +227,19 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
                                  textCol: String,
                                  maxDriverDocs: Long = MinhashStore.MaxDriverDocs)
       : (DataFrame, () => Unit) = {
+    val (pairs, append, _) = ingestRows(batch, idCol, textCol, maxDriverDocs, None)
+    (pairs, append)
+  }
+
+  /** [[ingestParts]] whose driver route reads the store's rows from
+    * `resident` (the same rows as the two table reads) instead of the
+    * tables, and which also returns the batch's collected
+    * (id, mins, hset) rows — None on the Spark route — for the caller to
+    * [[extendResident]] with once the ingest commits. */
+  private[graft] def ingestRows(batch: DataFrame, idCol: String,
+                                textCol: String, maxDriverDocs: Long,
+                                resident: Option[MinhashStore.Resident])
+      : (DataFrame, () => Unit, Option[Array[org.apache.spark.sql.Row]]) = {
     // signature-space identity: stored (band, bucket) rows are only
     // comparable to batches hashed under the same geometry/seed and
     // the same tokenizer mode — drift would silently band new docs
@@ -255,7 +270,7 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
         cfg.rowsPerBand), combined.select(col("id"), col("hset")))
     }
     val pairs = collected
-      .flatMap(driverPairs(batch.sparkSession, _, maxDriverDocs))
+      .flatMap(driverPairs(batch.sparkSession, _, maxDriverDocs, resident))
       .getOrElse(sparkPairs(banded, sets))
     (pairs, () => {
       graft.core.Par.both(
@@ -263,8 +278,18 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
           cfg.nStoreBuckets),
         wh.appendBucketed(setTable, sets, Seq("id"), cfg.nStoreBuckets))
       ()
-    })
+    }, collected)
   }
+
+  /** Add the (id, mins, hset) rows [[ingestRows]] returned — the rows
+    * its appends wrote — to `r`. */
+  private[graft] def extendResident(r: MinhashStore.Resident,
+                                    rows: Array[org.apache.spark.sql.Row]): Unit =
+    rows.foreach { d =>
+      val id = d.getAs[Number](0).longValue
+      bandKeys(d.getSeq[Long](1)).foreach { case (b, bucket) => r.addSig(id, b, bucket) }
+      r.addSet(id, d.getSeq[Long](2))
+    }
 
   /** A document's (band, bucket) keys from its minima, as
     * [[Dedup.bandedFromCombined]] bands them: band b's bucket is minima
@@ -295,15 +320,19 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
     * collected (id, mins, hset) batch rows and two bounded store reads:
     * the store rows of the batch's (band, bucket) keys (at most
     * `maxDocs` × bands) and the sets of the old candidate ids (at most
-    * `maxDocs`). None — take the Spark route — when either read is over
-    * its bound. Banding, the bucket cap, the (i < j) pairs of each sorted
+    * `maxDocs`), from `resident` when given, else collected
+    * (`minhash.ingest/sig`, `minhash.ingest/set`). None — take the Spark
+    * route — when either read is over its bound. Banding, the bucket
+    * cap, the (i < j) pairs of each sorted
     * bucket list (duplicates kept, like `sort_array(collect_list)`), the
     * newness filter and the Jaccard over distinct hashes all mirror the
     * Spark plan; ids are unique across batches (the store contract), so
     * a batch id's set comes from the batch alone. */
   private def driverPairs(spark: org.apache.spark.sql.SparkSession,
                           batch: Array[org.apache.spark.sql.Row],
-                          maxDocs: Long): Option[DataFrame] = {
+                          maxDocs: Long,
+                          resident: Option[MinhashStore.Resident])
+      : Option[DataFrame] = {
     import scala.collection.mutable
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -313,21 +342,28 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
     val members = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Long]]
     docs.foreach(d => bandKeys(d.getSeq[Long](1)).foreach(k =>
       members.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += id(d)))
-    if (members.nonEmpty && wh.exists(sigTable)) {
-      // a full scan of the signature table under a key-set filter (the
-      // table's (band, bucket) bucketing cannot prune on a key set). A
-      // UDF over the set, not `bucket IN (…)`: a literal list of
-      // batch × bands strings made the route slower than the Spark
-      // route from ~4,000 documents (ScaleProbe `mhgate`: 4.7 vs 3.7 s;
-      // 17.8 vs 5.0 s at 16,000); the UDF plans as one expression
-      val keys = members.keySet.toSet
-      val touched = udf((band: Int, bucket: String) => keys((band, bucket)))
-      graft.core.DriverRoute.collect(wh.readBucketed(sigTable)
-          .filter(touched(col("band"), col("bucket")))
-          .select("id", "band", "bucket"), maxDocs * cfg.bands)
-        .getOrElse(return None)
-        .foreach(t => if (!t.isNullAt(0) && !t.isNullAt(1))
-          members.get((t.getInt(1), t.getString(2))).foreach(_ += id(t)))
+    resident match {
+      case Some(r) =>
+        val held = members.keysIterator.map(k => r.sig.get(k).fold(0L)(_.size.toLong)).sum
+        if (held > maxDocs * cfg.bands) return None
+        members.foreach { case (k, m) => r.sig.get(k).foreach(m ++= _) }
+      case None if members.nonEmpty && wh.exists(sigTable) =>
+        // a full scan of the signature table under a key-set filter (the
+        // table's (band, bucket) bucketing cannot prune on a key set). A
+        // UDF over the set, not `bucket IN (…)`: a literal list of
+        // batch × bands strings made the route slower than the Spark
+        // route from ~4,000 documents (ScaleProbe `mhgate`: 4.7 vs 3.7 s;
+        // 17.8 vs 5.0 s at 16,000); the UDF plans as one expression
+        val keys = members.keySet.toSet
+        val touched = udf((band: Int, bucket: String) => keys((band, bucket)))
+        graft.core.DriverRoute.collect(wh.readBucketed(sigTable)
+            .filter(touched(col("band"), col("bucket")))
+            .select("id", "band", "bucket"), maxDocs * cfg.bands,
+            "minhash.ingest/sig")
+          .getOrElse(return None)
+          .foreach(t => if (!t.isNullAt(0) && !t.isNullAt(1))
+            members.get((t.getInt(1), t.getString(2))).foreach(_ += id(t)))
+      case None =>
     }
     val candidates = mutable.LinkedHashSet.empty[(Long, Long)]
     members.valuesIterator
@@ -344,15 +380,21 @@ final class MinhashStore(protected val wh: graft.sources.Warehouse,
     docs.foreach(d => addSet(id(d), d.getSeq[Long](2)))
     val oldIds = candidates.iterator.flatMap(p => Iterator(p._1, p._2))
       .filterNot(newIds).toSet
-    if (oldIds.nonEmpty && wh.exists(setTable)) {
-      val store = wh.readBucketed(setTable)
-      // literals of the column's own type keep the bucket pruning
-      val idType = store.schema("id").dataType
-      graft.core.DriverRoute.collect(store
-          .filter(col("id").isin(oldIds.toSeq.map(lit(_).cast(idType)): _*))
-          .select("id", "hset"), maxDocs)
-        .getOrElse(return None)
-        .foreach(r => if (!r.isNullAt(0)) addSet(id(r), r.getSeq[Long](1)))
+    resident match {
+      case Some(r) =>
+        val held = oldIds.toSeq.flatMap(i => r.sets.getOrElse(i, Nil).map(i -> _))
+        if (held.size > maxDocs) return None
+        held.foreach { case (i, s) => addSet(i, r.asSeq(s)) }
+      case None if oldIds.nonEmpty && wh.exists(setTable) =>
+        val store = wh.readBucketed(setTable)
+        // literals of the column's own type keep the bucket pruning
+        val idType = store.schema("id").dataType
+        graft.core.DriverRoute.collect(store
+            .filter(col("id").isin(oldIds.toSeq.map(lit(_).cast(idType)): _*))
+            .select("id", "hset"), maxDocs, "minhash.ingest/set")
+          .getOrElse(return None)
+          .foreach(r => if (!r.isNullAt(0)) addSet(id(r), r.getSeq[Long](1)))
+      case None =>
     }
     val rows = for {
       (a, b) <- candidates.toSeq
@@ -453,6 +495,33 @@ object MinhashStore {
     * 1.99 vs 1.69 s at 2,000, 6.0 vs 3.7 s at 8,000). A larger delta
     * pre-filters on Spark and rejoins the driver route at [[MaxDriverDocs]]. */
   private[graft] val MaxDriverPreFilterDocs: Long = 1750
+
+  /** The rows of a store's two tables held on the driver, as
+    * [[MinhashStore.extendResident]] adds them: the signature table as
+    * its (band, bucket) → ids index and the set table as id → sets, each
+    * the multiset a read of the table returns.
+    * [[footprint]] counts the rows held plus their set elements. */
+  private[graft] final class Resident {
+    import scala.collection.mutable
+    private[operators] val sig =
+      mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[Long]]
+    private[operators] val sets =
+      mutable.HashMap.empty[Long, mutable.ArrayBuffer[Array[Long]]]
+    private var units = 0L
+    def footprint: Long = units
+    private[operators] def addSig(id: Long, band: Int, bucket: String): Unit = {
+      sig.getOrElseUpdate((band, bucket), mutable.ArrayBuffer.empty) += id
+      units += 1
+    }
+    // a set is kept unboxed; a null set stays null, as a read returns it
+    private[operators] def addSet(id: Long, hset: Seq[Long]): Unit = {
+      sets.getOrElseUpdate(id, mutable.ArrayBuffer.empty) +=
+        (if (hset == null) null else hset.toArray)
+      units += 1 + (if (hset == null) 0 else hset.size)
+    }
+    private[operators] def asSeq(a: Array[Long]): Seq[Long] =
+      if (a == null) null else scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+  }
 
   /** Jaccard of two distinct-hash sets, as [[Dedup.exactJaccardFromSets]]
     * computes it: |A ∩ B| / |A ∪ B|, 0.0 for an empty union. */

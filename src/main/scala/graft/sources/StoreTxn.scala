@@ -219,6 +219,10 @@ object StoreTxn {
   def getKv(root: String, k: String): Option[String] =
     readCommit(commitFile(canon(root))).kv.get(k)
 
+  /** Whether a transaction on `root` is open in this JVM: a
+    * [[transact]] now would join it rather than commit. */
+  private[graft] def isOpen(root: String): Boolean = active.containsKey(canon(root))
+
   /** The live directory of the root-relative directory `rel`, as an
     * absolute path: the version the commit record names, or `rel`
     * itself before any transaction published one. */

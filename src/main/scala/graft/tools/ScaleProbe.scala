@@ -18,6 +18,10 @@ import graft.operators.{MinhashConfig, MinhashStore, Pipeline, SimhashConfig, Si
   *    and curation pre-filter, driver route vs Spark route per batch
   *    size, the source of [[graft.operators.MinhashStore.MaxDriverDocs]]
   *    and [[graft.operators.MinhashStore.MaxDriverPreFilterDocs]];
+  *  - `resident <docsPath> <root> [storeDocs…]` — warm 100-document
+  *    curation deltas into stores of each size, with the resident state
+  *    and without it, the source of
+  *    [[graft.operators.Pipeline.CurationStore.MaxResident]];
   *  - `incr <docsPath> <whRoot>` — MinHash and SimHash store ingests
   *    (Spark route, above the gate) vs the full-corpus recompute;
   *  - `e2e <docsPath> <root>` — curate → mixture → BPE → pack → shards
@@ -192,6 +196,74 @@ object ScaleProbe {
     }
   }
 
+  /** What the curation store's resident state buys and costs per store
+    * size: one instance with no residency bound fills a store through
+    * `storeDocs` in driver-route ingests of
+    * [[MinhashStore.MaxDriverPreFilterDocs]] documents (only such
+    * ingests keep the state); at each size it and a second instance, on
+    * a copy of the store, with residency at gate 0 take the same `deltas`
+    * 100-document deltas, alternating which goes first. Per size it
+    * prints each arm's median delta wall and jobs per delta (the first
+    * delta, a warm-up, excluded), and the state's footprint (rows plus
+    * set elements) and estimated heap bytes after the last delta. Kept
+    * and retracted counts must agree between the arms. */
+  private def residentProbe(spark: SparkSession, docsPath: String, root: String,
+                            storeDocs: Seq[Long], deltas: Int = 5): Unit = {
+    val docs = spark.read.parquet(docsPath)
+    val cfg = Pipeline.CurateConfig(minQuality = 0.0, maxRepetition = 1.0)
+    // the resident arm is unbounded: the probe measures what the state
+    // costs at each size, the bound is chosen from that
+    val base = new Pipeline.CurationStore(spark, s"$root/base", "probe", cfg)
+    def ingest(st: Pipeline.CurationStore, from: Long, until: Long, gate: Long) =
+      st.ingestGated(docs.filter(col("doc_id") >= from && col("doc_id") < until),
+        "doc_id", "text", _ => (), false, MinhashStore.MaxDriverDocs,
+        graft.operators.Dedup.DefaultMaxDriverEdges, maxResident = gate)
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
+    var next = 0L
+    storeDocs.foreach { size =>
+      time(s"resident_store_build($size)") {
+        (next until size by MinhashStore.MaxDriverPreFilterDocs).foreach(from =>
+          ingest(base, from, math.min(from + MinhashStore.MaxDriverPreFilterDocs, size),
+            Long.MaxValue))
+      }
+      require(base.residentSize.isDefined,
+        s"$root/base holds no state at $size documents — start from an empty root")
+      next = size
+      val copy = s"$root/gate0_$size"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$root/base"),
+        new java.io.File(copy))
+      val arms = Seq(("resident", Long.MaxValue, base),
+        ("gate0", 0L, new Pipeline.CurationStore(spark, copy, "probe", cfg)))
+      val walls = arms.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+      val jobCounts = arms.map(_._1 -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
+      (0 until deltas).foreach { d =>
+        val counts = (if (d % 2 == 0) arms else arms.reverse).map { case (arm, gate, st) =>
+          val j0 = jobs.get
+          val t0 = System.nanoTime()
+          val delta = ingest(st, next, next + 100, gate)
+          val wall = (System.nanoTime() - t0) / 1e9
+          Thread.sleep(200) // the listener bus delivers job starts asynchronously
+          if (d > 0) { walls(arm) += wall; jobCounts(arm) += jobs.get - j0 }
+          arm -> (delta.kept.count(), delta.retracted.count())
+        }.toMap
+        require(counts.values.toSet.size == 1, s"the arms disagree: $counts")
+        next += 100
+      }
+      def median(ws: Seq[Double]) = ws.sorted.apply(ws.size / 2)
+      val state = arms.head._3.residentSize
+      println(f"[probe] resident store=$size%7d" + arms.map { case (arm, _, _) =>
+          f"  $arm ${median(walls(arm).toSeq)}%5.2f s ${jobCounts(arm).sum.toDouble / jobCounts(arm).size}%4.1f jobs"
+        }.mkString +
+        s"  footprint=${state.fold("none")(_._1.toString)}" +
+        s"  bytes=${state.fold("none")(s => f"${s._2 / 1e6}%.0f MB")}" +
+        s"  (${arms.map { case (a, _, _) => walls(a).map(w => f"$w%.2f").mkString(s"$a ", " ", "") }.mkString("; ")})")
+    }
+  }
+
   /** The composed thing a real training-data run is: curate (surgical
     * decon) → per-source repeat-factor mixture → BPE encode → pack to
     * fixed sequences → shuffled shards + manifests — ONE run, so
@@ -309,11 +381,15 @@ object ScaleProbe {
       case "mhgate" :: docsPath :: whRoot :: storeDocs :: sizes =>
         mhGateProbe(spark, docsPath, whRoot, storeDocs.toLong,
           if (sizes.isEmpty) Seq(1000L, 4000L, 16000L) else sizes.map(_.toLong))
+      case "resident" :: docsPath :: root :: sizes =>
+        residentProbe(spark, docsPath, root,
+          if (sizes.isEmpty) Seq(1000L, 10000L, 100000L) else sizes.map(_.toLong))
       case "e2e" :: docsPath :: root :: Nil =>
         e2eProbe(spark, docsPath, root)
       case _ =>
         println("usage: gen <docs> <n> <dupRate> | " +
           "mhgate <docs> <whRoot> <storeDocs> [sizes…] | " +
+          "resident <docs> <root> [storeDocs…] | " +
           "incr <docs> <whRoot> | e2e <docs> <root>")
     }
     spark.stop()

@@ -148,10 +148,11 @@ class SmallDeltaSpec extends SparkSpec {
   }
 
   /** The rows of a curation store's three bucketed tables (exact hashes,
-    * MinHash signatures, MinHash sets), each sorted. */
+    * MinHash signatures, MinHash sets), each sorted, read from their live
+    * versions. */
   private def storeTables(st: Pipeline.CurationStore): Seq[Seq[String]] = {
     val wh = new Warehouse(spark, st.storeRoot)
-    Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set").map(t =>
+    Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set").map(wh.live).map(t =>
       if (wh.exists(t)) wh.readBucketed(t).collect().map(_.toString).toSeq.sorted
       else Nil)
   }
@@ -179,11 +180,13 @@ class SmallDeltaSpec extends SparkSpec {
     "host", minRankFp = 5L)
 
   /** Three ingests of generated batches (plus the bridging documents and,
-    * with eval texts, the planted quotes) into two stores under `o`, one
-    * at gate 0 and one at the default gates: kept, retracted, audit rows
-    * and store tables equal per ingest and retractions typed like the
-    * batch ids, then a batch with a null id rejected on both routes with
-    * the store untouched, and equal labels. Returns the audit stages seen. */
+    * with eval texts, the planted quotes) into three stores under `o`: one
+    * at gate 0, one at the default gates (resident after its first
+    * ingest) and one at the default gates with residency at gate 0: kept,
+    * retracted, audit rows and store tables equal per ingest and
+    * retractions typed like the batch ids, then a batch with a null id
+    * rejected on every route with the store untouched, and equal labels.
+    * Returns the audit stages seen. */
   private def routesAgree(o: Options): Set[String] = {
     var stagesSeen = Set.empty[String]
     for (longIds <- Seq(true, false)) {
@@ -191,14 +194,20 @@ class SmallDeltaSpec extends SparkSpec {
       val planted = if (o.eval) Seq(quoting, evalSpan) else Nil
       val batches = Seq(bridgeA +: bridgeB +: (planted.take(1) ++ gen(0)), gen(1),
         bridgeC +: (planted.drop(1) ++ gen(2)))
-      val stores = Seq(0L, 1L).map(_ => new Pipeline.CurationStore(spark,
+      // the gate of each store: 0 = Spark routes, 1 = default gates,
+      // 2 = default gates with residency at gate 0
+      val gates = Seq(0L, 1L, 2L)
+      val stores = gates.map(_ => new Pipeline.CurationStore(spark,
         freshRoot(), "t", o.cfg,
         evalTexts = Option.when(o.eval)(Seq(s"quoted: $evalSpan").toDF("text")),
         authority = Option.when(o.authority)(authorityGate)))
       def input(b: DataFrame) = if (o.authority) hosted(b) else b
-      def ingest(st: Pipeline.CurationStore, gate: Long, b: DataFrame) =
-        if (gate == 0) st.ingestGated(b, "id", "text", _ => (), o.audit, 0, 0)
-        else st.ingest(b, "id", "text", withAudit = o.audit)
+      def ingest(st: Pipeline.CurationStore, gate: Long, b: DataFrame) = gate match {
+        case 0L => st.ingestGated(b, "id", "text", _ => (), o.audit, 0, 0)
+        case 1L => st.ingest(b, "id", "text", withAudit = o.audit)
+        case _ => st.ingestGated(b, "id", "text", _ => (), o.audit,
+          MinhashStore.MaxDriverDocs, Dedup.DefaultMaxDriverEdges, maxResident = 0)
+      }
       def ids(df: DataFrame) =
         df.select(col("id").cast("long")).as[Long].collect().sorted.toSeq
       val idType = if (longIds) LongType else IntegerType
@@ -207,17 +216,18 @@ class SmallDeltaSpec extends SparkSpec {
       batches.foreach { texts =>
         val b = input(batch(texts, next, longIds))
         next += texts.size
-        val Seq(spark0, driver) = stores.zip(Seq(0L, 1L)).map { case (st, gate) =>
+        val Seq(spark0, driver, unheld) = stores.zip(gates).map { case (st, gate) =>
           val d = ingest(st, gate, b)
           assert(d.retracted.schema.map(_.dataType) === Seq(idType))
           (ids(d.kept), ids(d.retracted),
             d.audit.map(_.collect().map(_.toString).sorted.toSeq))
         }
         assert(driver === spark0, s"$o, long ids $longIds, batch from $next")
+        assert(unheld === spark0, s"$o, long ids $longIds, batch from $next")
         assert(spark0._3.isDefined === o.audit)
         stagesSeen ++= spark0._3.toSeq.flatten.map(_.split(",")(1))
-        val Seq(tables0, tables1) = stores.map(storeTables)
-        assert(tables0.forall(_.nonEmpty) && tables1 === tables0,
+        val Seq(tables0, tables1, tables2) = stores.map(storeTables)
+        assert(tables0.forall(_.nonEmpty) && tables1 === tables0 && tables2 === tables0,
           s"$o, long ids $longIds, batch from $next")
         retracted += spark0._2.size
       }
@@ -226,14 +236,14 @@ class SmallDeltaSpec extends SparkSpec {
       val withNull = input(Seq[(Option[Long], String)]((Some(next.toLong), bridgeA),
           (None, bridgeB)).toDF("id", "text")
         .select(col("id").cast(if (longIds) "long" else "int"), col("text")))
-      stores.zip(Seq(0L, 1L)).foreach { case (st, gate) =>
+      stores.zip(gates).foreach { case (st, gate) =>
         val e = intercept[IllegalArgumentException](ingest(st, gate, withNull))
         assert(e.getMessage.contains("1 batch rows have a null id"), e.getMessage)
         assert(st.maxIngestedId === Some(next - 1L))
       }
-      val Seq(l0, l1) =
+      val Seq(l0, l1, l2) =
         stores.map(_.readLabels.as[(Long, Long)].collect().sorted.toSeq)
-      assert(l1 === l0, s"$o, long ids $longIds")
+      assert(l1 === l0 && l2 === l0, s"$o, long ids $longIds")
     }
     stagesSeen
   }
@@ -276,9 +286,11 @@ class SmallDeltaSpec extends SparkSpec {
     * near-dups of stored documents (dropped, not retracting), copies and
     * two documents of new words. With `retract` the bulk also holds the
     * bridged pair and the measured delta the bridging document, which
-    * retracts the pair's kept higher id. */
-  private def warmDelta(store: Pipeline.CurationStore,
-                        retract: Boolean = false): Jobs = {
+    * retracts the pair's kept higher id. `afterBulk` gives the instance
+    * that takes both deltas, from the one that took the bulk. */
+  private def warmDelta(store: Pipeline.CurationStore, retract: Boolean = false,
+                        afterBulk: Pipeline.CurationStore => Pipeline.CurationStore =
+                          identity): Jobs = {
     val gen = sample(genBatches, 5L).flatten
     val texts = gen ++ (if (retract) Seq(bridgeA, bridgeB) else Nil)
     store.ingest(batch(texts, 0, longIds = true), "id", "text")
@@ -286,8 +298,9 @@ class SmallDeltaSpec extends SparkSpec {
       batch(texts.take(6).map(_ + s" $word") ++ texts.slice(6, 9) ++
         Seq(1, 2).map(k => (0 until 8).map(j => s"$word$k$j").mkString(" ")) ++ extra,
         from, longIds = true)
-    store.ingest(delta(texts.size, "hotel"), "id", "text")
-    val (d, ran) = Jobs.during(spark)(store.ingest(delta(texts.size + 11, "india",
+    val warm = afterBulk(store)
+    warm.ingest(delta(texts.size, "hotel"), "id", "text")
+    val (d, ran) = Jobs.during(spark)(warm.ingest(delta(texts.size + 11, "india",
       if (retract) Seq(bridgeC) else Nil), "id", "text"))
     val kept = d.kept.select("id").as[Long].collect()
     assert(kept.length >= 2 && kept.length < 11)
@@ -296,24 +309,103 @@ class SmallDeltaSpec extends SparkSpec {
     ran
   }
 
-  // the batch collect, the exact-table read, the signature-table read,
-  // the labels read and the four state writes
-  test("a warm small curation delta with no retraction runs 8 jobs") {
+  // the four state writes: the batch is a local relation, so its collect
+  // starts no job (a parquet batch adds one), and the exact, signature,
+  // set and labels rows come from the store's resident state
+  test("a warm small curation delta with no retraction runs 4 jobs") {
     val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg))
-    assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
+    assert(ran.jobs.size === 4, ran.jobs.mkString("\n---\n"))
   }
 
-  test("a warm small curation delta with eval texts runs 8 jobs") {
+  test("a warm small curation delta with eval texts runs 4 jobs") {
     val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg,
       evalTexts = Some(Seq(s"quoted: $evalSpan").toDF("text"))))
-    assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
+    assert(ran.jobs.size === 4, ran.jobs.mkString("\n---\n"))
   }
 
   // the retractions come from the labels the delta already holds
-  test("a warm small curation delta that retracts runs 8 jobs") {
+  test("a warm small curation delta that retracts runs 4 jobs") {
     val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg),
       retract = true)
+    assert(ran.jobs.size === 4, ran.jobs.mkString("\n---\n"))
+  }
+
+  // a compaction rewrites the rows unchanged, so the state it found
+  // holds at the epoch it commits
+  test("a warm small curation delta after a compaction runs 4 jobs") {
+    val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg),
+      afterBulk = st => { st.compact(); st })
+    assert(ran.jobs.size === 4, ran.jobs.mkString("\n---\n"))
+  }
+
+  // an instance opened on a store it did not fill holds no state and
+  // loads none: each delta also reads the exact, signature, set and
+  // labels rows it touches
+  test("small curation deltas of an instance opened on a filled store run 8 jobs") {
+    val ran = warmDelta(new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg),
+      afterBulk = st => new Pipeline.CurationStore(spark, st.storeRoot, "t", curateCfg))
     assert(ran.jobs.size === 8, ran.jobs.mkString("\n---\n"))
+  }
+
+  /** Observed results of `st`'s ingest of `b` — kept, retracted, audit,
+    * the three tables and the labels — and those of a fresh instance's
+    * ingest of `b` into a copy of the root as it was before. */
+  private def againstFresh(st: Pipeline.CurationStore, b: DataFrame,
+                           ingest: (Pipeline.CurationStore, DataFrame) => Pipeline.CurateDelta)
+      : (Seq[Seq[String]], Seq[Seq[String]]) = {
+    val copy = freshRoot()
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(st.storeRoot),
+      new java.io.File(copy))
+    def observed(s: Pipeline.CurationStore) = {
+      val d = ingest(s, b)
+      Seq(d.kept, d.retracted, d.audit.get).map(_.collect().map(_.toString).sorted.toSeq) ++
+        storeTables(s) :+ s.readLabels.collect().map(_.toString).sorted.toSeq
+    }
+    (observed(st), observed(new Pipeline.CurationStore(spark, copy, "t", curateCfg)))
+  }
+
+  /** Four batches: the first holds A and B, the third the document that
+    * bridges them, the others generated documents and copies. */
+  private def residentBatches: Seq[DataFrame] = {
+    val gen = sample(genBatches, 23L).filter(_.nonEmpty)
+    val texts = Seq(bridgeA +: bridgeB +: gen(0), gen(1), bridgeC +: gen(2),
+      gen(0).take(3) ++ gen(1).take(3))
+    texts.scanLeft(0)(_ + _.size).zip(texts).map { case (from, t) =>
+      batch(t, from, longIds = true) }
+  }
+
+  test("resident state: another instance's ingest in between, an over-bound " +
+      "store and a compaction each equal a fresh instance") {
+    def audited(st: Pipeline.CurationStore, b: DataFrame) =
+      st.ingest(b, "id", "text", withAudit = true)
+    val Seq(b1, b2, b3, b4) = residentBatches
+    // another instance commits between two ingests of this one
+    val held = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
+    audited(held, b1)
+    audited(new Pipeline.CurationStore(spark, held.storeRoot, "t", curateCfg), b2)
+    val (afterOther, fresh1) = againstFresh(held, b3, audited)
+    assert(afterOther === fresh1)
+    assert(afterOther(1).nonEmpty, "the bridging document retracts a kept one")
+    val (warm, fresh4) = againstFresh(held, b4, audited)
+    assert(warm === fresh4)
+    // a bound the store outgrows: its ingests read the tables as before
+    val tight = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
+    def bounded(st: Pipeline.CurationStore, b: DataFrame) =
+      st.ingestGated(b, "id", "text", _ => (), true, MinhashStore.MaxDriverDocs,
+        Dedup.DefaultMaxDriverEdges, maxResident = 40)
+    Seq(b1, b2).foreach(bounded(tight, _))
+    val (overBound, fresh2) = againstFresh(tight, b3, bounded)
+    assert(overBound === fresh2)
+    // a compaction between two ingests
+    val compacted = new Pipeline.CurationStore(spark, freshRoot(), "t", curateCfg)
+    Seq(b1, b2).foreach(audited(compacted, _))
+    compacted.compact()
+    val (afterCompact, fresh3) = againstFresh(compacted, b3, audited)
+    assert(afterCompact === fresh3)
+    assert(afterCompact === afterOther && afterOther(3).nonEmpty,
+      "the same batches, the same results")
+    val (warmAgain, fresh5) = againstFresh(compacted, b4, audited)
+    assert(warmAgain === fresh5)
   }
 
   test("preFilter over a local relation starts no job and matches a parquet copy") {

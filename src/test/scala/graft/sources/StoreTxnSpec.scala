@@ -479,7 +479,7 @@ class StoreTxnSpec extends SparkSpec {
       val wh = new Warehouse(spark, st.storeRoot)
       Seq(d.kept, d.retracted, d.audit.get).map(rows) ++
         Seq("t_cur_exact", "t_cur_mh_sig", "t_cur_mh_set")
-          .map(t => rows(wh.readBucketed(t))) :+ rows(st.readLabels)
+          .map(t => rows(wh.readBucketed(wh.live(t)))) :+ rows(st.readLabels)
     }
     def store(root: String) = new Pipeline.CurationStore(spark, root, "t", cfg)
     // the routes agree (SmallDeltaSpec), so one clean store is the reference
@@ -516,6 +516,34 @@ class StoreTxnSpec extends SparkSpec {
           s"gate 0 $gate0, crash $crash")
         assert(retry.maxIngestedId === Some(43L))
       }
+    }
+    // a reused instance, resident after the bulk: the crashed delta puts
+    // its state back and the blind retry runs on the same instance
+    for (crash <- Seq(Some(1), Some(2), Some(3), None)) {
+      val st = store(tmp("graft_txn_matrix_resident_"))
+      ingest(st, gate0 = false, bulk)
+      crash match {
+        case Some(n) => StoreTxn.hooks.crashAfterTouches = n
+        case None => StoreTxn.hooks.crashBeforeCommit = true
+      }
+      crashAndExpire { ingest(st, gate0 = false, delta); () }
+      assert(observed(st, ingest(st, gate0 = false, delta)) === expected,
+        s"reused instance, crash $crash")
+      assert(st.maxIngestedId === Some(43L))
+    }
+    // the same for a crashed compaction: the blind retry compacts on the
+    // same instance, whose delta then equals the clean store's
+    for (crash <- Seq(Some(1), Some(2), Some(3), None)) {
+      val st = store(tmp("graft_txn_matrix_rescompact_"))
+      ingest(st, gate0 = false, bulk)
+      crash match {
+        case Some(n) => StoreTxn.hooks.crashAfterTouches = n
+        case None => StoreTxn.hooks.crashBeforeCommit = true
+      }
+      crashAndExpire(st.compact())
+      st.compact()
+      assert(observed(st, ingest(st, gate0 = false, delta)) === expected,
+        s"reused instance, compaction crash $crash")
     }
   }
 

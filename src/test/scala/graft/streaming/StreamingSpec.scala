@@ -330,6 +330,54 @@ class StreamingSpec extends SparkSpec {
       (6L, "exact_dup", Some(5L)), (7L, "near_dup", Some(1L))))
   }
 
+  test("curation catch-up: one store instance over four micro-batches, " +
+      "compacted between two of them, equals the batch route") {
+    val root = java.nio.file.Files.createTempDirectory("graft_curstream_c").toString
+    val wh = new graft.sources.Warehouse(spark, root)
+    val cfg = graft.operators.Pipeline.CurateConfig(minQuality = 0.0,
+      maxRepetition = 1.0, minhash = graft.operators.MinhashConfig(shingleN = 3,
+        bands = 16, rowsPerBand = 1, threshold = 0.5, seed = 7L))
+    // A and B differ in 4 of 20 tokens (no pair); C is a near-dup of both
+    // and retracts B; the others are copies, near-dups and new texts
+    val base = (1 to 20).map(i => f"t$i%02d").toVector
+    val c = base.updated(4, "c05").updated(11, "c12")
+    val (a, b) = (base.mkString(" "), c.updated(7, "b08").updated(15, "b16").mkString(" "))
+    val x = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    val batches = Seq(Seq(a, b, x), Seq(a, "kilo lima mike november oscar papa quebec"),
+      Seq(c.mkString(" "), x.replace("juliet", "kilo")),
+      Seq(x + " lima", "romeo sierra tango uniform victor whiskey xray"))
+    val docs = batches.scanLeft(0)(_ + _.size).zip(batches).map { case (from, t) =>
+      t.zipWithIndex.map { case (text, i) => ((from + i).toLong, text) } }
+    val store = new graft.operators.Pipeline.CurationStore(
+      spark, s"$root/store", "t", cfg)
+    val inDir = s"$root/in"
+    docs.foreach(_.toDF("doc_id", "text").coalesce(1)
+      .write.mode("append").parquet(inDir))
+    // a compaction after every second micro-batch: one after the second
+    // (and one after the fourth)
+    Streaming.runCurationAvailableNow(
+      spark.readStream.schema(docs.head.toDF("doc_id", "text").schema)
+        .option("maxFilesPerTrigger", 1).parquet(inDir),
+      store, wh, "cur_kept", "cur_retracted", s"$root/ckpt", "doc_id", "text",
+      autoCompact = Some(Streaming.CompactionPolicy(maxFiles = 1, checkEvery = 2)))
+    assert(store.maxIngestedId === Some(docs.flatten.size - 1L))
+    assert(new java.io.File(s"$root/store/warehouse").list()
+      .exists(_.startsWith("t_cur_exact__v")), "the store was compacted")
+    // the batch route: one ingest per micro-batch into a fresh store
+    val batchStore = new graft.operators.Pipeline.CurationStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_curstream_b").toString, "t", cfg)
+    val deltas = docs.map(d => batchStore.ingest(d.toDF("doc_id", "text"),
+      "doc_id", "text"))
+    def ids(dfs: Seq[org.apache.spark.sql.DataFrame]) =
+      dfs.map(_.select(col("id").cast("long")).as[Long].collect().toSeq)
+        .reduce(_ ++ _).sorted
+    assert(ids(Seq(wh.read("cur_kept"))) === ids(deltas.map(_.kept)))
+    assert(ids(Seq(wh.read("cur_retracted"))) === ids(deltas.map(_.retracted)))
+    assert(ids(deltas.map(_.retracted)) === Seq(1L), "C retracts B")
+    assert(store.readLabels.as[(Long, Long)].collect().sorted.toSeq ===
+      batchStore.readLabels.as[(Long, Long)].collect().sorted.toSeq)
+  }
+
   test("streaming crawl epochs: edge-stream catch-ups + per-epoch rank " +
       "maintenance + gated curation catch-ups ≡ the one-shot batch " +
       "composition (the q164 story as always-on sinks)") {
