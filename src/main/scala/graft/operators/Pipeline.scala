@@ -839,7 +839,7 @@ object Pipeline {
       val labelsDir = txn.newVersion(s"state/$labelsState")
       graft.core.Par.both(
         (if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels)
-          .write.parquet(labelsDir),
+          .write.options(graft.sources.LocalFs.writeOptions).parquet(labelsDir),
         wh.appendBucketed(exactTable, fresh.select("__h1", "__h2", "id"),
           Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets))
       (CurateDelta(kept, retracted, audit), labels)

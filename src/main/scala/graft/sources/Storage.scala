@@ -320,7 +320,7 @@ final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
     session.sessionState.executePlan(
       DataSource(session, "parquet", partitionColumns = partitionCol.toSeq,
         bucketSpec = Some(BucketSpec(nBuckets, bucketCols, bucketCols)),
-        options = Map("path" -> dir.getPath))
+        options = LocalFs.writeOptions + ("path" -> dir.getPath))
         .planForWriting(SaveMode.Append, aligned.queryExecution.analyzed))
       .assertCommandExecuted()
   }

@@ -426,4 +426,46 @@ class StorageSpec extends SparkSpec {
       assert(!q.exists(queue), queue)
     }
   }
+
+  test("store writes go through LocalFs: the stock write's files and modes") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import java.nio.file.attribute.PosixFilePermissions
+    // the mode map is chmod's: every octal digit of user, group and other
+    for (mode <- Seq("000", "600", "640", "644", "700", "750", "755", "777"))
+      assert(LocalFs.posix(new FsPermission(mode)) === PosixFilePermissions.fromString(
+        new FsPermission(mode).toString), mode)
+    // the write options reach the file system a write resolves; the
+    // session's cached one is left as it was
+    val root = tmpRoot()
+    val conf = spark.sessionState.newHadoopConfWithOptions(LocalFs.writeOptions)
+    assert(new Path(root).getFileSystem(conf).isInstanceOf[LocalFs])
+    assert(!FileSystem.get(spark.sparkContext.hadoopConfiguration).isInstanceOf[LocalFs])
+    val fs = new Path(root).getFileSystem(conf)
+    val f = new Path(s"$root/mode_probe")
+    fs.create(f).close()
+    fs.setPermission(f, new FsPermission("640"))
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(
+      java.nio.file.Paths.get(s"$root/mode_probe"))) === "rw-r-----")
+    // one local frame written both ways: the same rows, files and modes
+    val df = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    df.coalesce(1).write.parquet(s"$root/stock")
+    df.coalesce(1).write.options(LocalFs.writeOptions).parquet(s"$root/nofork")
+    def layout(dir: String) = {
+      val base = java.nio.file.Paths.get(dir)
+      val all = Files.walk(base).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      all.map { p =>
+        val kind = if (Files.isDirectory(p)) "dir" else p.getFileName.toString
+          .replaceAll("part-.*\\.parquet", "part.parquet")
+        kind -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.sorted
+    }
+    assert(layout(s"$root/nofork") === layout(s"$root/stock"))
+    assert(spark.read.parquet(s"$root/nofork").as[(Long, String)].collect().toSet ===
+      df.as[(Long, String)].collect().toSet)
+    // a bucketed store append writes through it and reads back
+    val wh = new Warehouse(spark, root)
+    wh.appendBucketed("nofork_b", df, Seq("k"), 8)
+    assert(wh.readBucketed("nofork_b").count() === 40)
+  }
 }
