@@ -104,11 +104,6 @@ object Bpe {
       s"minPairCount must be >= 1, got $minPairCount")
     val spark = docs.sparkSession
     val sc = spark.sparkContext
-    def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-      val mat = df.localCheckpoint(true)
-      (mat, Graph.pinnedBy(mat))
-    }
-
     // the word-type aggregate goes through the row-local TokenCounts
     // kernel for the same reason CorpusStats.vocabulary does: a raw
     // explode feeds a billion-row stream into a partial aggregate on a
@@ -121,7 +116,7 @@ object Bpe {
 
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
-    var (cur, prevIds) = checkpoint(base)
+    var (cur, prevIds) = Graph.checkpointPinned(base)
     // SMALL-VOCAB ROUTE (r12): the merge loop iterates over the WORD-TYPE
     // table, whose size follows Heaps' law — a fraction of the corpus at
     // any scale — and each distributed round costs an argmax job plus a
@@ -139,8 +134,7 @@ object Bpe {
     graft.core.DriverRoute.collect(cur.select(col("wstr"), col("freq")),
         maxDriverTypes).foreach { rows =>
       var words = rows.map(r => (r.getString(0), r.getLong(1)))
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      Graph.release(sc, prevIds)
       def ltUtf8(a: String, b: String): Boolean = {
         val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -201,18 +195,16 @@ object Bpe {
         val (l, r, c) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((k, l, r, c))
-        val (next, ids) = checkpoint(cur.select(
+        val (next, ids) = Graph.checkpointPinned(cur.select(
           replace(col("wstr"), lit(s" $l $r "), lit(s" $l$r "))
             .as("wstr"), col("freq")))
-        prevIds.foreach(i =>
-          sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+        Graph.release(sc, prevIds)
         cur = next
         prevIds = ids
         k += 1
       }
     }
-    prevIds.foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+    Graph.release(sc, prevIds)
 
     import spark.implicits._
     merges.toSeq.toDF("rank", "lhs", "rhs", "pair_cnt")

@@ -886,8 +886,7 @@ object Dedup {
       val (mat, ids) = checkpoint.lazyMark(next)
       changed = mat.filter(col("comp") < col("__old")).count()
       labels = mat.select("id", "comp")
-      (prevIds ++ stepIds).foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      Graph.release(sc, prevIds ++ stepIds)
       prevIds = ids
       iter += 1
     }

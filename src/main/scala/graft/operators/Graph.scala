@@ -232,6 +232,21 @@ object Graph {
     }.filter(persisted.contains).toSet
   }
 
+  /** `df` checkpointed — locally unless `reliable`, now unless `eager` is
+    * false — with the RDD ids it pinned ([[pinnedBy]]), so the caller
+    * [[release]]s its blocks deterministically instead of leaking one
+    * materialized frame per call until ContextCleaner GC. */
+  private[operators] def checkpointPinned(df: DataFrame, eager: Boolean = true,
+      reliable: Boolean = false): (DataFrame, Set[Int]) = {
+    val mat = if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+    (mat, pinnedBy(mat))
+  }
+
+  /** Unpersist the RDDs `ids` that are still persisted. */
+  private[operators] def release(sc: org.apache.spark.SparkContext,
+                                 ids: Set[Int]): Unit =
+    ids.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+
   /** Per-round materialization for the iterative operators (pageRank
     * here, [[Dedup.connectedComponents]]), with the failure-domain knob:
     *
@@ -254,11 +269,8 @@ object Graph {
   private[operators] final class RoundCheckpoint(
       sc: org.apache.spark.SparkContext, reliableDir: Option[String]) {
     reliableDir.foreach(sc.setCheckpointDir)
-    def apply(df: DataFrame): (DataFrame, Set[Int]) = {
-      val mat = if (reliableDir.isDefined) df.checkpoint(true)
-                else df.localCheckpoint(true)
-      (mat, pinnedBy(mat))
-    }
+    def apply(df: DataFrame): (DataFrame, Set[Int]) =
+      checkpointPinned(df, reliable = reliableDir.isDefined)
     /** Mark for checkpoint WITHOUT forcing a materialization job: the
       * caller's next action on the frame computes it, persists the
       * blocks, and truncates lineage in that ONE job — the rank loops
@@ -270,11 +282,8 @@ object Graph {
       * recompute the whole RDD for the file write (RDD.checkpoint's
       * documented behavior for unpersisted lineage), costing more than
       * the job it saves. */
-    def lazyMark(df: DataFrame): (DataFrame, Set[Int]) = {
-      if (reliableDir.isDefined) return apply(df)
-      val mat = df.localCheckpoint(false)
-      (mat, pinnedBy(mat))
-    }
+    def lazyMark(df: DataFrame): (DataFrame, Set[Int]) =
+      checkpointPinned(df, eager = reliableDir.isDefined, reliable = reliableDir.isDefined)
     /** The one-shot form for frames that live for the whole run (edge
       * list, node table): tracked so [[releasePinned]] can free them
       * when the run's RESULT no longer depends on them — a caller
@@ -291,8 +300,7 @@ object Graph {
     /** Unpersist every [[pin]]'d frame — call once the returned result
       * is itself materialized and lineage-free. */
     def releasePinned(): Unit = {
-      pinnedIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      release(sc, pinnedIds)
       pinnedIds = Set.empty
     }
   }
@@ -353,41 +361,15 @@ object Graph {
                tol: Option[Long] = None,
                maxDriverEdges: Long = DefaultMaxDriverRankEdges)
       : DataFrame = {
-    require(iters >= 0, s"pageRank iters must be >= 0, got $iters")
-    tol.foreach(t => require(t >= 0, s"pageRank tol must be >= 0, got $t"))
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"pageRank damping must satisfy 0 <= dampNum <= dampDen, " +
-        s"got $dampNum/$dampDen")
-    require(scale > 0, s"pageRank scale must be positive, got $scale")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val checkpoint = new RoundCheckpoint(sc, checkpointDir)
-
-    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    // the aggregated edge list is staged ONCE: outW, both sides of the
-    // contrib join, the node table, and the maxW control read all
-    // descend from it, and an unmaterialized `edges` pipeline (e.g.
-    // hostEdges parsing raw HTML) would otherwise re-run its parse per
-    // consumer — measured 4× on the q171 site-graph build (r12)
-    val eAgg = checkpoint.pin(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .filter(assert_true(col("w") >= 0,
-        lit("pageRank: negative edge weight")).isNull)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0))
+    requireRankParams("pageRank", iters, tol, dampNum, dampDen, scale)
+    val checkpoint = new RoundCheckpoint(edges.sparkSession.sparkContext, checkpointDir)
+    val eAgg = stagedEdges(checkpoint, edges, srcCol, dstCol, weightCol, "pageRank")
     // SMALL-GRAPH ROUTE (r13): at or under the gate the whole fixpoint
     // replays on the driver, bit-identically — see [[rankReplay]]
     rankReplay(checkpoint, eAgg, None, prior, iters, dampNum, dampDen,
       scale, tol, maxDriverEdges, "pageRank").foreach(df => return df)
-    val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
-    // the big, per-iteration-reused side: fixed src layout, lineage cut
-    val contribE = checkpoint.pin(eAgg.join(outW, "src")
-      .repartition(col("src")))
-    val nodes = contribE.select(col("src").as("node"))
-      .union(contribE.select(col("dst").as("node"))).distinct()
+    val (outW, contribE, nodes) = rankSides(checkpoint, eAgg)
     val nodesF = checkpoint.pin(nodes
-      .join(outW.select(col("src").as("node"), lit(true).as("__o")),
-        Seq("node"), "left")
       .select(col("node"), coalesce(col("__o"), lit(false)).as("has_out")))
 
     val n = nodesF.count() // bounded control read: node count
@@ -395,16 +377,9 @@ object Graph {
     // overflow guard: cold start keeps mass ≤ scale (it only shrinks);
     // a warm start may begin at ≤ 2·scale (see the prior contract), so
     // its bounds tighten ×2 — fail fast instead of silently wrapping
-    // (the zorderValue lesson). Largest products: rank_fp*w ≤
-    // massBound*maxWtot and dampNum*(inSum+dshare) ≤ dampNum*2*massBound.
+    // (the zorderValue lesson)
     val massBound = if (prior.isDefined) 2 * scale else scale
-    val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
-      .first().getLong(0) // bounded control read: max out-weight
-    require(maxW <= Long.MaxValue / massBound,
-      s"pageRank: mass bound $massBound * max out-weight=$maxW would " +
-        "overflow; lower scale or pre-normalize weights")
-    require(dampNum <= Long.MaxValue / (2 * massBound),
-      s"pageRank: dampNum=$dampNum * 2*mass bound=$massBound overflows")
+    requireNoOverflow(outW, massBound, dampNum, "pageRank")
     // n > scale ⇒ initR = 0 and every rank silently collapses to zero;
     // fail fast like the other fixed-point guards (raise scale instead)
     require(n <= scale,
@@ -429,14 +404,90 @@ object Graph {
             lit(s"pageRank: prior rank outside [0, $scale] — priors " +
               "must come from a pageRank run at the same scale")).isNull)
     }
-    // the dangling-mass control read RIDES each round's materialization
-    // job (lazyMark + the aggregate below is the round's ONE action in
-    // local-checkpoint mode; reliable mode pays the eager checkpoint's
-    // extra job by design) — round k's update consumes the mass
-    // computed when round k−1's output materialized, the identical
-    // value the old separate per-round aggregate read. In tol mode the
-    // L1 step rides the SAME aggregate, so tolerance-chased runs also
-    // submit one job per round instead of three.
+    rankRounds(checkpoint, init, contribE, n, iters, scale, tol, "pageRank") {
+      (inSum, dangling) =>
+        nodesF.join(inSum, Seq("node"), "left")
+          .select(col("node"), col("has_out"),
+            (lit(base) + idiv(
+              lit(dampNum) * (coalesce(col("__in"), lit(0L)) + lit(dangling / n)),
+              lit(dampDen))).as("rank_fp"))
+    }
+  }
+
+  private def requireRankParams(label: String, iters: Int, tol: Option[Long],
+                                dampNum: Long, dampDen: Long, scale: Long): Unit = {
+    require(iters >= 0, s"$label iters must be >= 0, got $iters")
+    tol.foreach(t => require(t >= 0, s"$label tol must be >= 0, got $t"))
+    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
+      s"$label damping must satisfy 0 <= dampNum <= dampDen, " +
+        s"got $dampNum/$dampDen")
+    require(scale > 0, s"$label scale must be positive, got $scale")
+  }
+
+  /** The (src, dst, w) edge list with parallel edges summed, pinned: it
+    * is staged ONCE because outW, both sides of the contrib join, the
+    * node table, and the maxW control read all descend from it, and an
+    * unmaterialized `edges` pipeline (e.g. hostEdges parsing raw HTML)
+    * would otherwise re-run its parse per consumer — measured 4× on the
+    * q171 site-graph build (r12). */
+  private def stagedEdges(checkpoint: RoundCheckpoint, edges: DataFrame,
+      srcCol: String, dstCol: String, weightCol: Option[String],
+      label: String): DataFrame = {
+    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
+    checkpoint.pin(edges
+      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+      .filter(assert_true(col("w") >= 0,
+        lit(s"$label: negative edge weight")).isNull)
+      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+      .filter(col("w") > 0))
+  }
+
+  /** The rounds' static sides over the staged edges: the per-src
+    * out-weights (src, wtot); the contributions (src, dst, w, wtot), the
+    * big, per-iteration-reused side — fixed src layout, lineage cut; and
+    * every node with `__o` true when it has out-edges (null otherwise). */
+  private def rankSides(checkpoint: RoundCheckpoint,
+                        eAgg: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
+    val contribE = checkpoint.pin(eAgg.join(outW, "src").repartition(col("src")))
+    val nodes = contribE.select(col("src").as("node"))
+      .union(contribE.select(col("dst").as("node"))).distinct()
+      .join(outW.select(col("src").as("node"), lit(true).as("__o")), Seq("node"), "left")
+    (outW, contribE, nodes)
+  }
+
+  /** Fail fast where the rounds' largest products would overflow:
+    * rank_fp*w ≤ massBound*maxWtot and dampNum*(inSum+dshare) ≤
+    * dampNum*2*massBound. */
+  private def requireNoOverflow(outW: DataFrame, massBound: Long, dampNum: Long,
+                                label: String): Unit = {
+    val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
+      .first().getLong(0) // bounded control read: max out-weight
+    require(maxW <= Long.MaxValue / massBound,
+      s"$label: mass bound $massBound * max out-weight=$maxW would " +
+        "overflow; lower scale or pre-normalize weights")
+    require(dampNum <= Long.MaxValue / (2 * massBound),
+      s"$label: dampNum=$dampNum * 2*mass bound=$massBound overflows")
+  }
+
+  /** The distributed rounds of [[pageRank]] and [[trustRank]] from `init`
+    * (node, has_out, …, rank_fp) over `n` nodes: `step` maps a round's
+    * in-flow (node, __in) and dangling mass to the next ranks, for
+    * `iters` rounds or until the L1 step is at most `tol`. Returns
+    * (node, rank_fp, rank) and releases every pin but the final round's.
+    *
+    * The dangling-mass control read RIDES each round's materialization
+    * job (lazyMark + the aggregate below is the round's ONE action in
+    * local-checkpoint mode; reliable mode pays the eager checkpoint's
+    * extra job by design) — round k's update consumes the mass
+    * computed when round k−1's output materialized, the identical
+    * value the old separate per-round aggregate read. In tol mode the
+    * L1 step rides the SAME aggregate, so tolerance-chased runs also
+    * submit one job per round instead of three. */
+  private def rankRounds(checkpoint: RoundCheckpoint, init: DataFrame,
+      contribE: DataFrame, n: Long, iters: Int, scale: Long, tol: Option[Long],
+      label: String)(step: (DataFrame, Long) => DataFrame): DataFrame = {
+    val sc = init.sparkSession.sparkContext
     def danglingOf(c: Column): Column =
       coalesce(sum(when(!col("has_out"), c)), lit(0L))
     var (ranks, prevIds) = checkpoint.lazyMark(init)
@@ -444,22 +495,16 @@ object Graph {
     // mass and row count in one job — a prior with several rows for one
     // node would duplicate that node
     val init0 = ranks.agg(danglingOf(col("rank_fp")), count(lit(1))).first()
-    require(init0.getLong(1) == n, duplicatePriorMsg("pageRank"))
+    require(init0.getLong(1) == n, duplicatePriorMsg(label))
     var dangling = init0.getLong(0)
     var it = 0
     var converged = false
     while (it < iters && !converged) {
-      val dshare = dangling / n
       val inSum = ranks.select(col("node").as("src"), col("rank_fp"))
         .join(contribE, "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(idiv(col("rank_fp") * col("w"), col("wtot"))).as("__in"))
-      val next = nodesF.join(inSum, Seq("node"), "left")
-        .select(col("node"), col("has_out"),
-          (lit(base) + idiv(
-            lit(dampNum) * (coalesce(col("__in"), lit(0L)) + lit(dshare)),
-            lit(dampDen))).as("rank_fp"))
-      val (mat, ids) = checkpoint.lazyMark(next)
+      val (mat, ids) = checkpoint.lazyMark(step(inSum, dangling))
       // tolerance mode: stop once the L1 step shrinks to `tol` ulps —
       // `iters` is then the CAP, not the count. The RESULT is still
       // exactly pageRank(edges, k) for the k where the rule fired —
@@ -484,8 +529,7 @@ object Graph {
       }
       dangling = row.getLong(0)
       tol.foreach(t => if (row.getLong(1) <= t) converged = true)
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      release(sc, prevIds)
       ranks = mat
       prevIds = ids
       it += 1
@@ -611,37 +655,16 @@ object Graph {
                 prior: Option[DataFrame] = None,
                 maxDriverEdges: Long = DefaultMaxDriverRankEdges)
       : DataFrame = {
-    require(iters >= 0, s"trustRank iters must be >= 0, got $iters")
-    tol.foreach(t => require(t >= 0, s"trustRank tol must be >= 0, got $t"))
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"trustRank damping must satisfy 0 <= dampNum <= dampDen, " +
-        s"got $dampNum/$dampDen")
-    require(scale > 0, s"trustRank scale must be positive, got $scale")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val checkpoint = new RoundCheckpoint(sc, checkpointDir)
-
-    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    // staged once — the pageRank edge-staging rationale verbatim
-    val eAgg = checkpoint.pin(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .filter(assert_true(col("w") >= 0,
-        lit("trustRank: negative edge weight")).isNull)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0))
+    requireRankParams("trustRank", iters, tol, dampNum, dampDen, scale)
+    val checkpoint = new RoundCheckpoint(edges.sparkSession.sparkContext, checkpointDir)
+    val eAgg = stagedEdges(checkpoint, edges, srcCol, dstCol, weightCol, "trustRank")
     // SMALL-GRAPH ROUTE (r13) — the pageRank gate verbatim, with the
     // distinct seed set collected under the same driver-memory bound
     rankReplay(checkpoint, eAgg, Some(seeds.select(col(seedCol)).distinct()),
       prior, iters, dampNum, dampDen, scale, tol, maxDriverEdges, "trustRank")
       .foreach(df => return df)
-    val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
-    val contribE = checkpoint.pin(eAgg.join(outW, "src")
-      .repartition(col("src")))
-    val nodes = contribE.select(col("src").as("node"))
-      .union(contribE.select(col("dst").as("node"))).distinct()
+    val (outW, contribE, nodes) = rankSides(checkpoint, eAgg)
     val nodesF = checkpoint.pin(nodes
-      .join(outW.select(col("src").as("node"), lit(true).as("__o")),
-        Seq("node"), "left")
       .join(seeds.select(col(seedCol).as("node"), lit(true).as("__s"))
         .distinct(), Seq("node"), "left")
       .select(col("node"),
@@ -661,13 +684,7 @@ object Graph {
     // seedShare mass ≤ scale) — the bound tightens ×2 when a prior is
     // set so the guard fails fast instead of silently wrapping
     val massBound = if (prior.isDefined) 2 * scale else scale
-    val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
-      .first().getLong(0) // bounded control read: max out-weight
-    require(maxW <= Long.MaxValue / massBound,
-      s"trustRank: mass bound $massBound * max out-weight=$maxW would " +
-        "overflow; lower scale or pre-normalize weights")
-    require(dampNum <= Long.MaxValue / (2 * massBound),
-      s"trustRank: dampNum=$dampNum * 2*mass bound=$massBound overflows")
+    requireNoOverflow(outW, massBound, dampNum, "trustRank")
     require(nSeeds <= scale,
       s"trustRank: seed count $nSeeds exceeds fixed-point scale $scale")
     val seedShare = scale / nSeeds
@@ -696,53 +713,19 @@ object Graph {
             lit(s"trustRank: prior rank outside [0, $scale] — priors " +
               "must come from a trustRank run at the same scale")).isNull)
     }
-    // the dangling control read rides each round's materialization job
-    // — the pageRank fold verbatim; the dangling·seedShare product
-    // stays a DRIVER-side BigInt scalar (it can exceed Long for large
-    // scales), never an executor expression
-    def danglingOf(c: Column): Column =
-      coalesce(sum(when(!col("has_out"), c)), lit(0L))
-    var (ranks, prevIds) = checkpoint.lazyMark(init)
-    val init0 = ranks.agg(danglingOf(col("rank_fp")), count(lit(1))).first()
-    require(init0.getLong(1) == n, duplicatePriorMsg("trustRank"))
-    var dangling = init0.getLong(0)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val dtel = ((BigInt(dangling) * seedShare) / scale).toLong
-      val inSum = ranks.select(col("node").as("src"), col("rank_fp"))
-        .join(contribE, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(idiv(col("rank_fp") * col("w"), col("wtot"))).as("__in"))
-      val next = nodesF.join(inSum, Seq("node"), "left")
-        .select(col("node"), col("has_out"), col("is_seed"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) + idiv(
-            lit(dampNum) * (coalesce(col("__in"), lit(0L)) +
-              when(col("is_seed"), lit(dtel)).otherwise(lit(0L))),
-            lit(dampDen))).as("rank_fp"))
-      val (mat, ids) = checkpoint.lazyMark(next)
-      val row = tol match {
-        case None => mat.agg(danglingOf(col("rank_fp"))).first()
-        case Some(_) =>
-          mat.select(col("node"), col("has_out"),
-              col("rank_fp").as("__n"))
-            .join(ranks.select(col("node"), col("rank_fp").as("__o")),
-              "node")
-            .agg(danglingOf(col("__n")),
-              coalesce(sum(abs(col("__n") - col("__o"))), lit(0L)))
-            .first()
-      }
-      dangling = row.getLong(0)
-      tol.foreach(t => if (row.getLong(1) <= t) converged = true)
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      ranks = mat
-      prevIds = ids
-      it += 1
+    // the pageRank rounds; the dangling·seedShare product stays a
+    // DRIVER-side BigInt scalar (it can exceed Long for large scales),
+    // never an executor expression
+    rankRounds(checkpoint, init, contribE, n, iters, scale, tol, "trustRank") {
+      (inSum, dangling) =>
+        val dtel = ((BigInt(dangling) * seedShare) / scale).toLong
+        nodesF.join(inSum, Seq("node"), "left")
+          .select(col("node"), col("has_out"), col("is_seed"),
+            (when(col("is_seed"), lit(base)).otherwise(lit(0L)) + idiv(
+              lit(dampNum) * (coalesce(col("__in"), lit(0L)) +
+                when(col("is_seed"), lit(dtel)).otherwise(lit(0L))),
+              lit(dampDen))).as("rank_fp"))
     }
-    checkpoint.releasePinned()
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
   }
 
   /** Authority gate: keep rows of `docs` whose `keyCol` node holds a

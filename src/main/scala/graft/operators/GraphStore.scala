@@ -216,11 +216,14 @@ final class EdgeStore(protected val wh: graft.sources.Warehouse, name: String,
   private val trustState = s"${name}_tranks"
   private def trustSeedKey = s"${name}_tranks_seedfp"
 
+  /** The committed rank state `state`, if any, read with the columns
+    * every rank writer emits (nodes are longs): no inference job. */
   private def storedState(spark: SparkSession,
                           state: String): Option[DataFrame] = {
     graft.sources.StoreTxn.recoverIfIdle(spark, wh.root)
     Some(graft.sources.StoreTxn.live(wh.root, s"state/$state"))
-      .filter(new java.io.File(_).isDirectory).map(spark.read.parquet(_))
+      .filter(new java.io.File(_).isDirectory)
+      .map(spark.read.schema("node bigint, rank_fp bigint").parquet(_))
   }
 
   /** The last [[pageRankMaintain]]'s rank table (node, rank_fp), or
@@ -261,20 +264,14 @@ final class EdgeStore(protected val wh: graft.sources.Warehouse, name: String,
   private def maintainCommit(spark: SparkSession, state: String,
       scale: Long, kvs: Seq[(String, String)] = Nil)(
       compute: Option[DataFrame] => DataFrame): DataFrame = {
-    val prior = storedState(spark, state)
-    val sc = spark.sparkContext
-    val ranks = compute(prior)
+    val ranks = compute(storedState(spark, state))
     graft.sources.StoreTxn.transact(spark, wh.root) {
-      val txn = graft.sources.StoreTxn.current(wh.root)
-      ranks.select("node", "rank_fp")
-        .write.parquet(txn.newVersion(s"state/$state"))
-      kvs.foreach { case (k, v) => txn.putKv(k, v) }
+      graft.sources.StoreWriter.version(wh.root, s"state/$state",
+        ranks.select("node", "rank_fp"))
+      kvs.foreach { case (k, v) => graft.sources.StoreTxn.current(wh.root).putKv(k, v) }
     }
-    Graph.pinnedBy(ranks).foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-    val committed = spark.read.parquet(
-      graft.sources.StoreTxn.live(wh.root, s"state/$state"))
-    committed.select(col("node"), col("rank_fp"),
+    Graph.release(spark.sparkContext, Graph.pinnedBy(ranks))
+    storedState(spark, state).get.select(col("node"), col("rank_fp"),
       (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
   }
 

@@ -833,13 +833,12 @@ object Pipeline {
       // ingests can attribute a store-dup drop to the document that holds
       // the text. The two state writes target disjoint directories and read
       // staged frames — overlap them (Par rationale: each is a
-      // sub-second fixed-cost write; txn registration happens on THIS
-      // thread before the writes start). Local labels are written by one
-      // task, as one file.
-      val labelsDir = txn.newVersion(s"state/$labelsState")
+      // sub-second fixed-cost write; each leg registers its directory
+      // with the transaction before its write starts). Local labels are
+      // written by one task, as one file.
       graft.core.Par.both(
-        (if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels)
-          .write.options(graft.sources.LocalFs.writeOptions).parquet(labelsDir),
+        graft.sources.StoreWriter.version(root, s"state/$labelsState",
+          if (DriverRoute.isLocal(labels)) labels.coalesce(1) else labels),
         wh.appendBucketed(exactTable, fresh.select("__h1", "__h2", "id"),
           Seq("__h1", "__h2"), cfg.minhash.nStoreBuckets))
       (CurateDelta(kept, retracted, audit), labels)

@@ -305,7 +305,7 @@ object QualityModels {
     // below scans it `iters` times, and an unmaterialized plan would
     // re-run tokenize+features per iteration; blocks released below
     // (the connectedComponents checkpoint-tracking idiom)
-    val (feats, ckptIds) = trackedCheckpoint(
+    val (feats, ckptIds) = Graph.checkpointPinned(
       train.select((labelCol +: featCols).map(col): _*))
     try {
       var w = Array.fill(featCols.size)(0L)
@@ -342,7 +342,7 @@ object QualityModels {
         }
       }
       w
-    } finally release(train.sparkSession, ckptIds)
+    } finally Graph.release(train.sparkSession.sparkContext, ckptIds)
   }
 
   /** [[trainPerceptron]] with per-feature POWER-OF-TWO up-scaling — the
@@ -411,20 +411,6 @@ object QualityModels {
     w.zip(shifts).map { case (wj, s) => wj << s }.toArray
   }
 
-  /** localCheckpoint with its RDD ids tracked, so training can
-    * unpersist its blocks deterministically instead of leaking one
-    * materialized stream per call until ContextCleaner GC (see
-    * [[Dedup.connectedComponents]], where the idiom comes from). */
-  private def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-    val mat = df.localCheckpoint(true)
-    (mat, Graph.pinnedBy(mat))
-  }
-
-  private def release(spark: org.apache.spark.sql.SparkSession,
-                      ids: Set[Int]): Unit =
-    ids.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(false)))
-
   /** The trained decision value w·x as a row-local integer Column over
     * a [[classifierFeatures]] frame — weights folded in as literals, so
     * full-corpus scoring is one codegen'd projection with NO exchange
@@ -482,7 +468,7 @@ object QualityModels {
     // update) — materialize once rather than re-running tokenize+explode
     // 2·iters times (the preFilter staging rule); blocks released in the
     // finally below (one leaked stream per training call otherwise)
-    val (fs, ckptIds) = trackedCheckpoint(
+    val (fs, ckptIds) = Graph.checkpointPinned(
       featStream(train, idCol, textCol, numFeatures).join(labels, Seq("id")))
     try {
     // SMALL-TRAINSET ROUTE (r12): each distributed iteration costs a
@@ -552,7 +538,7 @@ object QualityModels {
       }
     }
     w
-    } finally release(train.sparkSession, ckptIds)
+    } finally Graph.release(train.sparkSession.sparkContext, ckptIds)
   }
 
   /** Calibrate a decision threshold for ANY scorer (trained margins,

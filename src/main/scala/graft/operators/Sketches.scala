@@ -248,10 +248,9 @@ object Sketches {
           s"DistinctStore '$name' was created with ($have), got ($want)")
         case None => txn.putKv(paramKey, want)
       }
-      val live = graft.sources.StoreTxn.live(root, rel)
-      txn.touchPath(live.stripPrefix(s"$root/"))
-      distinctSketches(batch, Seq(groupCol), valueCol, lgK)
-        .write.mode("append").parquet(live)
+      graft.sources.StoreWriter.append(root,
+          graft.sources.StoreTxn.live(root, rel).stripPrefix(s"$root/"))(
+        distinctSketches(batch, Seq(groupCol), valueCol, lgK))
     }
 
     /** The group column and the live sketch rows. */
@@ -289,9 +288,9 @@ object Sketches {
     override def compact(): Unit =
       graft.sources.StoreTxn.transact(spark, root) {
         val (gcol, rows) = sketchRows()
-        rows.groupBy(col(gcol)).agg(hll_union_agg(col("hll")).as("hll"))
-          .repartition(nBaseBuckets, col(gcol))
-          .write.parquet(graft.sources.StoreTxn.current(root).newVersion(rel))
+        graft.sources.StoreWriter.version(root, rel,
+          rows.groupBy(col(gcol)).agg(hll_union_agg(col("hll")).as("hll"))
+            .repartition(nBaseBuckets, col(gcol)))
       }
   }
 }

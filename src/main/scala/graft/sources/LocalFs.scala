@@ -6,8 +6,8 @@ import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
 import org.apache.hadoop.io.nativeio.NativeIO
 
-/** The `file:` file system of a store write that passes
-  * [[LocalFs.writeOptions]]: Hadoop's checksummed local file system,
+/** The `file:` file system of every store write ([[StoreWriter]] passes
+  * [[LocalFs.writeOptions]]): Hadoop's checksummed local file system,
   * except that it sets a permission with chmod(2) through java.nio.
   * Without Hadoop's native library the stock one forks a `chmod` process
   * for every file and directory a write creates — each part file, its
@@ -44,7 +44,7 @@ object LocalFs {
     * the driver's commit and every task's part files — through
     * [[LocalFs]]. The session's cached file system stays as it is: the
     * write makes its own uncached instances. */
-  val writeOptions: Map[String, String] = Map(
+  private[sources] val writeOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[LocalFs].getName,
     "fs.file.impl.disable.cache" -> "true")
 }

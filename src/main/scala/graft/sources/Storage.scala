@@ -21,6 +21,20 @@ import graft.operators.Relational
   *  - idempotent append: left-anti on declared keys against the pruned
   *    sink slice before writing (google_search_console.py:516-549).
   *
+  * One writer, [[StoreWriter]], writes every parquet file under a store
+  * root — these stores' and every store's state versions — and makes
+  * three decisions so no caller does:
+  *
+  *  - file system: `file:` goes through [[LocalFs]], so no write forks
+  *    a `chmod` process per file and directory;
+  *  - transaction: an append registers its directory with an open
+  *    [[StoreTxn]] on the root before anything in it changes (the undo
+  *    log rolls it back with the ingest), and a state version is the
+  *    open transaction's new version of its directory;
+  *  - options: a dynamic partition overwrite is an option of the write,
+  *    never the session's `partitionOverwriteMode`, which a concurrent
+  *    query reads.
+  *
   * Scale notes: every store is a directory of parquet partitioned by a
   * date-derived column; Catalyst prunes partitions on read. A watermark
   * is one small file per (module, operation) holding an ISO-8601
@@ -49,12 +63,13 @@ final class StagingStore(spark: SparkSession, root: String) {
 
   /** An append must carry the recorded columns (see [[SchemaSidecar]]);
     * the append that creates the collection records its frame's schema. */
-  private def write(collection: String, df: DataFrame): Unit = {
-    val what = s"staging collection '$collection'"
-    SchemaSidecar.requireRecorded(schemaFile(collection), path(collection), what)
-    SchemaSidecar.checkOrRecord(schemaFile(collection), df.schema, what)
-    df.write.mode(SaveMode.Append).parquet(path(collection))
-  }
+  private def write(collection: String, df: DataFrame): Unit =
+    StoreWriter.append(root, s"staging/$collection") {
+      val what = s"staging collection '$collection'"
+      SchemaSidecar.requireRecorded(schemaFile(collection), path(collection), what)
+      SchemaSidecar.checkOrRecord(schemaFile(collection), df.schema, what)
+      df
+    }
 
   /** Read with the recorded schema: no inference job. */
   def readAll(collection: String): DataFrame = {
@@ -159,6 +174,48 @@ private[sources] object SchemaSidecar {
   }
 }
 
+/** The one writer of parquet under a store root (the file header has its
+  * three decisions). It never inspects the frame's plan: a caller that
+  * knows its frame is a local relation coalesces it to one task itself. */
+private[graft] object StoreWriter {
+
+  /** Append to the root-relative directory `rel`. `df` is evaluated
+    * after the registration, so a sidecar written while preparing it is
+    * under the undo log too. */
+  def append(root: String, rel: String, partitionBy: Seq[String] = Nil,
+             bucketSpec: Option[BucketSpec] = None)(df: => DataFrame): Unit = {
+    StoreTxn.touchIfActive(root, rel)
+    write(s"$root/$rel", SaveMode.Append, df, partitionBy, bucketSpec)
+  }
+
+  /** Write `df` as the open transaction's new version of the
+    * root-relative directory `rel` ([[StoreTxn.Txn.newVersion]]). */
+  def version(root: String, rel: String, df: DataFrame): Unit =
+    write(StoreTxn.current(root).newVersion(rel), SaveMode.ErrorIfExists, df)
+
+  /** Replace the directory `dir`, or with `dynamic` only the partitions
+    * `df` has rows in. Not under the undo log: an overwrite destroys the
+    * files an undo would keep. */
+  def overwrite(dir: String, df: DataFrame, partitionBy: Seq[String] = Nil,
+                dynamic: Boolean = false): Unit =
+    write(dir, SaveMode.Overwrite, df, partitionBy, options =
+      if (dynamic) Map("partitionOverwriteMode" -> "dynamic") else Map.empty)
+
+  /** DataFrameWriter takes a bucket spec only for a catalog table, so
+    * the file-source write plan is built directly. */
+  private def write(dir: String, mode: SaveMode, df: DataFrame, partitionBy: Seq[String] = Nil,
+                    bucketSpec: Option[BucketSpec] = None,
+                    options: Map[String, String] = Map.empty): Unit = {
+    val session = df.sparkSession
+    session.sessionState.executePlan(
+      DataSource(session, "parquet", partitionColumns = partitionBy,
+        bucketSpec = bucketSpec,
+        options = LocalFs.writeOptions ++ options + ("path" -> dir))
+        .planForWriting(mode, df.queryExecution.analyzed))
+      .assertCommandExecuted()
+  }
+}
+
 final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
 
   /** Canonicalized so the StoreTxn registry and the lease files agree
@@ -169,11 +226,11 @@ final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
 
   /** Partitioned append (WRITE_APPEND + TimePartitioning in the reference). */
   def append(table: String, df: DataFrame, partitionCol: String = "date"): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(partitionCol).parquet(path(table))
+    StoreWriter.append(root, s"warehouse/$table", Seq(partitionCol))(df)
 
   /** WRITE_TRUNCATE. */
   def truncate(table: String, df: DataFrame, partitionCol: String = "date"): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path(table))
+    StoreWriter.overwrite(path(table), df, Seq(partitionCol))
 
   /** Exactly-once append: drop rows whose `keys` already exist in the
     * sink, pruned to the incoming batch's partition values first so the
@@ -210,7 +267,7 @@ final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
     * format would express this as MERGE INTO), so this is a
     * partition-scoped read-modify-write: only partitions present in the
     * batch are read (anti-join out the matched keys, union the batch)
-    * and rewritten via DYNAMIC partition overwrite — untouched
+    * and rewritten by a dynamic partition overwrite — untouched
     * partitions are never read or written, keeping the cost
     * proportional to the batch's partitions, not the table. The merged
     * rows stage through a scratch path first because Spark (correctly)
@@ -232,16 +289,9 @@ final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
       .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates.select(cols: _*))
     val tmp = path(table) + "__merge_tmp"
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      spark.read.parquet(tmp).write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCol).parquet(path(table))
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    StoreWriter.overwrite(tmp, merged)
+    StoreWriter.overwrite(path(table), spark.read.parquet(tmp), Seq(partitionCol),
+      dynamic = true)
     StoreTxn.rmrf(new java.io.File(tmp))
   }
 
@@ -270,60 +320,50 @@ final class Warehouse(private[graft] val spark: SparkSession, root0: String) {
     * files — size `nBuckets` down when adding a partition column (the
     * two multiply). */
   def appendBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
-                     nBuckets: Int, partitionCol: Option[String] = None): Unit = {
-    // inside a store ingest, register the directory with the open
-    // transaction BEFORE anything (spec included) changes — write-ahead
-    StoreTxn.touchIfActive(root, s"warehouse/$table")
-    // sidecars BEFORE data: data without a spec could never be
-    // reopened, while a crash mid-data-write leaves a shell readBucketed
-    // reports accurately (see the data-file check there). EXISTING
-    // sidecars are validated, never rewritten: a rewrite before a data
-    // write that then fails would describe a layout the files don't have.
-    val spec = s"$nBuckets\n${bucketCols.mkString(",")}\n" +
-      partitionCol.fold("")(p => s"$p\n")
-    writeOrValidate(bucketSpecFile(table), spec, write = true)(prev =>
-      s"bucket layout mismatch for $table: store has " +
-        s"'${prev.trim.replace("\n", " / ")}', append requested " +
-        s"'${spec.trim.replace("\n", " / ")}' — a bucketed table's " +
-        "layout is fixed at creation (re-bucket = new table)")
-    val dir = new java.io.File(path(table))
-    SchemaSidecar.requireRecorded(schemaFile(table), dir.getPath, s"bucketed table '$table'")
-    SchemaSidecar.checkOrRecord(schemaFile(table), df.schema, s"bucketed table '$table'")
-    // ALIGN the frame's partitioning with the bucket function: a
-    // bucketed write emits one file per (task, bucket) pair, so an
-    // unaligned 32-task append of an 8-bucket table wrote 256 files per
-    // ingest (1.4-2.1 s vs 0.33 s, ~2.5× slower read-back) where the
-    // aligned write emits exactly nBuckets. The key is the writer's own
-    // bucket-id EXPRESSION, not the raw columns: EnsureRequirements
-    // elides a raw-column repartition over a bucketed scan of the same
-    // key, and the write then ran unaligned (Bm25Index compaction wrote
-    // 6 files for a 2-bucket table). The exchange carries only the
-    // delta; its task count is the shuffle parallelism (explicit, so
-    // AQE cannot coalesce it to one writer), and hashing the bucket-id
-    // VALUE keeps each bucket in one task while spreading the buckets
-    // over more tasks than repartition(nBuckets), whose id-value hash
-    // collisions put several buckets on one writer at small bucket
-    // counts. With a partition column the key is (partition dir, bucket id).
-    // A local relation (a small delta already on the driver) needs no
-    // exchange: ONE task writes it, and the writer's required ordering
-    // sorts that task's rows by (partition dir, bucket id), so it too
-    // emits at most nBuckets files per partition — one job, no shuffle.
-    val session = df.sparkSession
-    val aligned =
+                     nBuckets: Int, partitionCol: Option[String] = None): Unit =
+    // the writer registers the directory with an open transaction BEFORE
+    // anything (spec included) changes — write-ahead
+    StoreWriter.append(root, s"warehouse/$table", partitionCol.toSeq,
+        Some(BucketSpec(nBuckets, bucketCols, bucketCols))) {
+      // sidecars BEFORE data: data without a spec could never be
+      // reopened, while a crash mid-data-write leaves a shell readBucketed
+      // reports accurately (see the data-file check there). EXISTING
+      // sidecars are validated, never rewritten: a rewrite before a data
+      // write that then fails would describe a layout the files don't have.
+      val spec = s"$nBuckets\n${bucketCols.mkString(",")}\n" +
+        partitionCol.fold("")(p => s"$p\n")
+      writeOrValidate(bucketSpecFile(table), spec, write = true)(prev =>
+        s"bucket layout mismatch for $table: store has " +
+          s"'${prev.trim.replace("\n", " / ")}', append requested " +
+          s"'${spec.trim.replace("\n", " / ")}' — a bucketed table's " +
+          "layout is fixed at creation (re-bucket = new table)")
+      SchemaSidecar.requireRecorded(schemaFile(table), path(table), s"bucketed table '$table'")
+      SchemaSidecar.checkOrRecord(schemaFile(table), df.schema, s"bucketed table '$table'")
+      // ALIGN the frame's partitioning with the bucket function: a
+      // bucketed write emits one file per (task, bucket) pair, so an
+      // unaligned 32-task append of an 8-bucket table wrote 256 files per
+      // ingest (1.4-2.1 s vs 0.33 s, ~2.5× slower read-back) where the
+      // aligned write emits exactly nBuckets. The key is the writer's own
+      // bucket-id EXPRESSION, not the raw columns: EnsureRequirements
+      // elides a raw-column repartition over a bucketed scan of the same
+      // key, and the write then ran unaligned (Bm25Index compaction wrote
+      // 6 files for a 2-bucket table). The exchange carries only the
+      // delta; its task count is the shuffle parallelism (explicit, so
+      // AQE cannot coalesce it to one writer), and hashing the bucket-id
+      // VALUE keeps each bucket in one task while spreading the buckets
+      // over more tasks than repartition(nBuckets), whose id-value hash
+      // collisions put several buckets on one writer at small bucket
+      // counts. With a partition column the key is (partition dir, bucket id).
+      // A local relation (a small delta already on the driver) needs no
+      // exchange: ONE task writes it, and the writer's required ordering
+      // sorts that task's rows by (partition dir, bucket id), so it too
+      // emits at most nBuckets files per partition — one job, no shuffle.
       if (graft.core.DriverRoute.isLocal(df)) df.coalesce(1)
       else df.repartition(
-        math.max(nBuckets, session.sessionState.conf.numShufflePartitions),
+        math.max(nBuckets, df.sparkSession.sessionState.conf.numShufflePartitions),
         partitionCol.map(col).toSeq :+
           pmod(hash(bucketCols.map(col): _*), lit(nBuckets)): _*)
-    // DataFrameWriter takes a bucket spec only for a catalog table, so
-    // the file-source write plan is built directly
-    session.sessionState.executePlan(
-      DataSource(session, "parquet", partitionColumns = partitionCol.toSeq,
-        bucketSpec = Some(BucketSpec(nBuckets, bucketCols, bucketCols)),
-        options = LocalFs.writeOptions + ("path" -> dir.getPath))
-        .planForWriting(SaveMode.Append, aligned.queryExecution.analyzed))
-      .assertCommandExecuted()
-  }
+    }
 
   /** Read a bucketed table: a parquet relation over its directory with
     * the sidecars' bucket spec and schema, built on every call, so it
@@ -439,7 +479,7 @@ final class QueueStore(spark: SparkSession, root: String) {
   private def path(queue: String) = s"$root/queues/$queue"
 
   def enqueue(queue: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path(queue))
+    StoreWriter.append(root, s"queues/$queue")(df)
 
   /** Read the whole queue with the caller's `schema` (no inference job);
     * an empty DataFrame when absent. */

@@ -168,9 +168,9 @@ object StoreTxn {
   }
 
   /** Register a directory with the open transaction, if any — the hook
-    * [[Warehouse.appendBucketed]] calls so general (non-store) bucketed
-    * writes stay transaction-free. */
-  private[graft] def touchIfActive(root: String, rel: String): Unit =
+    * [[StoreWriter.append]] calls so a write outside a store ingest stays
+    * transaction-free. */
+  private[sources] def touchIfActive(root: String, rel: String): Unit =
     Option(active.get(canon(root))).foreach(_.touchPath(rel))
 
   /** Roll back a dangling intent if its writer is provably dead (no
@@ -304,7 +304,7 @@ object StoreTxn {
       * is RECURSIVE (entry paths relative to the directory): partitioned
       * tables write into `part=value` subdirectories, and a flat
       * snapshot would silently keep a crashed append's files there. */
-    def touchPath(rel: String): Unit = synchronized {
+    private[sources] def touchPath(rel: String): Unit = synchronized {
       if (!touched.contains(rel)) {
         // rel itself is a tab-separated FIELD on the intent line — a
         // tab or newline in it breaks the line's arity on recovery and

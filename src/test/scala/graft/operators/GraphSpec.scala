@@ -639,4 +639,23 @@ class GraphSpec extends SparkSpec {
       }
     } finally { stop.set(true); neighbour.join() }
   }
+
+  test("EdgeStore: the stored rank tables are read with their schema — no job") {
+    val wh = new graft.sources.Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft_egs_").toString)
+    val store = new EdgeStore(wh, "g",
+      EdgeStoreConfig(weightCol = Some("w"), nStoreBuckets = 2))
+    store.ingest(edges, "src", "dst")
+    val served = store.pageRankMaintain(spark, iters = 2)
+    store.trustRankMaintain(spark, iters = 2, Seq(1L).toDF("node"), "node")
+    val (ranks, jobs) = graft.Jobs.during(spark)(store.storedRanks(spark).get)
+    assert(jobs.jobs.isEmpty, s"storedRanks started ${jobs.jobs.size} jobs")
+    val (trust, tjobs) = graft.Jobs.during(spark)(store.storedTrustRanks(spark).get)
+    assert(tjobs.jobs.isEmpty, s"storedTrustRanks started ${tjobs.jobs.size} jobs")
+    assert(ranks.schema.map(f => (f.name, f.dataType.simpleString)) ===
+      Seq("node" -> "bigint", "rank_fp" -> "bigint"))
+    assert(trust.schema === ranks.schema)
+    assert(ranks.orderBy("node").collect().toSeq ===
+      served.select("node", "rank_fp").orderBy("node").collect().toSeq)
+  }
 }

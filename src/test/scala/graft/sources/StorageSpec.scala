@@ -467,5 +467,120 @@ class StorageSpec extends SparkSpec {
     val wh = new Warehouse(spark, root)
     wh.appendBucketed("nofork_b", df, Seq("k"), 8)
     assert(wh.readBucketed("nofork_b").count() === 40)
+
+    // every writer call: in a session whose own `file:` file system
+    // counts the permission changes it makes, a store write makes none —
+    // it resolves LocalFs — while the same write through DataFrameWriter
+    // makes some, and both leave the same files, modes and rows
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[ChmodCountingFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    val (store, stock) = (tmpRoot(), tmpRoot())
+    val (swh, t0) = (new Warehouse(s, store), java.sql.Timestamp.valueOf("2024-01-01 10:00:00"))
+    val rows = s.createDataFrame((1 to 40).map(i => (i.toLong, s"v$i"))).toDF("k", "v")
+    def dated(ids: Range) = s.createDataFrame(ids.map(i =>
+      (s"2024-01-0${i % 3 + 1}", i.toLong, i * 1.5))).toDF("date", "id", "x")
+    def tree(dir: String) = {
+      val base = java.nio.file.Paths.get(dir)
+      Files.walk(base).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filterNot(_.getFileName.toString.startsWith("_graft_")).map { p =>
+          val name = base.relativize(p).toString.replaceAll("part-[^/]*", "part")
+          name -> PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+        }.sorted
+    }
+    def read(dir: String) = s.read.parquet(dir).collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }.toString).sorted.toSeq
+    // `perFile = false` compares each path once: a write that reads files
+    // packs them into tasks in listing order, which follows the files'
+    // random names, so its part-file count per directory varies by run
+    def sameAsStock(what: String, dir: String, stockDir: String, perFile: Boolean = true)(
+        write: => Unit)(stockWrite: => Unit): Unit = {
+      ChmodCountingFs.calls.set(0)
+      write
+      assert(ChmodCountingFs.calls.get === 0, s"$what resolved the session's file system")
+      stockWrite
+      assert(ChmodCountingFs.calls.get > 0, s"the stock $what was not counted")
+      def paths(d: String) = if (perFile) tree(d) else tree(d).distinct
+      assert(paths(s"$store/$dir") === paths(s"$stock/$stockDir"), what)
+      assert(read(s"$store/$dir") === read(s"$stock/$stockDir"), what)
+    }
+    sameAsStock("staging append", "staging/c", "c")(
+      new StagingStore(s, store).appendAt("c", rows, t0))(
+      rows.withColumn("__ingested_at", lit(t0)).write.mode("append").parquet(s"$stock/c"))
+    sameAsStock("warehouse append", "warehouse/t", "t")(swh.append("t", dated(1 to 9)))(
+      dated(1 to 9).write.mode("append").partitionBy("date").parquet(s"$stock/t"))
+    sameAsStock("warehouse truncate", "warehouse/t", "t")(swh.truncate("t", dated(2 to 7)))(
+      dated(2 to 7).write.mode("overwrite").partitionBy("date").parquet(s"$stock/t"))
+    // the merge it replaces: a scratch copy, then a dynamic overwrite
+    val upd = dated(5 to 6).withColumn("x", col("x") + 1)
+    sameAsStock("warehouse merge", "warehouse/t", "t", perFile = false)(
+        swh.merge("t", upd, Seq("id"))) {
+      val parts = upd.select("date").distinct().collect().map(_.get(0)).toSeq
+      val affected = s.read.parquet(s"$stock/t").filter(col("date").isInCollection(parts))
+      affected.join(upd.select("id"), Seq("id"), "left_anti")
+        .unionByName(upd.select(affected.columns.map(col).toIndexedSeq: _*))
+        .write.mode("overwrite").parquet(s"$stock/t__merge_tmp")
+      s.read.parquet(s"$stock/t__merge_tmp").write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").partitionBy("date").parquet(s"$stock/t")
+    }
+    sameAsStock("queue enqueue", "queues/q", "q")(new QueueStore(s, store).enqueue("q", rows))(
+      rows.write.mode("append").parquet(s"$stock/q"))
+    sameAsStock("state version", "state/x__v1", "x")(StoreTxn.transact(s, store)(
+      StoreWriter.version(swh.root, "state/x", rows)))(rows.write.parquet(s"$stock/x"))
+    val sketched = rows.withColumn("g", col("k") % 3)
+    sameAsStock("DistinctStore append", "state/d_hll_sk", "d")(
+      new graft.operators.Sketches.DistinctStore(s, store, "d").ingest(sketched, "g", "v"))(
+      graft.operators.Sketches.distinctSketches(sketched, Seq("g"), "v", 12)
+        .write.mode("append").parquet(s"$stock/d"))
+  }
+
+  test("merge under a STATIC session replaces only the batch's partitions and " +
+      "leaves the session's overwrite mode alone") {
+    val s = spark.newSession()
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    s.conf.set(key, "STATIC")
+    val wh = new Warehouse(s, tmpRoot())
+    wh.append("m", s.createDataFrame(Seq(("2024-01-01", 1L, 1.0),
+      ("2024-01-02", 2L, 2.0), ("2024-01-03", 3L, 3.0))).toDF("date", "id", "v"))
+    // what each execution of the merge saw of the session's settings
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case q: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            seen.add(q.modifiedConfigs.get(key))
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      wh.merge("m", s.createDataFrame(Seq(("2024-01-02", 2L, 20.0),
+        ("2024-01-02", 4L, 40.0))).toDF("date", "id", "v"), Seq("id"))
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(wh.read("m").as[(Long, Double, String)].collect().sortBy(_._1).toSeq ===
+      Seq((1L, 1.0, "2024-01-01"), (2L, 20.0, "2024-01-02"),
+        (3L, 3.0, "2024-01-03"), (4L, 40.0, "2024-01-02")))
+    assert(s.conf.get(key) === "STATIC")
+    assert(!seen.isEmpty && seen.toArray.forall(_ == Some("STATIC")),
+      s"the merge's executions saw the overwrite mode $seen")
+  }
+}
+
+/** The stock `file:` file system, counting the permission changes it
+  * makes: without Hadoop's native library each forks a `chmod`. */
+final class ChmodCountingFs extends org.apache.hadoop.fs.LocalFileSystem(new ChmodCountingFs.Raw)
+
+object ChmodCountingFs {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
+
+  final class Raw extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def setPermission(p: org.apache.hadoop.fs.Path,
+                               permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+      calls.incrementAndGet()
+      super.setPermission(p, permission)
+    }
   }
 }

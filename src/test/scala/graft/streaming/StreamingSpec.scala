@@ -543,6 +543,44 @@ class StreamingSpec extends SparkSpec {
     assert(idx.search(Seq("word3"), k = 3).count() === 1L)
   }
 
+  test("curation sink with its delta tables under the store root: a crash " +
+      "before commit rolls the delta appends back, a blind retry equals a clean run") {
+    val inDir = java.nio.file.Files.createTempDirectory("graft_curcrash_in").toString
+    val schema = curDocs.toDF("doc_id", "text").schema
+    def stage(rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(inDir)
+    // the store and the kept/retracted tables share one root
+    def sink(root: String) = {
+      val wh = new graft.sources.Warehouse(spark, root)
+      val store = new graft.operators.Pipeline.CurationStore(spark, root, "t", curCfg)
+      (wh, () => Streaming.runCurationAvailableNow(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(inDir),
+        store, wh, "cur_kept", "cur_retracted", s"$root/_ckpt", "doc_id", "text"))
+    }
+    def state(wh: graft.sources.Warehouse) = Seq("cur_kept", "cur_retracted")
+      .filter(wh.exists).map(t => t -> wh.read(t).select("id", "__batch_id")
+        .as[(Long, Long)].collect().sorted.toSeq)
+    val crashed = java.nio.file.Files.createTempDirectory("graft_curcrash").toString
+    val (wh, catchUp) = sink(crashed)
+    stage(curDocs.filter(_._1 <= 5))
+    catchUp()
+    val first = state(wh)
+    stage(curDocs.filter(_._1 > 5))
+    graft.sources.StoreTxn.hooks.crashBeforeCommit = true
+    try intercept[Exception](catchUp())
+    finally graft.sources.StoreTxn.hooks.reset()
+    // the crashed ingest's delta appends were registered with its
+    // transaction: reopening the root rolls them back with it
+    graft.sources.StoreTxn.recoverIfIdle(spark, crashed)
+    assert(state(wh) === first)
+    catchUp() // the blind retry
+    val clean = java.nio.file.Files.createTempDirectory("graft_curclean").toString
+    val (cleanWh, cleanRun) = sink(clean)
+    cleanRun()
+    assert(state(wh) === state(cleanWh))
+    assert(state(wh).toMap.apply("cur_kept").map(_._1).sorted === Seq(1L, 5L, 8L))
+  }
+
   test("curateBatch: a redelivered micro-batch after a completed ingest is a no-op") {
     val root = java.nio.file.Files.createTempDirectory("graft_curreplay").toString
     val wh = new graft.sources.Warehouse(spark, root)
