@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{ModuleConfig, ProjectConfig}
 import graft.functions.HtmlFunctions
@@ -311,31 +309,21 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
   // ---------------------------------------------------------- operations
 
   /** Incremental read + check computation + append + watermark advance —
-    * the staging pipeline of SURVEY §3.3, one job per operation: the
-    * checks are one select over the unprocessed rows, appended as one
-    * file set coalesced (no shuffle) to the batch's partition count, and
-    * that append job also observes the batch's row count and max ingest
-    * time. The watermark moves after the append, and only past a
-    * non-empty batch. Metrics can be missing — AQE replaces an empty
-    * input under a shuffle with an empty relation, the observing node
-    * goes with it, and the observation completes with no fields — and
-    * then one count/max job stands in: missing never reads as zero. */
+    * the staging pipeline of SURVEY §3.3, one job per operation. With
+    * the high mark not past the watermark it starts no job. Otherwise one
+    * [[StoreTxn]] transaction reads the batch up to the high mark, appends
+    * its checks as one file set coalesced (no shuffle) to the batch's
+    * partition count and moves the watermark to the high mark: a crash
+    * before the commit rolls the append back. */
   private def withStagedBatch(collection: String, op: String)
-                             (checks: Runner.Batch => Option[DataFrame]): Unit = {
-    if (!staging.exists(collection)) return
-    val (unprocessed, history) = staging.readSplit(collection, op)
-    val batch = Runner.Batch(unprocessed, history, Observation())
-    val observed = checks(batch).flatMap { rows =>
-      warehouse.append(ChecksTable, rows.withColumn("date", to_date(col("created")))
-        .coalesce(unprocessed.queryExecution.toRdd.getNumPartitions))
-      scala.util.Try(Await.result(batch.stats.future, 1.minute)).toOption
-        .filter(_.length == 2)
+                             (checks: Runner.Batch => Option[DataFrame]): Unit =
+    if (staging.pending(collection, op)) StoreTxn.transact(spark, root) {
+      val (unprocessed, history) = staging.readSplit(collection, op)
+      checks(Runner.Batch(unprocessed, history)).foreach(rows =>
+        warehouse.append(ChecksTable, rows.withColumn("date", to_date(col("created")))
+          .coalesce(unprocessed.queryExecution.toRdd.getNumPartitions)))
+      staging.highMark(collection).foreach(staging.advanceWatermarkTo(collection, op, _))
     }
-    val stats = observed.getOrElse(
-      unprocessed.agg(count(lit(1)), max(col("__ingested_at"))).head())
-    if (stats.getLong(0) > 0)
-      staging.advanceWatermarkTo(collection, op, stats.getTimestamp(1))
-  }
 
   /** Operation google_search_console: the matching enrichment over the
     * imported GSC table (operation/google_search_console.py:327-405):
@@ -382,16 +370,9 @@ final class Runner(spark: SparkSession, config: ProjectConfig, root: String,
 object Runner {
   import CheckCatalog.{Check, Checks, Tag}
 
-  /** One staged batch of a check operation: the unprocessed rows
-    * (`plain`, for the live-fetch collects that run first) and the
-    * processed `history`, both from one file listing. */
-  private[plans] final case class Batch(plain: DataFrame, history: DataFrame,
-                                        stats: Observation) {
-    /** The rows the append reads, observing their count and max ingest
-      * time in the append's own job. */
-    lazy val rows: DataFrame =
-      plain.observe(stats, count(lit(1)), max(col("__ingested_at")))
-  }
+  /** One staged batch of a check operation: the unprocessed `rows` and
+    * the processed `history`, both from one file listing. */
+  private[plans] final case class Batch(rows: DataFrame, history: DataFrame)
 
   private def bool(m: Map[String, Any], key: String): Option[Boolean] =
     m.get(key).map(v => v == true || v == "true")
@@ -405,10 +386,10 @@ object Runner {
                        configured: Map[String, Any] => Boolean, urls: Column,
                        fetcher: Fetcher): Map[String, Int] = {
     val sets = urlsetChecks.collect { case (set, c) if configured(c) => set }.toSeq
-    val distinct = b.plain.filter(col("urlset").isin(sets: _*)).select(urls).collect()
+    val distinct = b.rows.filter(col("urlset").isin(sets: _*)).select(urls).collect()
       .map(_.getString(0)).filter(_.nonEmpty).distinct.toSeq
     if (distinct.isEmpty) Map.empty
-    else b.plain.sparkSession.sparkContext.parallelize(distinct, math.min(distinct.size, 8))
+    else b.rows.sparkSession.sparkContext.parallelize(distinct, math.min(distinct.size, 8))
       .map { u =>
         val r = fetcher.fetch(u, HtmlParserSource.DefaultUserAgent)
         u -> (if (r.error.nonEmpty) 0 else r.status_code)

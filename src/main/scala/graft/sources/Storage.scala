@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.sql.Timestamp
+import java.time.Instant
+import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.DataSource
@@ -36,40 +39,48 @@ import graft.operators.Relational
   *    query reads.
   *
   * Scale notes: every store is a directory of parquet partitioned by a
-  * date-derived column; Catalyst prunes partitions on read. A watermark
-  * is one small file per (module, operation) holding an ISO-8601
-  * instant, read and replaced with plain file I/O — it starts no Spark
-  * job, and the replace is an atomic rename. Nothing here collects to
-  * the driver except the watermark scalar.
+  * date-derived column; Catalyst prunes partitions on read. The staging
+  * high marks and watermarks are scalars in the root's [[StoreTxn]]
+  * commit record, read with no Spark job. Nothing here collects to the
+  * driver.
   */
 final class StagingStore(spark: SparkSession, root: String) {
 
   private def path(collection: String) = s"$root/staging/$collection"
-  private def wmFile(collection: String, op: String) =
-    new java.io.File(s"$root/watermarks", s"${collection}__$op.instant")
 
   /** The collection's recorded schema, next to its files; the leading
     * `_` hides it from the parquet reader. */
   private def schemaFile(collection: String) =
     new java.io.File(path(collection), "_graft_schema.json")
 
-  /** Append a batch, stamping the ingest time used by incremental reads. */
-  def append(collection: String, df: DataFrame): Unit =
-    write(collection, df.withColumn("__ingested_at", current_timestamp()))
+  /** Append a batch stamped with a driver instant: microseconds, and
+    * after the collection's committed high mark however the clock moves. */
+  def append(collection: String, df: DataFrame): Unit = write(collection, df) { high =>
+    val now = Instant.now().truncatedTo(ChronoUnit.MICROS)
+    high.map(_.plus(1, ChronoUnit.MICROS)).filter(_.isAfter(now)).getOrElse(now)
+  }
 
-  /** Append with a caller-supplied ingest timestamp (deterministic tests). */
-  def appendAt(collection: String, df: DataFrame, at: java.sql.Timestamp): Unit =
-    write(collection, df.withColumn("__ingested_at", lit(at)))
+  /** Append with a caller-supplied ingest instant (deterministic tests). */
+  def appendAt(collection: String, df: DataFrame, at: Timestamp): Unit =
+    write(collection, df)(_ => at.toInstant.truncatedTo(ChronoUnit.MICROS))
 
-  /** An append must carry the recorded columns (see [[SchemaSidecar]]);
-    * the append that creates the collection records its frame's schema. */
-  private def write(collection: String, df: DataFrame): Unit =
+  /** Stamp the rows `stamp(committed high mark)`, write outside any lease,
+    * then commit the high mark: the next append's covers rows a crash
+    * leaves above it. A first append registers the collection just below
+    * its rows, so the layout check never refuses a crashed one. */
+  private def write(collection: String, df: DataFrame)(stamp: Option[Instant] => Instant): Unit = {
+    val (high, key) = (highMark(collection).map(_.toInstant), StagingStore.highKey(collection))
+    val at = stamp(high)
+    if (high.isEmpty) commit(key, at.minus(1, ChronoUnit.MICROS))
     StoreWriter.append(root, s"staging/$collection") {
+      val stamped = df.withColumn("__ingested_at", lit(Timestamp.from(at)))
       val what = s"staging collection '$collection'"
       SchemaSidecar.requireRecorded(schemaFile(collection), path(collection), what)
-      SchemaSidecar.checkOrRecord(schemaFile(collection), df.schema, what)
-      df
+      SchemaSidecar.checkOrRecord(schemaFile(collection), stamped.schema, what)
+      stamped
     }
+    if (high.forall(_.isBefore(at))) commit(key, at)
+  }
 
   /** Read with the recorded schema: no inference job. */
   def readAll(collection: String): DataFrame = {
@@ -80,45 +91,46 @@ final class StagingStore(spark: SparkSession, root: String) {
     spark.read.schema(SchemaSidecar.read(f)).parquet(path(collection))
   }
 
+  /** Whether the high mark is past `op`'s watermark. Reads no data. */
+  def pending(collection: String, op: String): Boolean =
+    highMark(collection).exists(h => watermark(collection, op).forall(_.before(h)))
+
   /** The staged rows split at `op`'s watermark into (unprocessed,
-    * history): ingest time strictly after it, and at or before it. Both
-    * halves come from ONE file listing, and each filter lands on the
-    * parquet scan (pushdown). With no watermark, everything is
-    * unprocessed and the history is empty. */
+    * history): ingest time after it up to the high mark, and at or before
+    * it. Both halves come from ONE file listing, and each filter lands on
+    * the parquet scan (pushdown). With no watermark the history is empty. */
   def readSplit(collection: String, op: String): (DataFrame, DataFrame) = {
     val all = readAll(collection)
-    watermark(collection, op) match {
-      case Some(wm) => (all.filter(col("__ingested_at") > lit(wm)),
-        all.filter(col("__ingested_at") <= lit(wm)))
-      case None => (all, all.limit(0))
-    }
+    def upTo(ts: Option[Timestamp]) = ts.fold(lit(false))(col("__ingested_at") <= lit(_))
+    val history = upTo(watermark(collection, op))
+    (all.filter(!history && upTo(highMark(collection))), all.filter(history))
   }
 
-  /** Set the op watermark to `ts`: write a temp file, then rename it over
-    * the marker, so a crash leaves either the old or the new instant.
-    * Call AFTER the downstream write succeeded — a crash before this
-    * point re-processes the batch (at-least-once), and the warehouse's
-    * idempotent append turns that into exactly-once. */
-  def advanceWatermarkTo(collection: String, op: String,
-                         ts: java.sql.Timestamp): Unit =
-    StoreTxn.writeAtomic(wmFile(collection, op), ts.toInstant.toString)
+  /** Set the op watermark to `ts`. It publishes with the open transaction
+    * on the root, if any — an operation's checks append — else alone. */
+  def advanceWatermarkTo(collection: String, op: String, ts: Timestamp): Unit =
+    commit(StagingStore.watermarkKey(collection, op), ts.toInstant)
 
-  /** The op watermark, exact to the nanosecond; None before the first
-    * advance. A leftover temp file from a crashed write is never read.
-    * The one-row parquet table earlier versions kept instead is refused:
-    * ignoring it would reprocess every staged row. */
-  def watermark(collection: String, op: String): Option[java.sql.Timestamp] = {
-    val f = wmFile(collection, op)
-    val marker = new java.io.File(s"$root/watermarks", s"${collection}__$op")
-    require(!marker.exists(),
-      s"watermark '${collection}__$op' at ${marker.getPath} is a parquet " +
-        "marker from an earlier format — rebuild the staging root fresh")
-    Option.when(f.isFile)(java.sql.Timestamp.from(
-      java.time.Instant.parse(java.nio.file.Files.readString(f.toPath).trim)))
+  /** The op watermark; None before the first advance. */
+  def watermark(collection: String, op: String): Option[Timestamp] =
+    committed(StagingStore.watermarkKey(collection, op))
+
+  /** The ingest instant the collection's last append committed. */
+  def highMark(collection: String): Option[Timestamp] =
+    committed(StagingStore.highKey(collection))
+
+  private def commit(key: String, at: Instant): Unit =
+    StoreTxn.transact(spark, root)(StoreTxn.current(root).putKv(key, at.toString))
+
+  private def committed(key: String): Option[Timestamp] = {
+    StoreTxn.requireCurrentLayout(root)
+    StoreTxn.getKv(root, key).map(v => Timestamp.from(Instant.parse(v)))
   }
+}
 
-  def exists(collection: String): Boolean =
-    new java.io.File(path(collection)).exists()
+object StagingStore {
+  private[sources] def highKey(collection: String) = s"staging:$collection:high"
+  private def watermarkKey(collection: String, op: String) = s"staging:$collection:wm:$op"
 }
 
 /** The recorded schema of a parquet store, as JSON in a `_`-prefixed

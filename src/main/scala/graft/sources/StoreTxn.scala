@@ -61,13 +61,14 @@ import org.apache.spark.sql.SparkSession
   * the next commit of the same directory removes. Undo and that GC are
   * the only deletes of a superseded copy. Appends go into the live
   * directory under the undo log, versioned or not. Scalar markers (the
-  * curation max-id) ride in the commit record itself, which makes
-  * "marker advanced" literally the same event as "ingest committed".
+  * curation max-id, a staging collection's high mark, an operation's
+  * watermark) ride in the commit record itself, which makes "marker
+  * advanced" literally the same event as "ingest committed".
   *
   * A root written in an earlier layout — `active:` alias kvs, version
-  * entries not named by their root-relative directory, or a state
-  * directory holding `v<n>` versions or `a<n>` DistinctStore deltas — is
-  * refused when it is opened ([[recover]]), before anything is written.
+  * entries not named by their root-relative directory, `v<n>`/`a<n>`
+  * state directories, `watermarks/` or unmarked staged data — is
+  * refused when it is opened, before anything is written.
   *
   * CONCURRENCY — the family's documented single-writer-per-root
   * contract is now enforced, not assumed: every transaction (and every
@@ -245,20 +246,26 @@ object StoreTxn {
       .map(n => rel.take(rel.lastIndexOf('/') + 1) + n)
   }
 
-  /** Throws when `key` holds a layout of an earlier format, which
-    * [[live]] would not resolve: compaction aliases in the commit
-    * record, version entries that do not name their directory, and
-    * state directories holding nested `v<n>` versions or `a<n>`
-    * DistinctStore deltas. */
-  private def requireCurrentLayout(key: String): Unit = {
+  /** Throws when `root` holds a layout of an earlier format, which
+    * [[live]] or [[StagingStore]] would not resolve: compaction aliases,
+    * version entries that do not name their directory, nested `v<n>`
+    * versions or `a<n>` DistinctStore deltas, `watermarks/`, and staged
+    * data with no committed high mark. */
+  private[sources] def requireCurrentLayout(root: String): Unit = {
+    val key = canon(root)
     val c = readCommit(commitFile(key))
-    val nested = Option(new File(key, "state").listFiles()).toSeq.flatten
-      .flatMap(d => Option(d.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.matches("[av][0-9]+"))
-        .map(f => s"state/${d.getName}/${f.getName}"))
+    def dirs(rel: String) = Option(new File(key, rel).listFiles()).toSeq.flatten
+    val nested = dirs("state").flatMap(d => Option(d.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.matches("[av][0-9]+"))
+      .map(f => s"state/${d.getName}/${f.getName}"))
+    val unmarked = dirs("staging").filter(d =>
+        !c.kv.contains(StagingStore.highKey(d.getName)) && SchemaSidecar.hasData(d))
+      .map(d => s"staging/${d.getName} with no committed high mark")
     val legacy = c.kv.keys.filter(_.startsWith("active:")).map(k => s"kv $k") ++
       c.versions.keys.filterNot(r => r.startsWith("state/") || r.startsWith("warehouse/"))
-        .map(v => s"version entry $v") ++ nested
+        .map(v => s"version entry $v") ++ nested ++ unmarked ++
+      Option(new File(key, "watermarks").list())
+        .map(ns => "watermarks/" + ns.sorted.headOption.getOrElse(""))
     require(legacy.isEmpty,
       s"store root $key holds ${legacy.head}, a layout of an earlier format " +
         "— rebuild under a fresh root")

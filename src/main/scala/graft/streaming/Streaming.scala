@@ -20,7 +20,7 @@ object Streaming {
 
   /** Stream over a staging collection directory: every file the batch
     * `StagingStore.append` writes becomes a micro-batch. The checkpoint
-    * (set on the query) replaces the per-operation watermark table. */
+    * (set on the query) replaces the per-operation staging watermark. */
   def readStagingStream(spark: SparkSession, root: String, collection: String,
                         schema: StructType,
                         maxFilesPerTrigger: Int = 100): DataFrame =
@@ -118,7 +118,7 @@ object Streaming {
     * again processes only what arrived since the last run; a run that
     * crashes mid-batch redelivers under the same batchId and appends
     * nothing twice. The checkpoint replaces the per-operation
-    * watermark table of the batch path. */
+    * staging watermark of the batch path. */
   def runAvailableNow(df: DataFrame, warehouse: graft.sources.Warehouse,
                       table: String, checkpoint: String,
                       partitionCol: String = "date"): Unit =

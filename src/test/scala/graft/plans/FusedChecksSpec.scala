@@ -1,7 +1,7 @@
 package graft.plans
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -70,7 +70,7 @@ class FusedChecksSpec extends SparkSpec {
       .collect().map(_.toSeq.mkString("|"))).sorted
 
   private def batch(plain: DataFrame, history: DataFrame) =
-    Runner.Batch(plain, history, Observation())
+    Runner.Batch(plain, history)
 
   // the per-set loops of the operations before the fused compile
 

@@ -4,14 +4,14 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.{Jobs, SparkSpec}
+import graft.{CrashMatrix, Jobs}
 import graft.core.{ConfigLoader, Url}
 import graft.sources._
 
 /** The SEO operations end to end: fetch → stage → metatags /
   * responseheader / htmlheadings / robotstxt checks → the checks table,
   * over two cron cycles of a fixture site. */
-class RunnerSpec extends SparkSpec {
+class RunnerSpec extends CrashMatrix {
 
   private val One = "https://a.example/one.html"
   private val Two = "https://a.example/two.html"
@@ -175,10 +175,12 @@ class RunnerSpec extends SparkSpec {
     else scala.util.Using.resource(Files.walk(dir.toPath))(_.iterator().asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSet)
 
-  private def watermarkBytes(root: String): Map[String, Seq[Byte]] =
-    Option(new java.io.File(root, "watermarks").listFiles()).toSeq.flatten
-      .filter(_.getName.endsWith(".instant"))
-      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+  /** The root's commit record: its epoch, the staging high marks and
+    * every operation's watermark. */
+  private def commitRecord(root: String): String =
+    Files.readString(new java.io.File(root, "_txn/commit").toPath)
+
+  private def collectionOf(op: String) = if (op == "robotstxt") "robotstxt" else "html_parser"
 
   private def twoCycles(root: String): Unit = (1 to 2).foreach { c =>
     val r = runner(root, c)
@@ -192,21 +194,21 @@ class RunnerSpec extends SparkSpec {
     val checksDir = new java.io.File(root, "warehouse/checks")
     twoCycles(root)
     val files = dataFiles(checksDir)
-    val marks = watermarkBytes(root)
-    assert(files.nonEmpty && marks.size === Operations.size)
+    val record = commitRecord(root)
+    val staging = runner(root, 2).staging
+    assert(files.nonEmpty &&
+      Operations.forall(op => staging.watermark(collectionOf(op), op).isDefined))
     Operations.foreach(runner(root, 2).runOperation)
     assert(dataFiles(checksDir) === files)
-    assert(watermarkBytes(root) === marks)
+    assert(commitRecord(root) === record)
+    assert(!new java.io.File(root, "watermarks").exists())
   }
 
-  /** A query started by `withStagedBatch` itself is its stats fallback:
-    * the append starts in the warehouse, the live fetches in the op. */
-  private def statsQuery(callSite: String): Boolean =
-    callSite.linesIterator.find(_.startsWith("graft.")).exists(_.contains("withStagedBatch"))
-
-  test("missing observed metrics fall back to one stats job; the watermark stays") {
+  test("a replay with nothing new staged starts no Spark job and leaves the commit " +
+      "record and the check files unchanged") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
-    val root = Files.createTempDirectory("graft_runner_stats").toString
+    val root = Files.createTempDirectory("graft_runner_empty").toString
+    val checksDir = new java.io.File(root, "warehouse/checks")
     val dupsOnly =
       s"""urlsets:
          |  pages:
@@ -232,14 +234,60 @@ class RunnerSpec extends SparkSpec {
     }
     val first = cycle(1)
     first.runAggregation("html_parser")
-    val (_, staged) = Jobs.during(spark)(first.runOperation("metatags"))
-    assert(staged.queries.count(statsQuery) === 0, "the append job observes a staged batch")
-    val marks = watermarkBytes(root)
-    // nothing new staged: AQE replaces the empty input of the duplicates
-    // window with an empty relation, and the observing node goes with it
+    first.runOperation("metatags")
+    val (files, record) = (dataFiles(checksDir), commitRecord(root))
+    assert(files.nonEmpty)
     val (_, replay) = Jobs.during(spark)(cycle(1).runOperation("metatags"))
-    assert(replay.queries.count(statsQuery) === 1, replay.queries.mkString("\n---\n"))
-    assert(watermarkBytes(root) === marks)
+    assert(replay.jobs.isEmpty && replay.queries.isEmpty, replay)
+    assert(dataFiles(checksDir) === files)
+    assert(commitRecord(root) === record)
+  }
+
+  test("a crash at the checks append or before its commit: a blind retry equals a " +
+      "clean run's check rows and commit record") {
+    val warm = tmp("graft_runner_warm_")
+    val r1 = runner(warm, 1)
+    r1.runAggregation("html_parser")
+    r1.runAggregation("robotstxt")
+    Operations.foreach(r1.runOperation)
+    val r2 = runner(warm, 2)
+    r2.runAggregation("html_parser")
+    r2.runAggregation("robotstxt")
+    def observe(root: String) = (rows(root, 1) ++ rows(root, 2)).map(_.toString)
+    // each operation's one write is its checks append
+    Seq("metatags", "robotstxt").foreach(op =>
+      crashMatrix(warm, touches = 1)(runner(_, 2).runOperation(op))(observe))
+  }
+
+  test("a crash between a staging write and its high-mark commit: the rows are " +
+      "checked exactly once, after the next append") {
+    val root = tmp("graft_runner_stage_crash_")
+    val r1 = runner(root, 1)
+    r1.runAggregation("html_parser")
+    r1.runAggregation("robotstxt")
+    Operations.foreach(r1.runOperation)
+    val r2 = runner(root, 2)
+    StoreTxn.hooks.crashBeforeCommit = true
+    crashAndExpire(r2.runAggregation("html_parser"))
+    r2.runAggregation("robotstxt")
+    Operations.foreach(r2.runOperation)
+    // the pages are staged, but no committed append covers them yet
+    assert(runner(root, 2).staging.readAll("html_parser")
+      .filter(col("date") === lit(cycleTs(2))).count() === 3)
+    assert(rows(root, 2) === robotRows.sorted)
+    val r3 = runner(root, 3)
+    r3.runAggregation("html_parser")
+    Operations.foreach(r3.runOperation)
+    val expected = (
+      pageRows(One, title = true, changed = true, desc = true, ok = true) ++
+      pageRows(Two, title = true, changed = false, desc = false, ok = true) ++
+      pageRows(Three, title = false, changed = true, desc = false, ok = false)).sorted
+    val pages = rows(root, 2).filterNot(_._1.startsWith("robotstxt-"))
+    // every check of every page once; the duplicates family also sees the
+    // next cycle's copies of the same pages in its batch
+    assert(pages.map(r => (r._1, r._2)) === expected.map(r => (r._1, r._2)))
+    assert(pages.filterNot(_._1.endsWith("_duplicates")) ===
+      expected.filterNot(_._1.endsWith("_duplicates")))
   }
 
   test("a row-local check operation is one Spark job") {

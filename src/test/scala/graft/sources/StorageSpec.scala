@@ -2,9 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.{Jobs, SparkSpec}
+import graft.{CrashMatrix, Jobs}
 
-class StorageSpec extends SparkSpec {
+class StorageSpec extends CrashMatrix {
   import spark.implicits._
 
   private def tmpRoot(): String =
@@ -64,16 +64,22 @@ class StorageSpec extends SparkSpec {
     val st = new StagingStore(spark, root)
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     st.appendAt("docs", Seq(1).toDF("id"), t0)
-    val dir = new java.io.File(root, "watermarks")
-    dir.mkdirs()
-    val tmp = new java.io.File(dir, "docs__op.instant.tmp").toPath
-    // crash between the temp write and the rename of the first advance
-    Files.writeString(tmp, "2099-01-01T00:00:00Z")
+    // the record a later advance commits, left as the temp file of a
+    // crash between its write and its rename
+    val later = tmpRoot()
+    val ahead = new StagingStore(spark, later)
+    ahead.appendAt("docs", Seq(1).toDF("id"), t0)
+    ahead.advanceWatermarkTo("docs", "op", java.sql.Timestamp.valueOf("2099-01-01 00:00:00"))
+    def crashedCommit(): Unit = Files.copy(
+      new java.io.File(later, "_txn/commit").toPath,
+      new java.io.File(root, "_txn/commit.tmp").toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    crashedCommit()
     assert(st.watermark("docs", "op") === None)
     assert(unprocessed(st, "op").count() === 1)
     st.advanceWatermarkTo("docs", "op", t0)
     // crash in a later advance: the committed marker still holds
-    Files.writeString(tmp, "2099-01-01T00:00:00Z")
+    crashedCommit()
     assert(st.watermark("docs", "op") === Some(t0))
     assert(unprocessed(st, "op").count() === 0)
   }
@@ -93,6 +99,32 @@ class StorageSpec extends SparkSpec {
     val (_, ran) = graft.Jobs.during(spark)(
       intercept[IllegalArgumentException](st.watermark("docs", "op")))
     assert(ran.jobs.isEmpty, ran)
+  }
+
+  test("staging: rows appended after a high mark ahead of the wall clock are still " +
+      "processed") {
+    val root = tmpRoot()
+    val st = new StagingStore(spark, root)
+    val ahead = java.sql.Timestamp.from(java.time.Instant.now().plusSeconds(86400)
+      .truncatedTo(java.time.temporal.ChronoUnit.MICROS))
+    st.appendAt("docs", Seq(1).toDF("id"), ahead)
+    // an operation processes that batch: its watermark moves past the clock
+    assert(unprocessed(st, "op").select("id").as[Int].collect().toSeq === Seq(1))
+    st.advanceWatermarkTo("docs", "op", ahead)
+    st.append("docs", Seq(2).toDF("id"))
+    assert(unprocessed(st, "op").select("id").as[Int].collect().toSeq === Seq(2))
+  }
+
+  test("staging: a crash between a collection's first write and its high-mark commit " +
+      "leaves a root that opens, and the rows are read after the next append") {
+    val root = tmpRoot()
+    val st = new StagingStore(spark, root)
+    // the write's own plan arms the crash, so it fires at the commit after it
+    val arm = udf { (i: Int) => StoreTxn.hooks.crashBeforeCommit = true; i }
+    crashAndExpire(st.append("docs", Seq(1).toDF("id").select(arm(col("id")).as("id"))))
+    assert(unprocessed(st, "op").count() === 0, "no committed append covers the row yet")
+    st.append("docs", Seq(2).toDF("id"))
+    assert(unprocessed(st, "op").select("id").as[Int].collect().sorted.toSeq === Seq(1, 2))
   }
 
   test("warehouse: idempotent append is exactly-once under replay") {
@@ -527,7 +559,9 @@ class StorageSpec extends SparkSpec {
     }
     sameAsStock("queue enqueue", "queues/q", "q")(new QueueStore(s, store).enqueue("q", rows))(
       rows.write.mode("append").parquet(s"$stock/q"))
-    sameAsStock("state version", "state/x__v1", "x")(StoreTxn.transact(s, store)(
+    // the staging append above committed epochs 1 and 2: its
+    // collection's registration and its high mark
+    sameAsStock("state version", "state/x__v3", "x")(StoreTxn.transact(s, store)(
       StoreWriter.version(swh.root, "state/x", rows)))(rows.write.parquet(s"$stock/x"))
     val sketched = rows.withColumn("g", col("k") % 3)
     sameAsStock("DistinctStore append", "state/d_hll_sk", "d")(

@@ -2,20 +2,15 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.CrashMatrix
 import graft.operators._
 
-/** Crash-atomicity of the incremental-store family: a kill injected
-  * mid-ingest (between table writes, or after every write but before
-  * the commit publishes) must leave a store from which a BLIND retry —
-  * same call, no external snapshot, no manual cleanup — converges to
-  * exactly the state an uncrashed run produces. */
-class StoreTxnSpec extends SparkSpec {
+/** Crash-atomicity of the incremental-store family ([[CrashMatrix]]):
+  * a kill injected mid-ingest, between table writes or after every write
+  * but before the commit publishes, converges under a blind retry. */
+class StoreTxnSpec extends CrashMatrix {
   import spark.implicits._
   import StoreTxnSpec.Keyed
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def corpus(n: Int, seed: Long): Seq[(Long, String)] = {
     val rnd = new scala.util.Random(seed)
@@ -37,21 +32,6 @@ class StoreTxnSpec extends SparkSpec {
 
   private def pairKey(df: DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-
-  override def afterAll(): Unit = {
-    StoreTxn.hooks.reset()
-    StoreTxn.leaseTtlMs = 60000L
-    super.afterAll()
-  }
-
-  /** Emulate a process death and wait out the corpse's lease. */
-  private def crashAndExpire(body: => Unit, ttlMs: Long = 250L): Unit = {
-    StoreTxn.leaseTtlMs = ttlMs
-    try {
-      intercept[StoreTxn.SimulatedCrash](body)
-      Thread.sleep(ttlMs * 8 / 5) // the dead writer's lease heartbeat goes stale
-    } finally StoreTxn.hooks.reset()
-  }
 
   test("minhash store: kill between the sig and set table writes, blind retry converges") {
     val cfg = MinhashConfig(shingleN = 3, bands = 8, rowsPerBand = 2,
@@ -135,47 +115,6 @@ class StoreTxnSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  /** Run `op` on a copy of `warm` uncrashed, then on further copies
-    * crashed at each of its `touches` directory registrations and before
-    * its commit, each followed by a blind retry of `op`: every retried
-    * store must `observe` as the uncrashed one, and its commit record
-    * and its warehouse (tables and sidecars) and state listings must be
-    * identical. */
-  private def crashMatrix(warm: String, touches: Int)(op: String => Unit)(
-      observe: String => Seq[String]): Unit = {
-    def copy(prefix: String) = {
-      val root = tmp(prefix)
-      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(warm),
-        new java.io.File(root))
-      root
-    }
-    def state(root: String) = observe(root) ++
-      Seq("warehouse", "state").flatMap(d =>
-        Option(new java.io.File(root, d).list()).toSeq.flatten.sorted.map(n => s"$d/$n")) :+
-      java.nio.file.Files.readString(new java.io.File(root, "_txn/commit").toPath)
-    val clean = copy("graft_txn_clean_")
-    op(clean)
-    val expected = state(clean)
-    for (crash <- (1 to touches).map(Some(_)) :+ None) {
-      val root = copy("graft_txn_crash_")
-      crash match {
-        case Some(n) => StoreTxn.hooks.crashAfterTouches = n
-        case None => StoreTxn.hooks.crashBeforeCommit = true
-      }
-      // no other writer runs here, so the dead one's lease may expire fast
-      try {
-        crashAndExpire(op(root), ttlMs = 50L)
-        if (crash.isEmpty) { // `touches` is the whole write set
-          val intent = java.nio.file.Files.readString(new java.io.File(root,
-            "_txn/intent").toPath).split("\n").filter(_.startsWith("dir\t"))
-          assert(intent.length === touches, intent.mkString("; "))
-        }
-        op(root)
-      } finally StoreTxn.leaseTtlMs = 250L
-      assert(state(root) === expected, s"crash $crash")
-    }
-  }
 
   test("bm25 index: a crash at every touch of a keyed append or a compaction, " +
       "or before its commit, then a blind retry equals a clean store") {
@@ -415,6 +354,30 @@ class StoreTxnSpec extends SparkSpec {
       () => ds.ingest(docs.select(lit("g").as("g"), col("text").as("v")), "g", "v"),
       () => ds.estimate(),
       () => ds.compact())
+
+    // staging roots: per-operation watermark files, and a collection whose
+    // high mark no commit record holds (staged before there was one)
+    def staged(root: String): StagingStore = {
+      val st = new StagingStore(spark, root)
+      st.append("docs", docs)
+      st
+    }
+    def stagingRefused(root: String, st: StagingStore): Unit = refused(root)(
+      () => st.append("docs", docs),
+      () => st.pending("docs", "op"),
+      () => st.readSplit("docs", "op"),
+      () => st.advanceWatermarkTo("docs", "op", new java.sql.Timestamp(0L)),
+      () => StoreTxn.transact(spark, root)(()))
+    val marked = tmp("graft_txn_old_watermarks_")
+    val st1 = staged(marked)
+    java.nio.file.Files.createDirectories(new java.io.File(marked, "watermarks").toPath)
+    java.nio.file.Files.writeString(new java.io.File(marked, "watermarks/docs__op.instant")
+      .toPath, "2024-01-01T00:00:00Z")
+    stagingRefused(marked, st1)
+    val unmarked = tmp("graft_txn_old_unmarked_")
+    val st2 = staged(unmarked)
+    StoreTxn.rmrf(new java.io.File(unmarked, "_txn"))
+    stagingRefused(unmarked, st2)
   }
 
   test("curation store: kill mid-ingest, blind retry equals the uncrashed run") {
